@@ -204,7 +204,7 @@ object Bench {
       val rows = graft.core.SfDir.scaled(sfDir, 6000L)
       val stamp = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
         .replaceAll("[^0-9a-zA-Z]", "")
-      // tmpfs-preferred scratch (round 15, the GateRun change's dual):
+      // tmpfs-preferred scratch (round 15, the streaming gates' dual):
       // the generated input files were already page-cache-prewarmed, but
       // the per-micro-batch checkpoint renames under $base/ckpt* paid
       // disk latency on /tmp.

@@ -767,8 +767,6 @@ object ScaleProbe {
       import graft.core.{GpsRecord, GpsSchema}
       val nRows = 1200000L
       val nKeys = 100000L
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val baseDir = java.nio.file.Files.createTempDirectory("graft-stream-scale").toString
       graft.sources.GpsGenerator.batch(spark, nRows)
         .withColumn("vehicle_id",
@@ -778,9 +776,11 @@ object ScaleProbe {
       def run(op: String, mode: String = "update")(
           build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]): Unit = {
         val t0 = System.nanoTime()
-        val q = build(stream).writeStream.format("noop")
-          .option("checkpointLocation", s"$baseDir/ckpt-$op")
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        val q = graft.core.SessionConf.withConf(spark,
+          graft.core.SessionConf.RocksDbStateStore)(
+          build(stream).writeStream.format("noop")
+            .option("checkpointLocation", s"$baseDir/ckpt-$op")
+            .outputMode(mode).trigger(Trigger.AvailableNow()).start())
         q.awaitTermination()
         val sec = (System.nanoTime() - t0) / 1e9
         val so = Option(q.lastProgress).map(_.stateOperators).filter(_.nonEmpty)
@@ -874,8 +874,6 @@ object ScaleProbe {
       import graft.core.GpsSchema
       val nRows = 2400000L
       val nKeys = 1000000L
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val baseDir = java.nio.file.Files.createTempDirectory("graft-stream-10x").toString
       val srcDir = java.nio.file.Paths.get(baseDir, "in")
       java.nio.file.Files.createDirectories(srcDir)
@@ -905,14 +903,16 @@ object ScaleProbe {
       for (delay <- Seq("1 minute", "10 minutes", "60 minutes")) {
         val tag = delay.replace(" ", "")
         val t0 = System.nanoTime()
-        val q = spark.readStream.schema(GpsSchema.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir.toString)
-          .transform(df => graft.streaming.StreamingOps
-            .vehicleSessions(df, gap = "5 minutes", watermark = delay))
-          .writeStream.format("noop")
-          .option("checkpointLocation", s"$baseDir/ckpt-$tag")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        val q = graft.core.SessionConf.withConf(spark,
+          graft.core.SessionConf.RocksDbStateStore)(
+          spark.readStream.schema(GpsSchema.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(srcDir.toString)
+            .transform(df => graft.streaming.StreamingOps
+              .vehicleSessions(df, gap = "5 minutes", watermark = delay))
+            .writeStream.format("noop")
+            .option("checkpointLocation", s"$baseDir/ckpt-$tag")
+            .outputMode("append").trigger(Trigger.AvailableNow()).start())
         q.awaitTermination()
         val sec = (System.nanoTime() - t0) / 1e9
         val progress = q.recentProgress.toSeq

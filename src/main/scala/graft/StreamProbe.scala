@@ -15,9 +15,6 @@ object StreamProbe {
     val name = args(0)
     val spark = SparkSessionFactory.local(32, "graft-stream-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    // experiment knob: state partition count for the gate's stream
-    sys.env.get("GRAFT_STREAM_PARTS").filter(_.nonEmpty).foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n))
     val d = SparkEntry.modules.toMap.apply(name)
     d.build(spark, sfDir).count() // warm pass
     val sb = new java.lang.StringBuilder

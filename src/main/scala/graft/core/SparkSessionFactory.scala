@@ -46,25 +46,10 @@ object SparkSessionFactory {
       .appName(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      // EXPERIMENT (round 16): size post-shuffle partitions by bytes, not
-      // by the core count — measured per-query before adopting.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_AQE_ADVISORY", "64m"))
-      // Checkpoint-file checksums OFF for local ephemeral checkpoints
-      // (round 16): Spark 4.1 writes-and-awaits a checksum sidecar for
-      // EVERY checkpoint file (state deltas, WAL, commits) — jstack
-      // caught all 32 task threads parked in
-      // ChecksumCheckpointFileManager.awaitResult during q140's state
-      // commits, ~0.5 s of fixed latency per store commit on KB files.
-      // Corruption detection is a property a DURABLE checkpoint store
-      // needs (S3/HDFS bit-rot, partial uploads); these gates' fresh
-      // per-run checkpoints live on RAM-backed scratch for seconds.
-      // Parameterized (env) so a deployment with durable checkpoints
-      // turns it back on.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("GRAFT_CKPT_CHECKSUM", "false"))
+      // Checkpoint-file checksums stay at Spark's default (on): they guard
+      // durable checkpoints (MicroBatchPipeline's) against bit-rot and
+      // partial uploads. Only the streaming gates' runner turns them off,
+      // for its seconds-lived checkpoints on scratch (StreamingGate.Gate).
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     // Warehouse rides the same gated scratch (round 16, r15 "not yet

@@ -35,18 +35,14 @@ object Tables {
     * on the session only for the duration of this call and then restored —
     * leaving it set would silently change how every other nanos-timestamp
     * parquet in the session is read. Restoring after `spark.read.parquet`
-    * is safe for the later (lazy) execution: the reader's hadoopConf is
-    * captured at relation creation, inside this window. */
-  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-  private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try spark.read.parquet(s"$dir/events.parquet")
-    finally prev match {
-      case Some(v) => spark.conf.set(NanosKey, v)
-      case None    => spark.conf.unset(NanosKey)
-    }
-  }
+    * is safe for the later (lazy) execution: the schema is inferred inside
+    * this window, and the inferred long column reads without the flag. */
+  val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** events.parquet as stored: ts is a raw long in the NANOS era. */
+  def eventsRaw(spark: SparkSession, dir: String): DataFrame =
+    SessionConf.withConf(spark, NanosKey -> "true")(
+      spark.read.parquet(s"$dir/events.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -1,8 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import graft.core.{DirIO, SessionConf, Tables}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** The Structured Streaming surface as an ORACLE-BACKED gate query.
@@ -27,8 +30,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingGate {
 
-  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-
   /** events.parquet has shipped with ts as either TIMESTAMP(NANOS) (read
     * as a raw long under nanosAsLong) or TIMESTAMP(MICROS) (read natively
     * as NTZ). The streaming file source needs an explicit schema whose ts
@@ -40,14 +41,7 @@ object StreamingGate {
       eventTime: Column, tsMicros: Column)
 
   private def eventsEra(spark: SparkSession, dir: String): EventsEra = {
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    val tsType =
-      try spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
-      finally prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
+    val tsType = Tables.eventsRaw(spark, dir).schema("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", tsType),
@@ -64,136 +58,218 @@ object StreamingGate {
     }
   }
 
-  /** Per-run staging for a streaming gate: fresh checkpoint + landing
-    * dirs (the file source watches a DIRECTORY — stage the table file
-    * behind symlinks, exactly how a notification-fed landing prefix
-    * looks in production) and a memory-sink name FIXED per gate. The
-    * previous run's sink table is dropped on entry and the temp dirs are
-    * deleted in `cleanup()`, so repeated Verify/Bench invocations in one
-    * process hold at most one result per gate in driver memory and leave
-    * no checkpoint litter (the nanoTime-suffixed names used before round
-    * 6 accumulated both for the life of the JVM). */
-  private final class GateRun(spark: SparkSession, gate: String,
-      links: Seq[(String, String)]) {
-    val sink: String = gate + "_sink"
+  private def eventsLink(dir: String): Seq[(String, String)] =
+    Seq("events.parquet" -> s"$dir/events.parquet")
+
+  /** One streaming gate's run. It owns everything the gates share:
+    *
+    *  - scratch: one tmpfs-preferred root per run holding the landing
+    *    dir the file source watches (`srcDir`), the checkpoint (`ckpt`)
+    *    and any extra dir a gate asks for (`dir`), all deleted on close.
+    *    Every micro-batch writes an offset WAL entry, a commit-log entry
+    *    and one state-store delta file per shuffle partition under ckpt —
+    *    on a disk-backed /tmp that per-batch rename-commit latency is host
+    *    disk weather, not engine cost (see DirIO.scratchDir);
+    *  - staging: fixtures linked or written under `srcDir`, exactly how a
+    *    notification-fed landing prefix looks in production;
+    *  - a memory-sink name FIXED per gate, whose previous result is
+    *    dropped on entry, so repeated Verify/Bench invocations in one
+    *    process hold at most one result per gate in driver memory;
+    *  - the query lifecycle: AvailableNow trigger, checkpoint, await and
+    *    stop;
+    *  - the gate's conf, applied ONLY around `start()`. A streaming query
+    *    runs in a copy of its session cloned at `start()`
+    *    (StreamExecution.sparkSessionForStream), so the stream keeps the
+    *    gate conf while the parent session is restored before the first
+    *    micro-batch — a batch query run mid-gate sees the caller's conf.
+    *
+    * The gate conf:
+    *  - state partitions sized to the STAGED SOURCE BYTES, not the core
+    *    count (round 16, VERDICT r15 #8; guide §2.1-2.2). Measured first:
+    *    StreamProbe attributed q140's 9.4 s wall almost entirely to
+    *    per-store state commits — each HDFSBackedStateStore commit costs
+    *    ~0.5 s of task time at ANY state size, and a stream-stream join
+    *    opens 4 stores per partition, so 32 partitions paid ~128 fixed
+    *    commits per batch for KB-scale state (9.4 s → 3.7 s at 2-8
+    *    partitions, emitted rows identical). Policy: one state partition
+    *    per 32 MB of staged source (floor 1), clamped to the session
+    *    parallelism — scale-adaptive by construction: gate corpora
+    *    (KB-MB) collapse to a few partitions, a production TB-scale
+    *    source keeps every core busy. Stateful-query semantics are
+    *    partition-count-invariant (the driver's own 8-vs-32-core runs
+    *    already pin that), and the count is persisted per fresh
+    *    checkpoint so restart gates stay self-consistent;
+    *  - nanosAsLong, for NANOS-era events read by the stream;
+    *  - checkpoint-file checksums OFF (round 16): Spark 4.1 writes and
+    *    awaits a checksum sidecar for every state-store file — jstack
+    *    caught every task thread parked in
+    *    ChecksumCheckpointFileManager.awaitResult during q140's state
+    *    commits, ~0.5 s of fixed latency per store commit on KB files.
+    *    Corruption detection is a property a DURABLE checkpoint store
+    *    needs (S3/HDFS bit-rot, partial uploads); a gate's checkpoint
+    *    lives on scratch for seconds. Durable callers keep Spark's
+    *    default (on);
+    *  - the RocksDB state store, for the gates that ask for it. */
+  private[queries] final class Gate(spark: SparkSession, name: String,
+      rocksDb: Boolean) {
+    val sink: String = name + "_sink"
     spark.catalog.dropTempView(sink) // previous run's result, if any
-    // tmpfs-preferred scratch (round 15): every micro-batch writes an
-    // offset WAL entry, a commit-log entry, and one state-store delta
-    // file per shuffle partition under ckpt — on a disk-backed /tmp
-    // that per-batch rename-commit latency is host disk weather, not
-    // engine cost (the q60 staging precedent; see DirIO.scratchDir).
-    val ckpt: String = graft.core.DirIO.scratchDir(gate + "_ckpt").toString
-    private val srcPath = graft.core.DirIO.scratchDir(gate + "_src")
-    val srcDir: String = srcPath.toString
-    // State partitions sized to the STAGED SOURCE BYTES, not the core
-    // count (round 16, VERDICT r15 #8; guide §2.1-2.2). Measured first:
-    // StreamProbe attributed q140's 9.4 s wall almost entirely to
-    // per-store state commits — each HDFSBackedStateStore commit costs
-    // ~0.5 s of task time at ANY state size, and a stream-stream join
-    // opens 4 stores per partition, so 32 partitions paid ~128 fixed
-    // commits per batch for KB-scale state (9.4 s → 3.7 s at 2-8
-    // partitions, emitted rows identical). Policy: one state partition
-    // per 32 MB of staged source (floor 1), clamped to the session
-    // parallelism — scale-adaptive by construction: gate corpora
-    // (KB-MB) collapse to a few partitions, a production TB-scale
-    // source keeps every core busy. Stateful-query semantics are
-    // partition-count-invariant (the driver's own 8-vs-32-core runs
-    // already pin that), and the count is persisted per fresh
-    // checkpoint so restart gates stay self-consistent. Env override:
-    // GRAFT_STREAM_STATE_PARTS.
-    private val stagedBytes: Long = links.map { case (_, target) =>
-      val t = java.nio.file.Paths.get(target)
-      if (java.nio.file.Files.isDirectory(t))
-        graft.core.DirIO.walk(t)(_.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum())
-      else if (java.nio.file.Files.exists(t)) java.nio.file.Files.size(t)
-      else 0L
-    }.sum
-    private val stateParts: Int = sys.env.get("GRAFT_STREAM_STATE_PARTS")
-      .map(_.toInt)
-      .getOrElse(math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        stagedBytes / (32L << 20) + 1L)).toInt)
-    private val prevShufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
+    private val root = DirIO.scratchDir(name + "_")
+
+    /** A fresh dir under the run's scratch, deleted with it. */
+    def dir(sub: String): String =
+      Files.createDirectories(root.resolve(sub)).toString
+
+    val srcDir: String = dir("src")
+    val ckpt: String = root.resolve("ckpt").toString
+
     /** Stage a fixture under the source dir. Single-file targets (the
       * driver testdata layout) link 1:1; DIRECTORY targets (Spark-written
       * fixtures — the ScaleFixtures sf1 rehearsal corpus) are flattened
       * by linking each part file under the staged stem, because the file
-      * stream source does not recurse through a symlinked directory. */
+      * stream source does not recurse through a symlinked directory.
+      * Deleting the run removes the links only, never their targets. */
     def stage(name: String, target: String): Unit = {
-      val t = java.nio.file.Paths.get(target)
-      if (java.nio.file.Files.isDirectory(t)) {
+      val t = Paths.get(target)
+      if (Files.isDirectory(t)) {
         val stem = name.stripSuffix(".parquet")
-        graft.core.DirIO.list(t) { st =>
+        DirIO.list(t) { st =>
           val parts = st.filter(
             p => p.toString.endsWith(".parquet")).sorted().iterator()
           var i = 0
           while (parts.hasNext) {
-            java.nio.file.Files.createSymbolicLink(
-              srcPath.resolve(f"${stem}_p$i%04d.parquet"), parts.next())
+            Files.createSymbolicLink(
+              Paths.get(srcDir, f"${stem}_p$i%04d.parquet"), parts.next())
             i += 1
           }
         }
-      } else java.nio.file.Files.createSymbolicLink(
-        srcPath.resolve(name), t)
+      } else Files.createSymbolicLink(Paths.get(srcDir, name), t)
     }
-    links.foreach { case (name, target) => stage(name, target) }
-    /** Delete the temp dirs (symlinks only — never their targets) and
-      * restore the session's shuffle-partition setting. The sink table
-      * stays readable until the NEXT run of the same gate. */
-    def cleanup(): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShufflePartitions)
-      Seq(java.nio.file.Paths.get(ckpt), srcPath)
-        .foreach { root =>
-          if (java.nio.file.Files.exists(root))
-            graft.core.DirIO.deleteRecursively(root)
-        }
+
+    /** Stage each of `parts` as ONE parquet file under the source dir,
+      * with mod-times one minute apart in order: the file source lists
+      * by mod-time, so under maxFilesPerTrigger the file→batch mapping
+      * is pinned. */
+    def stageFiles(parts: Seq[DataFrame]): Unit = stageAs("parquet", parts)
+
+    /** [[stageFiles]] for single-string-column parts, one text line per
+      * row: the JSON landing files the ingest pipeline reads. */
+    def stageLines(parts: Seq[DataFrame]): Unit = stageAs("text", parts)
+
+    private def stageAs(format: String, parts: Seq[DataFrame]): Unit =
+      parts.zipWithIndex.foreach { case (df, i) =>
+        val tmp = root.resolve("stage")
+        df.coalesce(1).write.mode("overwrite").format(format)
+          .save(tmp.toString)
+        val part = DirIO.list(tmp)(_.filter(p =>
+          p.getFileName.toString.startsWith("part-")).findFirst().get())
+        val file = part.getFileName.toString
+        val dest = Paths.get(srcDir,
+          f"f$i%02d" + file.substring(file.indexOf('.')))
+        Files.move(part, dest)
+        DirIO.deleteRecursively(tmp)
+        Files.setLastModifiedTime(dest,
+          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
+            + i * 60000L))
+      }
+
+    /** The file-source stream over the landing dir. */
+    def source(schema: StructType, maxFilesPerTrigger: Int = 0): DataFrame = {
+      val r = spark.readStream.schema(schema)
+      (if (maxFilesPerTrigger > 0)
+         r.option("maxFilesPerTrigger", maxFilesPerTrigger.toLong)
+       else r).parquet(srcDir)
     }
+
+    private def conf: Seq[(String, String)] = {
+      val bytes = DirIO.walk(Paths.get(srcDir))(
+        _.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum())
+      val parts = math.min(spark.sparkContext.defaultParallelism.toLong,
+        bytes / (32L << 20) + 1L)
+      Seq("spark.sql.shuffle.partitions" -> parts.toString,
+        Tables.NanosKey -> "true",
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") ++
+        (if (rocksDb) Seq(SessionConf.RocksDbStateStore) else Nil)
+    }
+
+    /** Start `query` on `sess` under the gate conf. */
+    def start(sess: SparkSession)(query: => StreamingQuery): StreamingQuery =
+      SessionConf.withConf(sess, conf: _*)(query)
+
+    /** Start `ds`'s stream: checkpoint and AvailableNow trigger are
+      * preset, `sink` completes the writer (and may override either). */
+    def stream[T](ds: Dataset[T])(
+        sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery =
+      start(ds.sparkSession)(sink(ds.writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())).start())
+
+    def drain[T](ds: Dataset[T])(
+        sink: DataStreamWriter[T] => DataStreamWriter[T]): Unit =
+      await(stream(ds)(sink))
+
+    /** Drain `ds` into the gate's memory sink; returns the sink table. */
+    def memory[T](ds: Dataset[T], mode: String = "append"): DataFrame = {
+      drain(ds)(_.format("memory").queryName(sink).outputMode(mode))
+      spark.table(sink)
+    }
+
+    /** Drop a managed table the gate (re)creates. A previous JVM's
+      * managed-table DIRECTORIES (the table and TableSwap's rewrite
+      * staging) survive its in-memory catalog — clear those locations
+      * too or saveAsTable refuses (LOCATION_ALREADY_EXISTS) — and forget
+      * any stale sink validation for the name. */
+    def resetTable(table: String): Unit = {
+      Seq(table, table + graft.operators.TableSwap.TmpSuffix)
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      val wh = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
+        .stripPrefix("file:"))
+      if (Files.exists(wh))
+        DirIO.list(wh)(
+          _.filter(p => p.getFileName.toString.startsWith(table))
+            .forEach(p => DirIO.deleteRecursively(p)))
+      graft.streaming.IdempotentParquetSink.invalidate(spark, table)
+    }
+
+    def close(): Unit = if (Files.exists(root)) DirIO.deleteRecursively(root)
+  }
+
+  /** Wait for every query to drain; stop any still running. */
+  private def await(qs: StreamingQuery*): Unit =
+    try qs.foreach(_.awaitTermination())
+    finally qs.foreach(q => if (q.isActive) q.stop())
+
+  /** Run `body` as gate `name` over the staged `links`. The sink table
+    * stays readable until the NEXT run of the same gate; everything on
+    * disk is gone when this returns. */
+  private[queries] def gate[T](spark: SparkSession, name: String,
+      links: Seq[(String, String)] = Nil, rocksDb: Boolean = false)(
+      body: Gate => T): T = {
+    val g = new Gate(spark, name, rocksDb)
+    try {
+      links.foreach { case (n, t) => g.stage(n, t) }
+      body(g)
+    } finally g.close()
   }
 
   /** Run the streamed hourly profile to completion and return the
     * emitted (watermark-trimmed) result, fully ordered. */
-  def streamedHourlyProfile(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q139",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+  def streamedHourlyProfile(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q139", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      g.memory(g.source(era.schema)
         .select(era.eventTime.as("event_time"),
           col("event_type"), col("value"))
         .withWatermark("event_time", "1 hour")
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(28, 2))).as("sdec"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .select(
+          sum(col("value").cast(DecimalType(28, 2))).as("sdec")))
+    }.select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("hour_start"),
         col("event_type"), col("n"),
         col("sdec").cast(DoubleType).as("sum_value"))
       .orderBy(col("hour_start"), col("event_type"))
-  }
 
   /** q206: MULTIPLE STATEFUL OPERATORS in one streaming query — the
     * q140 interval join feeding a downstream hourly window aggregation
@@ -204,22 +280,16 @@ object StreamingGate {
     * the JOIN'S OUTPUT watermark (the input watermark minus the join's
     * 2 h state-retention delay) passes the window end. The
     * measured-then-encoded law lives in the q206 QueryDef's oracle. */
-  def streamedJoinAgg(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q206",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def side(tpe: String, pfx: String): DataFrame = spark.readStream
-      .schema(era.schema)
-      .parquet(run.srcDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"),
-        col("event_id").as(s"${pfx}_id"),
-        era.eventTime.as(s"${pfx}_time"))
-      .withWatermark(s"${pfx}_time", "4 hours")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = side("view", "v").join(side("purchase", "p"),
+  def streamedJoinAgg(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q206", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_user"),
+          col("event_id").as(s"${pfx}_id"),
+          era.eventTime.as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", "4 hours")
+      g.memory(side("view", "v").join(side("purchase", "p"),
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
@@ -227,29 +297,12 @@ object StreamingGate {
           (unix_micros(col("p_time")) - unix_micros(col("v_time")))
             .as("gap_us"))
         .groupBy(window(col("p_time"), "1 hour"))
-        .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("gap_us_sum"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .select(
+        .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("gap_us_sum")))
+    }.select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("hour_start"),
         col("n_pairs"), col("gap_us_sum"))
       .orderBy(col("hour_start"))
-  }
 
   /** q250: THREE-WAY stream-stream interval join — two chained join
     * states in one streaming query (the production funnel shape:
@@ -261,50 +314,27 @@ object StreamingGate {
     * the fully-drained inner chain equals the batch three-way interval
     * join EXACTLY — chained join states lose nothing and invent
     * nothing under AvailableNow drain. */
-  def streamedTripleJoin(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q250",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def side(tpe: String, pfx: String): DataFrame = spark.readStream
-      .schema(era.schema)
-      .parquet(run.srcDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"),
-        col("event_id").as(s"${pfx}_id"),
-        era.eventTime.as(s"${pfx}_time"))
-      .withWatermark(s"${pfx}_time", "8 hours")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+  def streamedTripleJoin(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q250", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_user"),
+          col("event_id").as(s"${pfx}_id"),
+          era.eventTime.as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", "8 hours")
       val vc = side("view", "v").join(side("click", "c"),
         col("v_user") === col("c_user") &&
           col("c_time") >= col("v_time") &&
           col("c_time") <= col("v_time") + expr("INTERVAL 240 MINUTES"))
-      val q = vc.join(side("purchase", "p"),
+      g.memory(vc.join(side("purchase", "p"),
           col("c_user") === col("p_user") &&
             col("p_time") >= col("c_time") &&
             col("p_time") <= col("c_time") + expr("INTERVAL 240 MINUTES"))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
-          col("c_id").as("click_id"), col("p_id").as("purchase_id"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .orderBy(col("user_id"), col("view_id"), col("click_id"),
+          col("c_id").as("click_id"), col("p_id").as("purchase_id")))
+    }.orderBy(col("user_id"), col("view_id"), col("click_id"),
         col("purchase_id"))
-  }
 
   /** q256: dropDuplicatesWithinWatermark on BOTH sides chained INTO a
     * stream-stream interval join — exactly-once enrichment under
@@ -315,48 +345,25 @@ object StreamingGate {
     * dichotomy), and the join therefore sees every event exactly once.
     * 19th streaming law (q256's oracle): the drained dedup→join chain
     * equals the batch interval join of the DISTINCT corpus. */
-  def streamedDedupJoin(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q256",
-      Seq("events_a.parquet" -> s"$dir/events.parquet",
-        "events_b.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def side(tpe: String, pfx: String): DataFrame = spark.readStream
-      .schema(era.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(run.srcDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"),
-        col("event_id").as(s"${pfx}_id"),
-        era.eventTime.as(s"${pfx}_time"))
-      .withWatermark(s"${pfx}_time", "8 hours")
-      .dropDuplicatesWithinWatermark(s"${pfx}_id")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = side("view", "v").join(side("purchase", "p"),
+  def streamedDedupJoin(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q256", Seq("events_a.parquet" -> s"$dir/events.parquet",
+        "events_b.parquet" -> s"$dir/events.parquet")) { g =>
+      val era = eventsEra(spark, dir)
+      def side(tpe: String, pfx: String): DataFrame =
+        g.source(era.schema, maxFilesPerTrigger = 1)
+          .filter(col("event_type") === tpe)
+          .select(col("user_id").as(s"${pfx}_user"),
+            col("event_id").as(s"${pfx}_id"),
+            era.eventTime.as(s"${pfx}_time"))
+          .withWatermark(s"${pfx}_time", "8 hours")
+          .dropDuplicatesWithinWatermark(s"${pfx}_id")
+      g.memory(side("view", "v").join(side("purchase", "p"),
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
-          col("p_id").as("purchase_id"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
-  }
+          col("p_id").as("purchase_id")))
+    }.orderBy(col("user_id"), col("view_id"), col("purchase_id"))
 
   // ---- q259: arbitrary custom state (flatMapGroupsWithState) --------
 
@@ -474,37 +481,15 @@ object StreamingGate {
     * the law, mirrored in integer SQL). */
   def streamedCustomSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q259",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val src = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+    gate(spark, "q259", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      val src = g.source(era.schema)
         .select(col("user_id"), era.eventTime.as("event_time"),
           unix_micros(era.eventTime).as("tus"),
           round(col("value") * 100).cast(LongType).as("cents"))
         .as[SegEvent]
-      val q = customSegments(src)
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .orderBy(col("user_id"), col("seg_start_us"))
+      g.memory(customSegments(src), "update")
+    }.orderBy(col("user_id"), col("seg_start_us"))
   }
 
   // ---- q318: streamed bottom-k distinct sketch --------------------
@@ -533,41 +518,20 @@ object StreamingGate {
     * (est = (k−1)·2⁴⁸/(h_k+1) vs exact distinct, signed ppm error). */
   def streamedBottomK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q318",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
     val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val src = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+    val kth = gate(spark, "q318", eventsLink(dir)) { g =>
+      val src = g.source(era.schema)
         .select((col("user_id") % 8).as("shard"),
           expr("CAST(conv(substring(md5(concat('q318#'," +
             " CAST(user_id AS STRING), '#', event_type)), 1, 12)," +
             " 16, 10) AS BIGINT)")
             .as("h"))
         .as[BkEvent]
-      val q = src.groupByKey(_.shard)
+      g.memory(src.groupByKey(_.shard)
         .flatMapGroupsWithState[BkState, BkOut](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout())(bkFn)
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    val kth = spark.table(run.sink)
-      .select(col("shard"), col("h")).distinct()
+          OutputMode.Update(), GroupStateTimeout.NoTimeout())(bkFn),
+        "update")
+    }.select(col("shard"), col("h")).distinct()
       .selectExpr("shard", "h",
         "row_number() OVER (PARTITION BY shard ORDER BY h) AS rn")
       .filter(col("rn") === BkK)
@@ -635,15 +599,9 @@ object StreamingGate {
     * for heavy-hitter candidates (est ≥ N/50) against exact counts. */
   def streamedCountMin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q323",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
     val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val src = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+    val sunk = gate(spark, "q323", eventsLink(dir)) { g =>
+      val src = g.source(era.schema)
         .filter(col("event_id").isNotNull)
         .select(pmod(col("event_id"), lit(4L)).cast("long").as("shard"),
           expr("concat('u', CAST(20000L div (event_id + 1) " +
@@ -654,28 +612,15 @@ object StreamingGate {
           expr(cmBucketSql(3, "ak")).cast("long").as("c3"),
           expr(cmBucketSql(4, "ak")).cast("long").as("c4"))
         .as[CmEvent]
-      val q = src.groupByKey(_.shard)
+      g.memory(src.groupByKey(_.shard)
         .flatMapGroupsWithState[CmState, CmOut](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout())(cmFn)
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+          OutputMode.Update(), GroupStateTimeout.NoTimeout())(cmFn),
+        "update")
     }
     // Drain reconciliation: counters are monotone → final value per
     // (shard, cell) is the max emission; the global sketch is the SUM
     // of per-shard matrices (mergeability, exercised relationally).
-    val merged = spark.table(run.sink)
+    val merged = sunk
       .groupBy(col("shard"), col("cell")).agg(max(col("cnt")).as("cnt"))
       .groupBy(col("cell")).agg(sum(col("cnt")).as("c"))
     val exact = spark.read.schema(era.schema)
@@ -712,16 +657,10 @@ object StreamingGate {
     * faithfully, DLQ raw lines kept byte-faithfully (length-sum
     * fingerprint). Lines are constructed with explicit concat (never
     * to_json) so BOTH arms' bytes are engine-reproducible. */
-  def streamedDeadLetter(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q329",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val src = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+  def streamedDeadLetter(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q329", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      val src = g.source(era.schema)
         .filter(col("event_id").isNotNull)
         .select(col("event_id"),
           coalesce(col("event_type"), lit("")).as("etype"),
@@ -748,29 +687,13 @@ object StreamingGate {
           coalesce(col("j.cents"), lit(0L)).as("cents"),
           coalesce(col("j.event_id"), lit(0L)).as("eid"),
           length(col("line")).cast("long").as("raw_len"))
-      val q = parsed.writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .groupBy(col("etype"))
+      g.memory(parsed)
+    }.groupBy(col("etype"))
       .agg(count(lit(1)).as("n"),
         sum(col("cents")).as("sum_cents"),
         sum(col("eid")).as("sum_eid"),
         sum(col("raw_len")).as("sum_raw_len"))
       .orderBy(col("etype"))
-  }
 
   // ---- q268: the SAME custom state on transformWithState + timers ---
 
@@ -822,19 +745,9 @@ object StreamingGate {
     * oracle, different engine path (RocksDB typed state + real timers). */
   def streamedTwsSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q268",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevNanos = spark.conf.getOption(NanosKey)
-    val prevProv = spark.conf.getOption(ProviderKey)
-    spark.conf.set(NanosKey, "true")
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+    gate(spark, "q268", eventsLink(dir), rocksDb = true) { g =>
+      val era = eventsEra(spark, dir)
+      g.memory(g.source(era.schema)
         .select(col("user_id"), era.eventTime.as("event_time"),
           unix_micros(era.eventTime).as("tus"),
           round(col("value") * 100).cast(LongType).as("cents"))
@@ -843,28 +756,8 @@ object StreamingGate {
         .groupByKey(_.user_id)
         .transformWithState(new SegTwsProcessor,
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prevNanos match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      prevProv match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None    => spark.conf.unset(ProviderKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .orderBy(col("user_id"), col("seg_start_us"))
+          OutputMode.Append()))
+    }.orderBy(col("user_id"), col("seg_start_us"))
   }
 
   /** q211: dropDuplicatesWithinWatermark chained INTO a window
@@ -876,46 +769,22 @@ object StreamingGate {
     * are dropped as late before dedup. Either way the duplicate
     * delivery contributes NOTHING, and the agg emits the deduped hourly
     * counts for windows the final watermark passed. */
-  def streamedDedupAgg(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q211",
-      Seq("events_a.parquet" -> s"$dir/events.parquet",
-        "events_b.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(run.srcDir)
+  def streamedDedupAgg(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q211", Seq("events_a.parquet" -> s"$dir/events.parquet",
+        "events_b.parquet" -> s"$dir/events.parquet")) { g =>
+      val era = eventsEra(spark, dir)
+      g.memory(g.source(era.schema, maxFilesPerTrigger = 1)
         .select(era.eventTime.as("event_time"),
           col("event_id"), col("event_type"))
         .withWatermark("event_time", "4 hours")
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .select(
+        .agg(count(lit(1)).as("n")))
+    }.select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("hour_start"),
         col("event_type"), col("n"))
       .orderBy(col("hour_start"), col("event_type"))
-  }
 
   /** q235: an hourly windowed aggregation feeding a COARSER 4-hour
     * re-aggregation in the same streaming query — the rollup-cascade
@@ -925,16 +794,10 @@ object StreamingGate {
     * rows under the PROPAGATED output watermark and finalizes a 4-hour
     * window only when every contained hour could have arrived. The
     * measured-then-encoded emission boundary lives in q235's oracle. */
-  def streamedAggCascade(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q235",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+  def streamedAggCascade(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q235", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      g.memory(g.source(era.schema)
         .select(era.eventTime.as("event_time"),
           col("event_type"), col("value"))
         .withWatermark("event_time", "2 hours")
@@ -943,30 +806,13 @@ object StreamingGate {
           sum(col("value").cast(DecimalType(28, 2))).as("sdec"))
         .groupBy(window(col("window"), "4 hours"), col("event_type"))
         .agg(sum(col("n")).as("n_events"), count(lit(1)).as("n_hours"),
-          sum(col("sdec")).as("sdec"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .select(
+          sum(col("sdec")).as("sdec")))
+    }.select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("win4_start"),
         col("event_type"), col("n_events"), col("n_hours"),
         col("sdec").cast(DoubleType).as("sum_value"))
       .orderBy(col("win4_start"), col("event_type"))
-  }
 
   /** q219: a UNION of two file-source streams over the same landing
     * dir, where side B shifts every event time back 6 h in-stream, so
@@ -977,47 +823,24 @@ object StreamingGate {
     * max(ts) − 10 h — while the counts inside every emitted window
     * include BOTH branches' rows. The slowest source gates emission
     * for everyone; the oracle replays that in SQL. */
-  def streamedUnionWatermark(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q219",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def src(): DataFrame = spark.readStream
-      .schema(era.schema)
-      .parquet(run.srcDir)
-      .select(era.eventTime.as("event_time"), col("event_type"))
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+  def streamedUnionWatermark(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q219", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      def src(): DataFrame = g.source(era.schema)
+        .select(era.eventTime.as("event_time"), col("event_type"))
       val a = src().withWatermark("event_time", "4 hours")
       val b = src()
         .select((col("event_time") - expr("INTERVAL 6 HOURS"))
           .as("event_time"), col("event_type"))
         .withWatermark("event_time", "4 hours")
-      val q = a.unionAll(b)
+      g.memory(a.unionAll(b)
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .select(
+        .agg(count(lit(1)).as("n")))
+    }.select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
           .as("hour_start"),
         col("event_type"), col("n"))
       .orderBy(col("hour_start"), col("event_type"))
-  }
 
   /** q231: the dimension-refresh contract. TWO sequential AvailableNow
     * runs share ONE checkpoint and ONE durable file sink; between them
@@ -1029,52 +852,33 @@ object StreamingGate {
     * then holds exactly one v1-labelled and one v2-labelled copy of the
     * corpus: a dimension update becomes visible at the next restart
     * without reprocessing or corrupting earlier output. */
-  def streamedDimRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q231",
-      Seq("events_a.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val dimDir = java.nio.file.Files.createTempDirectory("q231_dim")
-    val outDir = java.nio.file.Files.createTempDirectory("q231_sink")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val types = spark.read.schema(era.schema)
-        .parquet(run.srcDir).select(col("event_type")).distinct()
+  def streamedDimRefresh(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q231",
+        Seq("events_a.parquet" -> s"$dir/events.parquet")) { g =>
+      val era = eventsEra(spark, dir)
+      val dimDir = g.dir("dim")
+      val outDir = g.dir("sink")
+      val types = Tables.eventsRaw(spark, dir).select(col("event_type"))
+        .distinct()
       def writeDim(ver: String): Unit = types
         .select(col("event_type"),
           concat(lit(ver + "_"), col("event_type")).as("label"))
-        .coalesce(1).write.mode("overwrite").parquet(dimDir.toString)
-      def runOnce(): Unit = {
-        val q = spark.readStream.schema(era.schema).parquet(run.srcDir)
+        .coalesce(1).write.mode("overwrite").parquet(dimDir)
+      def runOnce(): Unit = g.drain(g.source(era.schema)
           .select(col("event_type"), col("value"))
-          .join(spark.read.parquet(dimDir.toString), Seq("event_type"))
-          .writeStream.format("parquet").option("path", outDir.toString)
-          .outputMode("append").option("checkpointLocation", run.ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
-      }
+          .join(spark.read.parquet(dimDir), Seq("event_type")))(
+        _.format("parquet").option("path", outDir).outputMode("append"))
       writeDim("v1"); runOnce()
       writeDim("v2")
-      run.stage("events_b.parquet", s"$dir/events.parquet")
+      g.stage("events_b.parquet", s"$dir/events.parquet")
       runOnce()
-      spark.read.parquet(outDir.toString)
+      spark.read.parquet(outDir)
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents_total"))
         .orderBy(col("label"))
         .localCheckpoint()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-      Seq(dimDir, outDir).foreach { root =>
-        if (java.nio.file.Files.exists(root))
-          graft.core.DirIO.deleteRecursively(root)
-      }
     }
-  }
 
   /** q337: the pipeline-upgrade contract (32nd law). TWO sequential
     * AvailableNow runs share ONE checkpoint and ONE durable parquet
@@ -1090,33 +894,27 @@ object StreamingGate {
     * ADD COLUMN. Projection changes between restarts are one of the
     * recovery-compatible changes Structured Streaming documents; this
     * gate turns that promise into a hash-checked law. */
-  def streamedSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q337",
-      Seq("events_a.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val outDir = java.nio.file.Files.createTempDirectory("q337_sink")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+  def streamedSchemaEvolution(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q337",
+        Seq("events_a.parquet" -> s"$dir/events.parquet")) { g =>
+      val era = eventsEra(spark, dir)
+      val outDir = g.dir("sink")
       def runOnce(upgraded: Boolean): Unit = {
-        val base = spark.readStream.schema(era.schema).parquet(run.srcDir)
+        val base = g.source(era.schema)
           .select(col("event_id"), col("event_type"),
             round(col("value") * 100).cast(LongType).as("cents"))
         val shaped =
           if (upgraded) base.withColumn("band", col("cents") % 7)
           else base
-        val q = shaped.writeStream.format("parquet")
-          .option("path", outDir.toString)
-          .outputMode("append").option("checkpointLocation", run.ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally if (q.isActive) q.stop()
+        g.drain(shaped)(
+          _.format("parquet").option("path", outDir).outputMode("append"))
       }
       runOnce(upgraded = false)
       // the upgrade window: new corpus arrives AND the jar changes
-      run.stage("events_b.parquet", s"$dir/events.parquet")
+      g.stage("events_b.parquet", s"$dir/events.parquet")
       runOnce(upgraded = true)
       // exactly-once read through the sink's commit log, schemas merged
-      spark.read.option("mergeSchema", "true").parquet(outDir.toString)
+      spark.read.option("mergeSchema", "true").parquet(outDir)
         .withColumn("schema_era",
           when(col("band").isNull, "v1").otherwise("v2"))
         .groupBy(col("schema_era"), col("event_type"))
@@ -1126,15 +924,7 @@ object StreamingGate {
           coalesce(sum(col("band")), lit(-1L)).as("sum_band"))
         .orderBy(col("schema_era"), col("event_type"))
         .localCheckpoint()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-      graft.core.DirIO.deleteRecursively(outDir)
     }
-  }
 
   /** q192: q139's pipeline against the PRODUCTION sink — a parquet
     * FILE sink with its `_spark_metadata` commit log — instead of the
@@ -1148,32 +938,19 @@ object StreamingGate {
     * reference's Iceberg append, in the format this environment can
     * execute). Result is eagerly localCheckpoint-ed so the temp sink
     * dir can be deleted before returning. */
-  def streamedFileSink(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q192",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val outDir = java.nio.file.Files.createTempDirectory("q192_sink")
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+  def streamedFileSink(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q192", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      val outDir = g.dir("sink")
+      g.drain(g.source(era.schema)
         .select(era.eventTime.as("event_time"),
           col("event_type"), col("value"))
         .withWatermark("event_time", "1 hour")
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(28, 2))).as("sdec"))
-        .writeStream
-        .format("parquet")
-        .option("path", outDir.toString)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-      spark.read.parquet(outDir.toString)
+          sum(col("value").cast(DecimalType(28, 2))).as("sdec")))(
+        _.format("parquet").option("path", outDir).outputMode("append"))
+      spark.read.parquet(outDir)
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
             .as("hour_start"),
@@ -1181,61 +958,30 @@ object StreamingGate {
           col("sdec").cast(DoubleType).as("sum_value"))
         .orderBy(col("hour_start"), col("event_type"))
         .localCheckpoint()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-      graft.core.DirIO.deleteRecursively(outDir)
     }
-  }
 
   /** Run the streamed view→purchase interval join to completion and
     * return the emitted matches, fully ordered. Two independent
     * file-source streams over the same staged landing dir, each
     * watermarked, joined on user + a 2-hour event-time interval. */
-  def streamedIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q140",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    def side(tpe: String, pfx: String): DataFrame = spark.readStream
-      .schema(era.schema)
-      .parquet(run.srcDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"),
-        col("event_id").as(s"${pfx}_id"),
-        era.eventTime.as(s"${pfx}_time"))
-      .withWatermark(s"${pfx}_time", "4 hours")
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = side("view", "v").join(side("purchase", "p"),
+  def streamedIntervalJoin(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q140", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_user"),
+          col("event_id").as(s"${pfx}_id"),
+          era.eventTime.as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", "4 hours")
+      g.memory(side("view", "v").join(side("purchase", "p"),
           col("v_user") === col("p_user") &&
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
           col("p_id").as("purchase_id"),
           (unix_micros(col("p_time")) - unix_micros(col("v_time")))
-            .as("gap_us"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
-  }
+            .as("gap_us")))
+    }.orderBy(col("user_id"), col("view_id"), col("purchase_id"))
 
   /** q187: LEFT OUTER stream-stream interval join. Outer (null-matched)
     * rows can only emit once the watermark PROVES no future purchase can
@@ -1257,6 +1003,15 @@ object StreamingGate {
     * the BATCH full interval join exactly. The sentinel recipe already
     * advances both side clocks (each side's watermark is post-filter),
     * so purchase-side eviction needs no new machinery. */
+  def streamedOuterJoin(spark: SparkSession, dir: String,
+      joinType: String = "left_outer", name: String = "q187"): DataFrame =
+    // v_user is null on purchase-side evictions (full_outer only)
+    sentinelJoin(spark, dir, name, joinType)(
+      _.select(coalesce(col("v_user"), col("p_user")).as("user_id"),
+        col("v_id").as("view_id"), col("p_id").as("purchase_id")))
+      .orderBy(col("user_id"), col("view_id").asc_nulls_first,
+        col("purchase_id").asc_nulls_first)
+
   /** q237: streamed LEFT SEMI interval join — the existence-check join
     * (which views converted at all?) as a watermarked stream-stream
     * join. Semi semantics are the interesting law: a view with THREE
@@ -1266,83 +1021,27 @@ object StreamingGate {
     * OUTER contract). Same sentinel-flush scaffold as q187/q201; the
     * sentinel pair matches itself and is dropped post-sink. Drained
     * emission equals the batch EXISTS query exactly. */
-  def streamedSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    require(java.nio.file.Files.isRegularFile(
-      java.nio.file.Paths.get(dir, "events.parquet")),
-      s"$dir/events.parquet must be a single parquet file for the " +
-        "sentinel-flush drain (coalesce the fixture to one file)")
-    val run = new GateRun(spark, "q237",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val maxUs = graft.core.Tables.events(spark, dir)
-        .agg(max(unix_micros(col("ts")))).head.getLong(0)
-      val sentinelUs = maxUs + 10L * 24 * 3600 * 1000000L
-      val tsExpr = era.schema("ts").dataType match {
-        case LongType => lit(sentinelUs * 1000L) // nanos-as-long era
-        case dt       => timestamp_micros(lit(sentinelUs)).cast(dt)
-      }
-      spark.range(1).select(explode(array(lit("view"), lit("purchase")))
-          .as("event_type"))
-        .select(lit(-1L).as("event_id"), tsExpr.as("ts"),
-          lit(-1L).as("user_id"), col("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-        .coalesce(1).write.mode("append").parquet(run.srcDir)
-      def side(tpe: String, pfx: String): DataFrame = spark.readStream
-        .schema(era.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(run.srcDir)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id").as(s"${pfx}_user"),
-          col("event_id").as(s"${pfx}_id"),
-          era.eventTime.as(s"${pfx}_time"))
-        .withWatermark(s"${pfx}_time", "4 hours")
-      val q = side("view", "v").join(side("purchase", "p"),
-          col("v_user") === col("p_user") &&
-            col("p_time") >= col("v_time") &&
-            col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"),
-          "left_semi")
-        .select(col("v_user").as("user_id"), col("v_id").as("view_id"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .filter(col("user_id") =!= -1L)
+  def streamedSemiJoin(spark: SparkSession, dir: String): DataFrame =
+    sentinelJoin(spark, dir, "q237", "left_semi")(
+      _.select(col("v_user").as("user_id"), col("v_id").as("view_id")))
       .orderBy(col("user_id"), col("view_id"))
-  }
 
-  def streamedOuterJoin(spark: SparkSession, dir: String,
-      joinType: String = "left_outer", gate: String = "q187"): DataFrame = {
+  /** The sentinel-flush drain shared by q187/q201/q237: view ⋈ purchase
+    * within 2 h on the same user, `joinType`, projected by `select`,
+    * with the sentinel pair dropped from the emission. */
+  private def sentinelJoin(spark: SparkSession, dir: String, name: String,
+      joinType: String)(select: DataFrame => DataFrame): DataFrame = {
     // PRECONDITION (sentinel-flush): the staged corpus must be ONE
     // parquet file so every real event lands in micro-batch 1 under
     // maxFilesPerTrigger = 1. A multi-file corpus would deliver later
     // files AFTER the sentinel batch advanced the watermark, and their
     // rows would be dropped as late — fail fast instead of silently
     // shrinking the drain if the fixture ever splits.
-    require(java.nio.file.Files.isRegularFile(
-      java.nio.file.Paths.get(dir, "events.parquet")),
+    require(Files.isRegularFile(Paths.get(dir, "events.parquet")),
       s"$dir/events.parquet must be a single parquet file for the " +
         "sentinel-flush drain (coalesce the fixture to one file)")
-    val run = new GateRun(spark, gate,
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
+    gate(spark, name, eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
       // sentinels: one view + one purchase (user −1, matching each other
       // so the pair is droppable post-sink) 10 days past the corpus max,
       // appended as a SECOND file in the landing dir (later mtime ⇒
@@ -1350,7 +1049,7 @@ object StreamingGate {
       // need one: each side's watermark is computed after its
       // event_type filter, so a view-only sentinel would advance only
       // the view clock and the global (min) watermark would stall.
-      val maxUs = graft.core.Tables.events(spark, dir)
+      val maxUs = Tables.events(spark, dir)
         .agg(max(unix_micros(col("ts")))).head.getLong(0)
       val sentinelUs = maxUs + 10L * 24 * 3600 * 1000000L
       val tsExpr = era.schema("ts").dataType match {
@@ -1362,45 +1061,23 @@ object StreamingGate {
         .select(lit(-1L).as("event_id"), tsExpr.as("ts"),
           lit(-1L).as("user_id"), col("event_type"),
           lit(0.0).as("value"), lit(null).cast("string").as("props"))
-        .coalesce(1).write.mode("append").parquet(run.srcDir)
-      def side(tpe: String, pfx: String): DataFrame = spark.readStream
-        .schema(era.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(run.srcDir)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id").as(s"${pfx}_user"),
-          col("event_id").as(s"${pfx}_id"),
-          era.eventTime.as(s"${pfx}_time"))
-        .withWatermark(s"${pfx}_time", "4 hours")
-      val q = side("view", "v").join(side("purchase", "p"),
-          col("v_user") === col("p_user") &&
-            col("p_time") >= col("v_time") &&
-            col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"),
-          joinType)
-        // v_user is null on purchase-side evictions (full_outer only)
-        .select(coalesce(col("v_user"), col("p_user")).as("user_id"),
-          col("v_id").as("view_id"), col("p_id").as("purchase_id"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        .coalesce(1).write.mode("append").parquet(g.srcDir)
+      def side(tpe: String, pfx: String): DataFrame =
+        g.source(era.schema, maxFilesPerTrigger = 1)
+          .filter(col("event_type") === tpe)
+          .select(col("user_id").as(s"${pfx}_user"),
+            col("event_id").as(s"${pfx}_id"),
+            era.eventTime.as(s"${pfx}_time"))
+          .withWatermark(s"${pfx}_time", "4 hours")
+      g.memory(select(side("view", "v").join(side("purchase", "p"),
+        col("v_user") === col("p_user") &&
+          col("p_time") >= col("v_time") &&
+          col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"),
+        joinType)))
     }
-    // sentinels are the user −1 pair (they match each other, so they
-    // never surface as null-matched rows on either side)
-    spark.table(run.sink)
+      // sentinels are the user −1 pair (they match each other, so they
+      // never surface as null-matched rows on either side)
       .filter(col("user_id") =!= -1L)
-      .orderBy(col("user_id"), col("view_id").asc_nulls_first,
-        col("purchase_id").asc_nulls_first)
   }
 
   /** Typed rows for the q148 custom-state processor. */
@@ -1442,19 +1119,9 @@ object StreamingGate {
   /** Run the streamed running-totals processor to completion. */
   def streamedRunningTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val run = new GateRun(spark, "q148",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevNanos = spark.conf.getOption(NanosKey)
-    val prevProv = spark.conf.getOption(ProviderKey)
-    spark.conf.set(NanosKey, "true")
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+    gate(spark, "q148", eventsLink(dir), rocksDb = true) { g =>
+      val era = eventsEra(spark, dir)
+      g.memory(g.source(era.schema)
         .select(col("user_id"), col("event_id"),
           era.tsMicros.as("ts_us"),
           round(col("value") * 100).cast("long").as("cents"))
@@ -1462,28 +1129,9 @@ object StreamingGate {
         .groupByKey(_.user_id)
         .transformWithState(new RunningTotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prevNanos match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      prevProv match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None    => spark.conf.unset(ProviderKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .orderBy(col("user_id"), col("running_n"))
+          org.apache.spark.sql.streaming.OutputMode.Update()),
+        "update")
+    }.orderBy(col("user_id"), col("running_n"))
   }
 
   /** Run the duplicate-delivery dedup pipeline: the staged landing dir
@@ -1491,40 +1139,17 @@ object StreamingGate {
     * reference's SQS source is at-least-once), streamed through
     * `dropDuplicates(event_id)`; the emitted set must equal the
     * single-copy table. Returns the post-dedup per-type aggregate. */
-  def streamedReplayDedup(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q149", Seq(
-      "events.parquet" -> s"$dir/events.parquet",
-      "events_replay.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
-        .dropDuplicates("event_id")
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .groupBy(col("event_type"))
+  def streamedReplayDedup(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q149", Seq(
+        "events.parquet" -> s"$dir/events.parquet",
+        "events_replay.parquet" -> s"$dir/events.parquet")) { g =>
+      val era = eventsEra(spark, dir)
+      g.memory(g.source(era.schema).dropDuplicates("event_id"))
+    }.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),
         sum(round(col("value") * 100).cast("long")).as("cents_total"))
       .orderBy(col("event_type"))
-  }
 
   /** Typed rows for the q176 streaming LSH candidate processor. */
   final case class BucketDoc(band: Int, h: Long, doc_id: Long)
@@ -1589,36 +1214,18 @@ object StreamingGate {
     import spark.implicits._
     import graft.functions.TextFunctions.{minhashSignature, shingles, tokens}
     val (numHashes, bands) = (64, 32)
-    val run = new GateRun(spark, "q176", Seq.empty)
-    // stage the 3-way batch split (plain columnar files, like a
-    // notification-fed landing prefix receiving the corpus in chunks)
     val staged = docs.select(col("doc_id").cast(LongType).as("doc_id"),
       col("text").cast(StringType).as("text"))
-    (0 until 3).foreach { k =>
-      val tmp = java.nio.file.Paths.get(run.srcDir, s"_stage$k")
-      staged.filter(pmod(col("doc_id"), lit(3)) === k)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = graft.core.DirIO.list(tmp)(
-        _.filter(p => p.toString.endsWith(".parquet")).findFirst().get())
-      val dst = java.nio.file.Paths.get(run.srcDir, s"batch$k.parquet")
-      java.nio.file.Files.move(part, dst)
+    val pairs = gate(spark, "q176", rocksDb = true) { g =>
+      // stage the 3-way batch split (plain columnar files, like a
+      // notification-fed landing prefix receiving the corpus in chunks);
       // ascending mtimes pin the batch order (the RESULT is order-
       // independent; this keeps the drain sequence deterministic)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
-      graft.core.DirIO.deleteRecursively(tmp)
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val buckets = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(run.srcDir)
+      g.stageFiles((0 until 3).map(k =>
+        staged.filter(pmod(col("doc_id"), lit(3)) === k)))
+      val schema = StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType)))
+      val buckets = g.source(schema, maxFilesPerTrigger = 1)
         .select(col("doc_id"), shingles(tokens(col("text")), 3).as("sh"))
         .filter(size(col("sh")) > 0)
         .withColumn("sig", minhashSignature(col("sh"), numHashes))
@@ -1627,28 +1234,14 @@ object StreamingGate {
             col("sig"), numHashes, bands)).as("bk"))
         .select(col("bk.band").as("band"), col("bk.h").as("h"), col("doc_id"))
         .as[BucketDoc]
-      val q = buckets
+      g.memory(buckets
         .groupByKey(r => (r.band, r.h))
         .transformWithState(new NearDupCandidateProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None    => spark.conf.unset(ProviderKey)
-      }
-      run.cleanup()
+          org.apache.spark.sql.streaming.OutputMode.Append()))
     }
     graft.operators.MinHashLSH.verifyCandidates(
-      spark.table(run.sink).dropDuplicates("doc_a", "doc_b"),
+      pairs.dropDuplicates("doc_a", "doc_b"),
       graft.operators.MinHashLSH.shingled(staged, "doc_id", "text", 3),
       threshold)
   }
@@ -1657,41 +1250,18 @@ object StreamingGate {
     * stream inner-joined to the broadcast customer dim on user_id =
     * c_custkey (stateless — the static side is re-planned per batch),
     * aggregated after drain. */
-  def streamedStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q168",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey"), col("c_mktsegment")))
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+  def streamedStaticEnrich(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q168", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey"), col("c_mktsegment")))
+      g.memory(g.source(era.schema)
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast(LongType).as("cents"))
-        .join(dim, col("user_id") === col("c_custkey"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .groupBy(col("c_mktsegment").as("mktsegment"), col("event_type"))
+        .join(dim, col("user_id") === col("c_custkey")))
+    }.groupBy(col("c_mktsegment").as("mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_total"))
       .orderBy(col("mktsegment"), col("event_type"))
-  }
 
   /** Run the streamed broadcast-model scoring pipeline to completion:
     * documents arrive through a file-source micro-batch stream and every
@@ -1702,29 +1272,16 @@ object StreamingGate {
     * per-doc (y, z) rows roll up into the confusion/margin card. */
   def streamedModelScoring(spark: SparkSession, dir: String,
       w: Array[Long], stopTerms: Seq[String],
-      threshPerMille: Long): DataFrame = {
-    val run = new GateRun(spark, "q272",
-      Seq("documents.parquet" -> s"$dir/documents.parquet"))
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val (zc, yc) = graft.operators.HashedLogReg.inRowScore(
-      "toks", w, stopTerms, threshPerMille)
-    try {
-      val q = spark.readStream
-        .schema(schema)
-        .parquet(run.srcDir)
+      threshPerMille: Long): DataFrame =
+    gate(spark, "q272",
+        Seq("documents.parquet" -> s"$dir/documents.parquet")) { g =>
+      val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+      val (zc, yc) = graft.operators.HashedLogReg.inRowScore(
+        "toks", w, stopTerms, threshPerMille)
+      g.memory(g.source(schema)
         .select(col("doc_id"), split(trim(col("text")), " ").as("toks"))
-        .select(col("doc_id"), yc.as("y"), zc.as("z"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally run.cleanup()
-    spark.table(run.sink)
-      .groupBy(col("y"),
+        .select(col("doc_id"), yc.as("y"), zc.as("z")))
+    }.groupBy(col("y"),
         when(col("z") >= 0L, 1L).otherwise(0L).as("pred"))
       .agg(count(lit(1)).as("n_docs"),
         // margin checksum accumulates in DECIMAL(38,0) (the oracle's
@@ -1732,19 +1289,7 @@ object StreamingGate {
         sum(col("z").cast(DecimalType(38, 0))).cast(LongType).as("sum_z"),
         min(col("z")).as("min_z"), max(col("z")).as("max_z"))
       .orderBy(col("y"), col("pred"))
-  }
 
-  /** Run the UPDATE-mode emission-history gate to completion: the event
-    * corpus is split into 8 deterministic files (event_id % 8) with
-    * strictly increasing modification times, streamed ONE FILE PER
-    * MICRO-BATCH (`maxFilesPerTrigger` 1 — the file source orders by
-    * mod-time, which the split pins), through an unwindowed per-type
-    * count/sum aggregation in update mode. Update mode emits a key's
-    * CURRENT aggregate in every batch that touches it, so the drained
-    * sink holds each type's full PREFIX HISTORY — a pure function of
-    * the data once the batch order is pinned, which is exactly what the
-    * oracle replays (cumulative counts over event_id % 8 ≤ k, rows only
-    * where file k touches the type). */
   /** q355: the REAL ingest pipeline ([[graft.streaming.MicroBatchPipeline]])
     * drained over a staged 12-file JSON corpus with planted corruption,
     * quarantine + idempotent commit + maxFilesPerTrigger = 3, rolled up
@@ -1752,24 +1297,11 @@ object StreamingGate {
     * discipline), the injected clock pins the enrichment columns, and
     * every output cell is a pure function of events arithmetic. */
   def ingestQuarantineLaw(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val run = new GateRun(spark, "q355", Seq())
     val mainT = "q355_main_table"
     val dlqT = "q355_dlq_table"
-    Seq(mainT, dlqT).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      // a crashed prior run can leave the managed location behind with
-      // no catalog entry; saveAsTable then fails LOCATION_ALREADY_EXISTS
-      val loc = java.nio.file.Paths.get(
-        spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"), t)
-      if (java.nio.file.Files.exists(loc))
-        graft.core.DirIO.deleteRecursively(loc)
-    }
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val lines = spark.read.parquet(s"$dir/events.parquet")
+    gate(spark, "q355") { g =>
+      Seq(mainT, dlqT).foreach(g.resetTable)
+      val lines = Tables.eventsRaw(spark, dir)
         .filter(col("event_id").isNotNull)
         .select(col("event_id").cast(LongType).as("eid"))
         .withColumn("full", expr(
@@ -1787,110 +1319,69 @@ object StreamingGate {
         // PERMISSIVE partial-results salvage cannot rescue a field
         .withColumn("line", expr(
           "CASE WHEN eid % 13 = 0 THEN substring(full, 2) ELSE full END"))
-      (0 until 12).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
+      // pinned batch order: batches are exactly {f00..f02}, {f03..f05},
+      // {f06..f08}, {f09..f11}
+      g.stageLines((0 until 12).map(f =>
         lines.filter(col("eid") % 12 === f).orderBy(col("eid"))
-          .select(col("line")).coalesce(1)
-          .write.mode("overwrite").text(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".txt")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%02d.json")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        // pin the batch order: the file source sorts by mod-time, so
-        // batches are exactly {f00..f02}, {f03..f05}, {f06..f08},
-        // {f09..f11}
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
-      graft.streaming.MicroBatchPipeline.runAvailable(spark,
-        graft.streaming.MicroBatchPipeline.Config(
-        inputDir = run.srcDir,
-        checkpointDir = run.ckpt,
+          .select(col("line"))))
+      val cfg = graft.streaming.MicroBatchPipeline.Config(
+        inputDir = g.srcDir,
+        checkpointDir = g.ckpt,
         table = mainT,
         maxFilesPerTrigger = 3,
+        processingInterval = None,
         clockEpochSec = Some(1704067200L),
         idempotentCommit = true,
-        quarantineTable = Some(dlqT)))
-      val m = spark.table(mainT).groupBy(col("batch_id"))
-        .agg(countDistinct(col("input_file")).as("n_files"),
-          count(lit(1)).as("n_main"),
-          sum(col("speed_kmh")).cast(LongType).as("sum_speed"))
-      val d = spark.table(dlqT).groupBy(col("batch_id"))
-        .agg(count(lit(1)).as("n_dlq"),
-          sum(length(col("raw_line")).cast(LongType)).as("dlq_bytes"))
-      m.join(d, Seq("batch_id"), "full_outer")
-        .na.fill(0L, Seq("n_files", "n_main", "sum_speed", "n_dlq",
-          "dlq_bytes"))
-        .select(col("batch_id").cast(LongType).as("batch_id"),
-          col("n_files"), col("n_main"), col("n_dlq"),
-          (col("n_main") + col("n_dlq")).as("rows_per_trigger"),
-          col("sum_speed"), col("dlq_bytes"))
-        .orderBy(col("batch_id"))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        quarantineTable = Some(dlqT))
+      await(g.start(spark)(
+        graft.streaming.MicroBatchPipeline.start(spark, cfg)))
     }
+    val m = spark.table(mainT).groupBy(col("batch_id"))
+      .agg(countDistinct(col("input_file")).as("n_files"),
+        count(lit(1)).as("n_main"),
+        sum(col("speed_kmh")).cast(LongType).as("sum_speed"))
+    val d = spark.table(dlqT).groupBy(col("batch_id"))
+      .agg(count(lit(1)).as("n_dlq"),
+        sum(length(col("raw_line")).cast(LongType)).as("dlq_bytes"))
+    m.join(d, Seq("batch_id"), "full_outer")
+      .na.fill(0L, Seq("n_files", "n_main", "sum_speed", "n_dlq",
+        "dlq_bytes"))
+      .select(col("batch_id").cast(LongType).as("batch_id"),
+        col("n_files"), col("n_main"), col("n_dlq"),
+        (col("n_main") + col("n_dlq")).as("rows_per_trigger"),
+        col("sum_speed"), col("dlq_bytes"))
+      .orderBy(col("batch_id"))
   }
 
-  def streamedUpdateHistory(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val run = new GateRun(spark, "q275", Seq())
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+  /** Run the UPDATE-mode emission-history gate to completion: the event
+    * corpus is split into 8 deterministic files (event_id % 8) with
+    * strictly increasing modification times, streamed ONE FILE PER
+    * MICRO-BATCH (`maxFilesPerTrigger` 1 — the file source orders by
+    * mod-time, which the split pins), through an unwindowed per-type
+    * count/sum aggregation in update mode. Update mode emits a key's
+    * CURRENT aggregate in every batch that touches it, so the drained
+    * sink holds each type's full PREFIX HISTORY — a pure function of
+    * the data once the batch order is pinned, which is exactly what the
+    * oracle replays (cumulative counts over event_id % 8 ≤ k, rows only
+    * where file k touches the type). */
+  def streamedUpdateHistory(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q275") { g =>
+      val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_type"), col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        ev.filter(col("event_id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        // pin the batch order: the file source sorts by mod-time
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      g.stageFiles((0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
       val schema = StructType(Seq(
         StructField("event_type", StringType),
         StructField("event_id", LongType),
         StructField("cents", LongType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(run.srcDir)
+      g.memory(g.source(schema, maxFilesPerTrigger = 1)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("cents").cast(DecimalType(38, 0))).cast(LongType)
-            .as("cents_total"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .select(col("event_type"), col("n"), col("cents_total"))
+            .as("cents_total")),
+        "update")
+    }.select(col("event_type"), col("n"), col("cents_total"))
       .orderBy(col("event_type"), col("n"))
-  }
 
   /** Run the streamed CDC latest-wins materialization to completion:
     * per-user change events arrive in 8 micro-batches split by
@@ -1904,27 +1395,11 @@ object StreamingGate {
     * chronological — the q96 parity format), so version comparison is
     * engine-identical. */
   def streamedCdcLatest(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     import graft.operators.Upsert
-    val run = new GateRun(spark, "q280", Seq())
     val table = "q280_cdc_state"
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__swap_tmp")
-      // a previous JVM's managed-table DIRECTORIES (the state table and
-      // TableSwap's rewrite staging) survive its in-memory catalog —
-      // clear the locations too or saveAsTable refuses
-      locally {
-        val wh = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"))
-        if (Files.exists(wh))
-          graft.core.DirIO.list(wh)(
-            _.filter(p => p.getFileName.toString.startsWith(table))
-              .forEach(root => graft.core.DirIO.deleteRecursively(root)))
-      }
+    gate(spark, "q280") { g =>
+      val era = eventsEra(spark, dir)
+      g.resetTable(table)
       val ev = spark.read.schema(era.schema)
         .parquet(s"$dir/events.parquet")
         .filter(col("user_id") < 200)
@@ -1932,48 +1407,22 @@ object StreamingGate {
           round(col("value") * 100).cast(LongType).as("cents"),
           date_format(era.eventTime, "yyyy-MM-dd HH:mm:ss.SSSSSS")
             .as("ts_str"))
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        ev.filter(col("event_id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      g.stageFiles((0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
       val schema = StructType(Seq(
         StructField("user_id", LongType),
         StructField("event_type", StringType),
         StructField("event_id", LongType),
         StructField("cents", LongType),
         StructField("ts_str", StringType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(run.srcDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      g.drain(g.source(schema, maxFilesPerTrigger = 1))(
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           val latest = Upsert.latestPerKey(batch, Seq("user_id"),
             Seq("ts_str", "event_id"))
           if (!spark.catalog.tableExists(table))
             latest.write.format("parquet").saveAsTable(table)
           else Upsert.mergeLatest(spark, table, latest,
             Seq("user_id"), Seq("ts_str", "event_id"))
-        }
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        })
     }
     val out = spark.table(table)
       .select(col("user_id"), col("event_type"), col("event_id"),
@@ -1986,44 +1435,21 @@ object StreamingGate {
 
   /** Run the streamed per-user session build to completion and return
     * the emitted (watermark-closed) sessions, fully ordered. */
-  def streamedSessions(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q141",
-      Seq("events.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+  def streamedSessions(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q141", eventsLink(dir)) { g =>
+      val era = eventsEra(spark, dir)
+      g.memory(g.source(era.schema)
         .select(era.eventTime.as("event_time"),
           col("user_id"))
         .withWatermark("event_time", "1 hour")
         .groupBy(session_window(col("event_time"), "30 minutes"),
           col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .select(col("user_id"),
+        .agg(count(lit(1)).as("n_events")))
+    }.select(col("user_id"),
         unix_micros(col("session_window.start")).as("start_us"),
         unix_micros(col("session_window.end")).as("end_us"),
         col("n_events"))
       .orderBy(col("user_id"), col("start_us"))
-  }
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -3141,7 +2567,6 @@ object StreamingGate {
                  AS BIGINT) AS dlq_bytes
         FROM r GROUP BY 1 ORDER BY 1""")))
 
-
   /** Run the COMPLETE-mode leaderboard gate to completion: the q275
     * 8-file split (event_id % 8, pinned mod-times, one file per
     * micro-batch) through an unwindowed per-type count/sum aggregation
@@ -3156,72 +2581,29 @@ object StreamingGate {
     * (cents desc, type — total order), so the output is the per-batch
     * top-to-bottom standings history a live leaderboard would render. */
   def streamedCompleteHistory(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val run = new GateRun(spark, "q285", Seq())
     val table = "q285_complete_history"
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      // clear a previous JVM's surviving managed-table directory (the
-      // q280 lesson: the in-memory catalog forgets, the warehouse dir
-      // does not)
-      locally {
-        val wh = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"))
-        if (Files.exists(wh))
-          graft.core.DirIO.list(wh)(
-            _.filter(p => p.getFileName.toString.startsWith(table))
-              .forEach(root => graft.core.DirIO.deleteRecursively(root)))
-      }
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+    gate(spark, "q285") { g =>
+      g.resetTable(table)
+      val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_type"), col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        ev.filter(col("event_id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        // pin the batch order: the file source sorts by mod-time
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      g.stageFiles((0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
       val schema = StructType(Seq(
         StructField("event_type", StringType),
         StructField("event_id", LongType),
         StructField("cents", LongType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(run.srcDir)
+      g.drain(g.source(schema, maxFilesPerTrigger = 1)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("cents").cast(DecimalType(38, 0))).cast(LongType)
-            .as("cents_total"))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+            .as("cents_total")))(
+        _.foreachBatch { (batch: DataFrame, id: Long) =>
           val tagged = batch.withColumn("batch_id", lit(id))
           if (!spark.catalog.tableExists(table))
             tagged.write.format("parquet").saveAsTable(table)
           else tagged.write.format("parquet").mode("append")
             .saveAsTable(table)
-        }
-        .outputMode("complete")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
+        }.outputMode("complete"))
     }
     val wrk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("batch_id"))
@@ -3248,9 +2630,7 @@ object StreamingGate {
     * how the stream chopped it. That is the distributed/streaming
     * sampling contract (reservoir semantics without an ordered scan). */
   def streamedWeightedSample(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val k = 200
-    val run = new GateRun(spark, "q290", Seq())
     // the k-row sample state lives on the driver between batches — the
     // BPE-merge-table precedent: state is MODEL-sized (k rows) by the
     // operator's own contract, which is exactly what makes the stream
@@ -3258,29 +2638,14 @@ object StreamingGate {
     // TakeOrdered over |batch|+k rows
     val state = new java.util.concurrent.atomic.AtomicReference[
       Array[org.apache.spark.sql.Row]](Array.empty)
-    try {
-      val o = graft.core.Tables.orders(spark, dir).select(
+    gate(spark, "q290") { g =>
+      val o = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("id"),
         round(col("o_totalprice") * 100).cast("long").as("w"))
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        o.filter(col("id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      g.stageFiles((0 until 8).map(f => o.filter(col("id") % 8 === f)))
       val schema = StructType(Seq(
         StructField("id", LongType), StructField("w", LongType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(run.srcDir)
+      g.drain(g.source(schema, maxFilesPerTrigger = 1)
         // the E–S key, in-row and stateless (the q264 arithmetic):
         // u = (md5-48bit + 1)/2^48, e = round(ln u, 9)/w — largest-k
         .withColumn("u",
@@ -3288,9 +2653,8 @@ object StreamingGate {
             col("id").cast("string"))), 1, 12), 16, 10).cast("long") + 1)
             .cast("double") / lit(281474976710656.0))
         .withColumn("e", round(log(col("u")), 9) / col("w").cast("double"))
-        .select(col("id"), col("w"), col("e"))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+        .select(col("id"), col("w"), col("e")))(
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           val sch = batch.schema
           val prev = spark.createDataFrame(
             java.util.Arrays.asList(state.get(): _*), sch)
@@ -3298,21 +2662,16 @@ object StreamingGate {
             .orderBy(col("e").desc, col("id")).limit(k)
           state.set(top.collect())
           ()
-        }
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-      val sch = StructType(Seq(
-        StructField("id", LongType), StructField("w", LongType),
-        StructField("e", org.apache.spark.sql.types.DoubleType)))
-      spark.createDataFrame(
-        java.util.Arrays.asList(state.get(): _*), sch)
-        .select(col("id"), col("w"))
-        .orderBy(col("id"))
-        .localCheckpoint(false)
-    } finally run.cleanup()
+        }.outputMode("update"))
+    }
+    val sch = StructType(Seq(
+      StructField("id", LongType), StructField("w", LongType),
+      StructField("e", org.apache.spark.sql.types.DoubleType)))
+    spark.createDataFrame(
+      java.util.Arrays.asList(state.get(): _*), sch)
+      .select(col("id"), col("w"))
+      .orderBy(col("id"))
+      .localCheckpoint(false)
   }
 
   /** Run the streamed drift-monitor gate to completion: events arrive
@@ -3329,15 +2688,11 @@ object StreamingGate {
     * independent per-group KS computations. This is the production
     * data-quality monitor shape: broadcast reference, per-batch keyed
     * aggregation, bounded emission. */
-  def streamedDriftMonitor(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val run = new GateRun(spark, "q301", Seq())
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, Long, Long, Long)]()
-    try {
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+  def streamedDriftMonitor(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q301") { g =>
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[
+        (Long, Long, Long, Long)]()
+      val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))
       // static reference: the full-corpus cumulative distribution on
@@ -3351,28 +2706,12 @@ object StreamingGate {
         .select(col("cents"), col("rcum"))
         .localCheckpoint(false)
       val nRef = ev.count()
-      (0 until 8).foreach { f =>
-        val stage = s"${run.srcDir}/stage_f$f"
-        ev.filter(col("event_id") % 8 === f)
-          .coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-          p.toString.endsWith(".parquet")).findFirst().get())
-        val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-        Files.move(part, dest)
-        graft.core.DirIO.deleteRecursively(Paths.get(stage))
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-            + f * 60000L))
-      }
+      g.stageFiles((0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
       val schema = StructType(Seq(
         StructField("event_id", LongType),
         StructField("cents", LongType)))
-      val q = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(run.srcDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+      g.drain(g.source(schema, maxFilesPerTrigger = 1))(
+        _.foreachBatch { (batch: DataFrame, id: Long) =>
           val bc = batch.groupBy(col("cents")).agg(count(lit(1)).as("bc"))
           val nB = batch.count()
           val grid = ref.join(bc, Seq("cents"), "left")
@@ -3390,12 +2729,7 @@ object StreamingGate {
               BigInt(1843700L) * 1000000L * (nB + nRef)) 1L else 0L
           results.add((id, nB, ks, reject))
           ()
-        }
-        .outputMode("update")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
+        }.outputMode("update"))
       import scala.jdk.CollectionConverters._
       import spark.implicits._
       results.asScala.toSeq.sortBy(_._1)
@@ -3405,54 +2739,25 @@ object StreamingGate {
           when(col("reject_05") === 1L, "drifted").otherwise("consistent"))
         .orderBy(col("batch_id"))
         .localCheckpoint(false)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
     }
-  }
 
   /** q184: the q149 replay harness with watermarked, bounded-state
     * dedup. See the QueryDef comment for the delay-covers-span law. */
-  def streamedWatermarkDedup(spark: SparkSession, dir: String): DataFrame = {
-    val run = new GateRun(spark, "q184", Seq(
-      "events.parquet" -> s"$dir/events.parquet",
-      "events_replay.parquet" -> s"$dir/events.parquet"))
-    val era = eventsEra(spark, dir)
-    val prev = spark.conf.getOption(NanosKey)
-    spark.conf.set(NanosKey, "true")
-    try {
-      val q = spark.readStream
-        .schema(era.schema)
-        .parquet(run.srcDir)
+  def streamedWatermarkDedup(spark: SparkSession, dir: String): DataFrame =
+    gate(spark, "q184", Seq(
+        "events.parquet" -> s"$dir/events.parquet",
+        "events_replay.parquet" -> s"$dir/events.parquet")) { g =>
+      val era = eventsEra(spark, dir)
+      g.memory(g.source(era.schema)
         .select(col("event_id"), era.eventTime.as("event_time"),
           col("event_type"), col("value"))
         .withWatermark("event_time", "45 days")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream
-        .format("memory")
-        .queryName(run.sink)
-        .outputMode("append")
-        .option("checkpointLocation", run.ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally if (q.isActive) q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(NanosKey, v)
-        case None    => spark.conf.unset(NanosKey)
-      }
-      run.cleanup()
-    }
-    spark.table(run.sink)
-      .groupBy(col("event_type"))
+        .dropDuplicatesWithinWatermark("event_id"))
+    }.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),
         sum(round(col("value") * 100).cast("long")).as("cents_total"))
       .orderBy(col("event_type"))
-  }
 
   /** q336: run the two-writer shared-table scenario to completion.
     * Writers A and B are independent AvailableNow pipelines in SEPARATE
@@ -3467,43 +2772,17 @@ object StreamingGate {
     * writer B replays WHOLE from a fresh checkpoint; the sink's
     * idempotent partition overwrite must leave the table unchanged. */
   def streamedConcurrentWriters(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     import graft.streaming.IdempotentParquetSink
-    val runA = new GateRun(spark, "q336a", Seq())
-    val runB = new GateRun(spark, "q336b", Seq())
     val table = "q336_shared_table"
-    try {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      // clear a previous JVM's surviving managed-table directory (the
-      // q280 lesson: the in-memory catalog forgets, the warehouse does
-      // not), and forget any stale sink validation for the name
-      locally {
-        val wh = Paths.get(spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:"))
-        if (Files.exists(wh))
-          graft.core.DirIO.list(wh)(
-            _.filter(p => p.getFileName.toString.startsWith(table))
-              .forEach(root => graft.core.DirIO.deleteRecursively(root)))
-      }
-      IdempotentParquetSink.invalidate(spark, table)
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+    gate(spark, "q336a") { a => gate(spark, "q336b") { b =>
+      a.resetTable(table)
+      val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_id"), col("event_type"),
           round(col("value") * 100).cast(LongType).as("cents"))
-      Seq((0, runA), (1, runB)).foreach { case (w, run) =>
-        (0 until 4).foreach { f =>
-          val stage = s"${run.srcDir}/stage_f$f"
-          ev.filter(col("event_id") % 2 === w &&
-              expr("(event_id div 2) % 4") === f)
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          val part = graft.core.DirIO.list(Paths.get(stage))(_.filter(p =>
-            p.toString.endsWith(".parquet")).findFirst().get())
-          val dest = Paths.get(run.srcDir, f"f$f%d.parquet")
-          Files.move(part, dest)
-          graft.core.DirIO.deleteRecursively(Paths.get(stage))
-          Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1600000000000L
-              + f * 60000L))
-        }
+      Seq(a, b).zipWithIndex.foreach { case (g, parity) =>
+        g.stageFiles((0 until 4).map(f => ev.filter(
+          col("event_id") % 2 === parity &&
+            expr("(event_id div 2) % 4") === f)))
       }
       // Bootstrap: a zero-row write creates the table with the sink's
       // batch_id-first partition spec and validates it, so neither
@@ -3513,25 +2792,14 @@ object StreamingGate {
         StructField("event_id", LongType),
         StructField("event_type", StringType),
         StructField("cents", LongType)))
-      def writer(sess: SparkSession, srcDir: String, ckpt: String,
-          offset: Long) =
-        sess.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
+      def writer(g: Gate, ckpt: String, offset: Long): StreamingQuery =
+        g.stream(spark.newSession().readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(g.srcDir))(
+          _.foreachBatch { (batch: DataFrame, id: Long) =>
             IdempotentParquetSink.write(batch, table, offset + id)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      val qa = writer(spark.newSession(), runA.srcDir, runA.ckpt, 0L)
-      val qb = writer(spark.newSession(), runB.srcDir, runB.ckpt, 100L)
-      try { qa.awaitTermination(); qb.awaitTermination() }
-      finally {
-        if (qa.isActive) qa.stop()
-        if (qb.isActive) qb.stop()
-      }
+          }.option("checkpointLocation", ckpt))
+      await(writer(a, a.ckpt, 0L), writer(b, b.ckpt, 100L))
       // The readers below run in the MAIN session while the writers
       // wrote through their own sessions: the relation cache
       // (SessionCatalog.tableRelationCache) is per-session, so refresh
@@ -3542,12 +2810,7 @@ object StreamingGate {
       // Replay writer B wholesale from a FRESH checkpoint (crash that
       // lost the checkpoint but not the table): every B batch re-runs
       // and must overwrite its own partition with identical rows.
-      val ckptB2 = Files.createTempDirectory("q336b_ckpt2").toString
-      val qb2 = writer(spark.newSession(), runB.srcDir, ckptB2, 100L)
-      try qb2.awaitTermination() finally {
-        if (qb2.isActive) qb2.stop()
-        graft.core.DirIO.deleteRecursively(Paths.get(ckptB2))
-      }
+      await(writer(b, b.dir("ckpt_replay"), 100L))
       spark.catalog.refreshTable(table)
       val c2 = spark.table(table).count()
       val out = spark.table(table)
@@ -3565,12 +2828,6 @@ object StreamingGate {
         .localCheckpoint(false)
       spark.sql(s"DROP TABLE IF EXISTS $table")
       out
-    } finally {
-      // reverse construction order: each cleanup restores the
-      // shuffle-partition value its GateRun saved, so unwinding B then
-      // A leaves the session at the pre-gate setting
-      runB.cleanup()
-      runA.cleanup()
-    }
+    }}
   }
 }

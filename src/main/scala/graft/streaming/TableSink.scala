@@ -107,17 +107,13 @@ object IdempotentParquetSink {
           "ParquetSink for plain appends.")
         validated.add(key)
       }
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // insertInto is positional: align to the table's column order (data
       // columns first, partition columns last, as saveAsTable laid out).
-      try stamped.select(spark.table(fqn).columns.map(
-          org.apache.spark.sql.functions.col).toSeq: _*)
-        .write.mode("overwrite").insertInto(fqn)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      graft.core.SessionConf.withConf(spark,
+          "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+        stamped.select(spark.table(fqn).columns.map(
+            org.apache.spark.sql.functions.col).toSeq: _*)
+          .write.mode("overwrite").insertInto(fqn))
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The streamed gate query vs its batch dual: the append-mode emission
@@ -132,5 +133,33 @@ class StreamingGateSpec extends SparkSpec {
     assert(got == model)
     // the in-row certificate: every surviving row is unique
     got.values.foreach { case (n, nd, _) => assert(n == nd) }
+  }
+
+  test("runner: gate conf reaches only the stream; a batch mid-gate sees the parent's") {
+    val keys = Seq("spark.sql.shuffle.partitions", graft.core.Tables.NanosKey,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled")
+    def view(s: SparkSession): Seq[Option[String]] =
+      keys.map(s.conf.getOption)
+    val gateConf = Seq(Some("1"), Some("true"), Some("false"))
+    val before = spark.conf.getAll
+    val parent = view(spark)
+    assert(parent.zip(gateConf).forall { case (p, g) => p != g },
+      "every scoped key must differ from the parent's for the check to bite")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (Seq[Option[String]], Seq[Option[String]])]()
+    StreamingGate.gate(spark, "conf_isolation",
+        Seq("events.parquet" -> s"$sf/events.parquet")) { g =>
+      g.drain(g.source(spark.read.parquet(s"$sf/events.parquet").schema))(
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          seen.add((view(spark), view(batch.sparkSession)))
+          ()
+        })
+    }
+    assert(!seen.isEmpty, "the drain must run at least one micro-batch")
+    seen.forEach { case (p, b) =>
+      assert(p == parent, "the parent session's conf mid-gate")
+      assert(b == gateConf, "the stream's cloned session's conf")
+    }
+    assert(spark.conf.getAll == before)
   }
 }

@@ -10,10 +10,10 @@ class JsonAccountedSpec extends SparkSpec {
     StructField("id", LongType), StructField("name", StringType)))
 
   private def stage(lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("json_acct")
-    java.nio.file.Files.write(dir.resolve("batch.json"),
+    val dir = tmpDir("json_acct")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "batch.json"),
       lines.mkString("\n").getBytes("UTF-8"))
-    dir.toString
+    dir
   }
 
   test("malformed lines land in quarantine with their raw text; good rows survive untouched") {

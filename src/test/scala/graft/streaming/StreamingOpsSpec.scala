@@ -746,55 +746,46 @@ class StreamingOpsSpec extends SparkSpec {
     // mergeSchema read shows one complete copy per era, v1 rows null in
     // the new column.
     import org.apache.spark.sql.streaming.Trigger
-    val src = java.nio.file.Files.createTempDirectory("q337_spec_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("q337_spec_ckpt")
-    val out = java.nio.file.Files.createTempDirectory("q337_spec_out")
-    try {
-      def land(name: String): Unit = {
-        val stage = src.resolve(s"stage_$name")
-        spark.range(10).select(col("id"), (col("id") * 3).as("v"))
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = java.nio.file.Files.list(stage).filter(
-          p => p.toString.endsWith(".parquet")).findFirst().get()
-        java.nio.file.Files.move(part, src.resolve(s"$name.parquet"))
-        java.nio.file.Files.walk(stage)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType)))
-      def runOnce(upgraded: Boolean): Unit = {
-        val base = spark.readStream.schema(schema).parquet(src.toString)
-        val shaped = if (upgraded) base.withColumn("band", col("v") % 7)
-          else base
-        val q = shaped.writeStream.format("parquet")
-          .option("path", out.toString)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      land("a"); runOnce(upgraded = false)
-      land("b"); runOnce(upgraded = true)
-      val merged = spark.read.option("mergeSchema", "true")
-        .parquet(out.toString)
-      assert(merged.columns.sorted.toSeq == Seq("band", "id", "v"))
-      val v1 = merged.filter(col("band").isNull)
-      val v2 = merged.filter(col("band").isNotNull)
-      assert(v1.count() == 10 && v2.count() == 10,
-        "each era must hold exactly one complete corpus copy")
-      assert(v2.filter(col("band") =!= col("v") % 7).count() == 0,
-        "upgraded rows must carry the derived column")
-    } finally {
-      Seq(src, ckpt, out).foreach { root =>
-        if (java.nio.file.Files.exists(root))
-          java.nio.file.Files.walk(root)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+    val src = java.nio.file.Paths.get(tmpDir("q337_spec_src"))
+    val ckpt = tmpDir("q337_spec_ckpt")
+    val out = tmpDir("q337_spec_out")
+    def land(name: String): Unit = {
+      val stage = src.resolve(s"stage_$name")
+      spark.range(10).select(col("id"), (col("id") * 3).as("v"))
+        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      val part = java.nio.file.Files.list(stage).filter(
+        p => p.toString.endsWith(".parquet")).findFirst().get()
+      java.nio.file.Files.move(part, src.resolve(s"$name.parquet"))
+      java.nio.file.Files.walk(stage)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
     }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("v",
+        org.apache.spark.sql.types.LongType)))
+    def runOnce(upgraded: Boolean): Unit = {
+      val base = spark.readStream.schema(schema).parquet(src.toString)
+      val shaped = if (upgraded) base.withColumn("band", col("v") % 7)
+        else base
+      val q = shaped.writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    land("a"); runOnce(upgraded = false)
+    land("b"); runOnce(upgraded = true)
+    val merged = spark.read.option("mergeSchema", "true")
+      .parquet(out)
+    assert(merged.columns.sorted.toSeq == Seq("band", "id", "v"))
+    val v1 = merged.filter(col("band").isNull)
+    val v2 = merged.filter(col("band").isNotNull)
+    assert(v1.count() == 10 && v2.count() == 10,
+      "each era must hold exactly one complete corpus copy")
+    assert(v2.filter(col("band") =!= col("v") % 7).count() == 0,
+      "upgraded rows must carry the derived column")
   }
 }
