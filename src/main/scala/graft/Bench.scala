@@ -24,40 +24,6 @@ import graft.core.SparkSessionFactory
   */
 object Bench {
 
-  /** Attributes shuffle bytes to a label via job groups: JobStart carries
-    * the group id and the job's stage ids; TaskEnd metrics are summed into
-    * whichever label owns the task's stage. Gives the scale-review loop a
-    * measured answer to "how much does this query actually shuffle". */
-  private final class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    private val stageToLabel = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val read = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    val write = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    // spill posture (VERDICT r14 #3): memory/disk bytes spilled per
-    // label, so a constrained-memory rehearsal can record HOW MUCH each
-    // query spilled (0 under normal runs — any nonzero row is evidence
-    // the spill path executed and the output stayed hash-identical)
-    val memSpill = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    val diskSpill = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val label = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      if (label.nonEmpty) js.stageIds.foreach(sid => stageToLabel.put(sid, label))
-    }
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val label = stageToLabel.get(te.stageId)
-      if (label != null && te.taskMetrics != null) {
-        read.computeIfAbsent(label, _ => new java.util.concurrent.atomic.LongAdder)
-          .add(te.taskMetrics.shuffleReadMetrics.totalBytesRead)
-        write.computeIfAbsent(label, _ => new java.util.concurrent.atomic.LongAdder)
-          .add(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        memSpill.computeIfAbsent(label, _ => new java.util.concurrent.atomic.LongAdder)
-          .add(te.taskMetrics.memoryBytesSpilled)
-        diskSpill.computeIfAbsent(label, _ => new java.util.concurrent.atomic.LongAdder)
-          .add(te.taskMetrics.diskBytesSpilled)
-      }
-    }
-  }
-
   private def prewarmPageCache(dir: String, ext: String = ".parquet"): Unit = {
     val buf = new Array[Byte](1 << 20)
     // walk (not list): testdata SF dirs hold single-file tables, but
@@ -89,17 +55,14 @@ object Bench {
     // synthetic payloads keeps the untimed warmup pass (and any first
     // timed sample on a slow host) near steady state.
     graft.operators.Multimodal.preJitCodecs()
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = graft.core.Meter.on(spark)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     names.foreach { n => // warmup pass; also meters shuffle bytes + captures failures
-      spark.sparkContext.setJobGroup(n, n)
       // NonFatal only: an OOM/LinkageError means a corrupted JVM whose
       // subsequent samples would be garbage — let it abort the run.
-      try queries(n)(spark, sfDir).count()
+      try meter.label(n)(queries(n)(spark, sfDir).count())
       catch { case scala.util.control.NonFatal(e) => errors(n) = e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(200) }
       finally {
-        spark.sparkContext.clearJobGroup()
         // same hygiene as the timed loop: do not let one query's
         // checkpoint blocks squat in the block manager for the rest
         // of the warmup pass
@@ -239,17 +202,13 @@ object Bench {
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // One warmup execution per query was metered. Listener events are
-    // async, but the full timed pass (seconds of queries) has run since
-    // warmup; the brief sleep covers any last in-flight TaskEnd events.
-    Thread.sleep(1000)
+    // One warmup execution per query was metered, streams included. The
+    // spill fields let a constrained-memory rehearsal record how much each
+    // query spilled (0 under normal runs; VERDICT r14 #3).
     val shuffle = names.map { n =>
-      val r = Option(meter.read.get(n)).map(_.sum).getOrElse(0L)
-      val w = Option(meter.write.get(n)).map(_.sum).getOrElse(0L)
-      val ms = Option(meter.memSpill.get(n)).map(_.sum).getOrElse(0L)
-      val ds = Option(meter.diskSpill.get(n)).map(_.sum).getOrElse(0L)
-      "\"" + n + "\":{\"read\":" + r + ",\"write\":" + w +
-        ",\"mem_spill\":" + ms + ",\"disk_spill\":" + ds + "}"
+      val r = meter.record(n)
+      "\"" + n + "\":{\"read\":" + r.shuffleRead + ",\"write\":" + r.shuffleWrite +
+        ",\"mem_spill\":" + r.memorySpill + ",\"disk_spill\":" + r.diskSpill + "}"
     }.mkString(",\"shuffle_bytes\":{", ",", "}")
     val total = results.map(_._2).sum
     val errJson =

@@ -1,10 +1,15 @@
 package graft
-import graft.core.SparkSessionFactory
+import graft.core.{Meter, SparkSessionFactory}
 
 /** One sequential cold pass over the named gate queries (or every query
   * matching a prefix list), printing one JSON line per query with its
   * wall-clock cost — the tool behind BASELINE.md's "cold, sf0.1" cost
   * notes. First row carries JVM/codegen warmup, as documented there.
+  *
+  * Each line also carries what the query ran, from [[Meter]]: every Spark
+  * job (id, stage count, wall, call site), stage and task counts, shuffle
+  * bytes, spill, and one progress JSON per micro-batch of the streams it
+  * started (`durationMs` phases, state-operator commit times).
   *
   * Run: `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.QueryTime q115,q116"`
   * An optional second arg repeats the whole pass N times (pass 1 is the
@@ -15,22 +20,41 @@ object QueryTime {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val prefixes = if (args.nonEmpty) args(0).split(",").toSeq else Seq("q")
     val passes = if (args.length > 1) args(1).toInt else 1
-    val spark = SparkSessionFactory.local(32, "graft-query-time")
+    val spark = SparkSessionFactory.localFromEnv(32, "graft-query-time")
     spark.sparkContext.setLogLevel("ERROR")
-    // opt-in codec pre-JIT, to measure cold rows the way Verify/Bench
-    // now run them (round 16)
-    if (sys.env.get("GRAFT_PREJIT").contains("1"))
-      graft.operators.Multimodal.preJitCodecs()
+    // cold rows measured the way Verify/Bench run them (round 16)
+    graft.operators.Multimodal.preJitCodecs()
+    val meter = Meter.on(spark)
     val picked = SparkEntry.modules
       .filter { case (n, _) => prefixes.exists(n.startsWith) }
     (1 to passes).foreach { pass =>
       picked.foreach { case (name, d) =>
+        val label = s"$name#$pass"
         val t0 = System.nanoTime()
-        val rows = d.build(spark, sfDir).count()
+        val rows = meter.label(label)(d.build(spark, sfDir).count())
         val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"query":"$name","pass":$pass,"rows":$rows,"sec":$sec%.3f}""")
+        println(f"""{"query":"$name","pass":$pass,"rows":$rows,"sec":$sec%.3f,""" +
+          fields(meter.record(label)) + "}")
       }
     }
     spark.stop()
+  }
+
+  /** A record as JSON object members; `batches` are Spark's own progress
+    * JSON, one per micro-batch. */
+  private def fields(r: Meter.Record): String = {
+    val jobs = r.jobs.map(j =>
+      f"""{"id":${j.id},"stages":${j.stages},"sec":${j.sec}%.3f,"desc":"${escape(j.description)}"}""")
+    s""""jobs":${jobs.mkString("[", ",", "]")},"stages":${r.stages},"tasks":${r.tasks},""" +
+      s""""shuffle_read":${r.shuffleRead},"shuffle_write":${r.shuffleWrite},""" +
+      s""""spill":{"mem":${r.memorySpill},"disk":${r.diskSpill}},""" +
+      s""""batches":${r.batches.mkString("[", ",", "]")}"""
+  }
+
+  private def escape(s: String): String = s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => " "
+    case c    => c.toString
   }
 }

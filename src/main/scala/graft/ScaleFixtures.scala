@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * corpus is reproducible bit-for-bit.
   *
   * Two transforms protect the DATA-scaling laws of the near-dup /
-  * similarity operators (the ScaleProbe `dedup` probe's trick — without
+  * similarity operators (the trick behind BASELINE.md's "Dedup scaling"
+  * rows — without
   * them, 10 identical copies of every document/vector make cross-copy
   * candidate pairs grow ~copies², a fixture artifact no production
   * corpus exhibits and one that would mis-attribute super-linear bench

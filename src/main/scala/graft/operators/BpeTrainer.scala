@@ -45,8 +45,8 @@ import org.apache.spark.sql.functions._
   * round's earlier merge cannot be chosen later in the same round (it
   * becomes a candidate next round). Rounds collapse from `nMerges` to
   * `ceil(nMerges / accepted-per-round)` — the axis that actually binds at
-  * production merge counts (see ScaleProbe "bpe": wall time vs merge count
-  * is strongly sub-linear under batching).
+  * production merge counts (see BASELINE.md "BPE training vs MERGE COUNT":
+  * wall time vs merge count is strongly sub-linear under batching).
   */
 object BpeTrainer {
 

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Exact n-gram Jaccard similarity join with corpus-statistics routing.
   *
   * Two exact physical forms exist for "all pairs with Jaccard ≥ t over
-  * hashed shingle sets", with opposite scaling regimes (measured in
-  * `ScaleProbe` "prefixjoin", tabulated in BASELINE.md):
+  * hashed shingle sets", with opposite scaling regimes (measured and
+  * tabulated in BASELINE.md "Prefix-filtered exact join"):
   *
   *  - NAIVE co-shingle self-join: explode → equijoin on the 8-byte
   *    shingle hash → per-pair intersection count. Cost is the co-element
@@ -108,7 +108,8 @@ object NgramJaccard {
     * per distinct shingle hash per doc). Returns ("naive" | "prefix",
     * unordered pair DataFrame [doc_a, doc_b, n_common, jaccard]).
     * Exact-statistic form: callers that already hold nDocs and want the
-    * full-vocabulary mass (ScaleProbe calibration). Query paths should
+    * full-vocabulary mass (the BASELINE.md "Prefix-filtered exact join"
+    * calibration). Query paths should
     * prefer [[similarPairsAutoSampled]], whose statistic is one action. */
   def similarPairsAuto(ex: DataFrame, nDocs: Long, threshold: Double,
       crossover: Double = CrossoverMassPerDoc): (String, DataFrame) = {

@@ -58,7 +58,7 @@ object Winnowing {
     // then array_min over per-window SLICE COPIES, carefully LET-BOUND so
     // Catalyst would not inline the md5 pass once per window (O(n²·w);
     // measured 165 s vs 4 s on the probe corpus) — was value-correct but
-    // evaluation-bound: JobProbe attributed q202's whole bench row to
+    // evaluation-bound: per-job walls attributed q202's whole bench row to
     // this single map stage (~2.2 s of interpreted lambda walks, hex
     // round-trips and slice copies at sf0.1). The kernel computes the
     // identical packed values (same concat_ws(" ") gram bytes, same md5,

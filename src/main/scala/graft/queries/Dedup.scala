@@ -29,7 +29,7 @@ object Dedup {
   /** q353's pinned decision threshold: match ⟺ the rescaled 5-factor
     * product p5 ≥ T · GREATEST(n_a, n_b) (prior-odds scaling — see
     * q353's docstring). Calibrated round 14 on the sf0.1 corpus + the
-    * sf1 rehearsal (WeightProbe's measured pattern bands, which are
+    * sf1 rehearsal (the calibration's measured pattern bands, which are
     * SF-invariant because the factors self-normalize): at both SFs the
     * accepted patterns are exactly {ph agrees ∧ at most one of
     * seg/band/tok disagrees} — both thresholds (T·max(n) at 1× and 10×
@@ -107,19 +107,21 @@ object Dedup {
     * corpus); the pairwise stage is a cell-partitioned self-equijoin —
     * the corpus-wide cross product never exists. Choosing k: total work
     * is n·k (assignment) + n·(n/k)/2 (within-cell pairs), minimized at
-    * k ≈ √(n/2) where both terms are O(n^1.5) — measured in ScaleProbe
-    * "semdedup"; a hierarchical (two-level) centroid assignment would
-    * reach ~n·log n if flat assignment ever dominates at real scale. */
+    * k ≈ √(n/2) where both terms are O(n^1.5) — measured in BASELINE.md
+    * "Semantic dedup at scale"; a hierarchical (two-level) centroid
+    * assignment would reach ~n·log n if flat assignment ever dominates at
+    * real scale. */
   /** The cell-assignment stage of [[semanticDedupStats]]: (cid, vec_id,
     * e) with every vector joined to its argmax-cosine centroid (the k
     * lowest-id vectors; ties to the lowest cid).
     *
     * The argmax is a partial-aggregating max_by over (sim, -cid) — NOT a
     * row_number window: the window form would shuffle |corpus|·k rows
-    * carrying the embedding array (measured 10× superlinear in ScaleProbe
-    * at 50k vectors); max_by reduces map-side to one row per vector and
-    * ships no vectors at all. Lazily localCheckpoint'd: the assignment
-    * feeds multiple consumers (both self-join sides + stats) — without it
+    * carrying the embedding array (measured 10× superlinear at 50k
+    * vectors, BASELINE.md "Semantic dedup at scale"); max_by reduces
+    * map-side to one row per vector and ships no vectors at all. Lazily
+    * localCheckpoint'd: the assignment feeds multiple consumers (both
+    * self-join sides + stats) — without it
     * each consumer recomputes the full |corpus|·k cosine assignment
     * (measured 49 s → ~10 s at 50k vectors). Same materialize-the-
     * assignment posture a production SemDeDup run takes (and the
@@ -1620,10 +1622,11 @@ object Dedup {
     // with LCS, q320 with chrF): thresholded Levenshtein — the
     // production verify after candidate generation (Spark's built-in
     // `levenshtein(l, r, K)` returns −1 above K; no UDF). What the cap
-    // actually buys on Spark 4.1 is MEASURED, not assumed (ScaleProbe
-    // "editcap"): ~1.8× per pair at equal lengths (the textbook O(K·L)
-    // band does not survive measurement — per-char UTF8 decode
-    // dominates, so both forms grow ~quadratically) plus the immediate
+    // actually buys on Spark 4.1 is MEASURED, not assumed (BASELINE.md
+    // "Thresholded edit-distance cost law"): ~1.8× per pair at equal
+    // lengths (the textbook O(K·L) band does not survive measurement —
+    // per-char UTF8 decode dominates, so both forms grow
+    // ~quadratically) plus the immediate
     // −1 short-circuit when lengths differ by more than K. At this
     // gate's document lengths (≤ ~500 chars) per-pair cost is
     // microseconds either way; the cap's semantic value — a bounded
@@ -2190,7 +2193,7 @@ object Dedup {
     // at 10× density the 4 quasi-identifiers saturate (793k coincidental
     // all-agree pairs among 121k true). Round 14 first MEASURED the
     // suggested fix — value-frequency (Fellegi–Sunter u) reweighting of
-    // the same 4 fields — and it is provably insufficient: WeightProbe's
+    // the same 4 fields — and it is provably insufficient: the measured
     // sf1 pair-level precision is FLAT at 0.0997 across every threshold,
     // because within a saturated all-agree block the true pair and its
     // coincidental block-mates share identical field values and are
@@ -2897,9 +2900,9 @@ object Dedup {
       a2: DataFrame, b2: DataFrame, blk2: DataFrame)
 
 
-  /** q353's scoring front, shared by the gate and [[WeightProbe]] (the
-    * round-14 threshold calibration): ph-enriched registries, TWO-PASS
-    * capped blocking (q349's dynamic blocks + a (nat, ph) pass), and the
+  /** q353's scoring front, also the input of the round-14 threshold
+    * calibration: ph-enriched registries, TWO-PASS capped blocking
+    * (q349's dynamic blocks + a (nat, ph) pass), and the
     * 5-field value-specific factor product per deduplicated candidate
     * pair. `scored` carries one row per candidate with its factors,
     * agreement flags, capped/rescaled score `p5`, the prior-scaled

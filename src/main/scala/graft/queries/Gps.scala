@@ -30,18 +30,9 @@ object Gps {
 
   /** The deterministic enriched batch every q70 consumer agrees on. */
   def enrichedBatch(spark: SparkSession, dir: String): DataFrame =
-    enrichedBatchOfSize(spark, inputRows(dir))
-
-  /** Same pipeline at an explicit row count (ScaleProbe's entry). */
-  def enrichedBatchOfSize(spark: SparkSession, n: Long): DataFrame =
     Enrichment.enrich(
-      GpsGenerator.batch(spark, n, seed = 42L),
+      GpsGenerator.batch(spark, inputRows(dir), seed = 42L),
       clockEpochSec = Some(1750000000L))
-
-  /** The full q70 aggregation over [[enrichedBatchOfSize]] — shared by the
-    * gate query (via sfDir row counts) and ScaleProbe (explicit n). */
-  def aggOfSize(spark: SparkSession, n: Long): DataFrame =
-    aggregate(enrichedBatchOfSize(spark, n))
 
   /** Exact speed average without a decimal aggregation buffer.
     *

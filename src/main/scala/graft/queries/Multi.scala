@@ -8,7 +8,7 @@ import graft.operators.Multimodal
   * ([[Multimodal.stagedAssets]]) so the headline times scan + decode +
   * featurize — the shape a production media scan pays — with fixture
   * synthesis (the encode half) off the benched path; the per-arm
-  * encode/decode split is the "videocost" ScaleProbe.
+  * encode/decode split is in BASELINE.md "Media encode vs decode split".
   *
   * Oracle pattern (see [[VerifyInputs]]): the codec + histogram feature
   * are engine-specific, so Verify materializes the per-asset scalar rows

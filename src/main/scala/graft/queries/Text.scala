@@ -477,7 +477,8 @@ object Text {
     // 100 TB posture: the automaton (Σ pattern lengths) ships once per
     // executor in the closure; the scan is map-side; the only shuffle is
     // the |patterns|-cardinality count aggregation. Pattern count scales
-    // without re-reading the corpus — see ScaleProbe "multipattern".
+    // without re-reading the corpus — see BASELINE.md "Multi-pattern
+    // blocklist scan".
     // HEADLINE SINCE ROUND 7: tracks the automaton-scan cost
     // round-over-round (BENCH totals grow by its ~0.3 s by
     // construction, like q139's addition in round 6).

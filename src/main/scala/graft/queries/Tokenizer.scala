@@ -199,10 +199,10 @@ object Tokenizer {
     // batched algorithm is allowed (deferred consideration only).
     //
     // 100 TB posture: this IS the posture — rounds collapse from nMerges
-    // to ceil(nMerges / accepted-per-round); ScaleProbe "bpemerges"
-    // measures 0.11 s/merge sequential (linear) vs 212 merges/s batched
-    // (sub-linear). With this gate the scale path carries the same
-    // oracle certificate as the sequential one.
+    // to ceil(nMerges / accepted-per-round); BASELINE.md "BPE training vs
+    // MERGE COUNT" measures 0.11 s/merge sequential (linear) vs 212
+    // merges/s batched (sub-linear). With this gate the scale path
+    // carries the same oracle certificate as the sequential one.
     "q232_bpe_batched" -> QueryDef(
       build = (spark, dir) =>
         BpeTrainer.train(Tables.documents(spark, dir), "text",

@@ -326,10 +326,10 @@ object Vectors {
     // VectorsSpec asserts planted-pair recall and the subset property).
     // Bucket BITS grow ~log N to hold occupancy constant
     // (VectorKernels.autoLshBits, ~30 vectors/bucket — the operating
-    // point ScaleProbe's "ann" section measured: recall 1 on planted
-    // pairs with near-flat cost through 100k vectors). The corpus count
-    // feeding the policy is a metadata-cheap 0-column scan; at real scale
-    // it comes from table statistics instead.
+    // point BASELINE.md's "Embedding near-dup scaling" measured: recall
+    // 1 on planted pairs with near-flat cost through 100k vectors). The
+    // corpus count feeding the policy is a metadata-cheap 0-column scan;
+    // at real scale it comes from table statistics instead.
     "q55_neardup_scale" -> QueryDef(
       build = (spark, dir) => {
         val bits = graft.functions.VectorKernels.autoLshBits(

@@ -37,17 +37,6 @@ object StreamingOps {
         col("direction"), col("n_events"), col("avg_speed"),
         col("max_speed"), col("n_collisions"))
 
-  /** Session windows per vehicle (gap-based), built-in session_window. */
-  def vehicleSessions(df: DataFrame, gap: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    withEventTime(df)
-      .withWatermark("event_time", watermark)
-      .groupBy(session_window(col("event_time"), gap), col("vehicle_id"))
-      .agg(count(lit(1)).as("n_fixes"), avg(col("speed_kmh")).as("avg_speed"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("vehicle_id"), col("n_fixes"), col("avg_speed"))
-
   // ---- custom state: per-vehicle trip accumulation ----------------------
 
   final case class TripState(

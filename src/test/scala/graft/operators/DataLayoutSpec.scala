@@ -62,18 +62,11 @@ class DataLayoutSpec extends SparkSpec {
     // Job accounting: the footer path must cost exactly as many Spark jobs
     // as caller-supplied bounds (i.e., zero extra), while the fallback
     // pays one blocking min/max aggregation job.
-    class Counter extends org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
+    val meter = graft.core.Meter.on(spark)
     def jobsDuring(f: => Unit): Int = {
-      val c = new Counter
-      spark.sparkContext.addSparkListener(c)
-      // listener events are async: drain with a sleep, not waitUntilEmpty
-      try { f; Thread.sleep(1500); c.n.get }
-      finally spark.sparkContext.removeSparkListener(c)
+      val label = "datalayout-" + java.util.UUID.randomUUID()
+      meter.label(label)(f)
+      meter.record(label).jobs.size
     }
     try {
       val explicit = jobsDuring(DataLayout.writeClusteredZ(orders, "z_explicit",

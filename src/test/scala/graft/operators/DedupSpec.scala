@@ -152,11 +152,12 @@ class DedupSpec extends SparkSpec {
   test("two-level assignment keeps planted clones co-celled (prune recall holds)") {
     import graft.functions.VectorFunctions._
     import graft.queries.Dedup
-    // The ScaleProbe "semdedup" construction at n=2000: ids [1000, 2000)
-    // are 2%-scaled + shifted copies of id - 1000 (cos ≈ 0.999). Cell
-    // agreement with flat argmax is data-dependent on isotropic vectors,
-    // but a clone's argmax path tracks its original's at BOTH levels, so
-    // pruning at tau = 0.9 must still catch ~all 1000 planted clones.
+    // The BASELINE.md "Semantic dedup at scale" construction at n=2000:
+    // ids [1000, 2000) are 2%-scaled + shifted copies of id - 1000
+    // (cos ≈ 0.999). Cell agreement with flat argmax is data-dependent on
+    // isotropic vectors, but a clone's argmax path tracks its original's
+    // at BOTH levels, so pruning at tau = 0.9 must still catch ~all 1000
+    // planted clones.
     val n = 2000L
     val baseId = when(col("id") >= n / 2, col("id") - n / 2).otherwise(col("id"))
     val scale = when(col("id") >= n / 2, lit(1.02)).otherwise(lit(1.0))
