@@ -401,7 +401,7 @@ object Multimodal {
   /** (features of decodable assets, quarantine rows with reasons). The
     * accounted batch is persisted by the CALLER before splitting when
     * it will consume both sides (same rule as
-    * [[graft.sources.JsonBatchReader.splitAccounted]] — a production
+    * [[graft.sources.JsonBatchReader.withSplitAccounted]] — a production
     * run lands the accounted pass in a table once and reads the two
     * slices from there; re-decoding per side is the anti-pattern). */
   def splitFeaturesAccounted(rows: Dataset[MediaFeaturesAccounted])

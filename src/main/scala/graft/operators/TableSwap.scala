@@ -101,8 +101,6 @@ object TableSwap {
         spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
       else
         spark.sql(s"DROP TABLE $tmp")
-      // the table under this name is (or may be) a different table now
-      graft.streaming.IdempotentParquetSink.invalidate(spark, table)
     }
   }
 
@@ -122,9 +120,6 @@ object TableSwap {
     // and this property write loses the operation LABEL, never data
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('$OpProperty'='$operation')")
     spark.catalog.refreshTable(table)
-    // a validated-by-IdempotentParquetSink table no longer exists under
-    // this name; the rewritten one must re-earn the partition-spec guard
-    graft.streaming.IdempotentParquetSink.invalidate(spark, table)
   }
 }
 

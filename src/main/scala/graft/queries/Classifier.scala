@@ -35,6 +35,18 @@ object Classifier {
   // cached copy.
   private var lastX: Option[org.apache.spark.sql.DataFrame] = None
 
+  /** The labelled, biased hashed-token feature table of `docs`, persisted
+    * in place of the previous one. */
+  private def features(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = synchronized {
+    lastX.foreach(_.unpersist(blocking = false))
+    val built = HashedLogReg.withLabelAndBias(
+      HashedLogReg.tokenFeatures(docs, "text", StopTerms), ThreshPerMille)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    lastX = Some(built)
+    built
+  }
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- q233: trained quality classifier (hashed-feature LR) ----
@@ -62,15 +74,7 @@ object Classifier {
     "q233_quality_classifier" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val n = docs.count()
         val w = HashedLogReg.train(x, n, Rounds, InvLr)
         val scored = HashedLogReg.score(x, w)
@@ -110,15 +114,7 @@ object Classifier {
     "q243_training_cartography" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val n = docs.count()
         val hist = HashedLogReg.trainHistory(x, n, Rounds, InvLr)
         val zCols = hist.zipWithIndex.map { case (w, i) =>
@@ -169,15 +165,7 @@ object Classifier {
     "q246_incremental_classifier" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val n = docs.count()
         val nEven = docs.filter(col("doc_id") % 2 === 0).count()
         val xEven = x.filter(col("doc_id") % 2 === 0)
@@ -217,15 +205,7 @@ object Classifier {
     "q251_cross_validation" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val nEven = docs.filter(col("doc_id") % 2 === 0).count()
         val nOdd = docs.filter(col("doc_id") % 2 === 1).count()
         val xEven = x.filter(col("doc_id") % 2 === 0)
@@ -272,15 +252,7 @@ object Classifier {
     "q254_temperature_scaling" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val n = docs.count()
         val w = HashedLogReg.train(x, n, Rounds, InvLr)
         val scored = HashedLogReg.score(x, w).localCheckpoint(false)
@@ -324,15 +296,7 @@ object Classifier {
     "q272_streamed_model_scoring" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val w = HashedLogReg.train(x, docs.count(), Rounds, InvLr)
         StreamingGate.streamedModelScoring(spark, dir, w, StopTerms,
           ThreshPerMille)
@@ -360,15 +324,7 @@ object Classifier {
     "q276_conformal_coverage" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val w = HashedLogReg.train(x, docs.count(), Rounds, InvLr)
         val scored = HashedLogReg.score(x, w)
           .withColumn("conf", expr(
@@ -518,15 +474,7 @@ object Classifier {
     "q293_mcnemar_early_stop" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val n = docs.count()
         val hist = HashedLogReg.trainHistory(x, n, Rounds, InvLr)
         def zc(w: Array[Long], out: String) =
@@ -591,15 +539,7 @@ object Classifier {
     "q310_confident_learning" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val n = docs.count()
         val w = HashedLogReg.train(x, n, Rounds, InvLr)
         val cf = HashedLogReg.score(x, w)
@@ -678,15 +618,7 @@ object Classifier {
     "q311_successive_halving" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val n = docs.count()
         def acc(w: Array[Long]): (Long, Long) = {
           val r = HashedLogReg.score(x, w)
@@ -756,15 +688,7 @@ object Classifier {
     "q321_fairness_audit" -> QueryDef(
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
-        val x = synchronized {
-          lastX.foreach(_.unpersist(blocking = false))
-          val built = HashedLogReg.withLabelAndBias(
-            HashedLogReg.tokenFeatures(docs, "text", StopTerms),
-            ThreshPerMille)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          lastX = Some(built)
-          built
-        }
+        val x = features(docs)
         val n = docs.count()
         val w = HashedLogReg.train(x, n, Rounds, InvLr)
         val scored = HashedLogReg.score(x, w)

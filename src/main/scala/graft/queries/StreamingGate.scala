@@ -217,8 +217,7 @@ object StreamingGate {
     /** Drop a managed table the gate (re)creates. A previous JVM's
       * managed-table DIRECTORIES (the table and TableSwap's rewrite
       * staging) survive its in-memory catalog — clear those locations
-      * too or saveAsTable refuses (LOCATION_ALREADY_EXISTS) — and forget
-      * any stale sink validation for the name. */
+      * too or saveAsTable refuses (LOCATION_ALREADY_EXISTS). */
     def resetTable(table: String): Unit = {
       Seq(table, table + graft.operators.TableSwap.TmpSuffix)
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -228,7 +227,6 @@ object StreamingGate {
         DirIO.list(wh)(
           _.filter(p => p.getFileName.toString.startsWith(table))
             .forEach(p => DirIO.deleteRecursively(p)))
-      graft.streaming.IdempotentParquetSink.invalidate(spark, table)
     }
 
     def close(): Unit = if (Files.exists(root)) DirIO.deleteRecursively(root)
@@ -2785,8 +2783,8 @@ object StreamingGate {
             expr("(event_id div 2) % 4") === f)))
       }
       // Bootstrap: a zero-row write creates the table with the sink's
-      // batch_id-first partition spec and validates it, so neither
-      // writer hits the create-if-missing race.
+      // batch_id-first partition spec, so neither writer hits the
+      // create-if-missing race.
       IdempotentParquetSink.write(ev.limit(0), table, batchId = -1L)
       val schema = StructType(Seq(
         StructField("event_id", LongType),

@@ -40,7 +40,7 @@ object JsonBatchReader {
     * "and nothing vanishes silently".
     *
     * Spark restriction documented upstream: a query may not reference
-    * ONLY the corrupt column; [[splitAccounted]] always carries the
+    * ONLY the corrupt column; [[withSplitAccounted]] always carries the
     * full row alongside it. */
   def readAccounted(spark: SparkSession, paths: Seq[String],
       schema: StructType): DataFrame = {
@@ -54,7 +54,8 @@ object JsonBatchReader {
       .json(paths: _*)
   }
 
-  /** (good rows without the marker, quarantine rows with the raw line).
+  /** Runs `f` over the (good rows without the marker, quarantine rows
+    * with the raw line) split of `df`, then unpersists the batch.
     *
     * The parsed batch is CACHED first: Spark disallows any query whose
     * pruned scan references only the corrupt column
@@ -62,22 +63,13 @@ object JsonBatchReader {
     * quarantine side's count()); the documented recipe is to cache the
     * parsed result and query that. Ingest batches are bounded (≤10
     * files per micro-batch, poller.py:20-24), so the cache is a
-    * batch-sized working set, not a corpus-sized one. */
-  def splitAccounted(df: DataFrame): (DataFrame, DataFrame) = {
+    * batch-sized working set, not a corpus-sized one, and the `finally`
+    * releases it so no caller leaks a pinned block per batch. */
+  def withSplitAccounted[T](df: DataFrame)(f: (DataFrame, DataFrame) => T): T = {
     import org.apache.spark.sql.functions.col
     val parsed = df.cache()
-    (parsed.filter(col(CorruptCol).isNull).drop(CorruptCol),
+    try f(parsed.filter(col(CorruptCol).isNull).drop(CorruptCol),
       parsed.filter(col(CorruptCol).isNotNull))
-  }
-
-  /** [[splitAccounted]] with a bounded cache lifetime: runs `f` over the
-    * (good, quarantine) split and unpersists the batch-sized cache in a
-    * `finally` — so callers can't leak a pinned block per batch (the
-    * split form above leaves unpersisting to the caller, which
-    * MicroBatchPipeline used to reimplement inline just to get the
-    * unpersist right). */
-  def withSplitAccounted[T](df: DataFrame)(f: (DataFrame, DataFrame) => T): T = {
-    val (good, bad) = splitAccounted(df)
-    try f(good, bad) finally { df.unpersist(); () }
+    finally { df.unpersist(); () }
   }
 }

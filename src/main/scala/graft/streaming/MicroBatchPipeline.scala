@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.GpsSchema
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The ingest pipeline (SURVEY §2.4 O1–O4), Spark-first.
@@ -47,8 +47,9 @@ object MicroBatchPipeline {
       // true => stamp rows with the micro-batch id and commit via dynamic
       // partition overwrite (IdempotentParquetSink): replaying a batch
       // after a crash between table write and checkpoint commit replaces
-      // its own partition instead of double-appending. Default false keeps
-      // the reference's plain-append table layout.
+      // its own partition instead of double-appending. Parquet only: start
+      // rejects it with a custom sink. Default false keeps the
+      // reference's plain-append table layout through the caller's sink.
       idempotentCommit: Boolean = false,
       // Some(table) => malformed JSON lines are captured (PERMISSIVE +
       // explicit _corrupt_record, JsonBatchReader.readAccounted's
@@ -62,6 +63,9 @@ object MicroBatchPipeline {
     * double-read) → enrichment → create-or-append sink. */
   def start(spark: SparkSession, config: Config,
       sink: TableSink = ParquetSink): StreamingQuery = {
+    require(!config.idempotentCommit || (sink eq ParquetSink),
+      "idempotentCommit writes both tables through IdempotentParquetSink " +
+      "(parquet only) and cannot honour a custom sink")
     val corruptCol = graft.sources.JsonBatchReader.CorruptCol
     val schema =
       if (config.quarantineTable.isDefined)
@@ -104,64 +108,58 @@ object MicroBatchPipeline {
       source.observe("ingest_metrics", metrics.head, metrics.tail: _*)
     }
 
+    // The one batch function. Both tables go through `commit`: the
+    // caller's sink in plain-append mode, the batch_id partition
+    // overwrite under idempotentCommit — a crash between a write and the
+    // checkpoint commit replays the batch, and the overwrite replaces
+    // the same rows on BOTH tables instead of double-appending them.
+    def runBatch(raw: DataFrame, batchId: Long): Unit = {
+      import org.apache.spark.sql.functions.{col, lit}
+      def commit(df: DataFrame, table: String, parts: Seq[String] = Nil): Unit =
+        if (config.idempotentCommit)
+          IdempotentParquetSink.write(df, table, batchId, parts, config.compression)
+        else sink.write(df, table, parts, config.compression)
+      def writeMain(batch: DataFrame): Unit =
+        if (!batch.isEmpty) {
+          val enriched0 = config.clockEpochSec match {
+            // Injected clock => deterministic column-DSL path (golden tests).
+            case Some(_) => Enrichment.enrich(batch, config.clockEpochSec)
+            case None    => Enrichment.enrichSql(batch, config.sqlQuery)
+          }
+          // quarantine mode: enrichment's own input_file_name() saw a
+          // cache scan (empty) — fold in the scan-time attribution
+          val enriched =
+            if (batch.columns.contains(SrcFileCol))
+              enriched0.withColumn("input_file", col(SrcFileCol))
+                .drop(SrcFileCol)
+            else enriched0
+          commit(enriched, config.table, config.partitionCols)
+          if (config.sqlQuery.isDefined && config.clockEpochSec.isEmpty)
+            // The view lives in the batch's (cloned) session catalog.
+            batch.sparkSession.catalog.dropTempView("temp_view") // spark_job.py:68-69
+        }
+      config.quarantineTable match {
+        case Some(qt) =>
+          // the shared split helper owns the batch-sized cache (the
+          // corrupt-column query restriction recipe) and unpersists it
+          // when both writes are done
+          graft.sources.JsonBatchReader.withSplitAccounted(raw) { (good, badRows) =>
+            // batch_id is recorded in both modes, so plain-append replays
+            // stay attributable
+            val bad = badRows.select(col(corruptCol).as("raw_line"),
+              col(SrcFileCol).as("src_file"),
+              lit(batchId).as(IdempotentParquetSink.BatchCol))
+            if (!bad.isEmpty) commit(bad, qt)
+            writeMain(good)
+          }
+        case None => writeMain(raw)
+      }
+    }
+
     observed.writeStream
       .option("checkpointLocation", config.checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (raw: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.{col, lit}
-        def writeMain(batch: org.apache.spark.sql.DataFrame): Unit =
-          if (!batch.isEmpty) {
-            val hasSrcFile = batch.columns.contains(SrcFileCol)
-            val enriched0 = config.clockEpochSec match {
-              // Injected clock => deterministic column-DSL path (golden tests).
-              case Some(_) => Enrichment.enrich(batch, config.clockEpochSec)
-              case None    => Enrichment.enrichSql(batch, config.sqlQuery)
-            }
-            // quarantine mode: enrichment's own input_file_name() saw a
-            // cache scan (empty) — fold in the scan-time attribution
-            val enriched =
-              if (hasSrcFile)
-                enriched0.withColumn("input_file", col(SrcFileCol))
-                  .drop(SrcFileCol)
-              else enriched0
-            if (config.idempotentCommit)
-              IdempotentParquetSink.write(enriched, config.table, batchId,
-                config.partitionCols, config.compression)
-            else
-              sink.write(enriched, config.table, config.partitionCols, config.compression)
-            if (config.sqlQuery.isDefined && config.clockEpochSec.isEmpty)
-              // The view lives in the batch's (cloned) session catalog.
-              batch.sparkSession.catalog.dropTempView("temp_view") // spark_job.py:68-69
-          }
-        config.quarantineTable match {
-          case Some(qt) =>
-            // the shared split helper owns the batch-sized cache (the
-            // corrupt-column query restriction recipe) and unpersists it
-            // when both writes are done
-            graft.sources.JsonBatchReader.withSplitAccounted(raw) { (good, badRows) =>
-              val bad = badRows.select(col(corruptCol).as("raw_line"),
-                col(SrcFileCol).as("src_file"))
-              if (!bad.isEmpty) {
-                if (config.idempotentCommit)
-                  // same replay contract as the main table: a crash
-                  // between this write and the checkpoint commit replays
-                  // the batch, and the batch_id partition overwrite
-                  // replaces the same quarantine rows instead of
-                  // double-appending them
-                  IdempotentParquetSink.write(bad, qt, batchId)
-                else
-                  // plain-append mode keeps the reference's
-                  // at-least-once table semantics on BOTH tables;
-                  // batch_id still recorded so replays are attributable
-                  bad.withColumn("batch_id", lit(batchId))
-                    .write.format("parquet").mode("append").saveAsTable(qt)
-              }
-              writeMain(good)
-            }
-          case None => writeMain(raw)
-        }
-        ()
-      }
+      .foreachBatch(runBatch _)
       .start()
   }
 

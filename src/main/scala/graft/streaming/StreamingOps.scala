@@ -128,19 +128,6 @@ object StreamingOps {
       .withWatermark("event_time", watermark)
       .dropDuplicates("vehicle_id", "timestamp")
 
-  /** Sliding-window speed profile (window + slide): each event lands in
-    * window/slide overlapping windows — the smoothing variant of
-    * [[tumblingSpeedProfile]]. */
-  def slidingSpeedProfile(df: DataFrame, window_ : String = "2 minutes",
-      slide: String = "1 minute", watermark: String = "4 minutes"): DataFrame =
-    withEventTime(df)
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), window_, slide), col("direction"))
-      .agg(count(lit(1)).as("n_events"), avg(col("speed_kmh")).as("avg_speed"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("direction"), col("n_events"), col("avg_speed"))
-
   // ---- transformWithState: the Spark-4 arbitrary-state API --------------
 
   final case class Odometer(

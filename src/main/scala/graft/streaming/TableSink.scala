@@ -49,71 +49,44 @@ object ParquetSink extends TableSink {
 object IdempotentParquetSink {
   val BatchCol = "batch_id"
 
-  // Tables whose batch_id partition spec has already been validated this
-  // JVM: the listColumns guard below is a driver-side catalog round-trip,
-  // pure overhead once a table is known-good — pay it once per table, not
-  // once per micro-batch.
-  //
-  // Keyed on the catalog-RESOLVED identifier (current database applied to
-  // unqualified names, case-folded), so `t` validated under db A cannot
-  // alias `t` in db B after a USE-database change. Drop/recreate paths
-  // inside this library (TableSwap.rewrite/recover, and thus
-  // Compaction/Upsert) call [[invalidate]] so the guard re-runs against
-  // the new table. Residual staleness window: a table dropped and
-  // recreated under the same name by RAW DDL in this same JVM (outside
-  // those helpers) is still trusted until invalidated — re-validating
-  // every micro-batch would reintroduce the per-batch catalog round-trip
-  // this cache exists to avoid; external writers in OTHER JVMs are out of
-  // scope either way (single-writer semantics, as with TableSwap).
-  private val validated = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def resolvedKey(spark: SparkSession, fqn: String): String = {
-    val qualified = if (fqn.contains(".")) fqn
-      else s"${spark.catalog.currentDatabase}.$fqn"
-    qualified.toLowerCase(java.util.Locale.ROOT)
-  }
-
-  /** Forget a table's validation — MUST be called by anything in this JVM
-    * that drops or replaces a table that may later be written by this
-    * sink. TableSwap wires this for all its callers. */
-  def invalidate(spark: SparkSession, fqn: String): Unit =
-    validated.remove(resolvedKey(spark, fqn))
-
   def write(df: DataFrame, fqn: String, batchId: Long,
       partitionCols: Seq[String] = Nil,
       compression: String = "snappy"): Unit = {
     val spark = df.sparkSession
-    val key = resolvedKey(spark, fqn)
     val stamped = df.withColumn(BatchCol, org.apache.spark.sql.functions.lit(batchId))
-    val parts = BatchCol +: partitionCols
-    if (!spark.catalog.tableExists(fqn)) {
-      stamped.write.format("parquet").option("compression", compression)
-        .partitionBy(parts: _*).mode("overwrite").saveAsTable(fqn)
-      validated.add(key)
-    } else {
-      // Idempotence only holds if the existing table is actually
-      // partitioned by batch_id (i.e. it was created by THIS sink). Against
-      // a table created by plain ParquetSink, positional insertInto with
-      // dynamic overwrite would misplace rows or clobber data silently —
-      // fail loudly instead. Validated once per table per JVM (see above).
-      if (!validated.contains(key)) {
-        val partCols = spark.catalog.listColumns(fqn)
-          .collect().filter(_.isPartition).map(_.name)
+    // One session-catalog read per write — microseconds, no analysis —
+    // gives existence, partition spec and column order. It runs on EVERY
+    // write, so a table dropped and recreated under this name by any path
+    // (TableSwap, raw DDL, another sink) is checked as it is now.
+    val catalog = spark.sessionState.catalog
+    val existing =
+      try Some(catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(fqn)))
+      catch { case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException => None }
+    existing match {
+      case None =>
+        stamped.write.format("parquet").option("compression", compression)
+          .partitionBy(BatchCol +: partitionCols: _*).mode("overwrite").saveAsTable(fqn)
+      case Some(table) =>
+        // Idempotence only holds if the existing table is actually
+        // partitioned by batch_id (i.e. it was created by THIS sink).
+        // Against a table created by plain ParquetSink, positional
+        // insertInto with dynamic overwrite would misplace rows or clobber
+        // data silently — fail loudly instead.
+        val partCols = table.partitionColumnNames
         require(partCols.contains(BatchCol),
           s"IdempotentParquetSink: existing table $fqn is not partitioned by " +
           s"'$BatchCol' (partition spec: [${partCols.mkString(",")}]); it was " +
           "not created by this sink and an idempotent overwrite cannot be " +
           "guaranteed. Recreate the table via IdempotentParquetSink or use " +
           "ParquetSink for plain appends.")
-        validated.add(key)
-      }
-      // insertInto is positional: align to the table's column order (data
-      // columns first, partition columns last, as saveAsTable laid out).
-      graft.core.SessionConf.withConf(spark,
-          "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
-        stamped.select(spark.table(fqn).columns.map(
-            org.apache.spark.sql.functions.col).toSeq: _*)
-          .write.mode("overwrite").insertInto(fqn))
+        // insertInto is positional: align to the table's column order (data
+        // columns first, partition columns last, as saveAsTable laid out).
+        graft.core.SessionConf.withConf(spark,
+            "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+          stamped.select(table.schema.fieldNames.toSeq
+              .map(org.apache.spark.sql.functions.col): _*)
+            .write.mode("overwrite").insertInto(fqn))
     }
   }
 }

@@ -22,20 +22,22 @@ class JsonAccountedSpec extends SparkSpec {
       """{"id": 2 "name": "missing comma"}""",
       """{"id": 3, "name": "fine"}""",
       """not json at all"""))
-    val (good, bad) = JsonBatchReader.splitAccounted(
-      JsonBatchReader.readAccounted(spark, Seq(dir), schema))
-    assert(good.as[(Long, String)].collect().sortBy(_._1).toSeq ==
-      Seq((1L, "ok"), (3L, "fine")))
-    val raw = bad.select(JsonBatchReader.CorruptCol).as[String].collect().toSet
-    assert(raw == Set("""{"id": 2 "name": "missing comma"}""", "not json at all"))
+    JsonBatchReader.withSplitAccounted(
+        JsonBatchReader.readAccounted(spark, Seq(dir), schema)) { (good, bad) =>
+      assert(good.as[(Long, String)].collect().sortBy(_._1).toSeq ==
+        Seq((1L, "ok"), (3L, "fine")))
+      val raw = bad.select(JsonBatchReader.CorruptCol).as[String].collect().toSet
+      assert(raw == Set("""{"id": 2 "name": "missing comma"}""", "not json at all"))
+    }
   }
 
   test("a clean batch quarantines nothing and the marker column is stripped") {
     val dir = stage(Seq("""{"id": 7, "name": "x"}"""))
-    val (good, bad) = JsonBatchReader.splitAccounted(
-      JsonBatchReader.readAccounted(spark, Seq(dir), schema))
-    assert(bad.count() == 0)
-    assert(good.columns.toSeq == Seq("id", "name"))
+    JsonBatchReader.withSplitAccounted(
+        JsonBatchReader.readAccounted(spark, Seq(dir), schema)) { (good, bad) =>
+      assert(bad.count() == 0)
+      assert(good.columns.toSeq == Seq("id", "name"))
+    }
   }
 
   test("a schema already claiming the marker column is rejected loudly") {
@@ -57,9 +59,10 @@ class JsonAccountedSpec extends SparkSpec {
     // chooses to; the explicit-schema read without the marker nulls all
     val silent = JsonBatchReader.read(spark, Seq(dir), Some(schema))
     assert(silent.filter($"id".isNull && $"name".isNull).count() == 1)
-    val (_, bad) = JsonBatchReader.splitAccounted(
-      JsonBatchReader.readAccounted(spark, Seq(dir), schema))
-    assert(bad.count() == 1)
+    JsonBatchReader.withSplitAccounted(
+        JsonBatchReader.readAccounted(spark, Seq(dir), schema)) { (_, bad) =>
+      assert(bad.count() == 1)
+    }
     assert(inferred.count() >= 1) // reference path parses, shape varies
   }
 }

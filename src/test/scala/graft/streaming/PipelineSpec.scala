@@ -251,16 +251,15 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink validation cache is invalidated by a TableSwap drop-recreate") {
-    // Regression for the cache-staleness window: once a table passed the
-    // batch_id partition-spec guard, the per-JVM cache skipped it forever —
-    // so a TableSwap.rewrite that replaced the table with a NON-batch_id
-    // layout under the same name let the positional dynamic overwrite run
-    // unguarded. The swap must invalidate, and the next write must fail
-    // the re-run guard loudly.
+    // Regression for the staleness window of the former per-JVM
+    // validation cache: a TableSwap.rewrite that replaced the table with
+    // a NON-batch_id layout under the same name let the positional dynamic
+    // overwrite run unguarded. The sink now checks the catalog on every
+    // write, so the next write must fail the guard loudly.
     import spark.implicits._
     val table = "gps_idem_swapped"
     IdempotentParquetSink.write(Seq((1L, "a")).toDF("id", "v"), table, 0L)
-    IdempotentParquetSink.write(Seq((2L, "b")).toDF("id", "v"), table, 1L) // cache hit
+    IdempotentParquetSink.write(Seq((2L, "b")).toDF("id", "v"), table, 1L)
     assert(spark.table(table).count() == 2)
     graft.operators.TableSwap.rewrite(spark, table,
       Seq((9L, "z")).toDF("id", "v")) // plain layout: no batch_id partition
@@ -271,6 +270,84 @@ class PipelineSpec extends SparkSpec {
     spark.catalog.refreshTable(table)
     assert(spark.table(table).count() == 1, "guarded write must not mutate the table")
     spark.sql(s"DROP TABLE $table")
+  }
+
+  test("idempotent sink re-checks a table dropped and recreated by raw DDL") {
+    // Nothing in this library sees the raw DROP: the guard holds only
+    // because every write reads the table's current catalog entry.
+    import spark.implicits._
+    val table = "gps_idem_raw_ddl"
+    IdempotentParquetSink.write(Seq((1L, "a")).toDF("id", "v"), table, 0L)
+    spark.sql(s"DROP TABLE $table")
+    ParquetSink.write(Seq((9L, "z")).toDF("id", "v"), table, Nil, "snappy")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        IdempotentParquetSink.write(Seq((3L, "c")).toDF("id", "v"), table, 1L)
+      }
+      assert(e.getMessage.contains("not partitioned by 'batch_id'"))
+      spark.catalog.refreshTable(table)
+      assert(spark.table(table).as[(Long, String)].collect().toSeq == Seq((9L, "z")),
+        "guarded write must not mutate the table")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  /** A TableSink that records every table name written through it. */
+  private def recordingSink(): (TableSink, () => Set[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sink = new TableSink {
+      def write(df: org.apache.spark.sql.DataFrame, fqn: String,
+          partitionCols: Seq[String], compression: String): Unit = {
+        seen.add(fqn)
+        ParquetSink.write(df, fqn, partitionCols, compression)
+      }
+    }
+    (sink, () => seen.toArray(Array.empty[String]).toSet)
+  }
+
+  test("quarantine mode writes both tables through the caller's sink") {
+    val in = tmpDir("gps-quar-sink-in")
+    val table = "gps_quar_sink_main"
+    val qt = "gps_quar_sink_bad"
+    GpsGenerator.writeJsonFiles(spark, s"$in/good", n = 50, files = 1)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(in).resolve("bad.json"),
+      "not json at all".getBytes("UTF-8"))
+    val (sink, seen) = recordingSink()
+    try {
+      MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
+        inputDir = s"$in/{good/*,*.json}", checkpointDir = tmpDir("gps-quar-sink-ckpt"),
+        table = table, clockEpochSec = Some(1750000000L),
+        quarantineTable = Some(qt)), sink)
+      assert(seen() == Set(table, qt), s"tables written through the sink: ${seen()}")
+      spark.catalog.refreshTable(qt)
+      assert(spark.table(qt).columns.toSeq == Seq("raw_line", "src_file", "batch_id"))
+      assert(spark.table(qt).select(col("raw_line")).collect().map(_.getString(0)).toSeq ==
+        Seq("not json at all"))
+      assert(spark.table(table).count() == 50)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.sql(s"DROP TABLE IF EXISTS $qt")
+    }
+  }
+
+  test("idempotentCommit with a custom sink is refused before anything is written") {
+    val in = tmpDir("gps-idem-sink-in")
+    val ckpt = java.nio.file.Paths.get(tmpDir("gps-idem-sink"), "ckpt")
+    val table = "gps_idem_custom_sink"
+    GpsGenerator.writeJsonFiles(spark, in, n = 50, files = 1)
+    val (sink, seen) = recordingSink()
+    try {
+      val e = intercept[IllegalArgumentException] {
+        MicroBatchPipeline.start(spark, MicroBatchPipeline.Config(
+          inputDir = in, checkpointDir = ckpt.toString, table = table,
+          clockEpochSec = Some(1750000000L), processingInterval = None,
+          idempotentCommit = true), sink)
+      }
+      assert(e.getMessage.contains("idempotentCommit"))
+      assert(seen().isEmpty)
+      assert(!java.nio.file.Files.exists(ckpt), "checkpoint written")
+      assert(!spark.catalog.tableExists(table), "table created")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("explicit-schema read equals reference's inference read") {

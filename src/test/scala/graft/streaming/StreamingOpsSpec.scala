@@ -703,7 +703,6 @@ class StreamingOpsSpec extends SparkSpec {
     import spark.implicits._
     val table = "q336_spec_shared"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    IdempotentParquetSink.invalidate(spark, table)
     // bootstrap schema + partition spec before the writers race
     IdempotentParquetSink.write(
       Seq.empty[Long].toDF("id"), table, batchId = -1L)
