@@ -1,5 +1,5 @@
 package graft
-import graft.core.SparkSessionFactory
+import graft.core.{JsonText, SparkSessionFactory}
 
 /** Driver-run benchmark: headline queries (one per capability area) on
   * SPARK_GRAFT_SF_DIR at local[32]. Protocol, designed so a single cold
@@ -213,7 +213,7 @@ object Bench {
     val total = results.map(_._2).sum
     val errJson =
       if (errors.isEmpty) ""
-      else errors.map { case (k, v) => "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "'") + "\"" }
+      else errors.map { case (k, v) => JsonText.quote(k) + ":" + JsonText.quote(v) }
         .mkString(",\"errors\":{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$shuffle$ingest$errJson,"sf":"$sfDir"}""")
     spark.stop()

@@ -1,5 +1,5 @@
 package graft
-import graft.core.{Meter, SparkSessionFactory}
+import graft.core.{JsonText, Meter, SparkSessionFactory}
 
 /** One sequential cold pass over the named gate queries (or every query
   * matching a prefix list), printing one JSON line per query with its
@@ -44,17 +44,10 @@ object QueryTime {
     * JSON, one per micro-batch. */
   private def fields(r: Meter.Record): String = {
     val jobs = r.jobs.map(j =>
-      f"""{"id":${j.id},"stages":${j.stages},"sec":${j.sec}%.3f,"desc":"${escape(j.description)}"}""")
+      f"""{"id":${j.id},"stages":${j.stages},"sec":${j.sec}%.3f,"desc":${JsonText.quote(j.description)}}""")
     s""""jobs":${jobs.mkString("[", ",", "]")},"stages":${r.stages},"tasks":${r.tasks},""" +
       s""""shuffle_read":${r.shuffleRead},"shuffle_write":${r.shuffleWrite},""" +
       s""""spill":{"mem":${r.memorySpill},"disk":${r.diskSpill}},""" +
       s""""batches":${r.batches.mkString("[", ",", "]")}"""
-  }
-
-  private def escape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => " "
-    case c    => c.toString
   }
 }

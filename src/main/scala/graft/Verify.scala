@@ -1,5 +1,6 @@
 package graft
 import graft.core.SparkSessionFactory
+import graft.core.JsonText.quote
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -41,23 +42,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val outAbs = new java.io.File(outDir).getAbsolutePath
     val json = SparkEntry.oracleSql
       .filter(kv => selected(kv._1))
       .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(graft.queries.Gps.VerifyOutToken, outAbs))}" }
+        s"${quote(k)}: ${quote(v.replace(graft.queries.Gps.VerifyOutToken, outAbs))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

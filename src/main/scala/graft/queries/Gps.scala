@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The reference's own pipeline surface as a gate-checked query: generate
-  * the producer's telemetry (S1), enrich with the reference's exact
-  * transformation (T2–T5, fixed clock for determinism), aggregate per
+  * the producer's telemetry (S1), enrich with the reference's own SQL
+  * (T2–T5, clock fixed by `Enrichment.sqlAt` for determinism), aggregate per
   * direction — the SURVEY §7.2 acceptance query.
   *
   * There is no parquet *input* table, but generation is deterministic
@@ -30,9 +30,8 @@ object Gps {
 
   /** The deterministic enriched batch every q70 consumer agrees on. */
   def enrichedBatch(spark: SparkSession, dir: String): DataFrame =
-    Enrichment.enrich(
-      GpsGenerator.batch(spark, inputRows(dir), seed = 42L),
-      clockEpochSec = Some(1750000000L))
+    Enrichment.enrich(GpsGenerator.batch(spark, inputRows(dir), seed = 42L),
+      Some(Enrichment.sqlAt(1750000000L)))
 
   /** Exact speed average without a decimal aggregation buffer.
     *

@@ -1292,8 +1292,8 @@ object StreamingGate {
     * drained over a staged 12-file JSON corpus with planted corruption,
     * quarantine + idempotent commit + maxFilesPerTrigger = 3, rolled up
     * per micro-batch. Mod-times pin file→batch assignment (q275's
-    * discipline), the injected clock pins the enrichment columns, and
-    * every output cell is a pure function of events arithmetic. */
+    * discipline), no output cell reads the wall-clock enrichment
+    * columns, and every one is a pure function of events arithmetic. */
   def ingestQuarantineLaw(spark: SparkSession, dir: String): DataFrame = {
     val mainT = "q355_main_table"
     val dlqT = "q355_dlq_table"
@@ -1328,7 +1328,6 @@ object StreamingGate {
         table = mainT,
         maxFilesPerTrigger = 3,
         processingInterval = None,
-        clockEpochSec = Some(1704067200L),
         idempotentCommit = true,
         quarantineTable = Some(dlqT))
       await(g.start(spark)(

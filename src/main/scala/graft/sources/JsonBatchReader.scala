@@ -43,15 +43,19 @@ object JsonBatchReader {
     * ONLY the corrupt column; [[withSplitAccounted]] always carries the
     * full row alongside it. */
   def readAccounted(spark: SparkSession, paths: Seq[String],
-      schema: StructType): DataFrame = {
+      schema: StructType): DataFrame =
+    spark.read.options(AccountedOptions).schema(accountedSchema(schema))
+      .json(paths: _*)
+
+  /** Reader options of an accounted read; the ingest stream uses them too. */
+  val AccountedOptions: Map[String, String] = Map("multiline" -> "false",
+    "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)
+
+  /** `schema` plus the [[CorruptCol]] capture column. */
+  def accountedSchema(schema: StructType): StructType = {
     require(!schema.fieldNames.contains(CorruptCol),
       s"schema already contains $CorruptCol")
-    spark.read
-      .option("multiline", "false")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .schema(schema.add(CorruptCol, org.apache.spark.sql.types.StringType))
-      .json(paths: _*)
+    schema.add(CorruptCol, org.apache.spark.sql.types.StringType)
   }
 
   /** Runs `f` over the (good rows without the marker, quarantine rows

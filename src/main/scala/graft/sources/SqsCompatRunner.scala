@@ -40,9 +40,7 @@ object SqsCompatRunner {
     val files = EnvelopeParser.batchFiles(messages.map(_.body), protocol)
     if (files.nonEmpty) {
       val df = JsonBatchReader.readGps(spark, files)
-      val enriched = Enrichment.enrichSql(df, sqlQuery)
-      sink.write(enriched, table, partitionCols)
-      if (sqlQuery.isDefined) spark.catalog.dropTempView("temp_view")
+      sink.write(Enrichment.enrich(df, sqlQuery), table, partitionCols)
     }
     source.commit()
     files.size

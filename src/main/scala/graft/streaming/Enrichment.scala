@@ -1,25 +1,15 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Provenance enrichment (SURVEY §2.2 T2–T6): the reference's one
-  * transformation, `SELECT *, input_file_name() AS input_file,
-  * current_timestamp AS processed_time, DATE_FORMAT(current_timestamp,
-  * 'yyyy-MM-dd') AS processed_date FROM temp_view`
-  * (spark-data-pipeline/spark_job.py:156-164), executed through a temp view
-  * when an SQL string is supplied and skipped otherwise
-  * (spark_job.py:31-43).
+  * transformation, run the reference's one way — register the batch as
+  * `temp_view`, run `sql_query` over it, drop the view
+  * (spark-data-pipeline/spark_job.py:31-43,68-69,156-164).
   *
-  * Two fidelity upgrades over the reference:
-  *  - `clockEpochSec`: `current_timestamp` is non-deterministic, which makes
-  *    golden tests impossible; injecting a fixed instant replaces it with a
-  *    literal of the same type/semantics (Catalyst's ComputeCurrentTime
-  *    already evaluates it once per query, so a literal is behaviorally
-  *    identical within a batch).
-  *  - the column-DSL path produces the same plan as the SQL path but is
-  *    checked at compile time; both are kept because the reference accepts
-  *    arbitrary `sql_query` strings.
+  * Tests and oracle-checked queries pin the clock in the SQL text
+  * ([[sqlAt]]) rather than take another code path, so they run exactly
+  * what the ingest loop runs.
   */
 object Enrichment {
 
@@ -34,32 +24,25 @@ object Enrichment {
     temp_view
   """
 
-  /** Column-DSL enrichment — same result as [[defaultSql]]. */
-  def enrich(df: DataFrame, clockEpochSec: Option[Long] = None): DataFrame = {
-    val now = clockEpochSec
-      .map(s => timestamp_seconds(lit(s)))
-      .getOrElse(current_timestamp())
-    df.select(col("*"),
-      input_file_name().as("input_file"),
-      now.as("processed_time"),
-      date_format(now, "yyyy-MM-dd").as("processed_date"))
-  }
+  /** [[defaultSql]] at a fixed clock: both `current_timestamp` become a
+    * timestamp literal of the same type. Catalyst evaluates
+    * `current_timestamp` once per query anyway, so within a batch the two
+    * behave alike; the literal makes the output reproducible. */
+  def sqlAt(epochSec: Long): String =
+    defaultSql.replace("current_timestamp", s"timestamp_seconds(${epochSec}L)")
 
-  /** SQL-path enrichment, reproducing the reference's temp-view dance
-    * (register → spark.sql → drop, spark_job.py:35-37,68-69). `None`
-    * bypasses transformation entirely, as in the reference's
-    * `sql_query=None` branch (spark_job.py:42-43).
+  /** Runs `sqlQuery` over `df` registered as `temp_view` and drops the view
+    * before returning, so no caller sees it; the returned DataFrame is
+    * already analysed and stays usable. `None` returns `df` unchanged, as
+    * the reference's `sql_query=None` branch does (spark_job.py:42-43).
     *
-    * The query MUST run on `df.sparkSession`, not a caller-supplied
-    * session: inside `foreachBatch` the batch DataFrame belongs to the
-    * stream's cloned session, so the temp view registers in the clone's
-    * catalog and is invisible to the outer session. */
-  def enrichSql(df: DataFrame, sqlQuery: Option[String]): DataFrame =
-    sqlQuery match {
-      case None => df
-      case Some(sql) =>
-        df.createOrReplaceTempView("temp_view")
-        // view dropped by caller after the write, matching spark_job.py:68-69
-        df.sparkSession.sql(sql)
+    * The view lives on `df.sparkSession`: inside `foreachBatch` the batch
+    * belongs to the stream's cloned session, and only its catalog can
+    * resolve the view. */
+  def enrich(df: DataFrame, sqlQuery: Option[String]): DataFrame =
+    sqlQuery.fold(df) { sql =>
+      df.createOrReplaceTempView("temp_view")
+      try df.sparkSession.sql(sql)
+      finally df.sparkSession.catalog.dropTempView("temp_view")
     }
 }

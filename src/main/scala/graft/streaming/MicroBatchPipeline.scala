@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.core.GpsSchema
+import graft.sources.JsonBatchReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -43,7 +44,6 @@ object MicroBatchPipeline {
       maxFilesPerTrigger: Int = 10, // ≙ SQS batch_size=10 (spark_job.py:173)
       processingInterval: Option[String] = Some("10 seconds"), // ≙ sleep(10); None => AvailableNow
       sqlQuery: Option[String] = Some(Enrichment.defaultSql),
-      clockEpochSec: Option[Long] = None,
       // true => stamp rows with the micro-batch id and commit via dynamic
       // partition overwrite (IdempotentParquetSink): replaying a batch
       // after a crash between table write and checkpoint commit replaces
@@ -51,12 +51,12 @@ object MicroBatchPipeline {
       // rejects it with a custom sink. Default false keeps the
       // reference's plain-append table layout through the caller's sink.
       idempotentCommit: Boolean = false,
-      // Some(table) => malformed JSON lines are captured (PERMISSIVE +
-      // explicit _corrupt_record, JsonBatchReader.readAccounted's
-      // streaming twin) and appended to that quarantine table with their
-      // batch id, instead of flowing into the main table as all-null
-      // rows — the reference's silent-loss behavior (§1.3) made
-      // auditable. None (default) keeps the original schema and plan.
+      // Some(table) => malformed JSON lines are captured (the options
+      // and schema of JsonBatchReader.readAccounted) and appended to that
+      // quarantine table with their batch id, instead of flowing into the
+      // main table as all-null rows — the reference's silent-loss
+      // behavior (§1.3) made auditable. None (default) keeps the original
+      // schema and plan.
       quarantineTable: Option[String] = None)
 
   /** Start the stream: JSON file source (explicit schema — no inference
@@ -66,16 +66,14 @@ object MicroBatchPipeline {
     require(!config.idempotentCommit || (sink eq ParquetSink),
       "idempotentCommit writes both tables through IdempotentParquetSink " +
       "(parquet only) and cannot honour a custom sink")
-    val corruptCol = graft.sources.JsonBatchReader.CorruptCol
+    val corruptCol = JsonBatchReader.CorruptCol
     val schema =
       if (config.quarantineTable.isDefined)
-        GpsSchema.schema.add(corruptCol, org.apache.spark.sql.types.StringType)
+        JsonBatchReader.accountedSchema(GpsSchema.schema)
       else GpsSchema.schema
     val source0 = spark.readStream
       .schema(schema)
-      .option("multiline", "false")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
+      .options(JsonBatchReader.AccountedOptions)
       .option("maxFilesPerTrigger", config.maxFilesPerTrigger)
       .json(config.inputDir)
     // Quarantine mode caches each batch to split it (withSplitAccounted),
@@ -121,29 +119,23 @@ object MicroBatchPipeline {
         else sink.write(df, table, parts, config.compression)
       def writeMain(batch: DataFrame): Unit =
         if (!batch.isEmpty) {
-          val enriched0 = config.clockEpochSec match {
-            // Injected clock => deterministic column-DSL path (golden tests).
-            case Some(_) => Enrichment.enrich(batch, config.clockEpochSec)
-            case None    => Enrichment.enrichSql(batch, config.sqlQuery)
-          }
+          val enriched = Enrichment.enrich(batch, config.sqlQuery)
           // quarantine mode: enrichment's own input_file_name() saw a
-          // cache scan (empty) — fold in the scan-time attribution
-          val enriched =
-            if (batch.columns.contains(SrcFileCol))
-              enriched0.withColumn("input_file", col(SrcFileCol))
-                .drop(SrcFileCol)
-            else enriched0
-          commit(enriched, config.table, config.partitionCols)
-          if (config.sqlQuery.isDefined && config.clockEpochSec.isEmpty)
-            // The view lives in the batch's (cloned) session catalog.
-            batch.sparkSession.catalog.dropTempView("temp_view") // spark_job.py:68-69
+          // cache scan (empty) — where the query produced input_file, it
+          // takes the scan-time attribution instead
+          val cols = enriched.columns
+          val attributed =
+            if (cols.contains("input_file") && cols.contains(SrcFileCol))
+              enriched.withColumn("input_file", col(SrcFileCol))
+            else enriched
+          commit(attributed.drop(SrcFileCol), config.table, config.partitionCols)
         }
       config.quarantineTable match {
         case Some(qt) =>
           // the shared split helper owns the batch-sized cache (the
           // corrupt-column query restriction recipe) and unpersists it
           // when both writes are done
-          graft.sources.JsonBatchReader.withSplitAccounted(raw) { (good, badRows) =>
+          JsonBatchReader.withSplitAccounted(raw) { (good, badRows) =>
             // batch_id is recorded in both modes, so plain-append replays
             // stay attributable
             val bad = badRows.select(col(corruptCol).as("raw_line"),

@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.sources.SqsCompatRunner.{Message, MessageSource}
+import graft.streaming.TableSink
+import org.apache.spark.sql.DataFrame
 
 /** Reference-fidelity loop: at-least-once semantics incl. the duplicate-on-
   * replay behavior SURVEY §1.4 documents. */
@@ -74,5 +76,18 @@ class SqsCompatSpec extends SparkSpec {
     assert(spark.table(table).count() == 300)
     assert(q.remaining == 0)
     spark.sql(s"DROP TABLE $table")
+  }
+
+  test("a failing write leaves no temp_view in the caller's session") {
+    val q = new MemQueue(Seq(writeFilesAndEnvelope(50, seed = 4)))
+    val failingSink = new TableSink {
+      def write(df: DataFrame, fqn: String, partitionCols: Seq[String],
+          compression: String): Unit = throw new RuntimeException("sink down")
+    }
+    intercept[RuntimeException] {
+      SqsCompatRunner.runOnce(spark, q, "gps_sqs_sink_down", failingSink)
+    }
+    assert(!spark.catalog.tableExists("temp_view"), "temp_view left registered")
+    assert(q.remaining == 1) // not committed: the queue redelivers
   }
 }

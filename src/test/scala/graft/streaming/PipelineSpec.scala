@@ -8,6 +8,16 @@ import org.apache.spark.sql.functions._
 /** SURVEY §7.2 minimum end-to-end slice + checkpoint exactly-once. */
 class PipelineSpec extends SparkSpec {
 
+  /** `good` generated rows in one file plus `bad.json` holding `badText`;
+    * returns the input glob that reads both. */
+  private def goodAndBad(prefix: String, good: Long, badText: String): String = {
+    val in = tmpDir(prefix)
+    GpsGenerator.writeJsonFiles(spark, s"$in/good", n = good, files = 1)
+    java.nio.file.Files.write(java.nio.file.Paths.get(in).resolve("bad.json"),
+      badText.getBytes("UTF-8"))
+    s"$in/{good/*,*.json}"
+  }
+
   test("generator is deterministic and matches the producer's domains") {
     val df = GpsGenerator.batch(spark, 2000, seed = 42).cache()
     assert(df.count() == 2000)
@@ -35,7 +45,7 @@ class PipelineSpec extends SparkSpec {
 
     MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
       inputDir = in, checkpointDir = tmpDir("gps-ckpt"), table = table,
-      clockEpochSec = Some(1750000000L)))
+      sqlQuery = Some(Enrichment.sqlAt(1750000000L))))
 
     val out = spark.table(table).cache()
     assert(out.count() == 3000)
@@ -53,20 +63,16 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("quarantine path: malformed lines reach the quarantine table, never the main table") {
-    val in = tmpDir("gps-quar-in")
     val table = "gps_quarantine_main"
     val qt = "gps_quarantine_bad"
-    GpsGenerator.writeJsonFiles(spark, s"$in/good", n = 200, files = 1)
     val badLines = Seq(
       """{"vehicle_id": "veh_7", "timestamp": BROKEN}""",
       "not json at all")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(in).resolve("bad.json"),
-      badLines.mkString("\n").getBytes("UTF-8"))
+    val in = goodAndBad("gps-quar-in", 200, badLines.mkString("\n"))
     try {
       MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
-        inputDir = s"$in/{good/*,*.json}", checkpointDir = tmpDir("gps-quar-ckpt"),
-        table = table, clockEpochSec = Some(1750000000L),
+        inputDir = in, checkpointDir = tmpDir("gps-quar-ckpt"),
+        table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
         quarantineTable = Some(qt)))
       spark.catalog.refreshTable(qt)
       assert(spark.table(table).count() == 200,
@@ -77,8 +83,8 @@ class PipelineSpec extends SparkSpec {
       // without quarantine, the same input silently nulls the bad rows in
       val table2 = "gps_quarantine_off"
       MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
-        inputDir = s"$in/{good/*,*.json}", checkpointDir = tmpDir("gps-quar-ckpt2"),
-        table = table2, clockEpochSec = Some(1750000000L)))
+        inputDir = in, checkpointDir = tmpDir("gps-quar-ckpt2"),
+        table = table2, sqlQuery = Some(Enrichment.sqlAt(1750000000L))))
       assert(spark.table(table2).where(col("vehicle_id").isNull).count() == 2,
         "expected the reference's silent-null behavior without a quarantine")
       spark.sql(s"DROP TABLE $table2")
@@ -89,17 +95,13 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("quarantine replay under idempotentCommit replaces, never double-appends") {
-    val in = tmpDir("gps-quar-idem-in")
+    val in = goodAndBad("gps-quar-idem-in", 50, "not json at all")
     val table = "gps_quar_idem_main"
     val qt = "gps_quar_idem_bad"
-    GpsGenerator.writeJsonFiles(spark, s"$in/good", n = 50, files = 1)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(in).resolve("bad.json"),
-      "not json at all".getBytes("UTF-8"))
     def run(ckpt: String): Unit =
       MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
-        inputDir = s"$in/{good/*,*.json}", checkpointDir = ckpt,
-        table = table, clockEpochSec = Some(1750000000L),
+        inputDir = in, checkpointDir = ckpt,
+        table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
         idempotentCommit = true, quarantineTable = Some(qt)))
     try {
       run(tmpDir("gps-quar-idem-ckpt1"))
@@ -121,17 +123,13 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("observed ingest metrics ride the streaming progress events") {
-    val in = tmpDir("gps-obs-in")
+    val in = goodAndBad("gps-obs-in", 100, "broken {")
     val table = "gps_obs_main"
     val qt = "gps_obs_bad"
-    GpsGenerator.writeJsonFiles(spark, s"$in/good", n = 100, files = 1)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(in).resolve("bad.json"),
-      "broken {".getBytes("UTF-8"))
     try {
       val q = MicroBatchPipeline.start(spark, MicroBatchPipeline.Config(
-        inputDir = s"$in/{good/*,*.json}", checkpointDir = tmpDir("gps-obs-ckpt"),
-        table = table, clockEpochSec = Some(1750000000L),
+        inputDir = in, checkpointDir = tmpDir("gps-obs-ckpt"),
+        table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
         processingInterval = None, quarantineTable = Some(qt)))
       q.awaitTermination()
       val metrics = q.recentProgress.toSeq
@@ -151,7 +149,7 @@ class PipelineSpec extends SparkSpec {
     val table = "gps_eo"
     val config = MicroBatchPipeline.Config(
       inputDir = in, checkpointDir = ckpt, table = table,
-      clockEpochSec = Some(1750000000L))
+      sqlQuery = Some(Enrichment.sqlAt(1750000000L)))
 
     GpsGenerator.writeJsonFiles(spark, s"$in/b1", 500, 2, seed = 1)
     // json writer emits _SUCCESS etc. at the top; stream reads the subdirs
@@ -183,9 +181,10 @@ class PipelineSpec extends SparkSpec {
 
   test("default config (SQL path, wall clock) runs end-to-end in foreachBatch") {
     // Regression: foreachBatch hands the batch over on the stream's CLONED
-    // session. enrichSql must run the query (and the caller must drop the
-    // view) on the batch's own session, or the default Config throws
-    // TABLE_OR_VIEW_NOT_FOUND on the first non-empty batch.
+    // session. enrich must register, query and drop the view on the
+    // batch's own session, or the default Config throws
+    // TABLE_OR_VIEW_NOT_FOUND on the first non-empty batch. The goldens
+    // run the same SQL at a fixed clock; this case covers the wall clock.
     val in = tmpDir("gps-in4")
     val table = "gps_sqlpath"
     GpsGenerator.writeJsonFiles(spark, in, n = 400, files = 2)
@@ -212,7 +211,7 @@ class PipelineSpec extends SparkSpec {
       baseEpoch = 1750000000L)
     MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
       inputDir = in, checkpointDir = tmpDir("gps-ckpt5"), table = table,
-      clockEpochSec = Some(1750000000L), idempotentCommit = true))
+      sqlQuery = Some(Enrichment.sqlAt(1750000000L)), idempotentCommit = true))
     val afterFirst = spark.table(table).count()
     assert(afterFirst == 300)
     val batchIds = spark.table(table).select("batch_id").distinct()
@@ -225,7 +224,7 @@ class PipelineSpec extends SparkSpec {
       graft.sources.JsonBatchReader.readGps(spark,
         new java.io.File(in).listFiles().filter(_.getName.endsWith(".json"))
           .map(_.getAbsolutePath).sorted.toSeq),
-      clockEpochSec = Some(1750000000L))
+      Some(Enrichment.sqlAt(1750000000L)))
     IdempotentParquetSink.write(replay, table, batchIds.head)
     spark.catalog.refreshTable(table)
     assert(spark.table(table).count() == afterFirst,
@@ -305,18 +304,14 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("quarantine mode writes both tables through the caller's sink") {
-    val in = tmpDir("gps-quar-sink-in")
+    val in = goodAndBad("gps-quar-sink-in", 50, "not json at all")
     val table = "gps_quar_sink_main"
     val qt = "gps_quar_sink_bad"
-    GpsGenerator.writeJsonFiles(spark, s"$in/good", n = 50, files = 1)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(in).resolve("bad.json"),
-      "not json at all".getBytes("UTF-8"))
     val (sink, seen) = recordingSink()
     try {
       MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
-        inputDir = s"$in/{good/*,*.json}", checkpointDir = tmpDir("gps-quar-sink-ckpt"),
-        table = table, clockEpochSec = Some(1750000000L),
+        inputDir = in, checkpointDir = tmpDir("gps-quar-sink-ckpt"),
+        table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
         quarantineTable = Some(qt)), sink)
       assert(seen() == Set(table, qt), s"tables written through the sink: ${seen()}")
       spark.catalog.refreshTable(qt)
@@ -330,6 +325,27 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  for ((what, sqlQuery, columns) <- Seq(
+      ("a projecting sqlQuery writes only its columns",
+        Some("SELECT vehicle_id FROM temp_view"), Seq("vehicle_id")),
+      ("no enrichment writes the plain-mode columns",
+        None, GpsSchema.schema.fieldNames.toSeq)))
+    test(s"quarantine mode with $what") {
+      val in = goodAndBad("gps-quar-fold-in", 50, "not json at all")
+      val table = "gps_quar_fold_main"
+      val qt = "gps_quar_fold_bad"
+      try {
+        MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
+          inputDir = in, checkpointDir = tmpDir("gps-quar-fold-ckpt"), table = table,
+          sqlQuery = sqlQuery, quarantineTable = Some(qt)))
+        assert(spark.table(table).columns.toSeq == columns)
+        assert(spark.table(table).count() == 50)
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        spark.sql(s"DROP TABLE IF EXISTS $qt")
+      }
+    }
+
   test("idempotentCommit with a custom sink is refused before anything is written") {
     val in = tmpDir("gps-idem-sink-in")
     val ckpt = java.nio.file.Paths.get(tmpDir("gps-idem-sink"), "ckpt")
@@ -340,7 +356,7 @@ class PipelineSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException] {
         MicroBatchPipeline.start(spark, MicroBatchPipeline.Config(
           inputDir = in, checkpointDir = ckpt.toString, table = table,
-          clockEpochSec = Some(1750000000L), processingInterval = None,
+          sqlQuery = Some(Enrichment.sqlAt(1750000000L)), processingInterval = None,
           idempotentCommit = true), sink)
       }
       assert(e.getMessage.contains("idempotentCommit"))
@@ -362,14 +378,17 @@ class PipelineSpec extends SparkSpec {
       inferred.exceptAll(explicit).isEmpty)
   }
 
-  test("SQL enrichment path (reference default query) matches column DSL") {
-    val df = GpsGenerator.batch(spark, 100)
-    val viaSql = Enrichment.enrichSql(df, Some(Enrichment.defaultSql))
-    val viaDsl = Enrichment.enrich(df)
-    assert(viaSql.schema.fieldNames.toSeq == viaDsl.schema.fieldNames.toSeq)
-    // Non-deterministic cols (clock, file) excluded from the value compare.
-    val keep = GpsSchema.schema.fieldNames.map(col).toSeq
-    assert(viaSql.select(keep: _*).exceptAll(viaDsl.select(keep: _*)).isEmpty)
-    spark.catalog.dropTempView("temp_view")
+  test("enrich drops its temp view and its result still writes") {
+    val table = "gps_enrich_no_view"
+    val enriched = Enrichment.enrich(GpsGenerator.batch(spark, 100),
+      Some(Enrichment.sqlAt(1750000000L)))
+    assert(!spark.catalog.tableExists("temp_view"), "enrich left temp_view registered")
+    try {
+      ParquetSink.write(enriched, table, Nil, "snappy")
+      val out = spark.table(table)
+      assert(out.columns.toSeq == GpsSchema.schema.fieldNames.toSeq ++
+        Seq("input_file", "processed_time", "processed_date"))
+      assert(out.where(col("processed_date") === "2025-06-15").count() == 100)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 }
