@@ -2,8 +2,9 @@ package graft
 import graft.core.{JsonText, SparkSessionFactory}
 
 /** Driver-run benchmark: headline queries (one per capability area) on
-  * SPARK_GRAFT_SF_DIR at local[32]. Protocol, designed so a single cold
-  * JVM invocation reports steady-state engine cost:
+  * SPARK_GRAFT_SF_DIR with SPARK_GRAFT_CPUS cores (default: the host's).
+  * Protocol, designed so a single cold JVM invocation reports
+  * steady-state engine cost:
   *
   *   1. OS page-cache prewarm: read every benched parquet file's bytes so
   *      no timed run pays first-touch disk IO.
@@ -40,7 +41,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSessionFactory.localFromEnv(32, "graft-bench")
+    val spark = SparkSessionFactory.localFromEnv("graft-bench")
     val queries = SparkEntry.queries
     // Optional args name a headline subset for focused re-measure work
     // (the STANDING RE-MEASURE RULE in BASELINE.md needs per-query

@@ -2,7 +2,7 @@ package graft
 import graft.core.SparkSessionFactory
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSessionFactory.local(4, "graft-smoke")
+    val spark = SparkSessionFactory.localFromEnv("graft-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

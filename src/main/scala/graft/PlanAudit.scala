@@ -8,7 +8,7 @@ import graft.core.SparkSessionFactory
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSessionFactory.localFromEnv(32, "graft-plan-audit")
+    val spark = SparkSessionFactory.localFromEnv("graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     // q139 (streaming headline) is excluded by default: building it runs
     // a REAL streaming pipeline eagerly, and the resulting plan is just

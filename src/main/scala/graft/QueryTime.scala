@@ -20,7 +20,7 @@ object QueryTime {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val prefixes = if (args.nonEmpty) args(0).split(",").toSeq else Seq("q")
     val passes = if (args.length > 1) args(1).toInt else 1
-    val spark = SparkSessionFactory.localFromEnv(32, "graft-query-time")
+    val spark = SparkSessionFactory.localFromEnv("graft-query-time")
     spark.sparkContext.setLogLevel("ERROR")
     // cold rows measured the way Verify/Bench run them (round 16)
     graft.operators.Multimodal.preJitCodecs()

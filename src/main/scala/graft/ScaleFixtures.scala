@@ -52,7 +52,7 @@ object ScaleFixtures {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dest = args.lift(1).getOrElse("/dev/shm/graft-sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSessionFactory.localFromEnv(32, "graft-scale-fixtures")
+    val spark = SparkSessionFactory.localFromEnv("graft-scale-fixtures")
     scale(spark, src, dest, copies)
     spark.stop()
   }

@@ -15,7 +15,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val spark = SparkSessionFactory.localFromEnv(4, "graft-verify")
+    val spark = SparkSessionFactory.localFromEnv("graft-verify")
     new java.io.File(outDir).mkdirs()
     // JIT-prime the media codecs (round 16, VERDICT r15 #7): the
     // multimodal gates' first executions otherwise pay interpreter-era

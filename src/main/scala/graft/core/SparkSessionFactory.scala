@@ -69,9 +69,10 @@ object SparkSessionFactory {
     s
   }
 
-  /** Cores from SPARK_GRAFT_CPUS (driver contract), default per caller. */
-  def localFromEnv(defaultCores: Int, appName: String = "graft"): SparkSession =
-    local(sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString).toInt, appName)
+  /** Cores from SPARK_GRAFT_CPUS (driver contract), else the host's. */
+  def localFromEnv(appName: String = "graft"): SparkSession =
+    local(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors), appName)
 
   /** Prod-profile Iceberg catalog wiring, key-for-key the reference's
     * create_spark_session (spark_job.py:128-139): SparkCatalog bound to a

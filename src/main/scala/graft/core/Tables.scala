@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Loaders for the driver-provided analytical tables (TESTDATA.md /
   * FIXTURES.md §B): one parquet file per table under `$dir/`.
@@ -53,13 +54,37 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   def events(s: SparkSession, d: String): DataFrame = {
     val raw = eventsRaw(s, d)
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
+    raw.withColumn("ts", era(raw.schema("ts").dataType).eventTime)
+  }
+
+  /** The events table's timestamp era, for readers that cannot go
+    * through [[events]]: a streaming file source needs an explicit schema
+    * whose ts type matches the file. Holds that schema, the event-time
+    * column (what [[events]] returns as ts) and ts in epoch µs. Both eras
+    * truncate to the same microsecond values, so results built on it are
+    * era-independent. Probes the footer with one batch schema read. */
+  final case class EventsEra(schema: StructType, eventTime: Column, tsMicros: Column)
+
+  def eventsEra(spark: SparkSession, dir: String): EventsEra =
+    era(eventsRaw(spark, dir).schema("ts").dataType)
+
+  private def era(tsType: DataType): EventsEra = {
+    val schema = StructType(Seq(
+      StructField("event_id", LongType),
+      StructField("ts", tsType),
+      StructField("user_id", LongType),
+      StructField("event_type", StringType),
+      StructField("value", DoubleType),
+      StructField("props", StringType)))
+    tsType match {
+      case LongType => EventsEra(schema,
+        timestamp_micros(expr("ts div 1000")), expr("ts div 1000"))
+      case _ => EventsEra(schema,
+        col("ts").cast("timestamp"),
+        unix_micros(col("ts").cast("timestamp")))
     }
   }
+
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 

@@ -34,10 +34,9 @@ import org.apache.spark.sql.types.LongType
   * single-partition window WINS below ~2M rows (1.44 s vs 3.57 s at 1M),
   * loses above it (24.3 s vs 6.08 s at 16M, super-linear as the one
   * sorting core saturates). [[withRankAndPrefixAuto]] routes on a row
-  * count — the q44 stat-router recipe: the statistic picks the plan,
-  * never the rows; both forms are exact and emit identical columns, so
-  * every gate stays green on either route (that IS the route-equality
-  * certificate). */
+  * count: the statistic picks the plan, never the rows; both forms are
+  * exact and emit identical columns, so every gate stays green on either
+  * route (that IS the route-equality certificate). */
 object GlobalRank {
 
   /** Measured naive-vs-two-pass crossover in rows (BASELINE.md
@@ -74,7 +73,7 @@ object GlobalRank {
 
   /** Stat-routed form: one cheap count action (or the caller's known
     * `rowCount` — zero actions) picks naive vs two-pass at the measured
-    * crossover. Returns (route, result) like the q44 router. */
+    * crossover. Returns (route, result). */
   def withRankAndPrefixAuto(df: DataFrame, valueCol: String, idCol: String,
       shardDiv: Long = 16384L,
       rowCount: Option[Long] = None): (String, DataFrame) = {

@@ -3,11 +3,11 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Exact n-gram Jaccard similarity join with corpus-statistics routing.
+/** Exact n-gram Jaccard similarity join: all pairs with Jaccard ≥ t
+  * over hashed shingle sets, as one naive co-shingle self-join.
   *
-  * Two exact physical forms exist for "all pairs with Jaccard ≥ t over
-  * hashed shingle sets", with opposite scaling regimes (measured and
-  * tabulated in BASELINE.md "Prefix-filtered exact join"):
+  * Two exact physical forms exist, with opposite scaling regimes
+  * (measured and tabulated in BASELINE.md "Prefix-filtered exact join"):
   *
   *  - NAIVE co-shingle self-join: explode → equijoin on the 8-byte
   *    shingle hash → per-pair intersection count. Cost is the co-element
@@ -21,117 +21,19 @@ import org.apache.spark.sql.functions._
   *    regime (×1.7 per doubling vs the naive ×4.7) at the price of a df
   *    rank + window pass that is pure overhead on clean corpora.
   *
-  * The right form is a property of the DATA, not the query — so this
-  * operator measures the data and routes. The statistic is exactly the
-  * naive join's cost driver, candidate co-occurrences per doc:
-  *
-  *   mass/n  =  Σ_s df(s)·(df(s)−1)/2  /  n_docs
-  *
-  * Both forms' costs are ~affine in n at fixed mass/n (naive ≈ a·mass +
-  * b·n, prefix ≈ c·n), so the crossover sits at a CONSTANT mass/n ratio
-  * independent of corpus size. The round-6 probe run brackets it:
-  * boiler at 5k docs (mass/n = 28.3k) has naive ahead 17.6 s vs 39.3 s,
-  * boiler at 10k docs (mass/n = 55.8k) has prefix ahead 38.5 s vs
-  * 60.2 s, and the prefix arm is near-FLAT across scales while naive
-  * grows ×3.4 per doubling. [[CrossoverMassPerDoc]] = 4e4 splits that
-  * bracket.
-  *
-  * Since round 7 the decision is funded by ONE action over the hash
-  * stream ([[sampledStats]]): mass on a 1/64 hash-class sample of the
-  * vocabulary (unbiased, ~1/64 the df shuffle) and the doc count as an
-  * exact Σ 1/n_sh in the same aggregation — the round-6 form's three
-  * lineage recomputes (count, df shuffle, join) are down to two (stat
-  * map pass + join), and its +3.5 MB stat shuffle to ~kB. The 1-row
-  * collect is bounded.
-  *
-  * Both forms emit identical rows (PrefixFilterJoin's lossless theorem,
-  * certified by q113's brute-force oracle and NgramJaccardSpec's planted
-  * corpus) — routing can never change a result, only a plan.
+  * The crossover sits at a constant candidate mass per doc, Σ df(df−1)/2
+  * / n ≈ 4e4 (the BASELINE.md bracket between boiler 5k and 10k docs).
+  * This operator runs the naive form only. An earlier version measured
+  * that statistic inside every build and routed between the two forms,
+  * but no supported input and no benchmark workload reaches the prefix
+  * regime: the corpus sits at mass/doc ≈ 253, 158× under the crossover,
+  * from sf0.001 up to the sf1 rehearsal, and q352 gates that census. A
+  * router comes back only together with a boilerplate-heavy workload
+  * that exercises its prefix arm. Both forms emit identical rows
+  * (PrefixFilterJoin's lossless theorem, certified by q113's brute-force
+  * oracle and NgramJaccardSpec's planted corpus).
   */
 object NgramJaccard {
-
-  /** Naive-join candidate co-occurrences per doc at the measured
-    * clean/boiler crossover (BASELINE.md "prefixjoin" table). */
-  val CrossoverMassPerDoc = 4e4
-
-  /** The naive join's cost driver, exact: candidate co-occurrences per
-    * doc, Σ_s df(s)·(df(s)−1)/2 / n. One partial/final count over the
-    * hash stream + a 1-row collect. df is cast to double before the
-    * product (overflows long near df ~ 3e9; the statistic tolerates FP)
-    * and the empty-stream sum coalesces to 0 instead of NULL. */
-  def massPerDoc(ex: DataFrame, nDocs: Long): Double = {
-    if (nDocs == 0) return 0.0
-    val mass = ex.groupBy(col("shash"))
-      .agg(count(lit(1)).as("df"))
-      .agg(coalesce(sum(col("df").cast("double") *
-        (col("df") - lit(1)).cast("double") / 2.0), lit(0.0)).as("mass"))
-      .head.getDouble(0)
-    mass / nDocs
-  }
-
-  /** Both routing inputs — n_docs and mass — from ONE action over `ex`
-    * with a near-zero shuffle, so routing costs a map pass instead of a
-    * df-shuffle plus a separate count (the round-6 form triggered three
-    * full lineage recomputes; this is one).
-    *
-    *  - mass is estimated on a deterministic 1/sampleMod hash-class
-    *    sample of the shingle VOCABULARY (`shash % mod == 0` keeps or
-    *    drops each distinct shingle with its whole df group), scaled by
-    *    sampleMod — unbiased under xxhash64 uniformity. Only sampled
-    *    groups ship in the shuffle; everything else collapses map-side
-    *    into one null-key partial row per partition, so the stat
-    *    shuffle is ~1/sampleMod of the full df shuffle. Sampling
-    *    variance can only misroute near the crossover, where by
-    *    definition both exact forms cost about the same.
-    *  - n_docs = Σ_rows 1/n_sh is EXACT (each doc contributes n_sh
-    *    rows of weight 1/n_sh), accumulated over the same groups in
-    *    the same pass — no separate count action.
-    *
-    * Returns (nDocs, massEstimate); (0, 0) on an empty stream. */
-  def sampledStats(ex: DataFrame, sampleMod: Int = 64): (Double, Double) = {
-    val r = ex
-      .select(
-        when(pmod(col("shash"), lit(sampleMod.toLong)) === 0, col("shash")).as("k"),
-        col("n_sh"))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("df"), sum(lit(1.0) / col("n_sh")).as("inv"))
-      .agg(
-        coalesce(sum(when(col("k").isNotNull,
-          col("df").cast("double") * (col("df") - lit(1)).cast("double") / 2.0)
-          .otherwise(lit(0.0))), lit(0.0)).as("mass_sample"),
-        coalesce(sum(col("inv")), lit(0.0)).as("n_docs"))
-      .head
-    (r.getDouble(1), r.getDouble(0) * sampleMod)
-  }
-
-  /** `ex` columns: doc_id, n_sh (distinct-shingle count), shash (one row
-    * per distinct shingle hash per doc). Returns ("naive" | "prefix",
-    * unordered pair DataFrame [doc_a, doc_b, n_common, jaccard]).
-    * Exact-statistic form: callers that already hold nDocs and want the
-    * full-vocabulary mass (the BASELINE.md "Prefix-filtered exact join"
-    * calibration). Query paths should
-    * prefer [[similarPairsAutoSampled]], whose statistic is one action. */
-  def similarPairsAuto(ex: DataFrame, nDocs: Long, threshold: Double,
-      crossover: Double = CrossoverMassPerDoc): (String, DataFrame) = {
-    if (massPerDoc(ex, nDocs) > crossover)
-      ("prefix", PrefixFilterJoin.similarPairs(
-        ex, "doc_id", "n_sh", "shash", threshold, threshold * 0.95))
-    else ("naive", naivePairs(ex, threshold))
-  }
-
-  /** [[similarPairsAuto]] with the routing statistic from
-    * [[sampledStats]]: one action, ~1/sampleMod stat shuffle, no
-    * separate doc count. Routing can change the plan, never the rows —
-    * both forms are exact. */
-  def similarPairsAutoSampled(ex: DataFrame, threshold: Double,
-      crossover: Double = CrossoverMassPerDoc,
-      sampleMod: Int = 64): (String, DataFrame) = {
-    val (nDocs, mass) = sampledStats(ex, sampleMod)
-    if (nDocs > 0 && mass / nDocs > crossover)
-      ("prefix", PrefixFilterJoin.similarPairs(
-        ex, "doc_id", "n_sh", "shash", threshold, threshold * 0.95))
-    else ("naive", naivePairs(ex, threshold))
-  }
 
   // The one previously-cached hash stream; unpersisted when the next
   // call arrives, so repeated invocations in one session (Verify's 175+
@@ -139,24 +41,22 @@ object NgramJaccard {
   // stream at a time.
   private var lastCached: Option[DataFrame] = None
 
-  /** [[similarPairsAutoSampled]] over a PERSISTED hash stream. The
-    * tokenize→shingle→explode→hash map feeds three consumers (the stat
-    * action and both self-join sides — Catalyst's InferFiltersFromGenerate
-    * additionally re-evaluates the shingle kernel in a pushed-down
-    * size()>0 filter on each side), so without materialization the most
-    * expensive map in the corpus runs ~6×. Persisting runs it ONCE.
-    * MEMORY_AND_DISK on the POST-map stream (8B hash + 8B doc + 4B count
-    * rows — far smaller than the text it derives from): at cluster scale
-    * this is the standard materialize-vs-recompute trade and with three
-    * consumers materialization wins; the disk arm degrades it to one
-    * shuffle-write's worth of IO, never an OOM. */
-  def similarPairsAutoSampledCached(ex: DataFrame, threshold: Double,
-      crossover: Double = CrossoverMassPerDoc,
-      sampleMod: Int = 64): (String, DataFrame) = synchronized {
+  /** [[naivePairs]] over a PERSISTED hash stream. `ex` columns: doc_id,
+    * n_sh (distinct-shingle count), shash (one row per distinct shingle
+    * hash per doc); returns unordered pairs [doc_a, doc_b, n_common,
+    * jaccard]. The tokenize→shingle→explode→hash map feeds both self-join
+    * sides (Catalyst's InferFiltersFromGenerate additionally re-evaluates
+    * the shingle kernel in a pushed-down size()>0 filter on each side), so
+    * without materialization the most expensive map in the corpus runs
+    * several times. Persisting runs it ONCE, in the join's first query
+    * stage. MEMORY_AND_DISK on the POST-map stream (8B hash + 8B doc + 4B
+    * count rows — far smaller than the text it derives from): the disk
+    * arm degrades to one shuffle-write's worth of IO, never an OOM. */
+  def similarPairs(ex: DataFrame, threshold: Double): DataFrame = synchronized {
     lastCached.foreach(_.unpersist(blocking = false))
     val cached = ex.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     lastCached = Some(cached)
-    similarPairsAutoSampled(cached, threshold, crossover, sampleMod)
+    naivePairs(cached, threshold)
   }
 
   /** The naive co-shingle equijoin on the hashed-shingle projection.

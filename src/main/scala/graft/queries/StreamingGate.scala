@@ -30,34 +30,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingGate {
 
-  /** events.parquet has shipped with ts as either TIMESTAMP(NANOS) (read
-    * as a raw long under nanosAsLong) or TIMESTAMP(MICROS) (read natively
-    * as NTZ). The streaming file source needs an explicit schema whose ts
-    * type matches the file, so probe the footer once per gate via a batch
-    * schema read and derive (schema, event-time column, µs column) from
-    * the observed type. Both forms truncate to the same microsecond
-    * values, so gate results are era-independent. */
-  private final case class EventsEra(schema: StructType,
-      eventTime: Column, tsMicros: Column)
-
-  private def eventsEra(spark: SparkSession, dir: String): EventsEra = {
-    val tsType = Tables.eventsRaw(spark, dir).schema("ts").dataType
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    tsType match {
-      case LongType => EventsEra(schema,
-        timestamp_micros(expr("ts div 1000")), expr("ts div 1000"))
-      case _ => EventsEra(schema,
-        col("ts").cast("timestamp"),
-        unix_micros(col("ts").cast("timestamp")))
-    }
-  }
-
   private def eventsLink(dir: String): Seq[(String, String)] =
     Seq("events.parquet" -> s"$dir/events.parquet")
 
@@ -254,7 +226,7 @@ object StreamingGate {
     * emitted (watermark-trimmed) result, fully ordered. */
   def streamedHourlyProfile(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q139", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.memory(g.source(era.schema)
         .select(era.eventTime.as("event_time"),
           col("event_type"), col("value"))
@@ -280,7 +252,7 @@ object StreamingGate {
     * measured-then-encoded law lives in the q206 QueryDef's oracle. */
   def streamedJoinAgg(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q206", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${pfx}_user"),
@@ -314,7 +286,7 @@ object StreamingGate {
     * nothing under AvailableNow drain. */
   def streamedTripleJoin(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q250", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${pfx}_user"),
@@ -346,7 +318,7 @@ object StreamingGate {
   def streamedDedupJoin(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q256", Seq("events_a.parquet" -> s"$dir/events.parquet",
         "events_b.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       def side(tpe: String, pfx: String): DataFrame =
         g.source(era.schema, maxFilesPerTrigger = 1)
           .filter(col("event_type") === tpe)
@@ -480,7 +452,7 @@ object StreamingGate {
   def streamedCustomSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     gate(spark, "q259", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       val src = g.source(era.schema)
         .select(col("user_id"), era.eventTime.as("event_time"),
           unix_micros(era.eventTime).as("tus"),
@@ -516,7 +488,7 @@ object StreamingGate {
     * (est = (k−1)·2⁴⁸/(h_k+1) vs exact distinct, signed ppm error). */
   def streamedBottomK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val era = eventsEra(spark, dir)
+    val era = Tables.eventsEra(spark, dir)
     val kth = gate(spark, "q318", eventsLink(dir)) { g =>
       val src = g.source(era.schema)
         .select((col("user_id") % 8).as("shard"),
@@ -597,7 +569,7 @@ object StreamingGate {
     * for heavy-hitter candidates (est ≥ N/50) against exact counts. */
   def streamedCountMin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val era = eventsEra(spark, dir)
+    val era = Tables.eventsEra(spark, dir)
     val sunk = gate(spark, "q323", eventsLink(dir)) { g =>
       val src = g.source(era.schema)
         .filter(col("event_id").isNotNull)
@@ -657,7 +629,7 @@ object StreamingGate {
     * to_json) so BOTH arms' bytes are engine-reproducible. */
   def streamedDeadLetter(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q329", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       val src = g.source(era.schema)
         .filter(col("event_id").isNotNull)
         .select(col("event_id"),
@@ -744,7 +716,7 @@ object StreamingGate {
   def streamedTwsSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     gate(spark, "q268", eventsLink(dir), rocksDb = true) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.memory(g.source(era.schema)
         .select(col("user_id"), era.eventTime.as("event_time"),
           unix_micros(era.eventTime).as("tus"),
@@ -770,7 +742,7 @@ object StreamingGate {
   def streamedDedupAgg(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q211", Seq("events_a.parquet" -> s"$dir/events.parquet",
         "events_b.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.memory(g.source(era.schema, maxFilesPerTrigger = 1)
         .select(era.eventTime.as("event_time"),
           col("event_id"), col("event_type"))
@@ -794,7 +766,7 @@ object StreamingGate {
     * measured-then-encoded emission boundary lives in q235's oracle. */
   def streamedAggCascade(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q235", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.memory(g.source(era.schema)
         .select(era.eventTime.as("event_time"),
           col("event_type"), col("value"))
@@ -823,7 +795,7 @@ object StreamingGate {
     * for everyone; the oracle replays that in SQL. */
   def streamedUnionWatermark(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q219", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       def src(): DataFrame = g.source(era.schema)
         .select(era.eventTime.as("event_time"), col("event_type"))
       val a = src().withWatermark("event_time", "4 hours")
@@ -853,7 +825,7 @@ object StreamingGate {
   def streamedDimRefresh(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q231",
         Seq("events_a.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       val dimDir = g.dir("dim")
       val outDir = g.dir("sink")
       val types = Tables.eventsRaw(spark, dir).select(col("event_type"))
@@ -895,7 +867,7 @@ object StreamingGate {
   def streamedSchemaEvolution(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q337",
         Seq("events_a.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       val outDir = g.dir("sink")
       def runOnce(upgraded: Boolean): Unit = {
         val base = g.source(era.schema)
@@ -938,7 +910,7 @@ object StreamingGate {
     * dir can be deleted before returning. */
   def streamedFileSink(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q192", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       val outDir = g.dir("sink")
       g.drain(g.source(era.schema)
         .select(era.eventTime.as("event_time"),
@@ -964,7 +936,7 @@ object StreamingGate {
     * watermarked, joined on user + a 2-hour event-time interval. */
   def streamedIntervalJoin(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q140", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${pfx}_user"),
@@ -1039,7 +1011,7 @@ object StreamingGate {
       s"$dir/events.parquet must be a single parquet file for the " +
         "sentinel-flush drain (coalesce the fixture to one file)")
     gate(spark, name, eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       // sentinels: one view + one purchase (user −1, matching each other
       // so the pair is droppable post-sink) 10 days past the corpus max,
       // appended as a SECOND file in the landing dir (later mtime ⇒
@@ -1118,7 +1090,7 @@ object StreamingGate {
   def streamedRunningTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     gate(spark, "q148", eventsLink(dir), rocksDb = true) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.memory(g.source(era.schema)
         .select(col("user_id"), col("event_id"),
           era.tsMicros.as("ts_us"),
@@ -1141,7 +1113,7 @@ object StreamingGate {
     gate(spark, "q149", Seq(
         "events.parquet" -> s"$dir/events.parquet",
         "events_replay.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.memory(g.source(era.schema).dropDuplicates("event_id"))
     }.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1250,7 +1222,7 @@ object StreamingGate {
     * aggregated after drain. */
   def streamedStaticEnrich(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q168", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_mktsegment")))
       g.memory(g.source(era.schema)
@@ -1395,7 +1367,7 @@ object StreamingGate {
     import graft.operators.Upsert
     val table = "q280_cdc_state"
     gate(spark, "q280") { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.resetTable(table)
       val ev = spark.read.schema(era.schema)
         .parquet(s"$dir/events.parquet")
@@ -1434,7 +1406,7 @@ object StreamingGate {
     * the emitted (watermark-closed) sessions, fully ordered. */
   def streamedSessions(spark: SparkSession, dir: String): DataFrame =
     gate(spark, "q141", eventsLink(dir)) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.memory(g.source(era.schema)
         .select(era.eventTime.as("event_time"),
           col("user_id"))
@@ -2744,7 +2716,7 @@ object StreamingGate {
     gate(spark, "q184", Seq(
         "events.parquet" -> s"$dir/events.parquet",
         "events_replay.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = eventsEra(spark, dir)
+      val era = Tables.eventsEra(spark, dir)
       g.memory(g.source(era.schema)
         .select(col("event_id"), era.eventTime.as("event_time"),
           col("event_type"), col("value"))

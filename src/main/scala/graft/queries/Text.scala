@@ -170,13 +170,11 @@ object Text {
     // per-group array allocation costs more than the join's sort saves.
     // The join form stands.)
     //
-    // Since round 6 the physical form is chosen by NgramJaccard's
-    // df-statistics router: the naive co-shingle join below the measured
-    // hot-shingle crossover (mass/n = 4e4; this corpus sits orders of
-    // magnitude under it), PrefixFilterJoin past it (the boiler/
-    // shared-footer regime where the naive co-element stream grows
-    // docs²·|boilerplate|). Both forms are exact — routing can change
-    // the plan, never the rows.
+    // The join is NgramJaccard's naive co-shingle form, run directly: this
+    // corpus sits 158× under the hot-shingle crossover where
+    // PrefixFilterJoin would win (q352 gates that census), so the build
+    // measures nothing: its only Spark job is the documents scan's parquet
+    // schema read.
     "q44_ngram_jaccard" -> QueryDef(
       build = (spark, dir) => {
         // spread: shingling a single-split source would serialize on one
@@ -198,14 +196,10 @@ object Text {
         // would catch one — the gate doubles as the collision check.
         val ex = sized.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("shingle"))
           .select(col("doc_id"), col("n_sh"), xxhash64(col("shingle")).as("shash"))
-        // One-action routing stat (round 7): n_docs and sampled mass in a
-        // single near-zero-shuffle aggregation — no separate count, no
-        // full df shuffle inside the timed span. The hash stream is
-        // persisted across the stat and both join sides (see
-        // similarPairsAutoSampledCached) so the shingle map runs once.
-        val (_, pairs) = graft.operators.NgramJaccard
-          .similarPairsAutoSampledCached(ex, 0.2)
-        pairs.orderBy(col("doc_a"), col("doc_b"))
+        // The hash stream is persisted across both join sides (see
+        // NgramJaccard.similarPairs) so the shingle map runs once.
+        graft.operators.NgramJaccard.similarPairs(ex, 0.2)
+          .orderBy(col("doc_a"), col("doc_b"))
       },
       oracle = Some("""
         WITH sh AS (
@@ -231,26 +225,24 @@ object Text {
         ORDER BY doc_a, doc_b"""),
       headline = true),
 
-    // ---- q352: the q44 router's decision, gated exactly (round 13) ----
-    // VERDICT r12 #5: the stat router (NgramJaccard.similarPairsAuto*)
-    // answers q44's by-design super-linear candidate mass, but nothing
-    // GATED its decision. This card computes the EXACT routing
-    // statistic — candidate co-occurrence mass Σ df(df−1)/2 per doc,
-    // the quantity the one-action sampled statistic estimates — plus
-    // the pinned crossover constant and the resulting route. The
-    // oracle replays the census with STRING shingles (doubling as the
-    // xxhash collision check, like q44 itself) and the same literal
-    // crossover, so a silent retune of CrossoverMassPerDoc, a drifted
-    // shingle kernel, or a broken mass formula all hash-mismatch.
-    // Decision on this corpus: 'naive' at every SF INCLUDING the sf1
-    // rehearsal (cross-copy vocabularies are disjoint by fixture
-    // design, so mass/doc stays ~flat at 10× — the router is right NOT
-    // to flip; the regime where it must flip, docs²·|boilerplate|
-    // co-shingle growth, is measured in BASELINE.md's "prefixjoin"
-    // probe table where the 4e4 constant was calibrated).
+    // ---- q352: the shingle-join census behind q44's one form (round 13) ----
+    // q44 runs the naive co-shingle join only. This card is the census
+    // that justifies running one form: it computes the EXACT statistic
+    // that decides between the naive join and PrefixFilterJoin —
+    // candidate co-occurrence mass Σ df(df−1)/2 per doc — plus the
+    // crossover constant and the form that would win. The oracle replays
+    // the census with STRING shingles (doubling as the xxhash collision
+    // check, like q44 itself) and the same literal crossover, so a drifted
+    // shingle kernel, a broken mass formula, or a corpus that drifts into
+    // the prefix regime all hash-mismatch. Decision on this corpus:
+    // 'naive' at every SF INCLUDING the sf1 rehearsal (cross-copy
+    // vocabularies are disjoint by fixture design, so mass/doc stays ~flat
+    // at 10×); the regime where prefix wins, docs²·|boilerplate|
+    // co-shingle growth, is measured in BASELINE.md's "prefixjoin" probe
+    // table where the 4e4 constant was calibrated.
     //
     // 100 TB posture: one shingle-keyed count agg (partial/final) +
-    // two 1-row aggregates; the decision itself costs ~one stat pass.
+    // two 1-row aggregates.
     "q352_router_decision" -> QueryDef(
       build = (spark, dir) => {
         val d = Tables.spread(Tables.documents(spark, dir))
@@ -262,8 +254,9 @@ object Text {
         val mass = dfc.agg(coalesce(sum(expr("df * (df - 1) div 2")),
           lit(0L)).as("shingle_mass"))
         val nd = ex.agg(countDistinct(col("doc_id")).as("n_docs"))
-        val xoMilli =
-          (graft.operators.NgramJaccard.CrossoverMassPerDoc * 1000).toLong
+        // the measured naive/prefix crossover, 4e4 candidate pairs per
+        // doc (BASELINE.md "Prefix-filtered exact join"), in milli units
+        val xoMilli = 40000000L
         nd.crossJoin(broadcast(mass))
           .withColumn("mass_per_doc_milli",
             expr("shingle_mass * 1000 div n_docs"))

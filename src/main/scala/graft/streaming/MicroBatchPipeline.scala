@@ -161,14 +161,16 @@ object MicroBatchPipeline {
     *
     * The micro-batch executes in a cloned session, so appends refresh the
     * clone's relation cache, not the caller's; the explicit refresh below
-    * gives the launching session read-your-writes. (Other concurrent
+    * gives the launching session read-your-writes on both tables the
+    * batch writes, the main one and the quarantine one. (Other concurrent
     * sessions still need their own `refreshTable` — standard Spark
     * cross-session visibility.) */
   def runAvailable(spark: SparkSession, config: Config,
       sink: TableSink = ParquetSink): Unit = {
     val q = start(spark, config.copy(processingInterval = None), sink)
     q.awaitTermination()
-    if (spark.catalog.tableExists(config.table))
-      spark.catalog.refreshTable(config.table)
+    (config.table +: config.quarantineTable.toSeq)
+      .filter(spark.catalog.tableExists)
+      .foreach(spark.catalog.refreshTable)
   }
 }

@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The q44 router: the statistic, the routing decision, and the theorem
-  * routing rests on — both physical forms emit identical rows. */
+/** q44's join: both exact physical forms emit identical rows, the
+  * prefix-filtered one never degenerates into an all-pairs plan, and q44's
+  * build runs no statistic. */
 class NgramJaccardSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,53 +34,6 @@ class NgramJaccardSpec extends SparkSpec {
       vocabDoc(2L, 25), vocabDoc(3L, 25), vocabDoc(4L, 25), vocabDoc(5L, 25))
   }
 
-  test("massPerDoc matches the closed form on a hand-built corpus") {
-    // 4 docs sharing one 5-token run -> 3 shared shingles of df=4 each;
-    // everything else df=1. mass = 3 * C(4,2) = 18; n = 4.
-    val run = "alpha beta gamma delta epsilon"
-    val docs = (0L until 4L).map(i =>
-      (i, s"u${i}a u${i}b u${i}c $run u${i}d u${i}e"))
-    val m = NgramJaccard.massPerDoc(ex(docs), 4)
-    assert(m == 18.0 / 4)
-  }
-
-  test("sampledStats: n_docs exact at any sampleMod; mass exact at mod 1") {
-    val run = "alpha beta gamma delta epsilon"
-    val docs = (0L until 4L).map(i =>
-      (i, s"u${i}a u${i}b u${i}c $run u${i}d u${i}e"))
-    val e = ex(docs)
-    // sampleMod = 1 samples the whole vocabulary -> both stats exact.
-    val (n1, m1) = NgramJaccard.sampledStats(e, sampleMod = 1)
-    assert(math.abs(n1 - 4.0) < 1e-9)
-    assert(math.abs(m1 - 18.0) < 1e-9)
-    // n_docs is the exact sum of 1/n_sh regardless of the mass sample.
-    val (n64, _) = NgramJaccard.sampledStats(e, sampleMod = 64)
-    assert(math.abs(n64 - 4.0) < 1e-9)
-    // Empty stream -> (0, 0), no NPE from a NULL sum.
-    val (n0, m0) = NgramJaccard.sampledStats(e.filter(col("doc_id") < 0))
-    assert(n0 == 0.0 && m0 == 0.0)
-  }
-
-  test("sampled routing: naive under the crossover, prefix when forced over it") {
-    val e = ex(planted)
-    val (clean, _) = NgramJaccard.similarPairsAutoSampled(e, 0.2, sampleMod = 1)
-    assert(clean == "naive")
-    val (hot, _) =
-      NgramJaccard.similarPairsAutoSampled(e, 0.2, crossover = 0.1, sampleMod = 1)
-    assert(hot == "prefix")
-  }
-
-  test("routing: diverse vocabulary stays naive, hot-shingle mass flips to prefix") {
-    val e = ex(planted)
-    val (cleanRoute, _) = NgramJaccard.similarPairsAuto(e, 6, 0.2)
-    assert(cleanRoute == "naive",
-      "a corpus 1000x under the crossover must take the naive join")
-    // same data, crossover forced under the observed mass — the decision
-    // logic, not the constant, is what this asserts
-    val (hotRoute, _) = NgramJaccard.similarPairsAuto(e, 6, 0.2, crossover = 0.1)
-    assert(hotRoute == "prefix")
-  }
-
   test("both routes emit identical pairs (the losslessness routing relies on)") {
     val e = ex(planted).cache()
     try {
@@ -95,10 +49,28 @@ class NgramJaccardSpec extends SparkSpec {
   }
 
   test("the routed prefix plan joins on keys — never cartesian/nested-loop") {
-    val (_, pairs) = NgramJaccard.similarPairsAuto(ex(planted), 6, 0.2, crossover = 0.1)
+    val pairs = PrefixFilterJoin
+      .similarPairs(ex(planted), "doc_id", "n_sh", "shash", 0.2, 0.19)
     val p = pairs.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "prefix route degenerated into an all-pairs join")
+  }
+
+  test("q44's build starts no Spark job of its own; q352 reads 'naive' at the spec scale") {
+    val meter = graft.core.Meter.on(spark)
+    def jobsDuring(f: => Any): Seq[String] = {
+      val label = "ngram-build-" + java.util.UUID.randomUUID()
+      meter.label(label)(f)
+      meter.record(label).jobs.map(_.description)
+    }
+    // reading a parquet file runs one schema-inference job; the build may
+    // start that and nothing else
+    val scan = jobsDuring(graft.core.Tables.documents(spark, sf))
+    val build = jobsDuring(graft.SparkEntry.queries("q44_ngram_jaccard")(spark, sf))
+    assert(build == scan, s"q44's build ran jobs beyond the documents scan: $build")
+    val decision = graft.SparkEntry.queries("q352_router_decision")(spark, sf)
+      .select("decision").collect().map(_.getString(0)).toSeq
+    assert(decision == Seq("naive"))
   }
 }

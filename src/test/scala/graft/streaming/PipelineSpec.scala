@@ -74,7 +74,6 @@ class PipelineSpec extends SparkSpec {
         inputDir = in, checkpointDir = tmpDir("gps-quar-ckpt"),
         table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
         quarantineTable = Some(qt)))
-      spark.catalog.refreshTable(qt)
       assert(spark.table(table).count() == 200,
         "malformed lines leaked into the main table (or good rows lost)")
       val bad = spark.table(qt).select(col("raw_line"))
@@ -88,6 +87,33 @@ class PipelineSpec extends SparkSpec {
       assert(spark.table(table2).where(col("vehicle_id").isNull).count() == 2,
         "expected the reference's silent-null behavior without a quarantine")
       spark.sql(s"DROP TABLE $table2")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.sql(s"DROP TABLE IF EXISTS $qt")
+    }
+  }
+
+  test("runAvailable refreshes the quarantine table for the caller's session") {
+    val in = goodAndBad("gps-quar-refresh-in", 20, "not json at all")
+    val table = "gps_quar_refresh_main"
+    val qt = "gps_quar_refresh_bad"
+    val config = MicroBatchPipeline.Config(
+      inputDir = in, checkpointDir = tmpDir("gps-quar-refresh-ckpt"),
+      table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
+      quarantineTable = Some(qt))
+    try {
+      MicroBatchPipeline.runAvailable(spark, config)
+      // this read caches the table's relation in the caller's session
+      assert(spark.table(qt).count() == 1)
+      // the input glob matches a second bad file at the top level; the
+      // same checkpoint picks up only that new file
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(in.stripSuffix("/{good/*,*.json}"), "bad2.json"),
+        "still not json".getBytes("UTF-8"))
+      MicroBatchPipeline.runAvailable(spark, config)
+      assert(spark.table(qt).select(col("raw_line")).collect().map(_.getString(0)).toSet ==
+        Set("not json at all", "still not json"),
+        "the caller's session read a stale quarantine table")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS $qt")
@@ -110,8 +136,6 @@ class PipelineSpec extends SparkSpec {
       // the batch_id partition overwrite must replace, not append, on
       // BOTH tables (this is the quarantine half of the contract)
       run(tmpDir("gps-quar-idem-ckpt2"))
-      spark.catalog.refreshTable(qt)
-      spark.catalog.refreshTable(table)
       assert(spark.table(table).count() == 50, "main table double-appended")
       assert(spark.table(qt).count() == 1, "quarantine table double-appended")
       assert(spark.table(qt).columns.contains("batch_id"),
@@ -314,7 +338,6 @@ class PipelineSpec extends SparkSpec {
         table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
         quarantineTable = Some(qt)), sink)
       assert(seen() == Set(table, qt), s"tables written through the sink: ${seen()}")
-      spark.catalog.refreshTable(qt)
       assert(spark.table(qt).columns.toSeq == Seq("raw_line", "src_file", "batch_id"))
       assert(spark.table(qt).select(col("raw_line")).collect().map(_.getString(0)).toSeq ==
         Seq("not json at all"))
