@@ -42,7 +42,9 @@ object SparkSessionFactory {
     val scratch =
       if (existing.isEmpty && DirIO.tmpfsUsable())
         Some(DirIO.scratchDir("spark-local")) else None
+    scratch.foreach(deleteAtExit)
     val b = SparkSession.builder()
+      .config(LocalFsConf)
       .appName(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -68,6 +70,27 @@ object SparkSessionFactory {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The `file://` scheme's Hadoop classes ([[NioLocalFileSystem]] for
+    * `FileSystem`, [[NioLocalFs]] for `FileContext`): the stock local
+    * filesystem minus its `chmod`/`readlink` subprocess per file create,
+    * mkdir and rename. Every session this engine builds takes these keys
+    * — this factory, and the specs' shared session — so checkpoints,
+    * table commits and task files run on the same filesystem everywhere.
+    * Other schemes (s3a, HDFS, the Iceberg catalog's) are untouched. */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
+  /** Remove a session's scratch dir (shuffle/spill scratch and warehouse)
+    * when the JVM exits. Registered below Spark's own shutdown hook
+    * (priority `FileSystem.SHUTDOWN_HOOK_PRIORITY + 30`), so it runs after
+    * the SparkContext has stopped; a dir the caller already removed is
+    * skipped. */
+  private def deleteAtExit(dir: java.nio.file.Path): Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => if (java.nio.file.Files.exists(dir)) DirIO.deleteRecursively(dir),
+      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
 
   /** Cores from SPARK_GRAFT_CPUS (driver contract), else the host's. */
   def localFromEnv(appName: String = "graft"): SparkSession =

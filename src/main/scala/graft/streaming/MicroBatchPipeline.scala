@@ -19,9 +19,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch handling give exactly-once per micro-batch — strictly stronger
   * than the reference (SURVEY §2.4 O2). The 10 s poll cadence maps to
   * `Trigger.ProcessingTime`; the ≤10-messages batch bound maps to
-  * `maxFilesPerTrigger`; the empty-batch skip (spark_job.py:94-96) maps to
-  * the `isEmpty` guard in `foreachBatch` (the source already emits only
-  * new files, so the guard only matters for zero-record files).
+  * `maxFilesPerTrigger`.
+  *
+  * The empty-batch rule. The reference skips only an empty file list
+  * (spark_job.py:94-96), and the file source starts no batch without new
+  * files. A batch whose scan has no partitions (every file zero bytes
+  * long) writes no file and creates no table. Plain mode decides this on
+  * the driver from the scan's partitions: a row probe (`isEmpty`) would be
+  * a second job over the scan, and through the `ingest_metrics`
+  * observation it would add one row per scan partition to `rows_in`. A
+  * batch of blank-line-only files therefore goes through, as in the
+  * reference. Quarantine mode probes each split of its cached batch (no
+  * re-scan, no extra count), so an all-malformed batch writes no
+  * main-table file.
   *
   * At 100 TB/day this shape holds: file listing is incremental (checkpoint
   * remembers seen files), each micro-batch is a bounded parquet write, and
@@ -117,19 +127,18 @@ object MicroBatchPipeline {
         if (config.idempotentCommit)
           IdempotentParquetSink.write(df, table, batchId, parts, config.compression)
         else sink.write(df, table, parts, config.compression)
-      def writeMain(batch: DataFrame): Unit =
-        if (!batch.isEmpty) {
-          val enriched = Enrichment.enrich(batch, config.sqlQuery)
-          // quarantine mode: enrichment's own input_file_name() saw a
-          // cache scan (empty) — where the query produced input_file, it
-          // takes the scan-time attribution instead
-          val cols = enriched.columns
-          val attributed =
-            if (cols.contains("input_file") && cols.contains(SrcFileCol))
-              enriched.withColumn("input_file", col(SrcFileCol))
-            else enriched
-          commit(attributed.drop(SrcFileCol), config.table, config.partitionCols)
-        }
+      def writeMain(batch: DataFrame): Unit = {
+        val enriched = Enrichment.enrich(batch, config.sqlQuery)
+        // quarantine mode: enrichment's own input_file_name() saw a
+        // cache scan (empty) — where the query produced input_file, it
+        // takes the scan-time attribution instead
+        val cols = enriched.columns
+        val attributed =
+          if (cols.contains("input_file") && cols.contains(SrcFileCol))
+            enriched.withColumn("input_file", col(SrcFileCol))
+          else enriched
+        commit(attributed.drop(SrcFileCol), config.table, config.partitionCols)
+      }
       config.quarantineTable match {
         case Some(qt) =>
           // the shared split helper owns the batch-sized cache (the
@@ -142,9 +151,12 @@ object MicroBatchPipeline {
               col(SrcFileCol).as("src_file"),
               lit(batchId).as(IdempotentParquetSink.BatchCol))
             if (!bad.isEmpty) commit(bad, qt)
-            writeMain(good)
+            if (!good.isEmpty) writeMain(good)
           }
-        case None => writeMain(raw)
+        case None =>
+          // the empty-batch rule on the driver: no scan partition means
+          // every file of the batch is zero bytes long
+          if (raw.queryExecution.toRdd.getNumPartitions > 0) writeMain(raw)
       }
     }
 

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import graft.core.SparkSessionFactory
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,11 +16,13 @@ object SparkSpec {
   // determinism. Specs that assert on failing jobs still see the failure
   // (a deterministic throw re-throws on the retry).
   // The warehouse outlives every suite (tables cross suites), so it goes
-  // when the test JVM exits.
+  // when the test JVM exits. The local filesystem classes come from the
+  // factory's one constant, so specs run on the entry points' filesystem.
   lazy val spark: SparkSession = {
     val warehouse = Files.createTempDirectory("graft-warehouse")
     sys.addShutdownHook(graft.core.DirIO.deleteRecursively(warehouse))
     SparkSession.builder()
+      .config(SparkSessionFactory.LocalFsConf)
       .master("local[4, 2]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

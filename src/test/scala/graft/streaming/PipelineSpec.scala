@@ -5,6 +5,8 @@ import graft.core.GpsSchema
 import graft.sources.{GpsGenerator, JsonBatchReader}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** SURVEY §7.2 minimum end-to-end slice + checkpoint exactly-once. */
 class PipelineSpec extends SparkSpec {
 
@@ -147,20 +149,72 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("observed ingest metrics ride the streaming progress events") {
-    val in = goodAndBad("gps-obs-in", 100, "broken {")
-    val table = "gps_obs_main"
-    val qt = "gps_obs_bad"
+    // Two inputs: quarantine mode counts the malformed line apart; plain
+    // mode lands it as an all-null row, and rows_in must equal what the
+    // table holds (a row probe over the scan would count extra rows).
+    for (quarantine <- Seq(true, false)) {
+      val in = goodAndBad("gps-obs-in", 100, "broken {")
+      val table = "gps_obs_main"
+      val qt = "gps_obs_bad"
+      try {
+        val q = MicroBatchPipeline.start(spark, MicroBatchPipeline.Config(
+          inputDir = in, checkpointDir = tmpDir("gps-obs-ckpt"),
+          table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
+          processingInterval = None, quarantineTable = Some(qt).filter(_ => quarantine)))
+        q.awaitTermination()
+        val metrics = q.recentProgress.toSeq
+          .flatMap(p => Option(p.observedMetrics.get("ingest_metrics")))
+        assert(metrics.nonEmpty, "no observed metrics in progress events")
+        val rowsIn = metrics.map(_.getAs[Long]("rows_in")).sum
+        assert(rowsIn == 101, s"quarantine=$quarantine")
+        if (quarantine) assert(metrics.map(_.getAs[Long]("rows_bad")).sum == 1)
+        else assert(spark.table(table).count() == rowsIn)
+      } finally {
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        spark.sql(s"DROP TABLE IF EXISTS $qt")
+      }
+    }
+  }
+
+  test("a batch of zero-length files writes nothing; a later non-empty file creates the table") {
+    // The reference's empty-batch skip (spark_job.py:94-96), decided on
+    // the driver: zero-byte files give the batch's scan no partitions.
+    val in = tmpDir("gps-empty-in")
+    val ckpt = tmpDir("gps-empty-ckpt")
+    val table = "gps_empty_batch"
+    Seq("a.json", "b.json").foreach(f => java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(in, f)))
+    val config = MicroBatchPipeline.Config(inputDir = in, checkpointDir = ckpt,
+      table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)))
+    val (sink, seen) = recordingSink()
     try {
-      val q = MicroBatchPipeline.start(spark, MicroBatchPipeline.Config(
-        inputDir = in, checkpointDir = tmpDir("gps-obs-ckpt"),
-        table = table, sqlQuery = Some(Enrichment.sqlAt(1750000000L)),
-        processingInterval = None, quarantineTable = Some(qt)))
-      q.awaitTermination()
-      val metrics = q.recentProgress.toSeq
-        .flatMap(p => Option(p.observedMetrics.get("ingest_metrics")))
-      assert(metrics.nonEmpty, "no observed metrics in progress events")
-      assert(metrics.map(_.getAs[Long]("rows_in")).sum == 101)
-      assert(metrics.map(_.getAs[Long]("rows_bad")).sum == 1)
+      MicroBatchPipeline.runAvailable(spark, config, sink)
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(ckpt, "commits", "0")),
+        "the batch of empty files did not run")
+      assert(seen().isEmpty, s"an empty batch wrote through the sink: ${seen()}")
+      assert(!spark.catalog.tableExists(table), "an empty batch created the table")
+      java.nio.file.Files.write(java.nio.file.Paths.get(in, "c.json"),
+        GpsGenerator.batch(spark, 30).toJSON.collect().toSeq.asJava)
+      MicroBatchPipeline.runAvailable(spark, config, sink)
+      assert(seen() == Set(table))
+      assert(spark.table(table).count() == 30)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("an all-malformed batch in quarantine mode writes no main-table file") {
+    val in = tmpDir("gps-all-bad-in")
+    val table = "gps_all_bad_main"
+    val qt = "gps_all_bad_dlq"
+    java.nio.file.Files.write(java.nio.file.Paths.get(in, "bad.json"),
+      "not json at all\n{\"vehicle_id\": BROKEN}".getBytes("UTF-8"))
+    val (sink, seen) = recordingSink()
+    try {
+      MicroBatchPipeline.runAvailable(spark, MicroBatchPipeline.Config(
+        inputDir = in, checkpointDir = tmpDir("gps-all-bad-ckpt"), table = table,
+        sqlQuery = Some(Enrichment.sqlAt(1750000000L)), quarantineTable = Some(qt)), sink)
+      assert(seen() == Set(qt), s"tables written through the sink: ${seen()}")
+      assert(!spark.catalog.tableExists(table), "the main table was created")
+      assert(spark.table(qt).count() == 2)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS $qt")
