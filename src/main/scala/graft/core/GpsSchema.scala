@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * `timestamp` is intentionally a STRING — the producer emits a
   * '%Y-%m-%d %H:%M:%S' wall-clock string (producer:58), and inference
   * would see a string. Event-time operations parse it explicitly with
-  * `to_timestamp` (see [[graft.streaming.StreamingOps]]) while the raw
-  * column is preserved for bit-for-bit fidelity.
+  * `to_timestamp` while the raw column is preserved for bit-for-bit
+  * fidelity.
   */
 final case class GpsRecord(
     vehicle_id: String,

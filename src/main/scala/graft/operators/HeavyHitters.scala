@@ -69,22 +69,4 @@ object HeavyHitters {
       .groupBy(col("item")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") > threshold)
   }
-
-  /** Candidate-set size for the same inputs — spec instrumentation to
-    * assert the sketch actually prunes (|candidates| ≪ |distinct|). */
-  def candidateCount(items: DataFrame, itemCol: String, k: Int,
-      eps: Double = 1e-4, confidence: Double = 0.99): Long = {
-    val it = items.select(col(itemCol).cast("string").as("item"))
-      .filter(col("item").isNotNull)
-    val row = it.agg(count(lit(1)).as("n"),
-      count_min_sketch(col("item"), lit(eps), lit(confidence), lit(42))
-        .as("cms")).head
-    val n = row.getLong(0)
-    if (n == 0) return 0L
-    val sketch = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-      new java.io.ByteArrayInputStream(row.getAs[Array[Byte]](1)))
-    val bc = it.sparkSession.sparkContext.broadcast(sketch)
-    val est = udf((s: String) => bc.value.estimateCount(s))
-    it.filter(est(col("item")) > lit(n / k)).distinct().count()
-  }
 }

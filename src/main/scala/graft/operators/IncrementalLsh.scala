@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB posture: the index grows 24·bands bytes/doc; the per-batch
   * join shuffles |new|·bands rows against a bucket-bucketed table (at
-  * real scale: a table bucketed by (band, h), so appends co-locate —
-  * [[Bucketing]]); verification re-shingles only the docs named in
-  * candidate pairs via an id semi-join, not the corpus.
+  * real scale: a table bucketed by (band, h), so appends co-locate);
+  * verification re-shingles only the docs named in candidate pairs via
+  * an id semi-join, not the corpus.
   */
 object IncrementalLsh {
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-pattern substring scan (blocklist / keyword-spotting) via an
@@ -117,23 +117,5 @@ object MultiPatternMatch {
     val scanUdf = udf((t: String) =>
       if (t == null) new Array[Long](nP) else ac.scan(t))
     docs.withColumn(outCol, scanUdf(col(textCol)))
-  }
-
-  /** The built-in stack this operator replaces: one non-overlapping
-    * `replace`-count expression PER pattern, each rescanning the text.
-    * Identical output for borderless patterns; kept as the spec's
-    * equality witness and the scale probe's naive arm. */
-  def naiveMatchCounts(docs: DataFrame, textCol: String,
-      patterns: Seq[String], outCol: String = "pattern_hits"): DataFrame = {
-    require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
-      "patterns must be non-empty strings")
-    // coalesce: NULL text counts zero occurrences, matching the
-    // automaton path row-for-row
-    val counts: Seq[Column] = patterns.map { p =>
-      coalesce(((length(col(textCol)) -
-        length(replace(col(textCol), lit(p), lit("")))) /
-        lit(p.length)).cast("long"), lit(0L))
-    }
-    docs.withColumn(outCol, array(counts: _*))
   }
 }

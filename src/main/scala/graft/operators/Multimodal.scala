@@ -366,53 +366,6 @@ object Multimodal {
     })
   }
 
-  /** [[extractFeatures]] with the dead-letter law — ONE decode per
-    * asset: good rows carry the exact feature vector of the fail-fast
-    * pipeline with a null reason; undecodable rows carry an empty
-    * feature and their reason. The full row travels on both sides (the
-    * q329 "carry the row alongside the marker" pattern), so the caller
-    * splits with [[splitFeaturesAccounted]]. */
-  final case class MediaFeaturesAccounted(
-      asset_id: Long, kind: String, n_bytes: Int,
-      feature: Array[Float], reject_reason: Option[String])
-
-  def extractFeaturesAccounted(assets: Dataset[MediaAsset])
-      : Dataset[MediaFeaturesAccounted] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      val hist = new Array[Int](256)
-      it.map { a =>
-        decodeScreened(a) match {
-          case Right(decoded) =>
-            java.util.Arrays.fill(hist, 0)
-            var i = 0
-            while (i < decoded.length) { hist(decoded(i) & 0xff) += 1; i += 1 }
-            val total = math.max(decoded.length, 1).toFloat
-            MediaFeaturesAccounted(a.asset_id, a.meta.kind,
-              a.payload.length, hist.map(_ / total), None)
-          case Left(reason) =>
-            MediaFeaturesAccounted(a.asset_id, a.meta.kind,
-              a.payload.length, Array.emptyFloatArray, Some(reason))
-        }
-      }
-    }
-  }
-
-  /** (features of decodable assets, quarantine rows with reasons). The
-    * accounted batch is persisted by the CALLER before splitting when
-    * it will consume both sides (same rule as
-    * [[graft.sources.JsonBatchReader.withSplitAccounted]] — a production
-    * run lands the accounted pass in a table once and reads the two
-    * slices from there; re-decoding per side is the anti-pattern). */
-  def splitFeaturesAccounted(rows: Dataset[MediaFeaturesAccounted])
-      : (DataFrame, DataFrame) = {
-    val df = rows.toDF()
-    (df.filter(col("reject_reason").isNull).drop("reject_reason"),
-      df.filter(col("reject_reason").isNotNull)
-        .select(col("asset_id"), col("kind"), col("n_bytes"),
-          col("reject_reason")))
-  }
-
   // ---- deterministic corruption planting (q350 fixture) --------------
 
   /** Corrupt every `everyNth` asset, cycling three corruption classes:
@@ -596,9 +549,8 @@ object Multimodal {
     * (pigeonhole: any pair within Hamming ≤ 3 MUST share a band; planted
     * geometric copies hash identically so recall is exact), then the
     * cheap exact verify keeps pairs with popcount(xor) ≤ `maxHamming`.
-    * Same candidates-then-verify shape as MinHash (q46) / feature-LSH
-    * ([[nearDupAssets]]): no all-pairs stage, the band equijoin shuffles
-    * 16 bytes per candidate row. */
+    * Same candidates-then-verify shape as MinHash (q46): no all-pairs
+    * stage, the band equijoin shuffles 16 bytes per candidate row. */
   def nearDupByPHash(hashes: DataFrame, maxHamming: Int): DataFrame = {
     val banded = hashes.select(col("asset_id"), col("dhash"),
       explode(expr("array(0, 1, 2, 3)")).as("band"))
@@ -613,32 +565,6 @@ object Multimodal {
         expr("bit_count(da ^ db)").cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Media near-duplicate pairs: sign-LSH buckets over the per-asset
-    * feature vector (the byte-histogram stub here; a real embedding in
-    * prod) → bucket equijoin → exact cosine verify. The image-dedup
-    * operation a training pipeline runs before captioning/training — same
-    * candidates-then-verify shape as the text (q46) and embedding (q55)
-    * dedup paths, so the 100 TB posture is shared: no all-pairs stage,
-    * shuffle carries bucket ids + features only for collided candidates. */
-  def nearDupAssets(features: Dataset[MediaFeatures],
-      threshold: Double = 0.95, tables: Int = 8, bits: Int = 12): DataFrame = {
-    import graft.functions.VectorFunctions.{cosine, lshBuckets, vec64}
-    val f = features.toDF()
-      .select(col("asset_id"), col("kind"), vec64(col("feature")).as("e"))
-      .withColumn("bucket", explode(lshBuckets(col("e"), tables, bits)))
-    val a = f.select(col("bucket"), col("asset_id").as("id_a"),
-      col("kind").as("kind_a"), col("e").as("ea"))
-    val b = f.select(col("bucket"), col("asset_id").as("id_b"), col("e").as("eb"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("kind_a").as("kind"),
-        cosine(col("ea"), col("eb")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .dropDuplicates("id_a", "id_b")
-      .select(col("id_a"), col("id_b"), col("kind"), round(col("cos"), 6).as("cosine"))
       .orderBy(col("id_a"), col("id_b"))
   }
 

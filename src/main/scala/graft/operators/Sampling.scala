@@ -23,11 +23,6 @@ object Sampling {
   def bucket(idCols: Seq[Column], seed: Long): Column =
     pmod(xxhash64(lit(seed) +: idCols: _*), lit(BUCKETS))
 
-  /** Keep ~`fraction` of rows, exactly reproducibly. */
-  def deterministicSample(df: DataFrame, idCols: Seq[String],
-      fraction: Double, seed: Long): DataFrame =
-    df.filter(bucket(idCols.map(col), seed) < (fraction * BUCKETS).toLong)
-
   /** Per-stratum fractions (strata absent from the map are dropped —
     * matching sampleBy semantics). */
   def stratifiedSample(df: DataFrame, strataCol: String, idCols: Seq[String],
@@ -37,18 +32,4 @@ object Sampling {
     }
     df.filter(bucket(idCols.map(col), seed) < threshold)
   }
-
-  /** Disjoint, exhaustive (train, test) split — every row lands in exactly
-    * one side regardless of partitioning. */
-  def trainTestSplit(df: DataFrame, idCols: Seq[String],
-      testFraction: Double, seed: Long): (DataFrame, DataFrame) = {
-    val b = bucket(idCols.map(col), seed)
-    val cut = (testFraction * BUCKETS).toLong
-    (df.filter(b >= cut), df.filter(b < cut))
-  }
-
-  /** Total-order shuffle: stable pseudo-random permutation for epoch
-    * interleaving (orderBy a keyed hash — one range-partitioned sort). */
-  def reproducibleShuffle(df: DataFrame, idCols: Seq[String], seed: Long): DataFrame =
-    df.orderBy(xxhash64(lit(seed) +: idCols.map(col): _*))
 }

@@ -1112,8 +1112,8 @@ object Analytics {
     //
     // 100 TB posture: each layout is one ordered window (the sort IS
     // the thing being measured) + a block-keyed agg; the final rollup
-    // is blocks-count-sized. This is the measurement DataLayout's range
-    // clustering optimizes for.
+    // is blocks-count-sized. This is the measurement range clustering
+    // optimizes for.
     "q170_zonemap_pruning" -> QueryDef(
       build = (spark, dir) => {
         val li = Tables.lineitem(spark, dir)

@@ -10,11 +10,11 @@ import org.apache.spark.sql.types._
 
 /** The Structured Streaming surface as an ORACLE-BACKED gate query.
   *
-  * Every streaming operator here is spec-tested (StreamingOpsSpec), but
-  * specs assert against in-process expectations — this query instead
-  * runs a REAL `readStream` micro-batch pipeline (file source →
-  * event-time watermark → tumbling-window aggregation → append-mode
-  * memory sink, Trigger.AvailableNow) and exposes its emitted result to
+  * Specs (StreamingOpsSpec) assert streaming operators against
+  * in-process expectations — this query instead runs a REAL
+  * `readStream` micro-batch pipeline (file source → event-time
+  * watermark → tumbling-window aggregation → append-mode memory sink,
+  * Trigger.AvailableNow) and exposes its emitted result to
   * the DuckDB oracle. The bridge is the watermark-trim law: in append
   * mode a window is emitted iff its END ≤ final watermark, and with
   * AvailableNow the final watermark is max(event_time) − delay — a pure
@@ -1968,10 +1968,9 @@ object StreamingGate {
         ORDER BY v.user_id, v.view_id, p.purchase_id"""))) :+ (
 
     // ---- q259: custom per-key state (flatMapGroupsWithState) ----
-    // The ARBITRARY-state extension point, oracle-backed — until now
-    // flatMapGroupsWithState was spec-gated only (StreamingOpsSpec);
-    // this gate runs it as a real drained pipeline. Per-user activity
-    // segmentation with a 24 h gap, hand-rolled in a group function
+    // The ARBITRARY-state extension point, oracle-backed: this gate
+    // runs flatMapGroupsWithState as a real drained pipeline. Per-user
+    // activity segmentation with a 24 h gap, hand-rolled in a group function
     // (buffer → re-sort → gap-split → watermark-safe close), the shape
     // every session-ish custom operator takes when session_window's
     // fixed semantics don't fit. Twentieth streaming law: the drained

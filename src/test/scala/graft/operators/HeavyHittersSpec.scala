@@ -1,10 +1,28 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class HeavyHittersSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Candidate-set size for `HeavyHitters.exact`'s inputs at its default
+    * sketch size: how many distinct items survive the Count-Min probe. */
+  private def candidateCount(items: DataFrame, itemCol: String, k: Int): Long = {
+    val it = items.select(col(itemCol).cast("string").as("item"))
+      .filter(col("item").isNotNull)
+    val row = it.agg(count(lit(1)).as("n"),
+      count_min_sketch(col("item"), lit(1e-4), lit(0.99), lit(42))
+        .as("cms")).head
+    val n = row.getLong(0)
+    if (n == 0) return 0L
+    val sketch = org.apache.spark.util.sketch.CountMinSketch.readFrom(
+      new java.io.ByteArrayInputStream(row.getAs[Array[Byte]](1)))
+    val bc = spark.sparkContext.broadcast(sketch)
+    val est = udf((s: String) => bc.value.estimateCount(s))
+    it.filter(est(col("item")) > lit(n / k)).distinct().count()
+  }
 
   test("exact() equals the plain group-by on a planted skew, any k") {
     // 10k rows: "hot" owns 4k, "warm" 1k, 100 uniques own the rest
@@ -28,7 +46,7 @@ class HeavyHittersSpec extends SparkSpec {
     val items = spark.range(n)
       .select(concat(lit("i"), expr(s"$n div (id + 1)")).as("item"))
     val distinctItems = items.distinct().count()
-    val cand = HeavyHitters.candidateCount(items, "item", 50)
+    val cand = candidateCount(items, "item", 50)
     assert(cand < distinctItems / 10,
       s"CMS pruned nothing: $cand candidates of $distinctItems distinct")
     assert(HeavyHitters.exact(items, "item", 50).count() >= 5)

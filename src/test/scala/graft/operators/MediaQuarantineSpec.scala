@@ -103,36 +103,6 @@ class MediaQuarantineSpec extends AnyFunSuite {
     assert(combos.size == 9, s"only ${combos.size} combos: $combos")
   }
 
-  test("extractFeaturesAccounted: good side == the fail-fast pipeline, quarantine side == the plants") {
-    val spark = graft.SparkSpec.spark
-    import spark.implicits._
-    val n = 60L
-    val corrupted = Multimodal.withPlantedCorruption(
-      Multimodal.syntheticAssets(spark, n), everyNth = 5L)
-    val (good, quarantine) =
-      Multimodal.splitFeaturesAccounted(
-        Multimodal.extractFeaturesAccounted(corrupted))
-    val q = quarantine.collect()
-    // every 5th asset planted; all classes quarantine on this corpus
-    assert(q.length == (n / 5).toInt, s"quarantined ${q.length}")
-    assert(q.forall(r => r.getLong(0) % 5 == 0))
-    val reasons = q.map(_.getString(3)).toSet
-    assert(reasons.subsetOf(Set(Multimodal.ReasonCorrupt,
-      Multimodal.ReasonOversized)), reasons.toString)
-    // the good side carries the EXACT features of the fail-fast
-    // pipeline over the clean subset — same histograms, same ids
-    val clean = Multimodal.syntheticAssets(spark, n)
-      .filter(_.asset_id % 5 != 0)
-    val expect = Multimodal.extractFeatures(clean).collect()
-      .map(f => f.asset_id -> f.feature.toSeq).toMap
-    val got = good.collect()
-    assert(got.length == expect.size)
-    got.foreach { r =>
-      val id = r.getLong(0)
-      assert(r.getSeq[Float](3) == expect(id), s"feature drift id=$id")
-    }
-  }
-
   test("headerScreen never allocates from a lying GIF frame descriptor") {
     // handcrafted 65535x65535 descriptor — must screen as oversized
     val out = new java.io.ByteArrayOutputStream()

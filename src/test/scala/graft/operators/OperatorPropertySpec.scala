@@ -15,51 +15,35 @@ class OperatorPropertySpec extends SparkSpec {
   private def sample[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
 
-  test("mergeInto equals the in-memory last-writer-wins model") {
+  test("mergeLatest equals the in-memory latest-wins model") {
+    // Updates may repeat a key. Every row's version is distinct (a random
+    // draw times 100 plus the row's index), so each key has exactly one
+    // latest row across the table and the batch.
     val genCase = for {
       baseKeys <- Gen.listOfN(12, Gen.chooseNum(0L, 19L)).map(_.distinct)
-      updKeys <- Gen.listOfN(8, Gen.chooseNum(0L, 24L)).map(_.distinct)
-    } yield (baseKeys, updKeys)
+      updKeys <- Gen.listOfN(10, Gen.chooseNum(0L, 24L))
+      draws <- Gen.listOfN(22, Gen.chooseNum(0L, 50L))
+    } yield (baseKeys, updKeys, draws.zipWithIndex.map { case (d, j) => d * 100 + j })
 
-    sample(genCase, 8).zipWithIndex.foreach { case ((baseKeys, updKeys), i) =>
+    sample(genCase, 8).zipWithIndex.foreach { case ((baseKeys, updKeys, vers), i) =>
       val table = s"prop_merge_$i"
       try {
-        val base = baseKeys.map(k => (k, s"base$k"))
-        val upd = updKeys.map(k => (k, s"upd$k"))
-        base.toDF("id", "v").write.format("parquet")
+        val base = baseKeys.zip(vers).map { case (k, v) => (k, v, s"base$k") }
+        val upd = updKeys.zip(vers.drop(baseKeys.size))
+          .map { case (k, v) => (k, v, s"upd$k@$v") }
+        base.toDF("id", "ver", "v").write.format("parquet")
           .mode("overwrite").saveAsTable(table)
-        Upsert.mergeInto(spark, table, upd.toDF("id", "v"), Seq("id"))
-        // model: updates win on their keys; untouched base rows survive
-        val model = (base.filterNot(r => updKeys.contains(r._1)) ++ upd)
-          .sortBy(_._1)
-        val got = spark.table(table).orderBy("id").as[(Long, String)].collect().toSeq
-        assert(got == model, s"case $i: base=$baseKeys upd=$updKeys")
+        Upsert.mergeLatest(spark, table, upd.toDF("id", "ver", "v"),
+          Seq("id"), Seq("ver"))
+        // model: per key, the row with the highest version wins, whether
+        // it is the table's or any of the batch's
+        val model = (base ++ upd).groupBy(_._1).values.map(_.maxBy(_._2))
+          .toSeq.sortBy(_._1)
+        val got = spark.table(table).orderBy("id")
+          .as[(Long, Long, String)].collect().toSeq
+        assert(got == model, s"case $i: base=$baseKeys upd=$updKeys vers=$vers")
       } finally spark.sql(s"DROP TABLE IF EXISTS $table")
     }
-  }
-
-  test("zValue interleave is a bijection (bits recoverable, range correct)") {
-    val bits = 8
-    val genPair = for {
-      a <- Gen.chooseNum(0L, (1L << bits) - 1)
-      b <- Gen.chooseNum(0L, (1L << bits) - 1)
-    } yield (a, b)
-    val pairs = sample(genPair, 200)
-    val out = pairs.toDF("a", "b")
-      .withColumn("z", DataLayout.zValue(col("a"), col("b"), bits))
-      .as[(Long, Long, Long)].collect()
-    out.foreach { case (a, b, z) =>
-      // deinterleave: odd bit positions reconstruct a, even reconstruct b
-      var ra = 0L; var rb = 0L
-      (0 until bits).foreach { i =>
-        ra |= ((z >> (2 * i + 1)) & 1L) << i
-        rb |= ((z >> (2 * i)) & 1L) << i
-      }
-      assert(ra == a && rb == b, s"z=$z did not round-trip ($a,$b)")
-      assert(z >= 0 && z < (1L << (2 * bits)))
-    }
-    // distinct inputs -> distinct z (injectivity over the sampled set)
-    assert(out.map(_._3).distinct.length == pairs.distinct.length)
   }
 
   test("deterministic sample membership is stable under union with new data") {
@@ -68,10 +52,11 @@ class OperatorPropertySpec extends SparkSpec {
     // growing corpora (per-partition RNG sampling lacks it).
     val d1 = (0L until 400L).toDF("doc_id")
     val d2 = (0L until 800L).toDF("doc_id")
-    val s1 = Sampling.deterministicSample(d1, Seq("doc_id"), 0.3, seed = 11)
-      .as[Long].collect().toSet
-    val s2 = Sampling.deterministicSample(d2, Seq("doc_id"), 0.3, seed = 11)
-      .as[Long].collect().toSet
+    def sampled(d: org.apache.spark.sql.DataFrame): Set[Long] =
+      d.filter(Sampling.bucket(Seq(col("doc_id")), 11) < 300000L)
+        .as[Long].collect().toSet
+    val s1 = sampled(d1)
+    val s2 = sampled(d2)
     assert(s2.filter(_ < 400L) == s1, "existing rows' membership changed when corpus grew")
   }
 

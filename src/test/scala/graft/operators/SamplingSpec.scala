@@ -2,20 +2,23 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.core.Tables
-import org.apache.spark.sql.functions._
 
 class SamplingSpec extends SparkSpec {
 
   private lazy val docs = Tables.documents(spark, "/root/testdata/sf0.01")
 
   test("sample is reproducible and partition-independent") {
-    val s1 = Sampling.deterministicSample(docs, Seq("doc_id"), 0.3, seed = 7)
-    val s2 = Sampling.deterministicSample(docs.repartition(13), Seq("doc_id"), 0.3, seed = 7)
+    val langs = docs.select("lang").distinct().collect().map(_.getString(0))
+    def sample(df: org.apache.spark.sql.DataFrame, seed: Long) =
+      Sampling.stratifiedSample(df, "lang", Seq("doc_id"),
+        langs.map(_ -> 0.3).toMap, seed)
+    val s1 = sample(docs, seed = 7)
+    val s2 = sample(docs.repartition(13), seed = 7)
     assert(s1.exceptAll(s2).isEmpty && s2.exceptAll(s1).isEmpty)
     val n = s1.count().toDouble / docs.count()
     assert(n > 0.25 && n < 0.35, s"fraction $n")
     // different seed → different subset
-    val s3 = Sampling.deterministicSample(docs, Seq("doc_id"), 0.3, seed = 8)
+    val s3 = sample(docs, seed = 8)
     assert(!s3.exceptAll(s1).isEmpty)
   }
 
@@ -46,22 +49,5 @@ class SamplingSpec extends SparkSpec {
         s"stratum ${r.getAs[String]("lang")}: achieved ${r.getAs[Double]("achieved_frac")} " +
           s"vs target ${r.getAs[Double]("target_frac")}")
     }
-  }
-
-  test("train/test split is disjoint and exhaustive") {
-    val (train, test) = Sampling.trainTestSplit(docs, Seq("doc_id"), 0.2, seed = 7)
-    assert(train.count() + test.count() == docs.count())
-    assert(train.join(test, "doc_id").count() == 0)
-    val frac = test.count().toDouble / docs.count()
-    assert(frac > 0.15 && frac < 0.25, s"test fraction $frac")
-  }
-
-  test("reproducible shuffle yields a stable permutation") {
-    val ids1 = Sampling.reproducibleShuffle(docs, Seq("doc_id"), 7)
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    val ids2 = Sampling.reproducibleShuffle(docs.repartition(9), Seq("doc_id"), 7)
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(ids1 == ids2)
-    assert(ids1 != ids1.sorted) // actually permuted
   }
 }

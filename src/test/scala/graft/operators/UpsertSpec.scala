@@ -7,47 +7,19 @@ class UpsertSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("mergeInto updates matched keys and inserts new ones") {
+  test("mergeLatest survives a crash-stranded swap from a prior run") {
     try {
-      Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
-        .toDF("id", "tag", "v")
-        .write.format("parquet").mode("overwrite").saveAsTable("up_base")
-      val updates = Seq((2L, "B2", 99.0), (4L, "d", 40.0)).toDF("id", "tag", "v")
-      Upsert.mergeInto(spark, "up_base", updates, Seq("id"))
-      val out = spark.table("up_base").orderBy("id")
-        .as[(Long, String, Double)].collect().toSeq
-      assert(out == Seq(
-        (1L, "a", 10.0),   // untouched
-        (2L, "B2", 99.0),  // matched -> replaced
-        (3L, "c", 30.0),   // untouched
-        (4L, "d", 40.0)))  // new key -> inserted
-    } finally spark.sql("DROP TABLE IF EXISTS up_base")
-  }
-
-  test("mergeInto is idempotent on replay and supports composite keys") {
-    try {
-      Seq((1L, "x", 1.0), (1L, "y", 2.0), (2L, "x", 3.0))
-        .toDF("k1", "k2", "v")
-        .write.format("parquet").mode("overwrite").saveAsTable("up_comp")
-      val updates = Seq((1L, "y", 20.0), (2L, "y", 30.0)).toDF("k1", "k2", "v")
-      Upsert.mergeInto(spark, "up_comp", updates, Seq("k1", "k2"))
-      Upsert.mergeInto(spark, "up_comp", updates, Seq("k1", "k2")) // replay
-      val out = spark.table("up_comp").orderBy("k1", "k2")
-        .as[(Long, String, Double)].collect().toSeq
-      assert(out == Seq((1L, "x", 1.0), (1L, "y", 20.0), (2L, "x", 3.0), (2L, "y", 30.0)))
-    } finally spark.sql("DROP TABLE IF EXISTS up_comp")
-  }
-
-  test("mergeInto survives a crash-stranded swap from a prior run") {
-    try {
-      Seq((1L, 1.0)).toDF("id", "v")
+      Seq((1L, 1L, 1.0)).toDF("id", "ver", "v")
         .write.format("parquet").mode("overwrite").saveAsTable("up_crash__swap_tmp")
       assert(!spark.catalog.tableExists("up_crash"))
       // recovery completes the rename, then the merge applies on top
       TableSwap.recover(spark, "up_crash")
-      Upsert.mergeInto(spark, "up_crash", Seq((1L, 9.0), (2L, 2.0)).toDF("id", "v"), Seq("id"))
-      val out = spark.table("up_crash").orderBy("id").as[(Long, Double)].collect().toSeq
-      assert(out == Seq((1L, 9.0), (2L, 2.0)))
+      Upsert.mergeLatest(spark, "up_crash",
+        Seq((1L, 2L, 9.0), (2L, 1L, 2.0)).toDF("id", "ver", "v"),
+        Seq("id"), Seq("ver"))
+      val out = spark.table("up_crash").orderBy("id")
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(out == Seq((1L, 2L, 9.0), (2L, 1L, 2.0)))
     } finally {
       spark.sql("DROP TABLE IF EXISTS up_crash")
       spark.sql("DROP TABLE IF EXISTS up_crash__swap_tmp")
@@ -59,14 +31,20 @@ class UpsertSpec extends SparkSpec {
       Seq((1L, "fresh", 5L, 100L), (2L, "old", 1L, 10L))
         .toDF("id", "state", "ver", "v")
         .write.format("parquet").mode("overwrite").saveAsTable("up_cdc")
-      // a STALE change for key 1 (ver 3 < current 5) arrives late, a
+      // plain replace-on-match (anti-join + union, MERGE INTO's
+      // WHEN MATCHED UPDATE) on a stale change for key 1 WOULD regress
+      // it — the contract difference mergeLatest exists for
+      val stale = Seq((1L, "stale", 3L, 999L)).toDF("id", "state", "ver", "v")
+      val replaced = spark.table("up_cdc")
+        .join(stale.select("id"), Seq("id"), "left_anti").unionByName(stale)
+      assert(replaced.where(col("id") === 1).head().getString(1) == "stale")
+      // the STALE change for key 1 (ver 3 < current 5) arrives late, a
       // genuinely newer one for key 2, a brand-new key 3, and a
       // within-batch pair for key 3 where the newer row must win
-      val updates = Seq(
-        (1L, "stale", 3L, 999L),
+      val updates = stale.unionByName(Seq(
         (2L, "newer", 7L, 20L),
         (3L, "first", 2L, 30L),
-        (3L, "second", 4L, 31L)).toDF("id", "state", "ver", "v")
+        (3L, "second", 4L, 31L)).toDF("id", "state", "ver", "v"))
       Upsert.mergeLatest(spark, "up_cdc", updates, Seq("id"), Seq("ver"))
       val out = spark.table("up_cdc").orderBy("id")
         .as[(Long, String, Long, Long)].collect().toSeq
@@ -75,13 +53,6 @@ class UpsertSpec extends SparkSpec {
         (2L, "newer", 7L, 20L),   // newer update applied
         (3L, "second", 4L, 31L)), // within-batch newest wins
         s"latest-wins merge produced $out")
-      // plain mergeInto on the same stale update WOULD regress key 1 —
-      // the contract difference mergeLatest exists for
-      Upsert.mergeInto(spark, "up_cdc",
-        Seq((1L, "stale", 3L, 999L)).toDF("id", "state", "ver", "v"),
-        Seq("id"))
-      assert(spark.table("up_cdc").where(col("id") === 1)
-        .head().getString(1) == "stale")
     } finally spark.sql("DROP TABLE IF EXISTS up_cdc")
   }
 }

@@ -135,6 +135,17 @@ class StreamingGateSpec extends SparkSpec {
     got.values.foreach { case (n, nd, _) => assert(n == nd) }
   }
 
+  test("q280: the drained merge leaves no q280_cdc_state table in the catalog") {
+    // every batch after the first merges through a table swap; the swap
+    // keeps only the live table, which the gate drops once it has read it
+    val rows = graft.SparkEntry.queries("q280_streamed_cdc_latest")(spark, sf)
+      .collect()
+    assert(rows.nonEmpty)
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("q280_cdc_state"))
+    assert(left.isEmpty, s"tables left behind: ${left.mkString(", ")}")
+  }
+
   test("runner: gate conf reaches only the stream; a batch mid-gate sees the parent's") {
     val keys = Seq("spark.sql.shuffle.partitions", graft.core.Tables.NanosKey,
       "spark.sql.streaming.checkpoint.fileChecksum.enabled")

@@ -13,36 +13,14 @@ final case class JoinEv(user: Long, id: Long, t: java.sql.Timestamp)
 /** Typed row for the q272 streamed-scoring case. */
 final case class DocRow(doc_id: Long, text: String)
 
+/** Structured Streaming operator semantics on MemoryStreams, trigger by
+  * trigger: the laws the `StreamingGate` gates drain against the oracle. */
 class StreamingOpsSpec extends SparkSpec {
 
   private def rec(vid: String, ts: String, speed: Double,
       dir: String = "N", collision: Boolean = false) =
     GpsRecord(vid, 10.0, 20.0, speed, dir, Some(50.0), 80.0,
       "Fastened", collision, sudden_braking = false, ts)
-
-  test("watermarked tumbling window aggregates a real stream") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[GpsRecord]
-    mem.addData(
-      rec("v1", "2025-06-15 10:00:05", 40, "N"),
-      rec("v1", "2025-06-15 10:00:55", 60, "N", collision = true),
-      rec("v2", "2025-06-15 10:01:10", 100, "S"))
-
-    val q = StreamingOps.tumblingSpeedProfile(mem.toDF(), "1 minute", "2 minutes")
-      .writeStream.format("memory").queryName("speed_profile")
-      .outputMode(OutputMode.Update()).start()
-    q.processAllAvailable()
-    q.stop()
-
-    val out = spark.table("speed_profile")
-    val n0 = out.where(col("direction") === "N" and
-      col("window_start") === "2025-06-15 10:00:00").head()
-    assert(n0.getAs[Long]("n_events") == 2)
-    assert(n0.getAs[Double]("avg_speed") == 50.0)
-    assert(n0.getAs[Long]("n_collisions") == 1)
-    assert(out.where(col("direction") === "S").head().getAs[Long]("n_events") == 1)
-  }
 
   test("chained window aggs: the coarse rollup emits only fully-passed windows") {
     // the q235 shape on a MemoryStream: 1-minute agg feeding a 4-minute
@@ -81,61 +59,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(out("10:08") == ((1L, 1L)))
     // [10:20,10:24) ends past the final watermark -> withheld
     assert(!out.contains("10:20"), "unfinalized rollup window emitted")
-  }
-
-  test("flatMapGroupsWithState trip summaries accumulate per vehicle") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[GpsRecord]
-    val q = StreamingOps.tripSummaries(mem.toDS())
-      .writeStream.format("memory").queryName("trips")
-      .outputMode(OutputMode.Update()).start()
-
-    mem.addData(rec("v1", "2025-06-15 10:00:00", 30),
-      rec("v1", "2025-06-15 10:00:10", 50, collision = true))
-    q.processAllAvailable()
-    mem.addData(rec("v1", "2025-06-15 10:00:20", 70))
-    q.processAllAvailable()
-    q.stop()
-
-    // State carried across triggers: latest update covers all 3 fixes.
-    val last = spark.table("trips").where(col("n_fixes") === 3).head()
-    assert(last.getAs[Double]("avg_speed") == 50.0)
-    assert(last.getAs[Long]("n_collisions") == 1)
-    assert(last.getAs[String]("first_ts") == "2025-06-15 10:00:00")
-    assert(last.getAs[String]("last_ts") == "2025-06-15 10:00:20")
-  }
-
-  test("stream-stream join matches braking within the bound, per vehicle") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val collisions = MemoryStream[GpsRecord]
-    val braking = MemoryStream[GpsRecord]
-
-    val q = StreamingOps.collisionBrakingJoin(
-        collisions.toDF(), braking.toDF(), within = "5 minutes")
-      .writeStream.format("memory").queryName("cb_join")
-      .outputMode(OutputMode.Append()).start()
-
-    def crash(vid: String, ts: String, speed: Double) =
-      rec(vid, ts, speed, collision = true)
-    def brake(vid: String, ts: String) =
-      rec(vid, ts, 10).copy(sudden_braking = true)
-
-    collisions.addData(crash("v1", "2025-06-15 10:00:00", 80))
-    braking.addData(
-      brake("v1", "2025-06-15 10:03:00"), // within 5 min -> match
-      brake("v1", "2025-06-15 10:09:00"), // outside bound -> no match
-      brake("v2", "2025-06-15 10:03:00")) // other vehicle -> no match
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("cb_join").collect()
-    assert(rows.length == 1)
-    assert(rows.head.getAs[String]("vehicle_id") == "v1")
-    assert(rows.head.getAs[Double]("collision_speed") == 80.0)
-    assert(rows.head.getAs[java.sql.Timestamp]("braking_time").toString
-      .startsWith("2025-06-15 10:03:00"))
   }
 
   test("full-outer interval join emits BOTH sides' evictions once the watermark passes") {
@@ -201,36 +124,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(out == Map("v1" -> "fleet-A", "v3" -> null))
   }
 
-  test("watermark drops events later than the allowed lateness") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[GpsRecord]
-    // Append mode only emits windows the watermark has closed — exactly the
-    // eviction semantics under test.
-    val q = StreamingOps.tumblingSpeedProfile(mem.toDF(), "1 minute", "2 minutes")
-      .writeStream.format("memory").queryName("late_profile")
-      .outputMode(OutputMode.Append()).start()
-
-    // Batch 1: one event at 10:00; watermark advances to max(ts) - 2 min.
-    mem.addData(rec("v1", "2025-06-15 10:00:10", 40))
-    q.processAllAvailable()
-    // Batch 2: push event time forward to 10:10 => watermark 10:08 after
-    // this batch; the 10:00 window closes and is emitted.
-    mem.addData(rec("v1", "2025-06-15 10:10:00", 50))
-    q.processAllAvailable()
-    // Batch 3: a LATE event for the already-closed 10:00 window (beyond
-    // the 2-minute lateness) must be dropped, not re-emitted or merged.
-    mem.addData(rec("v1", "2025-06-15 10:00:20", 99))
-    q.processAllAvailable()
-    q.stop()
-
-    val w1000 = spark.table("late_profile")
-      .where(col("window_start") === "2025-06-15 10:00:00").collect()
-    assert(w1000.length == 1)
-    assert(w1000.head.getAs[Long]("n_events") == 1) // late row not merged
-    assert(w1000.head.getAs[Double]("max_speed") == 40.0)
-  }
-
   test("a union's watermark is the MIN of its sources — the lagging side gates emission") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -264,21 +157,6 @@ class StreamingOpsSpec extends SparkSpec {
     val after2 = spark.table("union_wm").collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(after2 == Map("10:00" -> 2L, "10:05" -> 1L))
-  }
-
-  test("dedupWithinWatermark drops replayed (vehicle_id, timestamp) rows") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[GpsRecord]
-    val dup = rec("v1", "2025-06-15 10:00:00", 30)
-    mem.addData(dup, dup, rec("v1", "2025-06-15 10:00:01", 31))
-
-    val q = StreamingOps.dedupWithinWatermark(mem.toDF())
-      .writeStream.format("memory").queryName("deduped")
-      .outputMode(OutputMode.Append()).start()
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.table("deduped").count() == 2)
   }
 
   test("custom segments close only when the watermark passes end + gap (q259 law)") {
@@ -328,115 +206,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(all(1).getAs[Long]("cents") == 300L)
     // no duplicate emission of segment A across triggers
     assert(all(0).getAs[Long]("cents") == 300L && all(0).getAs[Long]("n_events") == 2L)
-  }
-
-  test("transformWithState odometers mirror flatMapGroupsWithState across triggers") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // The processor API runs on the RocksDB state store.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[GpsRecord]
-      val q = StreamingOps.odometers(mem.toDS())
-        .writeStream.format("memory").queryName("odometers")
-        .outputMode(OutputMode.Update()).start()
-      mem.addData(rec("v1", "2025-06-15 10:00:00", 30),
-        rec("v1", "2025-06-15 10:00:10", 50, collision = true),
-        rec("v2", "2025-06-15 10:00:00", 80))
-      q.processAllAvailable()
-      mem.addData(rec("v1", "2025-06-15 10:00:20", 70))
-      q.processAllAvailable()
-      q.stop()
-      // ValueState carried across triggers: v1's latest row covers 3 fixes.
-      val v1 = spark.table("odometers")
-        .where(col("vehicle_id") === "v1" && col("n_fixes") === 3).head()
-      assert(v1.getAs[Double]("max_speed") == 70.0)
-      assert(v1.getAs[Long]("n_collisions") == 1)
-      val v2 = spark.table("odometers").where(col("vehicle_id") === "v2").head()
-      assert(v2.getAs[Long]("n_fixes") == 1 && v2.getAs[Double]("max_speed") == 80.0)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
-  test("event-time timers close idle sessions when the watermark passes") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[GpsRecord]
-      val q = StreamingOps.idleClosedSessions(mem.toDS(), gapMs = 60000L)
-        .writeStream.format("memory").queryName("closed_sessions")
-        .outputMode(OutputMode.Append()).start()
-      // v1: three fixes ending 10:00:20 -> timer armed at 10:01:20
-      mem.addData(rec("v1", "2025-06-15 10:00:00", 30),
-        rec("v1", "2025-06-15 10:00:10", 50),
-        rec("v1", "2025-06-15 10:00:20", 70))
-      q.processAllAvailable()
-      // no watermark movement past the timer yet: nothing closed
-      assert(spark.table("closed_sessions").isEmpty)
-      // v2 activity at 10:05 pushes the watermark to 10:04:50 > 10:01:20:
-      // v1's timer fires and ONLY v1's session closes (v2's is pending)
-      mem.addData(rec("v2", "2025-06-15 10:05:00", 40))
-      q.processAllAvailable()
-      mem.addData(rec("v3", "2025-06-15 10:06:00", 40)) // advance once more
-      q.processAllAvailable()
-      q.stop()
-      val closed = spark.table("closed_sessions").collect()
-      assert(closed.map(_.getAs[String]("vehicle_id")).toSet == Set("v1"))
-      val v1 = closed.head
-      assert(v1.getAs[Long]("n_fixes") == 3L)
-      // closed exactly at last fix + gap, by the timer, not by input
-      val lastFix = java.sql.Timestamp.valueOf("2025-06-15 10:00:20").getTime
-      assert(v1.getAs[Long]("last_fix_ms") == lastFix)
-      assert(v1.getAs[Long]("closed_at_ms") == lastFix + 60000L)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
-  test("ListState ring stays capped and MapState counts persist across triggers") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[GpsRecord]
-      val q = StreamingOps.trajectoryStats(mem.toDS(), recentCap = 3)
-        .writeStream.format("memory").queryName("traj_stats")
-        .outputMode(OutputMode.Update()).start()
-      // trigger 1: four fixes (overflows the cap-3 ring), 2 N vs 1 E + 1 S
-      mem.addData(rec("v1", "2025-06-15 10:00:00", 30, dir = "N"),
-        rec("v1", "2025-06-15 10:00:10", 30, dir = "E"),
-        rec("v1", "2025-06-15 10:00:20", 30, dir = "N"),
-        rec("v1", "2025-06-15 10:00:30", 30, dir = "S"))
-      q.processAllAvailable()
-      // trigger 2: two E fixes -> E overtakes N (3 vs 2), map persisted
-      mem.addData(rec("v1", "2025-06-15 10:00:40", 30, dir = "E"),
-        rec("v1", "2025-06-15 10:00:50", 30, dir = "E"))
-      q.processAllAvailable()
-      q.stop()
-      val rows = spark.table("traj_stats").collect()
-        .filter(_.getAs[Long]("n_directions") == 3L)
-      assert(rows.nonEmpty)
-      val last = rows.maxBy(_.getAs[Long]("top_direction_n"))
-      assert(last.getAs[Long]("n_recent") == 3L) // ring capped, not 6
-      assert(last.getAs[String]("top_direction") == "E")
-      assert(last.getAs[Long]("top_direction_n") == 3L)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   test("streamed fuzzy near-dup equals batch LSH and crosses micro-batches") {
