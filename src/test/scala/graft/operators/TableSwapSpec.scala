@@ -19,7 +19,7 @@ class TableSwapSpec extends SparkSpec {
   private def rows(table: String): Seq[(Long, Long, Double)] =
     spark.table(table).as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
 
-  test("recovers a swap stranded between DROP and RENAME") {
+  test("recover renames a tmp stranded after the DROP") {
     // The crash window: the new content lives only under __swap_tmp, the
     // original name is gone. recover must install the tmp as the table.
     withTable("swap_crash") {
@@ -31,6 +31,31 @@ class TableSwapSpec extends SparkSpec {
       assert(spark.catalog.tableExists("swap_crash"))
       assert(!spark.catalog.tableExists("swap_crash" + TableSwap.TmpSuffix))
       assert(rows("swap_crash") == Seq((1L, 1L, 2.0), (2L, 1L, 4.0)))
+    }
+  }
+
+  test("a merge cut between DROP and RENAME recovers") {
+    // A real merge first, then its successor cut in the crash window: the
+    // next content is materialized under __swap_tmp and the live table is
+    // dropped, but the rename never ran. recover installs the tmp, and the
+    // next merge runs on the recovered rows.
+    withTable("swap_cut") {
+      Seq((1L, 1L, 1.0)).toDF("id", "ver", "v")
+        .write.format("parquet").saveAsTable("swap_cut")
+      Upsert.mergeLatest(spark, "swap_cut",
+        Seq((2L, 1L, 2.0)).toDF("id", "ver", "v"), Seq("id"), Seq("ver"))
+      spark.table("swap_cut").withColumn("v",
+          org.apache.spark.sql.functions.col("v") * 2)
+        .write.format("parquet").mode("overwrite")
+        .saveAsTable("swap_cut" + TableSwap.TmpSuffix)
+      spark.sql("DROP TABLE swap_cut")
+
+      TableSwap.recover(spark, "swap_cut")
+      assert(tablesLike("swap_cut") == Seq("swap_cut"))
+      assert(rows("swap_cut") == Seq((1L, 1L, 2.0), (2L, 1L, 4.0)))
+      Upsert.mergeLatest(spark, "swap_cut",
+        Seq((1L, 2L, 10.0)).toDF("id", "ver", "v"), Seq("id"), Seq("ver"))
+      assert(rows("swap_cut") == Seq((1L, 2L, 10.0), (2L, 1L, 4.0)))
     }
   }
 
