@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * match end positions — standard Aho–Corasick). For borderless patterns
   * (no proper prefix that is also a suffix) overlapping occurrences are
   * impossible, so the count equals the non-overlapping `replace`-count the
-  * SQL oracle computes; the gate query's patterns are borderless and the
-  * spec proves it ([[borderless]]).
+  * SQL oracle computes; the gate query's patterns are borderless and
+  * `MultiPatternMatchSpec` proves it.
   */
 object MultiPatternMatch {
 
@@ -101,12 +101,6 @@ object MultiPatternMatch {
     }
     AcAutomaton(next.map(_.toMap).toArray, fail, out, patterns.size)
   }
-
-  /** True iff `p` has no proper prefix that is also a suffix — the
-    * condition under which overlapping occurrences cannot exist and the
-    * automaton count equals the oracle's `replace`-count. */
-  def borderless(p: String): Boolean =
-    !(1 until p.length).exists(k => p.substring(0, k) == p.substring(p.length - k))
 
   /** Append `outCol`: array of per-pattern occurrence counts (index =
     * position in `patterns`), computed in ONE scan of `textCol`. */

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   */
 object CorpusStats {
 
-  private def toks(textCol: Column): Column = split(trim(textCol), " ")
+  import Det.toks
 
   /** Integer score quantization shared by the AUC gates: Σ ⌊xᵢ²·10⁴⌋
     * over the embedding — floor of a deterministic IEEE product,

@@ -22,9 +22,9 @@ object Curation {
     * Both Spark and DuckDB emit the same 32-char lowercase hex, so ordered
     * selections ("pick k per stratum") are oracle-checkable — unlike
     * xxhash64, which is engine-specific. */
-  private def pickKey = md5(concat(col("doc_id").cast("string"), col("text")).cast("binary"))
+  private[queries] def pickKey = md5(concat(col("doc_id").cast("string"), col("text")).cast("binary"))
 
-  private val SqlPickKey = "md5(CONCAT(CAST(doc_id AS VARCHAR), text))"
+  private[queries] val SqlPickKey = "md5(CONCAT(CAST(doc_id AS VARCHAR), text))"
 
   /** q107's classifier+rollup, factored so the spec can plant versions
     * covering all four change classes. Inputs: per-entity snapshots with

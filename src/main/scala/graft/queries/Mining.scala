@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.functions.VectorFunctions._
+import graft.operators.ProductQuantizer.sqDist
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -28,14 +29,6 @@ object Mining {
     * implementations. */
   private def quant(v: Column): Column =
     transform(v, x => floor(x * KmScale).cast("long"))
-
-  /** Integer squared-L2 distance between two equal-length long arrays.
-    * Exact: components ≤ 1e6 in magnitude, so Σ(diff²) ≤ 64·4e12 ≪ 2^63.
-    * Higher-order-function form is fine here (distance rows are k per
-    * vector and k is small); the 100 TB hot-path form would be a codegen
-    * kernel next to [[graft.functions.VectorKernels]]. */
-  private def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
 
   /** One Lloyd assignment pass: each vector to its min-sqDist centroid
     * (ties → lowest cid). Returns (vec_id, cid, dist).
@@ -230,9 +223,7 @@ object Mining {
       .drop("x", "y")
   }
 
-  /** Tokens of `text`, the corpus-wide convention (trim + single-space
-    * split — matches the q89/q91 oracles). */
-  private def toks(textCol: Column): Column = split(trim(textCol), " ")
+  import Det.toks
 
   val defs: Seq[(String, QueryDef)] = Seq(
 

@@ -22,9 +22,7 @@ import org.apache.spark.sql.types._
   */
 object Mixing {
 
-  /** Single-space tokenization, the corpus-wide convention shared with
-    * the oracles (string_split(trim(text), ' ')). */
-  private def toks(textCol: Column): Column = split(trim(textCol), " ")
+  import Det.toks
 
   val defs: Seq[(String, QueryDef)] = Seq(
 

@@ -42,6 +42,10 @@ object Det {
   def davg(c: Column, scale: Int): Column =
     round(sum(c.cast(DecimalType(28, scale))).cast(DoubleType) / count(c), 6)
 
+  /** Single-space tokenization, the corpus-wide convention shared with
+    * the oracles (string_split(trim(text), ' ')). */
+  def toks(textCol: Column): Column = split(trim(textCol), " ")
+
   /** DuckDB-side mirrors of the above, for oracle strings. */
   def sqlSum(expr: String, scale: Int): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,$scale))) AS DOUBLE)"

@@ -8,20 +8,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-/** The Structured Streaming surface as an ORACLE-BACKED gate query.
-  *
-  * Specs (StreamingOpsSpec) assert streaming operators against
-  * in-process expectations — this query instead runs a REAL
-  * `readStream` micro-batch pipeline (file source → event-time
-  * watermark → tumbling-window aggregation → append-mode memory sink,
-  * Trigger.AvailableNow) and exposes its emitted result to
-  * the DuckDB oracle. The bridge is the watermark-trim law: in append
-  * mode a window is emitted iff its END ≤ final watermark, and with
-  * AvailableNow the final watermark is max(event_time) − delay — a pure
-  * function of the data, which the oracle replays in SQL. Hash match ⇒
-  * the streaming path (source chunking, state store, watermark
-  * advancement, append emission) produced exactly the windows the
-  * relational semantics promise.
+/** The ORACLE-BACKED streaming-law gates (32 defined here; q272's
+  * QueryDef is in Classifier). Each runs a REAL `readStream`
+  * micro-batch pipeline (file source → event-time watermark → stateful
+  * operator → sink, Trigger.AvailableNow) through one runner, [[gate]]
+  * ([[eventsGate]] for the 25 fed by the events fixture), and exposes
+  * its drained result to the DuckDB oracle;
+  * `StreamingOpsSpec` checks the same operator laws on MemoryStreams.
+  * q139's bridge is the watermark-trim law: in append mode a window is
+  * emitted iff its END ≤ final watermark, and with AvailableNow the
+  * final watermark is max(event_time) − delay — a pure function of the
+  * data, which the oracle replays in SQL. Hash match ⇒ the streaming
+  * path (source chunking, state store, watermark advancement, append
+  * emission) produced exactly the windows the relational semantics
+  * promise.
   *
   * Boundary note: emission compares millisecond-truncated times; the
   * gate data's max event time sits minutes away from any hour boundary,
@@ -29,9 +29,6 @@ import org.apache.spark.sql.types._
   * empirically at both gate SFs).
   */
 object StreamingGate {
-
-  private def eventsLink(dir: String): Seq[(String, String)] =
-    Seq("events.parquet" -> s"$dir/events.parquet")
 
   /** One streaming gate's run. It owns everything the gates share:
     *
@@ -82,7 +79,7 @@ object StreamingGate {
     *    lives on scratch for seconds. Durable callers keep Spark's
     *    default (on);
     *  - the RocksDB state store, for the gates that ask for it. */
-  private[queries] final class Gate(spark: SparkSession, name: String,
+  private[queries] class Gate(spark: SparkSession, name: String,
       rocksDb: Boolean) {
     val sink: String = name + "_sink"
     spark.catalog.dropTempView(sink) // previous run's result, if any
@@ -121,8 +118,11 @@ object StreamingGate {
     /** Stage each of `parts` as ONE parquet file under the source dir,
       * with mod-times one minute apart in order: the file source lists
       * by mod-time, so under maxFilesPerTrigger the file→batch mapping
-      * is pinned. */
-    def stageFiles(parts: Seq[DataFrame]): Unit = stageAs("parquet", parts)
+      * is pinned. Returns the parts' schema, to stream them back with. */
+    def stageFiles(parts: Seq[DataFrame]): StructType = {
+      stageAs("parquet", parts)
+      parts.head.schema
+    }
 
     /** [[stageFiles]] for single-string-column parts, one text line per
       * row: the JSON landing files the ingest pipeline reads. */
@@ -204,42 +204,107 @@ object StreamingGate {
     def close(): Unit = if (Files.exists(root)) DirIO.deleteRecursively(root)
   }
 
+  /** A gate fed by `dir`'s events fixture, whose timestamp era `era` the
+    * runner resolved once from the fixture's footer. */
+  private[queries] final class EventsGate(spark: SparkSession, name: String,
+      rocksDb: Boolean, dir: String, val era: Tables.EventsEra)
+      extends Gate(spark, name, rocksDb) {
+    private val fixture = s"$dir/events.parquet"
+    private var copies = 0
+
+    /** Stage one more copy of the fixture under the source dir: the
+      * first as `events.parquet`, a replay as `events_<n>.parquet`. Under
+      * maxFilesPerTrigger = 1 each copy is its own micro-batch. */
+    def stageCopy(): Unit = {
+      stage(if (copies == 0) "events.parquet" else s"events_$copies.parquet",
+        fixture)
+      copies += 1
+    }
+
+    /** The file-source stream over the staged copies. */
+    def events(maxFilesPerTrigger: Int = 0): DataFrame =
+      source(era.schema, maxFilesPerTrigger)
+
+    /** One side of a stream-stream join: the `tpe` events as
+      * (`pfx`_user, `pfx`_id, `pfx`_time), watermarked `delay` behind. */
+    def joinSide(tpe: String, pfx: String, delay: String,
+        maxFilesPerTrigger: Int = 0): DataFrame =
+      events(maxFilesPerTrigger)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(s"${pfx}_user"),
+          col("event_id").as(s"${pfx}_id"),
+          era.eventTime.as(s"${pfx}_time"))
+        .withWatermark(s"${pfx}_time", delay)
+
+    /** The fixture as one batch read, never through the staged copies. */
+    def eventsBatch: DataFrame = spark.read.schema(era.schema).parquet(fixture)
+  }
+
   /** Wait for every query to drain; stop any still running. */
   private def await(qs: StreamingQuery*): Unit =
     try qs.foreach(_.awaitTermination())
     finally qs.foreach(q => if (q.isActive) q.stop())
 
-  /** Run `body` as gate `name` over the staged `links`. The sink table
-    * stays readable until the NEXT run of the same gate; everything on
-    * disk is gone when this returns. */
+  /** Run `body` as gate `name`. The sink table stays readable until the
+    * NEXT run of the same gate; everything on disk is gone when this
+    * returns. */
   private[queries] def gate[T](spark: SparkSession, name: String,
-      links: Seq[(String, String)] = Nil, rocksDb: Boolean = false)(
-      body: Gate => T): T = {
-    val g = new Gate(spark, name, rocksDb)
-    try {
-      links.foreach { case (n, t) => g.stage(n, t) }
+      rocksDb: Boolean = false)(body: Gate => T): T =
+    run(new Gate(spark, name, rocksDb))(body)
+
+  /** [[gate]] fed by `copies` staged copies of `dir`'s events fixture
+    * (0 for a gate that stages its own files and only reads the era). */
+  private[queries] def eventsGate[T](spark: SparkSession, name: String,
+      dir: String, copies: Int = 1, rocksDb: Boolean = false)(
+      body: EventsGate => T): T = {
+    val era = Tables.eventsEra(spark, dir)
+    run(new EventsGate(spark, name, rocksDb, dir, era)) { g =>
+      (1 to copies).foreach(_ => g.stageCopy())
       body(g)
-    } finally g.close()
+    }
   }
+
+  private def run[G <: Gate, T](g: G)(body: G => T): T =
+    try body(g) finally g.close()
+
+  /** `b`'s event on `a`'s user at most `mins` minutes after `a`'s: the
+    * interval condition of the stream-stream join gates, over
+    * [[EventsGate.joinSide]] columns. */
+  private def within(a: String, b: String, mins: Int): Column =
+    col(s"${a}_user") === col(s"${b}_user") &&
+      col(s"${b}_time") >= col(s"${a}_time") &&
+      col(s"${b}_time") <= col(s"${a}_time") + expr(s"INTERVAL $mins MINUTES")
+
+  /** A window's start as the `yyyy-MM-dd HH:mm:ss` label the oracles
+    * print. */
+  private def windowStart(label: String): Column =
+    date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as(label)
+
+  /** Hourly (n, exact value sum) per event type over the events stream,
+    * watermarked `delay` behind: q139's and q192's stream, q235's first
+    * stage. */
+  private def hourlyProfile(g: EventsGate, delay: String): DataFrame =
+    g.events()
+      .select(g.era.eventTime.as("event_time"),
+        col("event_type"), col("value"))
+      .withWatermark("event_time", delay)
+      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(28, 2))).as("sdec"))
+
+  /** q139's and q192's output rows over [[hourlyProfile]]'s emission. */
+  private def profileRows(emitted: DataFrame): DataFrame =
+    emitted.select(windowStart("hour_start"),
+        col("event_type"), col("n"),
+        col("sdec").cast(DoubleType).as("sum_value"))
+      .orderBy(col("hour_start"), col("event_type"))
 
   /** Run the streamed hourly profile to completion and return the
     * emitted (watermark-trimmed) result, fully ordered. */
   def streamedHourlyProfile(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q139", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      g.memory(g.source(era.schema)
-        .select(era.eventTime.as("event_time"),
-          col("event_type"), col("value"))
-        .withWatermark("event_time", "1 hour")
-        .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(28, 2))).as("sdec")))
-    }.select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("hour_start"),
-        col("event_type"), col("n"),
-        col("sdec").cast(DoubleType).as("sum_value"))
-      .orderBy(col("hour_start"), col("event_type"))
+    profileRows(eventsGate(spark, "q139", dir) { g =>
+      g.memory(hourlyProfile(g, "1 hour"))
+    })
 
   /** q206: MULTIPLE STATEFUL OPERATORS in one streaming query — the
     * q140 interval join feeding a downstream hourly window aggregation
@@ -251,27 +316,15 @@ object StreamingGate {
     * 2 h state-retention delay) passes the window end. The
     * measured-then-encoded law lives in the q206 QueryDef's oracle. */
   def streamedJoinAgg(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q206", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id").as(s"${pfx}_user"),
-          col("event_id").as(s"${pfx}_id"),
-          era.eventTime.as(s"${pfx}_time"))
-        .withWatermark(s"${pfx}_time", "4 hours")
-      g.memory(side("view", "v").join(side("purchase", "p"),
-          col("v_user") === col("p_user") &&
-            col("p_time") >= col("v_time") &&
-            col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
+    eventsGate(spark, "q206", dir) { g =>
+      g.memory(g.joinSide("view", "v", "4 hours")
+        .join(g.joinSide("purchase", "p", "4 hours"), within("v", "p", 120))
         .select(col("p_time"),
           (unix_micros(col("p_time")) - unix_micros(col("v_time")))
             .as("gap_us"))
         .groupBy(window(col("p_time"), "1 hour"))
         .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("gap_us_sum")))
-    }.select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("hour_start"),
-        col("n_pairs"), col("gap_us_sum"))
+    }.select(windowStart("hour_start"), col("n_pairs"), col("gap_us_sum"))
       .orderBy(col("hour_start"))
 
   /** q250: THREE-WAY stream-stream interval join — two chained join
@@ -285,22 +338,11 @@ object StreamingGate {
     * join EXACTLY — chained join states lose nothing and invent
     * nothing under AvailableNow drain. */
   def streamedTripleJoin(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q250", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id").as(s"${pfx}_user"),
-          col("event_id").as(s"${pfx}_id"),
-          era.eventTime.as(s"${pfx}_time"))
-        .withWatermark(s"${pfx}_time", "8 hours")
-      val vc = side("view", "v").join(side("click", "c"),
-        col("v_user") === col("c_user") &&
-          col("c_time") >= col("v_time") &&
-          col("c_time") <= col("v_time") + expr("INTERVAL 240 MINUTES"))
-      g.memory(vc.join(side("purchase", "p"),
-          col("c_user") === col("p_user") &&
-            col("p_time") >= col("c_time") &&
-            col("p_time") <= col("c_time") + expr("INTERVAL 240 MINUTES"))
+    eventsGate(spark, "q250", dir) { g =>
+      val vc = g.joinSide("view", "v", "8 hours")
+        .join(g.joinSide("click", "c", "8 hours"), within("v", "c", 240))
+      g.memory(vc.join(g.joinSide("purchase", "p", "8 hours"),
+          within("c", "p", 240))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
           col("c_id").as("click_id"), col("p_id").as("purchase_id")))
     }.orderBy(col("user_id"), col("view_id"), col("click_id"),
@@ -316,21 +358,11 @@ object StreamingGate {
     * 19th streaming law (q256's oracle): the drained dedup→join chain
     * equals the batch interval join of the DISTINCT corpus. */
   def streamedDedupJoin(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q256", Seq("events_a.parquet" -> s"$dir/events.parquet",
-        "events_b.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      def side(tpe: String, pfx: String): DataFrame =
-        g.source(era.schema, maxFilesPerTrigger = 1)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(s"${pfx}_user"),
-            col("event_id").as(s"${pfx}_id"),
-            era.eventTime.as(s"${pfx}_time"))
-          .withWatermark(s"${pfx}_time", "8 hours")
-          .dropDuplicatesWithinWatermark(s"${pfx}_id")
-      g.memory(side("view", "v").join(side("purchase", "p"),
-          col("v_user") === col("p_user") &&
-            col("p_time") >= col("v_time") &&
-            col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
+    eventsGate(spark, "q256", dir, copies = 2) { g =>
+      g.memory(g.joinSide("view", "v", "8 hours", maxFilesPerTrigger = 1)
+        .dropDuplicatesWithinWatermark("v_id")
+        .join(g.joinSide("purchase", "p", "8 hours", maxFilesPerTrigger = 1)
+          .dropDuplicatesWithinWatermark("p_id"), within("v", "p", 120))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
           col("p_id").as("purchase_id")))
     }.orderBy(col("user_id"), col("view_id"), col("purchase_id"))
@@ -347,21 +379,6 @@ object StreamingGate {
     * follows within 24 h. */
   private val SegGapUs = 86400000000L
 
-  /** q259's group function — the safe-close discipline for ARBITRARY
-    * per-key state under event time:
-    *
-    *  - buffer (ts µs, cents) per user, re-sorted on every invocation
-    *    (batch arrival order is not time order);
-    *  - a segment may only EMIT when `seg_end + gap ≤ watermark` — the
-    *    only rule that is immune to late data: any row the engine still
-    *    admits has ts > watermark ≥ seg_end + gap, so it can only START
-    *    a new segment, never extend an emitted one;
-    *  - the event-time timeout is a pure WAKE-UP (`watermark + 1 ms`,
-    *    re-armed every invocation): the emit rule above — not the
-    *    timeout timestamp — decides what closes, so ms-truncation
-    *    boundary semantics of the timeout can never flip a row;
-    *  - state is dropped when no open segment remains.
-    */
   /** The shared q259/q268 oracle: batch gaps-and-islands segmentation
     * restricted to segments with end + gap ≤ the ms-truncated final
     * watermark — the 20th-law emission both arbitrary-state APIs must
@@ -417,6 +434,21 @@ object StreamingGate {
     segs.result().partition(_.last._1 + SegGapUs <= wmUs)
   }
 
+  /** q259's group function — the safe-close discipline for ARBITRARY
+    * per-key state under event time:
+    *
+    *  - buffer (ts µs, cents) per user, re-sorted on every invocation
+    *    (batch arrival order is not time order);
+    *  - a segment may only EMIT when `seg_end + gap ≤ watermark` — the
+    *    only rule that is immune to late data: any row the engine still
+    *    admits has ts > watermark ≥ seg_end + gap, so it can only START
+    *    a new segment, never extend an emitted one;
+    *  - the event-time timeout is a pure WAKE-UP (`watermark + 1 ms`,
+    *    re-armed every invocation): the emit rule above — not the
+    *    timeout timestamp — decides what closes, so ms-truncation
+    *    boundary semantics of the timeout can never flip a row;
+    *  - state is dropped when no open segment remains.
+    */
   private def segFn(uid: Long, rows: Iterator[SegEvent],
       state: GroupState[SegBuf]): Iterator[SegOut] = {
     val wmUs = state.getCurrentWatermarkMs * 1000L
@@ -433,8 +465,9 @@ object StreamingGate {
     }
   }
 
-  /** The reusable custom-state operator (spec-driven on a MemoryStream
-    * in StreamingOpsSpec; drained against the oracle in q259). */
+  /** q259's custom-state operator: [[segFn]] under a 48 h watermark.
+    * Drained against the oracle in q259; `StreamingOpsSpec` drives it on
+    * a MemoryStream, trigger by trigger. */
   def customSegments(ds: org.apache.spark.sql.Dataset[SegEvent])
       : org.apache.spark.sql.Dataset[SegOut] = {
     import ds.sparkSession.implicits._
@@ -451,16 +484,17 @@ object StreamingGate {
     * the law, mirrored in integer SQL). */
   def streamedCustomSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    gate(spark, "q259", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      val src = g.source(era.schema)
-        .select(col("user_id"), era.eventTime.as("event_time"),
-          unix_micros(era.eventTime).as("tus"),
-          round(col("value") * 100).cast(LongType).as("cents"))
-        .as[SegEvent]
-      g.memory(customSegments(src), "update")
+    eventsGate(spark, "q259", dir) { g =>
+      g.memory(customSegments(segEvents(g).as[SegEvent]), "update")
     }.orderBy(col("user_id"), col("seg_start_us"))
   }
+
+  /** The events stream as [[SegEvent]] columns, for q259 and q268. */
+  private def segEvents(g: EventsGate): DataFrame =
+    g.events()
+      .select(col("user_id"), g.era.eventTime.as("event_time"),
+        unix_micros(g.era.eventTime).as("tus"),
+        round(col("value") * 100).cast(LongType).as("cents"))
 
   // ---- q318: streamed bottom-k distinct sketch --------------------
 
@@ -488,26 +522,25 @@ object StreamingGate {
     * (est = (k−1)·2⁴⁸/(h_k+1) vs exact distinct, signed ppm error). */
   def streamedBottomK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val era = Tables.eventsEra(spark, dir)
-    val kth = gate(spark, "q318", eventsLink(dir)) { g =>
-      val src = g.source(era.schema)
+    val (sunk, events) = eventsGate(spark, "q318", dir) { g =>
+      val src = g.events()
         .select((col("user_id") % 8).as("shard"),
           expr("CAST(conv(substring(md5(concat('q318#'," +
             " CAST(user_id AS STRING), '#', event_type)), 1, 12)," +
             " 16, 10) AS BIGINT)")
             .as("h"))
         .as[BkEvent]
-      g.memory(src.groupByKey(_.shard)
+      (g.memory(src.groupByKey(_.shard)
         .flatMapGroupsWithState[BkState, BkOut](
           OutputMode.Update(), GroupStateTimeout.NoTimeout())(bkFn),
-        "update")
-    }.select(col("shard"), col("h")).distinct()
+        "update"), g.eventsBatch)
+    }
+    val kth = sunk.select(col("shard"), col("h")).distinct()
       .selectExpr("shard", "h",
         "row_number() OVER (PARTITION BY shard ORDER BY h) AS rn")
       .filter(col("rn") === BkK)
       .select(col("shard"), col("h").as("kth_hash"))
-    val truth = spark.read.schema(era.schema)
-      .parquet(s"$dir/events.parquet")
+    val truth = events
       .groupBy((col("user_id") % 8).as("shard"))
       .agg(countDistinct(col("user_id"), col("event_type"))
         .as("true_distinct"))
@@ -569,9 +602,8 @@ object StreamingGate {
     * for heavy-hitter candidates (est ≥ N/50) against exact counts. */
   def streamedCountMin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val era = Tables.eventsEra(spark, dir)
-    val sunk = gate(spark, "q323", eventsLink(dir)) { g =>
-      val src = g.source(era.schema)
+    val (sunk, events) = eventsGate(spark, "q323", dir) { g =>
+      val src = g.events()
         .filter(col("event_id").isNotNull)
         .select(pmod(col("event_id"), lit(4L)).cast("long").as("shard"),
           expr("concat('u', CAST(20000L div (event_id + 1) " +
@@ -582,10 +614,10 @@ object StreamingGate {
           expr(cmBucketSql(3, "ak")).cast("long").as("c3"),
           expr(cmBucketSql(4, "ak")).cast("long").as("c4"))
         .as[CmEvent]
-      g.memory(src.groupByKey(_.shard)
+      (g.memory(src.groupByKey(_.shard)
         .flatMapGroupsWithState[CmState, CmOut](
           OutputMode.Update(), GroupStateTimeout.NoTimeout())(cmFn),
-        "update")
+        "update"), g.eventsBatch)
     }
     // Drain reconciliation: counters are monotone → final value per
     // (shard, cell) is the max emission; the global sketch is the SUM
@@ -593,8 +625,7 @@ object StreamingGate {
     val merged = sunk
       .groupBy(col("shard"), col("cell")).agg(max(col("cnt")).as("cnt"))
       .groupBy(col("cell")).agg(sum(col("cnt")).as("c"))
-    val exact = spark.read.schema(era.schema)
-      .parquet(s"$dir/events.parquet")
+    val exact = events
       .filter(col("event_id").isNotNull)
       .select(expr("concat('u', CAST(20000L div (event_id + 1) " +
         "AS STRING))").as("ak"))
@@ -628,9 +659,8 @@ object StreamingGate {
     * fingerprint). Lines are constructed with explicit concat (never
     * to_json) so BOTH arms' bytes are engine-reproducible. */
   def streamedDeadLetter(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q329", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      val src = g.source(era.schema)
+    eventsGate(spark, "q329", dir) { g =>
+      val src = g.events()
         .filter(col("event_id").isNotNull)
         .select(col("event_id"),
           coalesce(col("event_type"), lit("")).as("etype"),
@@ -715,12 +745,8 @@ object StreamingGate {
     * oracle, different engine path (RocksDB typed state + real timers). */
   def streamedTwsSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    gate(spark, "q268", eventsLink(dir), rocksDb = true) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      g.memory(g.source(era.schema)
-        .select(col("user_id"), era.eventTime.as("event_time"),
-          unix_micros(era.eventTime).as("tus"),
-          round(col("value") * 100).cast(LongType).as("cents"))
+    eventsGate(spark, "q268", dir, rocksDb = true) { g =>
+      g.memory(segEvents(g)
         .withWatermark("event_time", "48 hours")
         .as[SegEvent]
         .groupByKey(_.user_id)
@@ -740,20 +766,15 @@ object StreamingGate {
     * delivery contributes NOTHING, and the agg emits the deduped hourly
     * counts for windows the final watermark passed. */
   def streamedDedupAgg(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q211", Seq("events_a.parquet" -> s"$dir/events.parquet",
-        "events_b.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      g.memory(g.source(era.schema, maxFilesPerTrigger = 1)
-        .select(era.eventTime.as("event_time"),
+    eventsGate(spark, "q211", dir, copies = 2) { g =>
+      g.memory(g.events(maxFilesPerTrigger = 1)
+        .select(g.era.eventTime.as("event_time"),
           col("event_id"), col("event_type"))
         .withWatermark("event_time", "4 hours")
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n")))
-    }.select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("hour_start"),
-        col("event_type"), col("n"))
+    }.select(windowStart("hour_start"), col("event_type"), col("n"))
       .orderBy(col("hour_start"), col("event_type"))
 
   /** q235: an hourly windowed aggregation feeding a COARSER 4-hour
@@ -765,22 +786,13 @@ object StreamingGate {
     * window only when every contained hour could have arrived. The
     * measured-then-encoded emission boundary lives in q235's oracle. */
   def streamedAggCascade(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q235", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      g.memory(g.source(era.schema)
-        .select(era.eventTime.as("event_time"),
-          col("event_type"), col("value"))
-        .withWatermark("event_time", "2 hours")
-        .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(28, 2))).as("sdec"))
+    eventsGate(spark, "q235", dir) { g =>
+      g.memory(hourlyProfile(g, "2 hours")
         .groupBy(window(col("window"), "4 hours"), col("event_type"))
         .agg(sum(col("n")).as("n_events"), count(lit(1)).as("n_hours"),
           sum(col("sdec")).as("sdec")))
-    }.select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("win4_start"),
-        col("event_type"), col("n_events"), col("n_hours"),
+    }.select(windowStart("win4_start"), col("event_type"),
+        col("n_events"), col("n_hours"),
         col("sdec").cast(DoubleType).as("sum_value"))
       .orderBy(col("win4_start"), col("event_type"))
 
@@ -794,10 +806,9 @@ object StreamingGate {
     * include BOTH branches' rows. The slowest source gates emission
     * for everyone; the oracle replays that in SQL. */
   def streamedUnionWatermark(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q219", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      def src(): DataFrame = g.source(era.schema)
-        .select(era.eventTime.as("event_time"), col("event_type"))
+    eventsGate(spark, "q219", dir) { g =>
+      def src(): DataFrame = g.events()
+        .select(g.era.eventTime.as("event_time"), col("event_type"))
       val a = src().withWatermark("event_time", "4 hours")
       val b = src()
         .select((col("event_time") - expr("INTERVAL 6 HOURS"))
@@ -806,10 +817,7 @@ object StreamingGate {
       g.memory(a.unionAll(b)
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n")))
-    }.select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("hour_start"),
-        col("event_type"), col("n"))
+    }.select(windowStart("hour_start"), col("event_type"), col("n"))
       .orderBy(col("hour_start"), col("event_type"))
 
   /** q231: the dimension-refresh contract. TWO sequential AvailableNow
@@ -823,9 +831,7 @@ object StreamingGate {
     * corpus: a dimension update becomes visible at the next restart
     * without reprocessing or corrupting earlier output. */
   def streamedDimRefresh(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q231",
-        Seq("events_a.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = Tables.eventsEra(spark, dir)
+    eventsGate(spark, "q231", dir) { g =>
       val dimDir = g.dir("dim")
       val outDir = g.dir("sink")
       val types = Tables.eventsRaw(spark, dir).select(col("event_type"))
@@ -834,13 +840,13 @@ object StreamingGate {
         .select(col("event_type"),
           concat(lit(ver + "_"), col("event_type")).as("label"))
         .coalesce(1).write.mode("overwrite").parquet(dimDir)
-      def runOnce(): Unit = g.drain(g.source(era.schema)
+      def runOnce(): Unit = g.drain(g.events()
           .select(col("event_type"), col("value"))
           .join(spark.read.parquet(dimDir), Seq("event_type")))(
         _.format("parquet").option("path", outDir).outputMode("append"))
       writeDim("v1"); runOnce()
       writeDim("v2")
-      g.stage("events_b.parquet", s"$dir/events.parquet")
+      g.stageCopy()
       runOnce()
       spark.read.parquet(outDir)
         .groupBy(col("label"))
@@ -865,12 +871,10 @@ object StreamingGate {
     * recovery-compatible changes Structured Streaming documents; this
     * gate turns that promise into a hash-checked law. */
   def streamedSchemaEvolution(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q337",
-        Seq("events_a.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = Tables.eventsEra(spark, dir)
+    eventsGate(spark, "q337", dir) { g =>
       val outDir = g.dir("sink")
       def runOnce(upgraded: Boolean): Unit = {
-        val base = g.source(era.schema)
+        val base = g.events()
           .select(col("event_id"), col("event_type"),
             round(col("value") * 100).cast(LongType).as("cents"))
         val shaped =
@@ -881,7 +885,7 @@ object StreamingGate {
       }
       runOnce(upgraded = false)
       // the upgrade window: new corpus arrives AND the jar changes
-      g.stage("events_b.parquet", s"$dir/events.parquet")
+      g.stageCopy()
       runOnce(upgraded = true)
       // exactly-once read through the sink's commit log, schemas merged
       spark.read.option("mergeSchema", "true").parquet(outDir)
@@ -909,25 +913,11 @@ object StreamingGate {
     * execute). Result is eagerly localCheckpoint-ed so the temp sink
     * dir can be deleted before returning. */
   def streamedFileSink(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q192", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
+    eventsGate(spark, "q192", dir) { g =>
       val outDir = g.dir("sink")
-      g.drain(g.source(era.schema)
-        .select(era.eventTime.as("event_time"),
-          col("event_type"), col("value"))
-        .withWatermark("event_time", "1 hour")
-        .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(28, 2))).as("sdec")))(
+      g.drain(hourlyProfile(g, "1 hour"))(
         _.format("parquet").option("path", outDir).outputMode("append"))
-      spark.read.parquet(outDir)
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("hour_start"),
-          col("event_type"), col("n"),
-          col("sdec").cast(DoubleType).as("sum_value"))
-        .orderBy(col("hour_start"), col("event_type"))
-        .localCheckpoint()
+      profileRows(spark.read.parquet(outDir)).localCheckpoint()
     }
 
   /** Run the streamed view→purchase interval join to completion and
@@ -935,18 +925,9 @@ object StreamingGate {
     * file-source streams over the same staged landing dir, each
     * watermarked, joined on user + a 2-hour event-time interval. */
   def streamedIntervalJoin(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q140", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      def side(tpe: String, pfx: String): DataFrame = g.source(era.schema)
-        .filter(col("event_type") === tpe)
-        .select(col("user_id").as(s"${pfx}_user"),
-          col("event_id").as(s"${pfx}_id"),
-          era.eventTime.as(s"${pfx}_time"))
-        .withWatermark(s"${pfx}_time", "4 hours")
-      g.memory(side("view", "v").join(side("purchase", "p"),
-          col("v_user") === col("p_user") &&
-            col("p_time") >= col("v_time") &&
-            col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"))
+    eventsGate(spark, "q140", dir) { g =>
+      g.memory(g.joinSide("view", "v", "4 hours")
+        .join(g.joinSide("purchase", "p", "4 hours"), within("v", "p", 120))
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
           col("p_id").as("purchase_id"),
           (unix_micros(col("p_time")) - unix_micros(col("v_time")))
@@ -1010,8 +991,7 @@ object StreamingGate {
     require(Files.isRegularFile(Paths.get(dir, "events.parquet")),
       s"$dir/events.parquet must be a single parquet file for the " +
         "sentinel-flush drain (coalesce the fixture to one file)")
-    gate(spark, name, eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
+    eventsGate(spark, name, dir) { g =>
       // sentinels: one view + one purchase (user −1, matching each other
       // so the pair is droppable post-sink) 10 days past the corpus max,
       // appended as a SECOND file in the landing dir (later mtime ⇒
@@ -1022,7 +1002,7 @@ object StreamingGate {
       val maxUs = Tables.events(spark, dir)
         .agg(max(unix_micros(col("ts")))).head.getLong(0)
       val sentinelUs = maxUs + 10L * 24 * 3600 * 1000000L
-      val tsExpr = era.schema("ts").dataType match {
+      val tsExpr = g.era.schema("ts").dataType match {
         case LongType => lit(sentinelUs * 1000L) // nanos-as-long era
         case dt       => timestamp_micros(lit(sentinelUs)).cast(dt)
       }
@@ -1032,18 +1012,10 @@ object StreamingGate {
           lit(-1L).as("user_id"), col("event_type"),
           lit(0.0).as("value"), lit(null).cast("string").as("props"))
         .coalesce(1).write.mode("append").parquet(g.srcDir)
-      def side(tpe: String, pfx: String): DataFrame =
-        g.source(era.schema, maxFilesPerTrigger = 1)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(s"${pfx}_user"),
-            col("event_id").as(s"${pfx}_id"),
-            era.eventTime.as(s"${pfx}_time"))
-          .withWatermark(s"${pfx}_time", "4 hours")
-      g.memory(select(side("view", "v").join(side("purchase", "p"),
-        col("v_user") === col("p_user") &&
-          col("p_time") >= col("v_time") &&
-          col("p_time") <= col("v_time") + expr("INTERVAL 120 MINUTES"),
-        joinType)))
+      g.memory(select(
+        g.joinSide("view", "v", "4 hours", maxFilesPerTrigger = 1).join(
+          g.joinSide("purchase", "p", "4 hours", maxFilesPerTrigger = 1),
+          within("v", "p", 120), joinType)))
     }
       // sentinels are the user −1 pair (they match each other, so they
       // never surface as null-matched rows on either side)
@@ -1089,11 +1061,10 @@ object StreamingGate {
   /** Run the streamed running-totals processor to completion. */
   def streamedRunningTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    gate(spark, "q148", eventsLink(dir), rocksDb = true) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      g.memory(g.source(era.schema)
+    eventsGate(spark, "q148", dir, rocksDb = true) { g =>
+      g.memory(g.events()
         .select(col("user_id"), col("event_id"),
-          era.tsMicros.as("ts_us"),
+          g.era.tsMicros.as("ts_us"),
           round(col("value") * 100).cast("long").as("cents"))
         .as[EventIn]
         .groupByKey(_.user_id)
@@ -1110,12 +1081,14 @@ object StreamingGate {
     * `dropDuplicates(event_id)`; the emitted set must equal the
     * single-copy table. Returns the post-dedup per-type aggregate. */
   def streamedReplayDedup(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q149", Seq(
-        "events.parquet" -> s"$dir/events.parquet",
-        "events_replay.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      g.memory(g.source(era.schema).dropDuplicates("event_id"))
-    }.groupBy(col("event_type"))
+    replayRollup(eventsGate(spark, "q149", dir, copies = 2) { g =>
+      g.memory(g.events().dropDuplicates("event_id"))
+    })
+
+  /** The q149/q184 rollup of a deduped replay: per type, rows, distinct
+    * ids and cents; n = n_distinct iff the replay collapsed. */
+  private def replayRollup(deduped: DataFrame): DataFrame =
+    deduped.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),
         sum(round(col("value") * 100).cast("long")).as("cents_total"))
@@ -1221,11 +1194,10 @@ object StreamingGate {
     * c_custkey (stateless — the static side is re-planned per batch),
     * aggregated after drain. */
   def streamedStaticEnrich(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q168", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
+    eventsGate(spark, "q168", dir) { g =>
       val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_mktsegment")))
-      g.memory(g.source(era.schema)
+      g.memory(g.events()
         .select(col("user_id"), col("event_type"),
           round(col("value") * 100).cast(LongType).as("cents"))
         .join(dim, col("user_id") === col("c_custkey")))
@@ -1243,8 +1215,8 @@ object StreamingGate {
   def streamedModelScoring(spark: SparkSession, dir: String,
       w: Array[Long], stopTerms: Seq[String],
       threshPerMille: Long): DataFrame =
-    gate(spark, "q272",
-        Seq("documents.parquet" -> s"$dir/documents.parquet")) { g =>
+    gate(spark, "q272") { g =>
+      g.stage("documents.parquet", s"$dir/documents.parquet")
       val schema = spark.read.parquet(s"$dir/documents.parquet").schema
       val (zc, yc) = graft.operators.HashedLogReg.inRowScore(
         "toks", w, stopTerms, threshPerMille)
@@ -1338,11 +1310,8 @@ object StreamingGate {
       val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_type"), col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))
-      g.stageFiles((0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
-      val schema = StructType(Seq(
-        StructField("event_type", StringType),
-        StructField("event_id", LongType),
-        StructField("cents", LongType)))
+      val schema = g.stageFiles(
+        (0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
       g.memory(g.source(schema, maxFilesPerTrigger = 1)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -1366,23 +1335,16 @@ object StreamingGate {
   def streamedCdcLatest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Upsert
     val table = "q280_cdc_state"
-    gate(spark, "q280") { g =>
-      val era = Tables.eventsEra(spark, dir)
+    eventsGate(spark, "q280", dir, copies = 0) { g =>
       g.resetTable(table)
-      val ev = spark.read.schema(era.schema)
-        .parquet(s"$dir/events.parquet")
+      val ev = g.eventsBatch
         .filter(col("user_id") < 200)
         .select(col("user_id"), col("event_type"), col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"),
-          date_format(era.eventTime, "yyyy-MM-dd HH:mm:ss.SSSSSS")
+          date_format(g.era.eventTime, "yyyy-MM-dd HH:mm:ss.SSSSSS")
             .as("ts_str"))
-      g.stageFiles((0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
-      val schema = StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("event_id", LongType),
-        StructField("cents", LongType),
-        StructField("ts_str", StringType)))
+      val schema = g.stageFiles(
+        (0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
       g.drain(g.source(schema, maxFilesPerTrigger = 1))(
         _.foreachBatch { (batch: DataFrame, _: Long) =>
           val latest = Upsert.latestPerKey(batch, Seq("user_id"),
@@ -1405,10 +1367,9 @@ object StreamingGate {
   /** Run the streamed per-user session build to completion and return
     * the emitted (watermark-closed) sessions, fully ordered. */
   def streamedSessions(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q141", eventsLink(dir)) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      g.memory(g.source(era.schema)
-        .select(era.eventTime.as("event_time"),
+    eventsGate(spark, "q141", dir) { g =>
+      g.memory(g.events()
+        .select(g.era.eventTime.as("event_time"),
           col("user_id"))
         .withWatermark("event_time", "1 hour")
         .groupBy(session_window(col("event_time"), "30 minutes"),
@@ -1419,6 +1380,24 @@ object StreamingGate {
         unix_micros(col("session_window.end")).as("end_us"),
         col("n_events"))
       .orderBy(col("user_id"), col("start_us"))
+
+  /** The q139/q192 oracle: batch hourly windows kept by the
+    * watermark-trim law (window_end ≤ max(ts) − 1 h). */
+  private val HourlyProfileOracle: String = s"""
+        WITH e AS (
+          SELECT CAST(ts AS TIMESTAMP) AS tsu, event_type, value
+          FROM events),
+        m AS (SELECT max(tsu) AS mx FROM e),
+        w AS (
+          SELECT date_trunc('hour', tsu) AS ws, event_type,
+                 COUNT(*) AS n,
+                 ${Det.sqlSum("value", 2)} AS sum_value
+          FROM e GROUP BY 1, 2)
+        SELECT strftime(w.ws, '%Y-%m-%d %H:%M:%S') AS hour_start,
+               w.event_type, w.n, w.sum_value
+        FROM w CROSS JOIN m
+        WHERE w.ws + INTERVAL 1 HOUR <= m.mx - INTERVAL 1 HOUR
+        ORDER BY hour_start, event_type"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -1440,21 +1419,7 @@ object StreamingGate {
     "q139_streamed_hourly_profile" -> QueryDef(
       headline = true,
       build = (spark, dir) => streamedHourlyProfile(spark, dir),
-      oracle = Some(s"""
-        WITH e AS (
-          SELECT CAST(ts AS TIMESTAMP) AS tsu, event_type, value
-          FROM events),
-        m AS (SELECT max(tsu) AS mx FROM e),
-        w AS (
-          SELECT date_trunc('hour', tsu) AS ws, event_type,
-                 COUNT(*) AS n,
-                 ${Det.sqlSum("value", 2)} AS sum_value
-          FROM e GROUP BY 1, 2)
-        SELECT strftime(w.ws, '%Y-%m-%d %H:%M:%S') AS hour_start,
-               w.event_type, w.n, w.sum_value
-        FROM w CROSS JOIN m
-        WHERE w.ws + INTERVAL 1 HOUR <= m.mx - INTERVAL 1 HOUR
-        ORDER BY hour_start, event_type""")),
+      oracle = Some(HourlyProfileOracle)),
 
     // ---- q140: streamed stream-stream interval join, oracle-backed ----
     // view→purchase attribution (purchase within 2 h of a view by the
@@ -1698,21 +1663,7 @@ object StreamingGate {
     // emission.
     "q192_streamed_file_sink" -> QueryDef(
       build = (spark, dir) => streamedFileSink(spark, dir),
-      oracle = Some(s"""
-        WITH e AS (
-          SELECT CAST(ts AS TIMESTAMP) AS tsu, event_type, value
-          FROM events),
-        m AS (SELECT max(tsu) AS mx FROM e),
-        w AS (
-          SELECT date_trunc('hour', tsu) AS ws, event_type,
-                 COUNT(*) AS n,
-                 ${Det.sqlSum("value", 2)} AS sum_value
-          FROM e GROUP BY 1, 2)
-        SELECT strftime(w.ws, '%Y-%m-%d %H:%M:%S') AS hour_start,
-               w.event_type, w.n, w.sum_value
-        FROM w CROSS JOIN m
-        WHERE w.ws + INTERVAL 1 HOUR <= m.mx - INTERVAL 1 HOUR
-        ORDER BY hour_start, event_type"""))) :+ (
+      oracle = Some(HourlyProfileOracle))) :+ (
 
     // ---- q211: chained stateful operators (dedup -> window agg) ----
     // The dedup-then-count shape every exactly-once metrics pipeline
@@ -2345,7 +2296,7 @@ object StreamingGate {
 
     // ---- q329: streamed dead-letter conservation law (30th law) ----
     // The streaming form of the ingest quarantine contract (batch:
-    // `JsonBatchReader.readAccounted` + the PipelineSpec quarantine
+    // `JsonBatchReader.AccountedOptions` + the PipelineSpec quarantine
     // case — spec-gated only, until now): a stream of JSON lines with
     // PLANTED corruption (every 13th line loses its opening brace, so
     // the whole object is unparseable and Spark's partial-results
@@ -2555,11 +2506,8 @@ object StreamingGate {
       val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_type"), col("event_id"),
           round(col("value") * 100).cast(LongType).as("cents"))
-      g.stageFiles((0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
-      val schema = StructType(Seq(
-        StructField("event_type", StringType),
-        StructField("event_id", LongType),
-        StructField("cents", LongType)))
+      val schema = g.stageFiles(
+        (0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
       g.drain(g.source(schema, maxFilesPerTrigger = 1)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -2610,9 +2558,8 @@ object StreamingGate {
       val o = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("id"),
         round(col("o_totalprice") * 100).cast("long").as("w"))
-      g.stageFiles((0 until 8).map(f => o.filter(col("id") % 8 === f)))
-      val schema = StructType(Seq(
-        StructField("id", LongType), StructField("w", LongType)))
+      val schema = g.stageFiles(
+        (0 until 8).map(f => o.filter(col("id") % 8 === f)))
       g.drain(g.source(schema, maxFilesPerTrigger = 1)
         // the E–S key, in-row and stateless (the q264 arithmetic):
         // u = (md5-48bit + 1)/2^48, e = round(ln u, 9)/w — largest-k
@@ -2674,10 +2621,8 @@ object StreamingGate {
         .select(col("cents"), col("rcum"))
         .localCheckpoint(false)
       val nRef = ev.count()
-      g.stageFiles((0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
-      val schema = StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("cents", LongType)))
+      val schema = g.stageFiles(
+        (0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
       g.drain(g.source(schema, maxFilesPerTrigger = 1))(
         _.foreachBatch { (batch: DataFrame, id: Long) =>
           val bc = batch.groupBy(col("cents")).agg(count(lit(1)).as("bc"))
@@ -2712,20 +2657,13 @@ object StreamingGate {
   /** q184: the q149 replay harness with watermarked, bounded-state
     * dedup. See the QueryDef comment for the delay-covers-span law. */
   def streamedWatermarkDedup(spark: SparkSession, dir: String): DataFrame =
-    gate(spark, "q184", Seq(
-        "events.parquet" -> s"$dir/events.parquet",
-        "events_replay.parquet" -> s"$dir/events.parquet")) { g =>
-      val era = Tables.eventsEra(spark, dir)
-      g.memory(g.source(era.schema)
-        .select(col("event_id"), era.eventTime.as("event_time"),
+    replayRollup(eventsGate(spark, "q184", dir, copies = 2) { g =>
+      g.memory(g.events()
+        .select(col("event_id"), g.era.eventTime.as("event_time"),
           col("event_type"), col("value"))
         .withWatermark("event_time", "45 days")
         .dropDuplicatesWithinWatermark("event_id"))
-    }.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("event_id")).as("n_distinct"),
-        sum(round(col("value") * 100).cast("long")).as("cents_total"))
-      .orderBy(col("event_type"))
+    })
 
   /** q336: run the two-writer shared-table scenario to completion.
     * Writers A and B are independent AvailableNow pipelines in SEPARATE
@@ -2756,12 +2694,8 @@ object StreamingGate {
       // batch_id-first partition spec, so neither writer hits the
       // create-if-missing race.
       IdempotentParquetSink.write(ev.limit(0), table, batchId = -1L)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("event_type", StringType),
-        StructField("cents", LongType)))
       def writer(g: Gate, ckpt: String, offset: Long): StreamingQuery =
-        g.stream(spark.newSession().readStream.schema(schema)
+        g.stream(spark.newSession().readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(g.srcDir))(
           _.foreachBatch { (batch: DataFrame, id: Long) =>

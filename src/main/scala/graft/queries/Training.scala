@@ -23,8 +23,7 @@ object Training {
 
   /** Engine-portable pick key (see [[Curation]]): md5 is identical in
     * Spark and DuckDB, xxhash64 is not. */
-  private def pickKey = md5(concat(col("doc_id").cast("string"), col("text")).cast("binary"))
-  private val SqlPickKey = "md5(CONCAT(CAST(doc_id AS VARCHAR), text))"
+  import Curation.{pickKey, SqlPickKey}
 
   val defs: Seq[(String, QueryDef)] = Seq(
 

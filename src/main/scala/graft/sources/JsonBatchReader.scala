@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.StructType
   * `spark.read.option("multiline","false").json(batch_files)`
   * (spark-data-pipeline/spark_job.py:109) and no schema — forcing Spark to
   * scan every file TWICE (inference pass, then read pass). At 100 TB that
-  * anti-optimization doubles ingest I/O, so the default here is an explicit
-  * schema; `inferSchema = true` reproduces the reference's behavior for
-  * compatibility tests.
+  * anti-optimization doubles ingest I/O, so [[readGps]] reads with an
+  * explicit schema; `read(spark, paths, None)` reproduces the reference's
+  * behavior for compatibility tests.
   */
 object JsonBatchReader {
 
@@ -21,33 +21,26 @@ object JsonBatchReader {
     schema.fold(reader)(reader.schema).json(paths: _*)
   }
 
-  def readGps(spark: SparkSession, paths: Seq[String],
-      inferSchema: Boolean = false): DataFrame =
-    read(spark, paths,
-      if (inferSchema) None else Some(graft.core.GpsSchema.schema))
+  def readGps(spark: SparkSession, paths: Seq[String]): DataFrame =
+    read(spark, paths, Some(graft.core.GpsSchema.schema))
 
-  /** Marker column for [[readAccounted]]'s malformed-line capture. */
+  /** Marker column for an accounted read's malformed-line capture. */
   val CorruptCol = "_corrupt_record"
 
-  /** PERMISSIVE read with EXPLICIT corrupt-record capture — §1.3's
-    * schema tolerance made auditable. The reference's schemaless
-    * `spark.read.json` silently nulls every field of a malformed line
-    * (PERMISSIVE default with no corrupt column in the inferred
-    * schema), which at ingest scale means data loss nobody can see.
-    * Here malformed lines keep their RAW text in [[CorruptCol]] so the
-    * pipeline can split good rows from a quarantine stream and publish
-    * reject counts per batch — the at-least-once contract extended to
-    * "and nothing vanishes silently".
+  /** Reader options of an accounted read: PERMISSIVE with EXPLICIT
+    * corrupt-record capture — §1.3's schema tolerance made auditable.
+    * The reference's schemaless `spark.read.json` silently nulls every
+    * field of a malformed line (PERMISSIVE default with no corrupt column
+    * in the inferred schema), which at ingest scale means data loss
+    * nobody can see. Here malformed lines keep their RAW text in
+    * [[CorruptCol]] so the pipeline can split good rows from a quarantine
+    * stream and publish reject counts per batch — the at-least-once
+    * contract extended to "and nothing vanishes silently".
     *
     * Spark restriction documented upstream: a query may not reference
     * ONLY the corrupt column; [[withSplitAccounted]] always carries the
-    * full row alongside it. */
-  def readAccounted(spark: SparkSession, paths: Seq[String],
-      schema: StructType): DataFrame =
-    spark.read.options(AccountedOptions).schema(accountedSchema(schema))
-      .json(paths: _*)
-
-  /** Reader options of an accounted read; the ingest stream uses them too. */
+    * full row alongside it. The ingest stream reads with these options
+    * and [[accountedSchema]]. */
   val AccountedOptions: Map[String, String] = Map("multiline" -> "false",
     "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)
 

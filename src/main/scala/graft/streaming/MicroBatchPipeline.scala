@@ -61,8 +61,8 @@ object MicroBatchPipeline {
       // rejects it with a custom sink. Default false keeps the
       // reference's plain-append table layout through the caller's sink.
       idempotentCommit: Boolean = false,
-      // Some(table) => malformed JSON lines are captured (the options
-      // and schema of JsonBatchReader.readAccounted) and appended to that
+      // Some(table) => malformed JSON lines are captured (JsonBatchReader's
+      // AccountedOptions and accountedSchema) and appended to that
       // quarantine table with their batch id, instead of flowing into the
       // main table as all-null rows — the reference's silent-loss
       // behavior (§1.3) made auditable. None (default) keeps the original

@@ -22,6 +22,12 @@ class MultiPatternMatchSpec extends SparkSpec {
     docs.withColumn("pattern_hits", array(counts: _*))
   }
 
+  /** True iff `p` has no proper prefix that is also a suffix — the
+    * condition under which overlapping occurrences cannot exist and the
+    * automaton count equals the oracle's `replace`-count. */
+  private def borderless(p: String): Boolean =
+    !(1 until p.length).exists(k => p.substring(0, k) == p.substring(p.length - k))
+
   private val pats = Seq("ab", "bc", "data line", "line", "xyz")
 
   test("automaton path equals the built-in replace-count stack (borderless patterns)") {
@@ -31,7 +37,7 @@ class MultiPatternMatchSpec extends SparkSpec {
       (3L, ""),
       (4L, "no hits here at all"),
       (5L, "line")).toDF("doc_id", "text")
-    assert(pats.forall(MultiPatternMatch.borderless))
+    assert(pats.forall(borderless))
     val ac = MultiPatternMatch.withMatchCounts(docs, "text", pats)
       .select("doc_id", "pattern_hits").as[(Long, Seq[Long])].collect().toMap
     val nv = naiveMatchCounts(docs, "text", pats)
@@ -47,7 +53,7 @@ class MultiPatternMatchSpec extends SparkSpec {
     // "aa" in "aaaa" ends at positions 2,3,4 -> 3 occurrences; the
     // replace-count (non-overlapping) would say 2. This is WHY the gate
     // restricts itself to borderless patterns.
-    assert(!MultiPatternMatch.borderless("aa"))
+    assert(!borderless("aa"))
     val counts = MultiPatternMatch.build(Seq("aa")).scan("aaaa")
     assert(counts.toSeq == Seq(3L))
   }
@@ -69,6 +75,6 @@ class MultiPatternMatchSpec extends SparkSpec {
   }
 
   test("gate blocklist is borderless — the oracle-equivalence precondition") {
-    assert(graft.queries.Text.BlocklistPatterns.forall(MultiPatternMatch.borderless))
+    assert(graft.queries.Text.BlocklistPatterns.forall(borderless))
   }
 }

@@ -158,9 +158,8 @@ class StreamingGateSpec extends SparkSpec {
       "every scoped key must differ from the parent's for the check to bite")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[
       (Seq[Option[String]], Seq[Option[String]])]()
-    StreamingGate.gate(spark, "conf_isolation",
-        Seq("events.parquet" -> s"$sf/events.parquet")) { g =>
-      g.drain(g.source(spark.read.parquet(s"$sf/events.parquet").schema))(
+    StreamingGate.eventsGate(spark, "conf_isolation", sf) { g =>
+      g.drain(g.events())(
         _.foreachBatch { (batch: DataFrame, _: Long) =>
           seen.add((view(spark), view(batch.sparkSession)))
           ()
@@ -171,6 +170,24 @@ class StreamingGateSpec extends SparkSpec {
       assert(p == parent, "the parent session's conf mid-gate")
       assert(b == gateConf, "the stream's cloned session's conf")
     }
+    assert(spark.conf.getAll == before)
+  }
+
+  test("runner: two staged copies drain as two micro-batches of the whole fixture") {
+    // the replay staging q149, q184, q211 and q256 rely on: one copy per
+    // micro-batch under maxFilesPerTrigger = 1, no copy split or merged
+    val rows = graft.core.Tables.events(spark, sf).count()
+    val before = spark.conf.getAll
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    StreamingGate.eventsGate(spark, "replay_staging", sf, copies = 2) { g =>
+      g.drain(g.events(maxFilesPerTrigger = 1))(
+        _.foreachBatch { (batch: DataFrame, id: Long) =>
+          batches.add((id, batch.count()))
+          ()
+        })
+    }
+    val got = batches.toArray(Array.empty[(Long, Long)]).sortBy(_._1).toSeq
+    assert(got.map(_._2) == Seq(rows, rows), s"micro-batches (id, rows): $got")
     assert(spark.conf.getAll == before)
   }
 }

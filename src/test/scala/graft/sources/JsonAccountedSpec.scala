@@ -9,6 +9,11 @@ class JsonAccountedSpec extends SparkSpec {
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("name", StringType)))
 
+  /** The accounted read, composed from the pieces the ingest stream uses. */
+  private def readAccounted(dir: String, schema: StructType) =
+    spark.read.options(JsonBatchReader.AccountedOptions)
+      .schema(JsonBatchReader.accountedSchema(schema)).json(dir)
+
   private def stage(lines: Seq[String]): String = {
     val dir = tmpDir("json_acct")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "batch.json"),
@@ -23,7 +28,7 @@ class JsonAccountedSpec extends SparkSpec {
       """{"id": 3, "name": "fine"}""",
       """not json at all"""))
     JsonBatchReader.withSplitAccounted(
-        JsonBatchReader.readAccounted(spark, Seq(dir), schema)) { (good, bad) =>
+        readAccounted(dir, schema)) { (good, bad) =>
       assert(good.as[(Long, String)].collect().sortBy(_._1).toSeq ==
         Seq((1L, "ok"), (3L, "fine")))
       val raw = bad.select(JsonBatchReader.CorruptCol).as[String].collect().toSet
@@ -34,7 +39,7 @@ class JsonAccountedSpec extends SparkSpec {
   test("a clean batch quarantines nothing and the marker column is stripped") {
     val dir = stage(Seq("""{"id": 7, "name": "x"}"""))
     JsonBatchReader.withSplitAccounted(
-        JsonBatchReader.readAccounted(spark, Seq(dir), schema)) { (good, bad) =>
+        readAccounted(dir, schema)) { (good, bad) =>
       assert(bad.count() == 0)
       assert(good.columns.toSeq == Seq("id", "name"))
     }
@@ -43,7 +48,7 @@ class JsonAccountedSpec extends SparkSpec {
   test("a schema already claiming the marker column is rejected loudly") {
     val clash = schema.add(JsonBatchReader.CorruptCol, StringType)
     intercept[IllegalArgumentException] {
-      JsonBatchReader.readAccounted(spark, Seq("/tmp/unused"), clash)
+      readAccounted("/tmp/unused", clash)
     }
   }
 
@@ -60,7 +65,7 @@ class JsonAccountedSpec extends SparkSpec {
     val silent = JsonBatchReader.read(spark, Seq(dir), Some(schema))
     assert(silent.filter($"id".isNull && $"name".isNull).count() == 1)
     JsonBatchReader.withSplitAccounted(
-        JsonBatchReader.readAccounted(spark, Seq(dir), schema)) { (_, bad) =>
+        readAccounted(dir, schema)) { (_, bad) =>
       assert(bad.count() == 1)
     }
     assert(inferred.count() >= 1) // reference path parses, shape varies

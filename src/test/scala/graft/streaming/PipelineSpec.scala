@@ -449,7 +449,7 @@ class PipelineSpec extends SparkSpec {
     val files = new java.io.File(in).listFiles()
       .filter(_.getName.endsWith(".json")).map(_.getAbsolutePath).toSeq
     val explicit = JsonBatchReader.readGps(spark, files)
-    val inferred = JsonBatchReader.readGps(spark, files, inferSchema = true)
+    val inferred = JsonBatchReader.read(spark, files, None)
     assert(explicit.schema == inferred.schema)
     assert(explicit.exceptAll(inferred).isEmpty &&
       inferred.exceptAll(explicit).isEmpty)
