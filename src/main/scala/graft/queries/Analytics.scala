@@ -24,6 +24,26 @@ object Analytics {
 
   private def ts(s: String) = lit(java.sql.Timestamp.valueOf(s + " 00:00:00"))
 
+  /** TPC-H Q17's correlated subquery: q39 runs this text through spark.sql,
+    * and DuckDB runs the same text as its oracle. */
+  private val Q17Sql: String = """
+        SELECT COUNT(*) AS n_small,
+               ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE)
+                     / 7.0, 6) AS avg_yearly
+        FROM lineitem l
+        WHERE l_quantity < (
+          SELECT 0.5 * CAST(SUM(CAST(l2.l_quantity AS DECIMAL(28,2))) AS DOUBLE)
+                     / COUNT(*)
+          FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)"""
+
+  /** Weekly order revenue in integer cents (week = days since 1995-01-01
+    * div 7): the `series` body of the q330 and q331 oracles. */
+  private val WeeklyCentsSql: String = """SELECT date_diff('day', DATE '1995-01-01',
+                   CAST(o_orderdate AS DATE)) // 7 AS wk,
+                 CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+                   AS BIGINT) AS cents
+          FROM orders GROUP BY 1"""
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- q11: stats pack — exact variance/stddev from decimal moments ----
@@ -599,25 +619,9 @@ object Analytics {
     "q39_correlated_subquery" -> QueryDef(
       build = (spark, dir) => {
         Tables.registerAll(spark, dir)
-        spark.sql("""
-          SELECT COUNT(*) AS n_small,
-                 ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE)
-                       / 7.0, 6) AS avg_yearly
-          FROM lineitem l
-          WHERE l_quantity < (
-            SELECT 0.5 * CAST(SUM(CAST(l2.l_quantity AS DECIMAL(28,2))) AS DOUBLE)
-                       / COUNT(*)
-            FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)""")
+        spark.sql(Q17Sql)
       },
-      oracle = Some("""
-        SELECT COUNT(*) AS n_small,
-               ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE)
-                     / 7.0, 6) AS avg_yearly
-        FROM lineitem l
-        WHERE l_quantity < (
-          SELECT 0.5 * CAST(SUM(CAST(l2.l_quantity AS DECIMAL(28,2))) AS DOUBLE)
-                     / COUNT(*)
-          FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)""")),
+      oracle = Some(Q17Sql)),
 
     // ---- q38: one-pass column profile (data-quality sweep) ----
     // operators.Profiler over lineitem's integer key columns (integer
@@ -2131,13 +2135,9 @@ object Analytics {
             "mae", "naive_mae_insample", "mase_ppm")
           .orderBy(col("wk"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH RECURSIVE series AS MATERIALIZED (
-          SELECT date_diff('day', DATE '1995-01-01',
-                   CAST(o_orderdate AS DATE)) // 7 AS wk,
-                 CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-                   AS BIGINT) AS cents
-          FROM orders GROUP BY 1),
+          $WeeklyCentsSql),
         train AS MATERIALIZED (
           SELECT wk, cents, ROW_NUMBER() OVER (ORDER BY wk) AS rn
           FROM series WHERE wk < 280),
@@ -2225,13 +2225,9 @@ object Analytics {
           .toDF("lag", "rho_ppm", "q_milli", "reject_h0")
           .orderBy(col("lag"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH series AS MATERIALIZED (
-          SELECT date_diff('day', DATE '1995-01-01',
-                   CAST(o_orderdate AS DATE)) // 7 AS wk,
-                 CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT))
-                   AS BIGINT) AS cents
-          FROM orders GROUP BY 1),
+          $WeeklyCentsSql),
         nn AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
                       CAST(SUM(cents) AS HUGEINT) AS s
                FROM series),

@@ -47,6 +47,29 @@ object Classifier {
     built
   }
 
+  /** The confusion counts of a q251 fold's scores `z` against labels `y`
+    * (positive at z ≥ 0). */
+  private val ConfusionCounts: String = """COUNT(*) AS n_test,
+                      CAST(SUM(CASE WHEN y = 1 AND z >= 0 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS tp,
+                      CAST(SUM(CASE WHEN y = 0 AND z >= 0 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS fp,
+                      CAST(SUM(CASE WHEN y = 1 AND z < 0 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS fn,
+                      CAST(SUM(CASE WHEN y = 0 AND z < 0 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS tn"""
+
+  /** The calibration tail of the q233 and q246 oracles: `r` ranks the
+    * final scores `zf`, then per decile the doc count, positives and sign
+    * agreement. */
+  private val DecileTail: String = """r AS (SELECT *, row_number() OVER (ORDER BY z DESC, doc_id) AS rn
+              FROM zf)
+        SELECT ((rn - 1) * 10) // nn.n + 1 AS decile,
+               COUNT(*) AS n_docs, CAST(SUM(y) AS BIGINT) AS n_pos,
+               CAST(SUM(CASE WHEN (y = 1) = (z >= 0) THEN 1 ELSE 0 END)
+                 AS BIGINT) AS agree
+        FROM r CROSS JOIN nn GROUP BY 1 ORDER BY decile"""
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- q233: trained quality classifier (hashed-feature LR) ----
@@ -925,27 +948,11 @@ object Classifier {
                FROM xo x JOIN wb$rounds w ON w.j = x.j GROUP BY x.doc_id),
         ca AS (SELECT CAST(0 AS BIGINT) AS fold,
                       (SELECT n FROM nodd) AS n_train,
-                      COUNT(*) AS n_test,
-                      CAST(SUM(CASE WHEN y = 1 AND z >= 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS tp,
-                      CAST(SUM(CASE WHEN y = 0 AND z >= 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS fp,
-                      CAST(SUM(CASE WHEN y = 1 AND z < 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS fn,
-                      CAST(SUM(CASE WHEN y = 0 AND z < 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS tn
+                      $ConfusionCounts
                FROM za),
         cb AS (SELECT CAST(1 AS BIGINT) AS fold,
                       (SELECT n FROM ne) AS n_train,
-                      COUNT(*) AS n_test,
-                      CAST(SUM(CASE WHEN y = 1 AND z >= 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS tp,
-                      CAST(SUM(CASE WHEN y = 0 AND z >= 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS fp,
-                      CAST(SUM(CASE WHEN y = 1 AND z < 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS fn,
-                      CAST(SUM(CASE WHEN y = 0 AND z < 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS tn
+                      $ConfusionCounts
                FROM zb)
         SELECT fold, n_train, n_test, tp, fp, fn, tn,
                ((tp + tn) * 1000000) // n_test AS acc_ppm
@@ -967,13 +974,7 @@ object Classifier {
         zf AS (SELECT x.doc_id, MAX(x.y) AS y,
                       CAST(SUM(x.x * w.wv) AS BIGINT) AS z
                FROM x JOIN wb$roundsB w ON w.j = x.j GROUP BY x.doc_id),
-        r AS (SELECT *, row_number() OVER (ORDER BY z DESC, doc_id) AS rn
-              FROM zf)
-        SELECT ((rn - 1) * 10) // nn.n + 1 AS decile,
-               COUNT(*) AS n_docs, CAST(SUM(y) AS BIGINT) AS n_pos,
-               CAST(SUM(CASE WHEN (y = 1) = (z >= 0) THEN 1 ELSE 0 END)
-                 AS BIGINT) AS agree
-        FROM r CROSS JOIN nn GROUP BY 1 ORDER BY decile"""
+        $DecileTail"""
   }
 
   /** q321's oracle: the SAME unrolled training chain, then the final
@@ -1024,13 +1025,7 @@ object Classifier {
         zf AS (SELECT x.doc_id, MAX(x.y) AS y,
                       CAST(SUM(x.x * w.wv) AS BIGINT) AS z
                FROM x JOIN w$rounds w ON w.j = x.j GROUP BY x.doc_id),
-        r AS (SELECT *, row_number() OVER (ORDER BY z DESC, doc_id) AS rn
-              FROM zf)
-        SELECT ((rn - 1) * 10) // nn.n + 1 AS decile,
-               COUNT(*) AS n_docs, CAST(SUM(y) AS BIGINT) AS n_pos,
-               CAST(SUM(CASE WHEN (y = 1) = (z >= 0) THEN 1 ELSE 0 END)
-                 AS BIGINT) AS agree
-        FROM r CROSS JOIN nn GROUP BY 1 ORDER BY decile"""
+        $DecileTail"""
   }
 
   /** q272's oracle: the SAME unrolled training chain, then batch scoring

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,6 +27,19 @@ object CorpusStats {
   private[queries] def l2QuantScore: Column =
     expr("aggregate(embedding, 0L, (acc, x) -> " +
       "acc + cast(floor(cast(x as double) * cast(x as double) * 10000) as long))")
+
+  /** DuckDB mirror of [[l2QuantScore]]. */
+  private val SqlL2QuantScore: String = """CAST(list_sum(list_transform(embedding,
+                   x -> CAST(floor(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
+                     * 10000) AS BIGINT))) AS BIGINT)"""
+
+  /** The `s` CTE of the AUC-family oracles: `cols`, then the
+    * [[l2QuantScore]] `score` and the label >= 5 `pos` flag per embedding. */
+  private def sqlScored(cols: String): String = s"""
+        WITH s AS (
+          SELECT $cols$SqlL2QuantScore AS score,
+                 CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
+          FROM embeddings)"""
 
   /** THE tie-corrected Mann-Whitney rank-sum kernel — the single
     * implementation behind q169 (global) and q171 (per-class), so the
@@ -66,6 +79,73 @@ object CorpusStats {
       "CASE WHEN n_pos > 0 AND n_neg > 0 " +
         "THEN (u2 * 1000000) div (2 * n_pos * n_neg) END"))
   }
+
+  /** The `sh0` CTE: each document's distinct single-space word trigrams
+    * (`shingles(toks(text), 3)`) as `gs`, with its source. */
+  private val SourceShinglesCte: String = """WITH sh0 AS (
+          SELECT source,
+                 list_distinct(list_transform(
+                   range(1, GREATEST(len(string_split(trim(text), ' ')) - 1, 1)),
+                   i -> string_split(trim(text), ' ')[i] || ' ' ||
+                        string_split(trim(text), ' ')[i+1] || ' ' ||
+                        string_split(trim(text), ' ')[i+2])) AS gs
+          FROM documents)"""
+
+  /** q221's and q263's sketch input: `tok`, the distinct (source,
+    * trigram) pairs, and `regs`, each source's 256 HLL registers
+    * (source, reg, m) over the md5 of its trigrams. Trigram shingles, not
+    * unigrams: the synthetic vocab is ~31 tokens/source (degenerate for
+    * a sketch); shingles give the thousands-per-source cardinality that
+    * exercises the raw harmonic-mean branch with realistic register
+    * saturation. */
+  private def hllRegisters(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    import graft.functions.TextFunctions.shingles
+    val tok = Tables.spread(Tables.documents(spark, dir))
+      .select(col("source"),
+        explode(shingles(toks(col("text")), 3)).as("t"))
+      .distinct()
+    val regs = tok
+      .select(col("source"),
+        conv(substring(md5(col("t")), 1, 10), 16, 10).cast("long")
+          .as("h"))
+      .select(col("source"), expr("h div 4294967296").as("reg"),
+        expr("h % 4294967296").as("rest"))
+      .withColumn("rho", when(col("rest") === 0, lit(33))
+        .otherwise(lit(33) - length(bin(col("rest")))))
+      .groupBy(col("source"), col("reg")).agg(max(col("rho")).as("m"))
+    (tok, regs)
+  }
+
+  /** DuckDB mirror of the corrected HLL estimate of q221 and q263 over
+    * registers `mx` (256 registers; linear counting below 2.5·m). */
+  private val SqlHllEstimate: String = """CASE WHEN 47072.71267120224 /
+                             (SUM(power(2.0, -mx))
+                               + CAST(256 - COUNT(*) AS DOUBLE)) <= 640.0
+                             AND 256 - COUNT(*) > 0
+                           THEN CAST(ROUND(256.0 * ln(256.0 /
+                             CAST(256 - COUNT(*) AS DOUBLE))) AS BIGINT)
+                           ELSE CAST(ROUND(47072.71267120224 /
+                             (SUM(power(2.0, -mx))
+                               + CAST(256 - COUNT(*) AS DOUBLE))) AS BIGINT)
+                      END"""
+
+  /** The `gi` CTE: the Gini coefficient in ppm from the `gn` numerator
+    * (sign-safe integer division). */
+  private val GiniCte: String = """gi AS (SELECT CAST(CASE WHEN gnum >= 0
+                 THEN gnum * 1000000
+                   // (CAST(n_src AS HUGEINT) * t_all)
+                 ELSE -((-gnum) * 1000000
+                   // (CAST(n_src AS HUGEINT) * t_all)) END AS BIGINT)
+                 AS gini_ppm
+               FROM gn)"""
+
+  /** Per-document article rate in milli: the share of "the"/"a" tokens
+    * · 1000. */
+  private val SqlArticleScore: String = """CAST(len(list_filter(string_split(trim(text), ' '),
+                   t -> t = 'the' OR t = 'a')) AS BIGINT) * 1000
+                   // GREATEST(CAST(len(string_split(trim(text), ' '))
+                     AS BIGINT), 1)"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -165,15 +245,8 @@ object CorpusStats {
               .as("novelty_ppm"))
           .orderBy(col("source"))
       },
-      oracle = Some("""
-        WITH sh0 AS (
-          SELECT source,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split(trim(text), ' ')) - 1, 1)),
-                   i -> string_split(trim(text), ' ')[i] || ' ' ||
-                        string_split(trim(text), ' ')[i+1] || ' ' ||
-                        string_split(trim(text), ' ')[i+2])) AS gs
-          FROM documents),
+      oracle = Some(s"""
+        $SourceShinglesCte,
         sh AS (
           -- grouping by the shingle STRING where Spark groups by its
           -- xxhash64: identical partitions (counts are hash-invariant),
@@ -344,15 +417,8 @@ object CorpusStats {
               .as("jaccard_ppm"))
           .orderBy(col("src_a"), col("src_b"))
       },
-      oracle = Some("""
-        WITH sh0 AS (
-          SELECT source,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split(trim(text), ' ')) - 1, 1)),
-                   i -> string_split(trim(text), ' ')[i] || ' ' ||
-                        string_split(trim(text), ' ')[i+1] || ' ' ||
-                        string_split(trim(text), ' ')[i+2])) AS gs
-          FROM documents),
+      oracle = Some(s"""
+        $SourceShinglesCte,
         sh AS (
           SELECT DISTINCT source, g FROM (
             SELECT source, UNNEST(gs) AS g FROM sh0)),
@@ -381,13 +447,8 @@ object CorpusStats {
         rankSumAuc(s)
           .select(col("n_pos"), col("n_neg"), col("u2"), col("auc_ppm"))
       },
-      oracle = Some("""
-        WITH s AS (
-          SELECT CAST(list_sum(list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                     * 10000) AS BIGINT))) AS BIGINT) AS score,
-                 CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
-          FROM embeddings),
+      oracle = Some(s"""
+        ${sqlScored("")},
         g AS (
           SELECT score, CAST(SUM(pos) AS BIGINT) AS np,
                  CAST(COUNT(*) - SUM(pos) AS BIGINT) AS nn
@@ -445,14 +506,8 @@ object CorpusStats {
               .as("cum_lift_ppm"))
           .orderBy(col("decile"))
       },
-      oracle = Some("""
-        WITH s AS (
-          SELECT vec_id,
-                 CAST(list_sum(list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                     * 10000) AS BIGINT))) AS BIGINT) AS score,
-                 CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
-          FROM embeddings),
+      oracle = Some(s"""
+        ${sqlScored("vec_id, ")},
         r AS (SELECT pos,
                      ROW_NUMBER() OVER (ORDER BY score DESC, vec_id) AS rn
               FROM s),
@@ -614,11 +669,9 @@ object CorpusStats {
           .select(col("cls"), col("n_pos"), col("n_neg"), col("auc_ppm"))
           .orderBy(col("cls"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH base AS (
-          SELECT CAST(list_sum(list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                     * 10000) AS BIGINT))) AS BIGINT) AS score,
+          SELECT $SqlL2QuantScore AS score,
                  label
           FROM embeddings),
         classes AS (SELECT DISTINCT label AS cls FROM base),
@@ -1133,15 +1186,8 @@ object CorpusStats {
             expr("(cum_covered * 1000000) div u").as("covered_ppm"))
           .orderBy(col("round"))
       },
-      oracle = Some("""
-        WITH sh0 AS (
-          SELECT source,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split(trim(text), ' ')) - 1, 1)),
-                   i -> string_split(trim(text), ' ')[i] || ' ' ||
-                        string_split(trim(text), ' ')[i+1] || ' ' ||
-                        string_split(trim(text), ' ')[i+2])) AS gs
-          FROM documents),
+      oracle = Some(s"""
+        $SourceShinglesCte,
         sh AS (SELECT DISTINCT source, UNNEST(gs) AS g
                FROM sh0 WHERE len(gs) > 0),
         univ AS (SELECT CAST(COUNT(DISTINCT g) AS BIGINT) AS u FROM sh),
@@ -1205,24 +1251,7 @@ object CorpusStats {
     // the exact count sits beside it as the gate's ground truth.
     "q221_portable_hll" -> QueryDef(
       build = (spark, dir) => {
-        import graft.functions.TextFunctions.shingles
-        // trigram shingles, not unigrams: the synthetic vocab is ~31
-        // tokens/source (degenerate for a sketch); shingles give the
-        // thousands-per-source cardinality that exercises the raw
-        // harmonic-mean branch with realistic register saturation
-        val tok = Tables.spread(Tables.documents(spark, dir))
-          .select(col("source"),
-            explode(shingles(toks(col("text")), 3)).as("t"))
-          .distinct()
-        val regs = tok
-          .select(col("source"),
-            conv(substring(md5(col("t")), 1, 10), 16, 10).cast("long")
-              .as("h"))
-          .select(col("source"), expr("h div 4294967296").as("reg"),
-            expr("h % 4294967296").as("rest"))
-          .withColumn("rho", when(col("rest") === 0, lit(33))
-            .otherwise(lit(33) - length(bin(col("rest")))))
-          .groupBy(col("source"), col("reg")).agg(max(col("rho")).as("m"))
+        val (tok, regs) = hllRegisters(spark, dir)
         val hll = regs.groupBy(col("source"))
           .agg(count(lit(1)).as("present"),
             sum(pow(lit(2.0), -col("m"))).as("s_present"))
@@ -1240,15 +1269,8 @@ object CorpusStats {
             expr("((n_hll - n_exact) * 1000000) div n_exact").as("err_ppm"))
           .orderBy(col("source"))
       },
-      oracle = Some("""
-        WITH sh0 AS (
-          SELECT source,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split(trim(text), ' ')) - 1, 1)),
-                   i -> string_split(trim(text), ' ')[i] || ' ' ||
-                        string_split(trim(text), ' ')[i+1] || ' ' ||
-                        string_split(trim(text), ' ')[i+2])) AS gs
-          FROM documents),
+      oracle = Some(s"""
+        $SourceShinglesCte,
         tok AS (SELECT DISTINCT source, UNNEST(gs) AS t
                 FROM sh0 WHERE len(gs) > 0),
         h AS (SELECT source,
@@ -1330,13 +1352,8 @@ object CorpusStats {
             expr("(p * 1000000) div n").as("raw_ppm"), col("fitted_ppm"))
           .orderBy(col("bin"))
       },
-      oracle = Some("""
-        WITH s AS (
-          SELECT CAST(list_sum(list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                     * 10000) AS BIGINT))) AS BIGINT) AS score,
-                 CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
-          FROM embeddings),
+      oracle = Some(s"""
+        ${sqlScored("")},
         ext AS (SELECT MIN(score) AS mn, MAX(score) AS mx FROM s),
         b AS (SELECT ((score - mn) * 20) // (mx - mn + 1) + 1 AS bin,
                      CAST(COUNT(*) AS BIGINT) AS n,
@@ -1396,14 +1413,8 @@ object CorpusStats {
             expr("tsum div p").as("ap_ppm"),
             expr("(p * 1000000) div n").as("random_ppm"))
       },
-      oracle = Some("""
-        WITH s AS (
-          SELECT vec_id,
-                 CAST(list_sum(list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                     * 10000) AS BIGINT))) AS BIGINT) AS score,
-                 CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
-          FROM embeddings),
+      oracle = Some(s"""
+        ${sqlScored("vec_id, ")},
         r AS (SELECT pos,
                      ROW_NUMBER() OVER (ORDER BY score DESC, vec_id) AS k,
                      CAST(SUM(pos) OVER (ORDER BY score DESC, vec_id)
@@ -1453,14 +1464,8 @@ object CorpusStats {
             (col("p") - col("c")).as("fn"),
             expr("(2 * c * 1000000) div (p + k)").as("f1_ppm"))
       },
-      oracle = Some("""
-        WITH s AS (
-          SELECT vec_id,
-                 CAST(list_sum(list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                     * 10000) AS BIGINT))) AS BIGINT) AS score,
-                 CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
-          FROM embeddings),
+      oracle = Some(s"""
+        ${sqlScored("vec_id, ")},
         r AS (SELECT score, pos,
                      ROW_NUMBER() OVER (ORDER BY score DESC, vec_id) AS k,
                      CAST(SUM(pos) OVER (ORDER BY score DESC, vec_id)
@@ -1837,21 +1842,8 @@ object CorpusStats {
     // and DROP the exact side — that is the point of the certificate.
     "q263_hll_overlap_estimate" -> QueryDef(
       build = (spark, dir) => {
-        import graft.functions.TextFunctions.shingles
-        val tok = Tables.spread(Tables.documents(spark, dir))
-          .select(col("source"),
-            explode(shingles(toks(col("text")), 3)).as("t"))
-          .distinct()
-        val regs = tok
-          .select(col("source"),
-            conv(substring(md5(col("t")), 1, 10), 16, 10).cast("long")
-              .as("h"))
-          .select(col("source"), expr("h div 4294967296").as("reg"),
-            expr("h % 4294967296").as("rest"))
-          .withColumn("rho", when(col("rest") === 0, lit(33))
-            .otherwise(lit(33) - length(bin(col("rest")))))
-          .groupBy(col("source"), col("reg")).agg(max(col("rho")).as("m"))
-          .localCheckpoint(false)
+        val (tok, hllRegs) = hllRegisters(spark, dir)
+        val regs = hllRegs.localCheckpoint(false)
         // q221's corrected estimator over any register grouping
         def est(df: DataFrame, keys: Seq[String], out: String): DataFrame =
           df.groupBy(keys.map(col): _*)
@@ -1905,15 +1897,8 @@ object CorpusStats {
               " ELSE -((-d) * 1000000 div exact_union) END").as("err_ppm"))
           .orderBy(col("source_a"), col("source_b"))
       },
-      oracle = Some("""
-        WITH sh0 AS (
-          SELECT source,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split(trim(text), ' ')) - 1, 1)),
-                   i -> string_split(trim(text), ' ')[i] || ' ' ||
-                        string_split(trim(text), ' ')[i+1] || ' ' ||
-                        string_split(trim(text), ' ')[i+2])) AS gs
-          FROM documents),
+      oracle = Some(s"""
+        $SourceShinglesCte,
         tok AS (SELECT DISTINCT source, UNNEST(gs) AS t
                 FROM sh0 WHERE len(gs) > 0),
         h AS (SELECT source, ('0x' || substr(md5(t), 1, 10))::BIGINT AS h
@@ -1925,16 +1910,7 @@ object CorpusStats {
         m AS MATERIALIZED (
           SELECT source, reg, MAX(rho) AS mx FROM r2 GROUP BY 1, 2),
         ga AS (SELECT source,
-                      CASE WHEN 47072.71267120224 /
-                             (SUM(power(2.0, -mx))
-                               + CAST(256 - COUNT(*) AS DOUBLE)) <= 640.0
-                             AND 256 - COUNT(*) > 0
-                           THEN CAST(ROUND(256.0 * ln(256.0 /
-                             CAST(256 - COUNT(*) AS DOUBLE))) AS BIGINT)
-                           ELSE CAST(ROUND(47072.71267120224 /
-                             (SUM(power(2.0, -mx))
-                               + CAST(256 - COUNT(*) AS DOUBLE))) AS BIGINT)
-                      END AS n_hll
+                      $SqlHllEstimate AS n_hll
                FROM m GROUP BY source),
         pairs AS (SELECT x.source AS sa, y.source AS sb
                   FROM (SELECT DISTINCT source FROM m) x
@@ -1945,16 +1921,7 @@ object CorpusStats {
                  ON m.source = p.sa OR m.source = p.sb
                GROUP BY 1, 2, 3),
         ug AS (SELECT sa, sb,
-                      CASE WHEN 47072.71267120224 /
-                             (SUM(power(2.0, -mx))
-                               + CAST(256 - COUNT(*) AS DOUBLE)) <= 640.0
-                             AND 256 - COUNT(*) > 0
-                           THEN CAST(ROUND(256.0 * ln(256.0 /
-                             CAST(256 - COUNT(*) AS DOUBLE))) AS BIGINT)
-                           ELSE CAST(ROUND(47072.71267120224 /
-                             (SUM(power(2.0, -mx))
-                               + CAST(256 - COUNT(*) AS DOUBLE))) AS BIGINT)
-                      END AS est_union
+                      $SqlHllEstimate AS est_union
                FROM um GROUP BY 1, 2),
         exn AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_exact
                 FROM tok GROUP BY 1),
@@ -2273,7 +2240,7 @@ object CorpusStats {
               .otherwise("diverse").as("verdict"))
           .orderBy(col("rk"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH m AS (SELECT source, CAST(SUM(n_chars) AS BIGINT) AS mass
                    FROM documents GROUP BY 1),
         tot AS (SELECT CAST(SUM(mass) AS BIGINT) AS t_all,
@@ -2287,13 +2254,7 @@ object CorpusStats {
                  * mass) AS HUGEINT) AS gnum,
                       MAX(tot.n_src) AS n_src, MAX(tot.t_all) AS t_all
                FROM r CROSS JOIN tot),
-        gi AS (SELECT CAST(CASE WHEN gnum >= 0
-                 THEN gnum * 1000000
-                   // (CAST(n_src AS HUGEINT) * t_all)
-                 ELSE -((-gnum) * 1000000
-                   // (CAST(n_src AS HUGEINT) * t_all)) END AS BIGINT)
-                 AS gini_ppm
-               FROM gn)
+        $GiniCte
         SELECT r.rk, r.source, r.mass,
                CAST(CAST(r.mass AS HUGEINT) * 1000000 // tot.t_all
                  AS BIGINT) AS share_ppm,
@@ -2375,10 +2336,7 @@ object CorpusStats {
       oracle = Some(s"""
         WITH d AS MATERIALIZED (
           SELECT doc_id,
-                 CAST(len(list_filter(string_split(trim(text), ' '),
-                   t -> t = 'the' OR t = 'a')) AS BIGINT) * 1000
-                   // GREATEST(CAST(len(string_split(trim(text), ' '))
-                     AS BIGINT), 1) AS score
+                 $SqlArticleScore AS score
           FROM documents),
         pt AS (SELECT CAST(SUM(score) AS BIGINT) // COUNT(*)
                  AS point_milli FROM d),
@@ -2498,16 +2456,13 @@ object CorpusStats {
             col("gini_ppm"), col("coverage_ppm"))
           .orderBy(col("source"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH d AS MATERIALIZED (
           SELECT doc_id, source, lang, md5(text) AS h,
                  CAST(len(string_split(trim(text), ' ')) AS BIGINT)
                    AS n_tokens,
                  string_split(trim(text), ' ') AS toks,
-                 CAST(len(list_filter(string_split(trim(text), ' '),
-                   t -> t = 'the' OR t = 'a')) AS BIGINT) * 1000
-                   // GREATEST(CAST(len(string_split(trim(text), ' '))
-                     AS BIGINT), 1) AS score
+                 $SqlArticleScore AS score
           FROM documents),
         base AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
                         CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
@@ -2534,13 +2489,7 @@ object CorpusStats {
                  * n_tokens) AS HUGEINT) AS gnum,
                       MAX(tot.n_src) AS n_src, MAX(tot.t_all) AS t_all
                FROM gr CROSS JOIN tot),
-        gi AS (SELECT CAST(CASE WHEN gnum >= 0
-                 THEN gnum * 1000000
-                   // (CAST(n_src AS HUGEINT) * t_all)
-                 ELSE -((-gnum) * 1000000
-                   // (CAST(n_src AS HUGEINT) * t_all)) END AS BIGINT)
-                 AS gini_ppm
-               FROM gn),
+        $GiniCte,
         wc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
                FROM (SELECT UNNEST(toks) AS w FROM d)
                WHERE len(w) > 0 GROUP BY 1),

@@ -875,7 +875,7 @@ object Curation {
         WITH f AS (SELECT source, raw_len, defl_len,
                           defl_len * 1000000 // GREATEST(raw_len, 1)
                             AS ratio_ppm
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q277_input/*.parquet'))
+                   FROM ${VerifyInputs.staged("_q277_input")})
         SELECT source, COUNT(*) AS n_docs,
                CAST(SUM(raw_len) AS BIGINT) AS raw_bytes,
                CAST(SUM(defl_len) AS BIGINT) AS defl_bytes,

@@ -3,7 +3,7 @@ package graft.queries
 import graft.core.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.{MinHashLSH, SimHash}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -92,6 +92,21 @@ object Dedup {
         col("n_kept"), col("tokens_kept"), col("kept_frac"))
       .orderBy(col("doc_id"))
   }
+
+  /** DuckDB mirror of [[chunkDedupStats]] (10-token chunks) up to the
+    * first-wins rank: `n` … `r` over a `t` (doc_id, toks) CTE. */
+  private val ChunkRankCtes: String = """n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n_tokens
+              FROM t),
+        ci AS (SELECT doc_id, n_tokens, toks,
+                      unnest(range(0, (len(toks) - 1) // 10 + 1)) AS i
+               FROM n),
+        c AS (SELECT doc_id, n_tokens, CAST(i AS BIGINT) AS chunk_idx,
+                     array_to_string(toks[(i*10+1):(i*10+10)], ' ') AS chunk
+              FROM ci),
+        r AS (SELECT doc_id, n_tokens, chunk,
+                     ROW_NUMBER() OVER (PARTITION BY md5(chunk)
+                       ORDER BY doc_id, chunk_idx) AS rn
+              FROM c)"""
 
   /** SemDeDup-style semantic dedup over an embedding column: coarse
     * k-means-like cells (deterministic centroids = the k lowest-id
@@ -209,6 +224,49 @@ object Dedup {
       .orderBy(col("cid"))
   }
 
+  /** q46's exact pair set at its 0.4 threshold; q191 equals it by law. */
+  private val NearDupOracle: String = Det.sqlJaccardPairs("0.4", " MATERIALIZED")
+
+  /** The cell centroids of [[semanticAssign]] at k = 16 over `e` (vec_id,
+    * emb) and every vector's cosine to each: `cents` and `sims` (also the
+    * cells of the q54 IVF index). */
+  private[queries] val CellSimsCtes: String = """cents AS (SELECT vec_id AS cid, emb AS cemb
+                  FROM e ORDER BY vec_id LIMIT 16),
+        sims AS (SELECT e.vec_id, cid,
+                        list_cosine_similarity(e.emb, cemb) AS sim
+                 FROM e CROSS JOIN cents)"""
+
+  /** DuckDB mirror of [[semanticAssign]] at k = 16 over `e` (vec_id, emb):
+    * [[CellSimsCtes]] and `assigned` (vec_id, cid). */
+  private val SemAssignCtes: String = s"""$CellSimsCtes,
+        assigned AS (SELECT vec_id, cid FROM (
+                       SELECT vec_id, cid,
+                              ROW_NUMBER() OVER (PARTITION BY vec_id
+                                ORDER BY sim DESC, cid) AS cr
+                       FROM sims) WHERE cr = 1)"""
+
+  /** DuckDB mirror of [[semanticPruned]]'s join at tau = 0.38: same-cell
+    * pairs `a` < `b` of `assigned` within cosine range, over `e` (vec_id, emb). */
+  private val SemPruneJoin: String = """FROM assigned a JOIN assigned b
+                     ON a.cid = b.cid AND a.vec_id < b.vec_id
+                   JOIN e ea ON ea.vec_id = a.vec_id
+                   JOIN e eb ON eb.vec_id = b.vec_id
+                   WHERE list_cosine_similarity(ea.emb, eb.emb) >= 0.38"""
+
+  /** DuckDB mirror of [[semanticStats]] at tau = 0.38 over an `assigned`
+    * (vec_id, cid) CTE: the oracle tail of q90 and q93. */
+  private val SemStatsTail: String = s"""pruned AS (SELECT DISTINCT b.cid, b.vec_id
+                   $SemPruneJoin),
+        s AS (SELECT cid, COUNT(*) AS n_vecs FROM assigned GROUP BY cid),
+        p AS (SELECT cid, COUNT(*) AS n_pruned, MIN(vec_id) AS min_pruned,
+                     MAX(vec_id) AS max_pruned
+              FROM pruned GROUP BY cid)
+        SELECT s.cid, s.n_vecs,
+               COALESCE(p.n_pruned, CAST(0 AS BIGINT)) AS n_pruned,
+               s.n_vecs - COALESCE(p.n_pruned, CAST(0 AS BIGINT)) AS n_kept,
+               p.min_pruned, p.max_pruned
+        FROM s LEFT JOIN p USING (cid) ORDER BY s.cid"""
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- q46: MinHash + banded LSH near-dup pairs (the 100 TB dedup) ----
@@ -217,28 +275,7 @@ object Dedup {
         MinHashLSH.nearDupPairs(
           Tables.documents(spark, dir), "doc_id", "text",
           shingleN = 3, numHashes = 64, bands = 32, threshold = 0.4),
-      oracle = Some("""
-        WITH sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
-          FROM documents),
-        ex AS MATERIALIZED (
-          SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
-          FROM sh WHERE len(shingles) > 0),
-        pairs AS MATERIALIZED (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS n_common
-          FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4)
-        SELECT doc_a, doc_b, n_common,
-               ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) AS jaccard
-        FROM pairs
-        WHERE ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) >= 0.4
-        ORDER BY doc_a, doc_b"""),
+      oracle = Some(NearDupOracle),
       headline = true),
 
     // ---- q191: incremental LSH index maintenance ≡ one-shot batch ----
@@ -265,28 +302,7 @@ object Dedup {
         MinHashLSH.verifyCandidates(cands,
           MinHashLSH.shingled(docs, "doc_id", "text"), threshold = 0.4)
       },
-      oracle = Some("""
-        WITH sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
-          FROM documents),
-        ex AS MATERIALIZED (
-          SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
-          FROM sh WHERE len(shingles) > 0),
-        pairs AS MATERIALIZED (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS n_common
-          FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4)
-        SELECT doc_a, doc_b, n_common,
-               ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) AS jaccard
-        FROM pairs
-        WHERE ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) >= 0.4
-        ORDER BY doc_a, doc_b""")),
+      oracle = Some(NearDupOracle)),
 
     // ---- q56: near-dup pairs → connected-component clusters ----
     // Distributed min-label propagation over the q46 pair graph; the
@@ -300,14 +316,10 @@ object Dedup {
           shingleN = 3, numHashes = 64, bands = 32, threshold = 0.4)
         MinHashLSH.dupClusters(pairs)
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH RECURSIVE sh AS MATERIALIZED (
           SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
+                 ${Det.sqlShingles} AS shingles
           FROM documents),
         ex AS MATERIALIZED (
           SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
@@ -393,7 +405,7 @@ object Dedup {
       // whose two hash evaluations must agree for the gate to pass.
       oracle = Some(s"""
         WITH b AS (SELECT doc_id, lang, bucket
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q57_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q57_input")}),
         thr AS (SELECT * FROM (VALUES ('en', 500000), ('de', 250000),
                                       ('fr', 250000), ('es', 250000),
                                       ('zh', 100000)) t(lang, threshold)),
@@ -440,7 +452,7 @@ object Dedup {
           Tables.documents(spark, dir), "doc_id", "text", maxHamming = 3),
       oracle = Some(s"""
         WITH fp AS (SELECT doc_id, simhash
-                    FROM read_parquet('${Gps.VerifyOutToken}/_q47_input/*.parquet')),
+                    FROM ${VerifyInputs.staged("_q47_input")}),
         nn AS (SELECT a.doc_id AS id_a,
                       CAST(MIN(bit_count(xor(a.simhash, b.simhash))) AS INTEGER) AS nn_hamming
                FROM fp a JOIN fp b ON a.doc_id <> b.doc_id
@@ -458,21 +470,10 @@ object Dedup {
     "q89_chunk_dedup" -> QueryDef(
       build = (spark, dir) =>
         chunkDedupStats(Tables.documents(spark, dir), "doc_id", "text", 10),
-      oracle = Some("""
+      oracle = Some(s"""
         WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
                    FROM documents),
-        n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n_tokens
-              FROM t),
-        ci AS (SELECT doc_id, n_tokens, toks,
-                      unnest(range(0, (len(toks) - 1) // 10 + 1)) AS i
-               FROM n),
-        c AS (SELECT doc_id, n_tokens, CAST(i AS BIGINT) AS chunk_idx,
-                     array_to_string(toks[(i*10+1):(i*10+10)], ' ') AS chunk
-              FROM ci),
-        r AS (SELECT doc_id, n_tokens, chunk,
-                     ROW_NUMBER() OVER (PARTITION BY md5(chunk)
-                       ORDER BY doc_id, chunk_idx) AS rn
-              FROM c)
+        $ChunkRankCtes
         SELECT doc_id, n_tokens, COUNT(*) AS n_chunks,
                CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_kept,
@@ -497,34 +498,11 @@ object Dedup {
           Tables.embeddings(spark, dir)
             .select(col("vec_id"), vec64(col("embedding")).as("e")),
           k = 16, tau = 0.38),
-      oracle = Some("""
+      oracle = Some(s"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                    FROM embeddings),
-        cents AS (SELECT vec_id AS cid, emb AS cemb
-                  FROM e ORDER BY vec_id LIMIT 16),
-        sims AS (SELECT e.vec_id, cid,
-                        list_cosine_similarity(e.emb, cemb) AS sim
-                 FROM e CROSS JOIN cents),
-        assigned AS (SELECT vec_id, cid FROM (
-                       SELECT vec_id, cid,
-                              ROW_NUMBER() OVER (PARTITION BY vec_id
-                                ORDER BY sim DESC, cid) AS cr
-                       FROM sims) WHERE cr = 1),
-        pruned AS (SELECT DISTINCT b.cid, b.vec_id
-                   FROM assigned a JOIN assigned b
-                     ON a.cid = b.cid AND a.vec_id < b.vec_id
-                   JOIN e ea ON ea.vec_id = a.vec_id
-                   JOIN e eb ON eb.vec_id = b.vec_id
-                   WHERE list_cosine_similarity(ea.emb, eb.emb) >= 0.38),
-        s AS (SELECT cid, COUNT(*) AS n_vecs FROM assigned GROUP BY cid),
-        p AS (SELECT cid, COUNT(*) AS n_pruned, MIN(vec_id) AS min_pruned,
-                     MAX(vec_id) AS max_pruned
-              FROM pruned GROUP BY cid)
-        SELECT s.cid, s.n_vecs,
-               COALESCE(p.n_pruned, CAST(0 AS BIGINT)) AS n_pruned,
-               s.n_vecs - COALESCE(p.n_pruned, CAST(0 AS BIGINT)) AS n_kept,
-               p.min_pruned, p.max_pruned
-        FROM s LEFT JOIN p USING (cid) ORDER BY s.cid""")),
+        $SemAssignCtes,
+        $SemStatsTail""")),
 
     // ---- q91: the dedup funnel capstone ----
     // The three dedup tiers chained the way a curation run stacks them,
@@ -563,25 +541,14 @@ object Dedup {
           .unionAll(stage("3_semantic", s3))
           .orderBy(col("stage"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH s1 AS (SELECT doc_id, text FROM (
                SELECT doc_id, text,
                       ROW_NUMBER() OVER (PARTITION BY md5(text)
                         ORDER BY doc_id) AS rn
                FROM documents) WHERE rn = 1),
         t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM s1),
-        n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n_tokens
-              FROM t),
-        ci AS (SELECT doc_id, n_tokens, toks,
-                      unnest(range(0, (len(toks) - 1) // 10 + 1)) AS i
-               FROM n),
-        c AS (SELECT doc_id, n_tokens, CAST(i AS BIGINT) AS chunk_idx,
-                     array_to_string(toks[(i*10+1):(i*10+10)], ' ') AS chunk
-              FROM ci),
-        r AS (SELECT doc_id, n_tokens, chunk,
-                     ROW_NUMBER() OVER (PARTITION BY md5(chunk)
-                       ORDER BY doc_id, chunk_idx) AS rn
-              FROM c),
+        $ChunkRankCtes,
         cs AS (SELECT doc_id,
                       ROUND(CAST(SUM(CASE WHEN rn = 1
                              THEN len(string_split(chunk, ' ')) ELSE 0 END)
@@ -591,22 +558,9 @@ object Dedup {
                WHERE kept_frac >= 0.5),
         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
               FROM embeddings JOIN s2 ON embeddings.vec_id = s2.doc_id),
-        cents AS (SELECT vec_id AS cid, emb AS cemb
-                  FROM e ORDER BY vec_id LIMIT 16),
-        sims AS (SELECT e.vec_id, cid,
-                        list_cosine_similarity(e.emb, cemb) AS sim
-                 FROM e CROSS JOIN cents),
-        assigned AS (SELECT vec_id, cid FROM (
-                       SELECT vec_id, cid,
-                              ROW_NUMBER() OVER (PARTITION BY vec_id
-                                ORDER BY sim DESC, cid) AS cr
-                       FROM sims) WHERE cr = 1),
+        $SemAssignCtes,
         pruned AS (SELECT DISTINCT b.vec_id
-                   FROM assigned a JOIN assigned b
-                     ON a.cid = b.cid AND a.vec_id < b.vec_id
-                   JOIN e ea ON ea.vec_id = a.vec_id
-                   JOIN e eb ON eb.vec_id = b.vec_id
-                   WHERE list_cosine_similarity(ea.emb, eb.emb) >= 0.38),
+                   $SemPruneJoin),
         s3 AS (SELECT doc_id FROM s2 WHERE NOT EXISTS
                  (SELECT 1 FROM pruned p WHERE p.vec_id = s2.doc_id))
         SELECT stage, n_docs FROM (
@@ -633,7 +587,7 @@ object Dedup {
               .select(col("vec_id"), vec64(col("embedding")).as("e")),
             k = 16, branch = 4),
           tau = 0.38),
-      oracle = Some("""
+      oracle = Some(s"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                    FROM embeddings),
         cents AS (SELECT vec_id AS cid, emb AS cemb
@@ -661,21 +615,7 @@ object Dedup {
                        JOIN cmap m ON m.gid = v.gid
                        JOIN e ev ON ev.vec_id = v.vec_id
                        JOIN cents c ON c.cid = m.cid) WHERE rn = 1),
-        pruned AS (SELECT DISTINCT b.cid, b.vec_id
-                   FROM assigned a JOIN assigned b
-                     ON a.cid = b.cid AND a.vec_id < b.vec_id
-                   JOIN e ea ON ea.vec_id = a.vec_id
-                   JOIN e eb ON eb.vec_id = b.vec_id
-                   WHERE list_cosine_similarity(ea.emb, eb.emb) >= 0.38),
-        s AS (SELECT cid, COUNT(*) AS n_vecs FROM assigned GROUP BY cid),
-        p AS (SELECT cid, COUNT(*) AS n_pruned, MIN(vec_id) AS min_pruned,
-                     MAX(vec_id) AS max_pruned
-              FROM pruned GROUP BY cid)
-        SELECT s.cid, s.n_vecs,
-               COALESCE(p.n_pruned, CAST(0 AS BIGINT)) AS n_pruned,
-               s.n_vecs - COALESCE(p.n_pruned, CAST(0 AS BIGINT)) AS n_kept,
-               p.min_pruned, p.max_pruned
-        FROM s LEFT JOIN p USING (cid) ORDER BY s.cid""")),
+        $SemStatsTail""")),
 
     // ---- q102: fuzzy decontamination (cross-corpus near-dup join) ----
     // q71 catches VERBATIM eval leakage by exact long-n-gram overlap;
@@ -706,23 +646,15 @@ object Dedup {
             col("right_id").as("train_id"), col("n_common"), col("jaccard"))
           .orderBy(col("eval_id"), col("train_id"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH ev AS (SELECT doc_id AS eval_id,
                            regexp_replace(trim(text), '^[^ ]+ ', '') AS text
                     FROM documents WHERE doc_id < 10),
         shE AS (SELECT eval_id,
-                       list_distinct(list_transform(
-                         range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                         i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                              string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                              string_split_regex(trim(text), '\s+')[i+2])) AS shingles
+                       ${Det.sqlShingles} AS shingles
                 FROM ev),
         shT AS (SELECT doc_id AS train_id,
-                       list_distinct(list_transform(
-                         range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                         i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                              string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                              string_split_regex(trim(text), '\s+')[i+2])) AS shingles
+                       ${Det.sqlShingles} AS shingles
                 FROM documents),
         exE AS (SELECT eval_id, len(shingles) AS n_e, UNNEST(shingles) AS shingle
                 FROM shE WHERE len(shingles) > 0),
@@ -767,28 +699,7 @@ object Dedup {
             threshold = 0.2, prefixThreshold = 0.19)
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      oracle = Some("""
-        WITH sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
-          FROM documents),
-        ex AS MATERIALIZED (
-          SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
-          FROM sh WHERE len(shingles) > 0),
-        pairs AS MATERIALIZED (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS n_common
-          FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4)
-        SELECT doc_a, doc_b, n_common,
-               ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) AS jaccard
-        FROM pairs
-        WHERE ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) >= 0.2
-        ORDER BY doc_a, doc_b""")),
+      oracle = Some(Det.sqlJaccardPairs("0.2", " MATERIALIZED"))),
 
     // ---- q117: containment join — the asymmetric subset-duplicate
     // detector ----
@@ -819,18 +730,7 @@ object Dedup {
             threshold = 0.5, prefixThreshold = 0.49)
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      oracle = Some("""
-        WITH sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
-          FROM documents),
-        ex AS MATERIALIZED (
-          SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
-          FROM sh WHERE len(shingles) > 0),
+      oracle = Some(s"""${Det.sqlShingleRows(" MATERIALIZED")},
         pairs AS MATERIALIZED (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                  a.n_sh AS n_a, COUNT(*) AS n_common
@@ -937,23 +837,8 @@ object Dedup {
         Winnowing.sharedPairs(fps, minShared = 3, maxDocsPerFp = 50)
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      oracle = Some("""
-        WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
-                   FROM documents),
-        g AS (SELECT doc_id, i - 1 AS gpos,
-                     array_to_string(toks[i:i+2], ' ') AS gram,
-                     len(toks) - 2 AS gcount
-              FROM t, LATERAL (SELECT unnest(generate_series(1,
-                     len(toks) - 2)) AS i) u
-              WHERE len(toks) >= 3),
-        v AS (SELECT doc_id, gpos, gcount,
-                     ('0x' || substr(md5(gram), 1, 10))::BIGINT * 1048576
-                       + gpos AS v
-              FROM g),
-        s AS (SELECT doc_id, gcount, gpos,
-                     MIN(v) OVER (PARTITION BY doc_id ORDER BY gpos
-                       ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS selv
-              FROM v),
+      oracle = Some(s"""
+        WITH $winnowSelCtes,
         f AS (SELECT DISTINCT doc_id, selv // 1048576 AS fp
               FROM s WHERE gpos <= gcount - 4),
         kept AS (SELECT doc_id, fp FROM (
@@ -1019,7 +904,7 @@ object Dedup {
       oracle = Some(s"""
         WITH s AS (SELECT doc_id, MAX(n_sh) AS n_sh,
                           list(v ORDER BY h) AS sig
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q252_input/*.parquet')
+                   FROM ${VerifyInputs.staged("_q252_input")}
                    GROUP BY doc_id),
         base AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
                  FROM documents WHERE doc_id % 17 = 0),
@@ -1252,7 +1137,7 @@ object Dedup {
                   >= 0.4),
         lcs AS (
           SELECT * FROM
-          read_parquet('${Gps.VerifyOutToken}/_q284_input/*.parquet'))
+          ${VerifyInputs.staged("_q284_input")})
         SELECT c.doc_a, c.doc_b, l.n_a_tok, l.n_b_tok, l.lcs_len,
                l.lcs_len * 1000000 // l.n_b_tok AS rouge_p_ppm,
                l.lcs_len * 1000000 // l.n_a_tok AS rouge_r_ppm,
@@ -1682,23 +1567,7 @@ object Dedup {
               "GREATEST(len_a, len_b) ELSE -1L END").as("edit_sim_ppm"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      oracle = Some("""
-        WITH sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
-          FROM documents),
-        ex AS MATERIALIZED (
-          SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
-          FROM sh WHERE len(shingles) > 0),
-        pairs AS MATERIALIZED (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS n_common
-          FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4),
+      oracle = Some(s"""${Det.sqlShinglePairs(" MATERIALIZED")},
         cand AS (
           SELECT doc_a, doc_b FROM pairs
           WHERE ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) >= 0.4
@@ -1993,13 +1862,8 @@ object Dedup {
           val y = b.as("y")
           x.join(y, keys.map(k => col(s"x.$k") === col(s"y.$k"))
               .reduce(_ && _))
-            .select(col("x.a_key").as("a_key"), col("y.b_key").as("b_key"),
-              when(col("x.tok") === col("y.tok"), 1L).otherwise(0L)
-                .as("g_tok"),
-              when(col("x.seg") === col("y.seg"), 1L).otherwise(0L)
-                .as("g_seg"),
-              when(col("x.band") === col("y.band"), 1L).otherwise(0L)
-                .as("g_band"))
+            .select(col("x.a_key").as("a_key") +: col("y.b_key").as("b_key") +:
+              agreeFlags: _*)
         }
         val keep2 = db.blk2.filter(col("occ") <= BlockCap)
         // Levels 0/1 materialize pairs (≤ cap·rows each, mixed pids).
@@ -2113,17 +1977,12 @@ object Dedup {
         WITH $linkageCtes,
         $dynBlockCtes,
         dmp01 AS MATERIALIZED (
-          SELECT x.a_key, y.b_key,
-                 CASE WHEN x.tok = y.tok THEN 1 ELSE 0 END AS g_tok,
-                 CASE WHEN x.seg = y.seg THEN 1 ELSE 0 END AS g_seg,
-                 CASE WHEN x.band = y.band THEN 1 ELSE 0 END AS g_band
+          ${sqlPairFlags(named = true)}
           FROM a x JOIN keep0 k ON x.nat = k.nat AND x.seg = k.seg
           JOIN b y ON y.nat = x.nat AND y.seg = x.seg
           UNION ALL
-          SELECT x.a_key, y.b_key,
-                 CASE WHEN x.tok = y.tok THEN 1 ELSE 0 END,
-                 CASE WHEN x.seg = y.seg THEN 1 ELSE 0 END,
-                 CASE WHEN x.band = y.band THEN 1 ELSE 0 END
+          ${sqlPairFlags(named = false)}
+
           FROM a1 x JOIN keep1 k ON x.nat = k.nat AND x.seg = k.seg
             AND x.band = k.band
           JOIN b y ON y.nat = x.nat AND y.seg = x.seg
@@ -3311,13 +3170,8 @@ object Dedup {
       .repartition(spread)
       .localCheckpoint(false)
     def proj(df: DataFrame) = df.select(
-      col("x.a_key").as("a_key"), col("y.b_key").as("b_key"),
-      when(col("x.tok") === col("y.tok"), 1L).otherwise(0L)
-        .as("g_tok"),
-      when(col("x.seg") === col("y.seg"), 1L).otherwise(0L)
-        .as("g_seg"),
-      when(col("x.band") === col("y.band"), 1L).otherwise(0L)
-        .as("g_band"))
+      col("x.a_key").as("a_key") +: col("y.b_key").as("b_key") +:
+        agreeFlags: _*)
     val r1 = a.as("x").join(b.as("y"),
       col("x.nat") === col("y.nat") && col("x.band") === col("y.band"))
     val r2 = a.as("x").join(b.as("y"),
@@ -3434,18 +3288,10 @@ object Dedup {
           .as("chrf_ppm"))
   }
 
-  /** Capped dynamic-blocking CTE chain (cap = [[BlockCap]]) over the
-    * linkage registries — shared verbatim by the q338 and q349 oracles
-    * so the certificate card and the scale-safe capstone replay the
-    * SAME splitting. Appends to [[linkageCtes]]' `a`/`b`. */
-  /** The q202/q354 winnowing replay as a CTE chain ending in
-    * `runs(doc_a, doc_b, diag, isl, p0, p1)` — the maximal aligned
-    * shared fingerprint runs, re-derived from raw `documents` entirely
-    * in SQL (k = 3 grams, window w = 4, stop-fp cap 50, island gap 4).
-    * Shared verbatim by the q354 run-census and q358 dedup-rewrite
-    * oracles so both replay the SAME runs (and the most expensive part
-    * of the chain is written once — VERDICT r14 #8's dedup direction). */
-  private def winnowRunCtes: String = """t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
+  /** The winnowing selection of `graft.operators.Winnowing` in SQL (k = 3
+    * grams, window w = 4): `t` … `s`, each gram position with its window's
+    * selected value `selv` (fingerprint · 2^20 + position). */
+  private def winnowSelCtes: String = """t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
                    FROM documents),
         g AS (SELECT doc_id, i - 1 AS gpos,
                      array_to_string(toks[i:i+2], ' ') AS gram,
@@ -3460,7 +3306,16 @@ object Dedup {
         s AS (SELECT doc_id, gcount, gpos,
                      MIN(v) OVER (PARTITION BY doc_id ORDER BY gpos
                        ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS selv
-              FROM v),
+              FROM v)"""
+
+  /** The q202/q354 winnowing replay as a CTE chain ending in
+    * `runs(doc_a, doc_b, diag, isl, p0, p1)` — the maximal aligned
+    * shared fingerprint runs, re-derived from raw `documents` entirely
+    * in SQL (k = 3 grams, window w = 4, stop-fp cap 50, island gap 4).
+    * Shared verbatim by the q354 run-census and q358 dedup-rewrite
+    * oracles so both replay the SAME runs (and the most expensive part
+    * of the chain is written once — VERDICT r14 #8's dedup direction). */
+  private def winnowRunCtes: String = s"""$winnowSelCtes,
         f AS (SELECT DISTINCT doc_id, selv // 1048576 AS fp,
                      selv % 1048576 AS pos
               FROM s WHERE gpos <= gcount - 4),
@@ -3482,6 +3337,24 @@ object Dedup {
                         MIN(pos_a) AS p0, MAX(pos_a) AS p1
                  FROM i1 GROUP BY 1, 2, 3, 4)"""
 
+  /** Per linkage candidate `x`/`y`: whether tok, seg and band agree
+    * (1/0), as g_tok, g_seg, g_band. */
+  private def agreeFlags: Seq[Column] = Seq("tok", "seg", "band").map(f =>
+    when(col(s"x.$f") === col(s"y.$f"), 1L).otherwise(0L).as(s"g_$f"))
+
+  /** DuckDB mirror of the (a_key, b_key) + [[agreeFlags]] projection;
+    * `named` = false for a later branch of a UNION. */
+  private def sqlPairFlags(named: Boolean): String =
+    Seq("tok", "seg", "band").map { f =>
+      s"CASE WHEN x.$f = y.$f THEN 1 ELSE 0 END" +
+        (if (named) s" AS g_$f" else "")
+    }.mkString("SELECT x.a_key, y.b_key,\n                 ",
+      ",\n                 ", "")
+
+  /** Capped dynamic-blocking CTE chain (cap = [[BlockCap]]) over the
+    * linkage registries — shared verbatim by the q338 and q349 oracles
+    * so the certificate card and the scale-safe capstone replay the
+    * SAME splitting. Appends to [[linkageCtes]]' `a`/`b`. */
   private def dynBlockCtes: String = s"""ca0 AS (SELECT nat, seg, COUNT(*) AS cnt_a FROM a GROUP BY 1, 2),
         cb0 AS (SELECT nat, seg, COUNT(*) AS cnt_b FROM b GROUP BY 1, 2),
         blk0 AS (SELECT nat, seg, cnt_a, cnt_b,
@@ -3585,7 +3458,7 @@ object Dedup {
     * pattern grid `dec`) — q302's summary tail and q325's clustering
     * tail both append to it, so neither oracle can drift from the
     * other's registries or scoring. */
-  private def linkageCtes: String = """base AS (
+  private def linkageCtes: String = s"""base AS (
           SELECT c_custkey AS k, CAST(c_nationkey AS BIGINT) AS nat,
                  (CAST(ROUND(c_acctbal * 100) AS BIGINT) + 100000)
                    // 50000 AS band,
@@ -3616,16 +3489,11 @@ object Dedup {
               WHERE ('0x' || substr(md5('q302B#' || CAST(k AS VARCHAR)),
                 1, 12))::BIGINT % 1000000 < 900000),
         cand AS (
-          SELECT x.a_key, y.b_key,
-                 CASE WHEN x.tok = y.tok THEN 1 ELSE 0 END AS g_tok,
-                 CASE WHEN x.seg = y.seg THEN 1 ELSE 0 END AS g_seg,
-                 CASE WHEN x.band = y.band THEN 1 ELSE 0 END AS g_band
+          ${sqlPairFlags(named = true)}
           FROM a x JOIN b y ON x.nat = y.nat AND x.band = y.band
           UNION
-          SELECT x.a_key, y.b_key,
-                 CASE WHEN x.tok = y.tok THEN 1 ELSE 0 END,
-                 CASE WHEN x.seg = y.seg THEN 1 ELSE 0 END,
-                 CASE WHEN x.band = y.band THEN 1 ELSE 0 END
+          ${sqlPairFlags(named = false)}
+
           FROM a x JOIN b y ON x.nat = y.nat AND x.seg = y.seg),
         pat AS (
           SELECT g_tok * 4 + g_seg * 2 + g_band AS pid,

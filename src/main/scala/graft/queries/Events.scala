@@ -21,6 +21,103 @@ import Det._
   */
 object Events {
 
+  /** Per-user session profile (30-min gaps) by gaps-and-islands: q32's
+    * oracle, and q82's, which equals it by law. */
+  private val SessionsOracle: String = """
+        WITH marked AS (
+          SELECT user_id, event_id, ts,
+                 CASE WHEN LAG(ts) OVER w IS NULL
+                        OR date_diff('microsecond', LAG(ts) OVER w, ts) > 1800000000
+                      THEN 1 ELSE 0 END AS new_sess
+          FROM events
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        sess AS (
+          SELECT user_id, event_id, ts,
+                 SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_id
+          FROM marked),
+        per_sess AS (
+          SELECT user_id, sess_id, COUNT(*) AS n_events,
+                 date_diff('microsecond', MIN(ts), MAX(ts)) AS span_us
+          FROM sess GROUP BY user_id, sess_id)
+        SELECT user_id, CAST(MAX(sess_id) AS BIGINT) AS n_sessions,
+               CAST(SUM(n_events) AS BIGINT) AS n_events,
+               MAX(n_events) AS max_session_events,
+               MAX(span_us) AS max_session_span_us
+        FROM per_sess GROUP BY user_id ORDER BY user_id"""
+
+  /** SCD-2 version intervals of users < 20, rebuilt from scratch: q96's
+    * oracle, and q269's, whose incremental merge equals it by law. */
+  private val Scd2Oracle: String = """
+        WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
+                   WHERE user_id < 20),
+        r AS (SELECT *,
+                     ROW_NUMBER() OVER (PARTITION BY user_id
+                       ORDER BY ts, event_id)
+                   - ROW_NUMBER() OVER (PARTITION BY user_id, event_type
+                       ORDER BY ts, event_id) AS grp
+              FROM e),
+        runs AS (SELECT user_id, event_type, grp, MIN(ts) AS valid_from,
+                        MIN(event_id) AS run_id, COUNT(*) AS n_events
+                 FROM r GROUP BY 1, 2, 3)
+        SELECT user_id,
+               ROW_NUMBER() OVER (PARTITION BY user_id
+                 ORDER BY valid_from, run_id) AS version,
+               event_type,
+               strftime(valid_from, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
+               strftime(LEAD(valid_from, 1) OVER (PARTITION BY user_id
+                 ORDER BY valid_from, run_id), '%Y-%m-%d %H:%M:%S.%f')
+                 AS valid_to,
+               n_events
+        FROM runs ORDER BY user_id, version"""
+
+  private val HourUs = 3600L * 1000000L
+
+  /** The first two stages of the q174/q175 funnel: the events as `e`
+    * (user_id, event_type, us) and, per user with a signup, the first
+    * view within 1 h of it as (user_id, s_us, v_us). */
+  private def signupViews(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val e = Tables.events(spark, dir)
+      .select(col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"))
+    val s1 = e.groupBy(col("user_id"))
+      .agg(min(when(col("event_type") === "signup", col("us"))).as("s_us"))
+      .filter(col("s_us").isNotNull)
+    val s2 = e.join(s1, "user_id")
+      .groupBy(col("user_id"), col("s_us"))
+      .agg(min(when(col("event_type") === "view" &&
+        col("us") > col("s_us") && col("us") <= col("s_us") + HourUs,
+        col("us"))).as("v_us"))
+    (e, s2)
+  }
+
+  /** DuckDB mirror of [[signupViews]]: the `e`, `s1` and `s2` CTEs of the
+    * q174/q175 funnel oracles. */
+  private val FunnelCtes: String = """WITH e AS (
+          SELECT user_id, event_type,
+                 epoch_us(CAST(ts AS TIMESTAMP)) AS us
+          FROM events),
+        s1 AS (
+          SELECT user_id,
+                 MIN(CASE WHEN event_type = 'signup' THEN us END) AS s_us
+          FROM e GROUP BY user_id
+          HAVING MIN(CASE WHEN event_type = 'signup' THEN us END) IS NOT NULL),
+        s2 AS (
+          SELECT e.user_id, s_us,
+                 MIN(CASE WHEN event_type = 'view' AND us > s_us
+                      AND us <= s_us + 3600000000 THEN us END) AS v_us
+          FROM e JOIN s1 ON e.user_id = s1.user_id
+          GROUP BY e.user_id, s_us)"""
+
+  /** The `h` CTE of the q229 and q238 oracles: events per (event_type,
+    * epoch hour `hr`). */
+  private val HourlyCountsCte: String = """WITH h AS (SELECT event_type,
+                          epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000
+                            AS hr,
+                          CAST(COUNT(*) AS BIGINT) AS n
+                   FROM events GROUP BY 1, 2)"""
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- q30: JSON property extraction (from_json / get_json_object) ----
@@ -146,28 +243,7 @@ object Events {
             max(col("span_us")).as("max_session_span_us"))
           .orderBy(col("user_id"))
       },
-      oracle = Some("""
-        WITH marked AS (
-          SELECT user_id, event_id, ts,
-                 CASE WHEN LAG(ts) OVER w IS NULL
-                        OR date_diff('microsecond', LAG(ts) OVER w, ts) > 1800000000
-                      THEN 1 ELSE 0 END AS new_sess
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        sess AS (
-          SELECT user_id, event_id, ts,
-                 SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_id
-          FROM marked),
-        per_sess AS (
-          SELECT user_id, sess_id, COUNT(*) AS n_events,
-                 date_diff('microsecond', MIN(ts), MAX(ts)) AS span_us
-          FROM sess GROUP BY user_id, sess_id)
-        SELECT user_id, CAST(MAX(sess_id) AS BIGINT) AS n_sessions,
-               CAST(SUM(n_events) AS BIGINT) AS n_events,
-               MAX(n_events) AS max_session_events,
-               MAX(span_us) AS max_session_span_us
-        FROM per_sess GROUP BY user_id ORDER BY user_id""")),
+      oracle = Some(SessionsOracle)),
 
     // ---- q33: conversion funnel (signup → purchase) ----
     "q33_events_funnel" -> QueryDef(
@@ -269,28 +345,7 @@ object Events {
             max(col("span_us")).as("max_session_span_us"))
           .orderBy(col("user_id"))
       },
-      oracle = Some("""
-        WITH marked AS (
-          SELECT user_id, event_id, ts,
-                 CASE WHEN LAG(ts) OVER w IS NULL
-                        OR date_diff('microsecond', LAG(ts) OVER w, ts) > 1800000000
-                      THEN 1 ELSE 0 END AS new_sess
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        sess AS (
-          SELECT user_id, event_id, ts,
-                 SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_id
-          FROM marked),
-        per_sess AS (
-          SELECT user_id, sess_id, COUNT(*) AS n_events,
-                 date_diff('microsecond', MIN(ts), MAX(ts)) AS span_us
-          FROM sess GROUP BY user_id, sess_id)
-        SELECT user_id, CAST(MAX(sess_id) AS BIGINT) AS n_sessions,
-               CAST(SUM(n_events) AS BIGINT) AS n_events,
-               MAX(n_events) AS max_session_events,
-               MAX(span_us) AS max_session_span_us
-        FROM per_sess GROUP BY user_id ORDER BY user_id""")),
+      oracle = Some(SessionsOracle)),
 
     // ---- q78: event-path bigrams (what users do next) ----
     // Per-user consecutive event-type transitions, counted globally: the
@@ -363,28 +418,7 @@ object Events {
             col("n_events"))
           .orderBy(col("user_id"), col("version"))
       },
-      oracle = Some("""
-        WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
-                   WHERE user_id < 20),
-        r AS (SELECT *,
-                     ROW_NUMBER() OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id)
-                   - ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                       ORDER BY ts, event_id) AS grp
-              FROM e),
-        runs AS (SELECT user_id, event_type, grp, MIN(ts) AS valid_from,
-                        MIN(event_id) AS run_id, COUNT(*) AS n_events
-                 FROM r GROUP BY 1, 2, 3)
-        SELECT user_id,
-               ROW_NUMBER() OVER (PARTITION BY user_id
-                 ORDER BY valid_from, run_id) AS version,
-               event_type,
-               strftime(valid_from, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
-               strftime(LEAD(valid_from, 1) OVER (PARTITION BY user_id
-                 ORDER BY valid_from, run_id), '%Y-%m-%d %H:%M:%S.%f')
-                 AS valid_to,
-               n_events
-        FROM runs ORDER BY user_id, version""")),
+      oracle = Some(Scd2Oracle)),
 
     // ---- q103: time-series gap-fill + forward-fill ----
     // Regularize each user's hourly value series: build the dense hourly
@@ -609,23 +643,12 @@ object Events {
     // each stage's anchor table is |users|-sized.
     "q174_timed_funnel" -> QueryDef(
       build = (spark, dir) => {
-        val hourUs = 3600L * 1000000L
-        val e = Tables.events(spark, dir)
-          .select(col("user_id"), col("event_type"),
-            unix_micros(col("ts")).as("us"))
-        val s1 = e.groupBy(col("user_id"))
-          .agg(min(when(col("event_type") === "signup", col("us"))).as("s_us"))
-          .filter(col("s_us").isNotNull)
-        val s2 = e.join(s1, "user_id")
-          .groupBy(col("user_id"), col("s_us"))
-          .agg(min(when(col("event_type") === "view" &&
-            col("us") > col("s_us") && col("us") <= col("s_us") + hourUs,
-            col("us"))).as("v_us"))
+        val (e, s2) = signupViews(spark, dir)
         val s3 = e.join(s2.filter(col("v_us").isNotNull)
             .select(col("user_id"), col("v_us")), "user_id")
           .groupBy(col("user_id"), col("v_us"))
           .agg(min(when(col("event_type") === "purchase" &&
-            col("us") > col("v_us") && col("us") <= col("v_us") + hourUs,
+            col("us") > col("v_us") && col("us") <= col("v_us") + HourUs,
             col("us"))).as("p_us"))
         val stage2 = s2.agg(
           count(lit(1)).as("n_signup"),
@@ -640,22 +663,8 @@ object Events {
               "n_purchased_1h * 1000000 div n_viewed_1h end").as("buy_rate_ppm"),
             col("view_to_buy_us"))
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT user_id, event_type,
-                 epoch_us(CAST(ts AS TIMESTAMP)) AS us
-          FROM events),
-        s1 AS (
-          SELECT user_id,
-                 MIN(CASE WHEN event_type = 'signup' THEN us END) AS s_us
-          FROM e GROUP BY user_id
-          HAVING MIN(CASE WHEN event_type = 'signup' THEN us END) IS NOT NULL),
-        s2 AS (
-          SELECT e.user_id, s_us,
-                 MIN(CASE WHEN event_type = 'view' AND us > s_us
-                      AND us <= s_us + 3600000000 THEN us END) AS v_us
-          FROM e JOIN s1 ON e.user_id = s1.user_id
-          GROUP BY e.user_id, s_us),
+      oracle = Some(s"""
+        $FunnelCtes,
         s3 AS (
           SELECT e.user_id, v_us,
                  MIN(CASE WHEN event_type = 'purchase' AND us > v_us
@@ -693,23 +702,12 @@ object Events {
     // the ranking window runs there, never over raw events.
     "q175_conversion_lag_quartiles" -> QueryDef(
       build = (spark, dir) => {
-        val hourUs = 3600L * 1000000L
-        val e = Tables.events(spark, dir)
-          .select(col("user_id"), col("event_type"),
-            unix_micros(col("ts")).as("us"))
-        val s1 = e.groupBy(col("user_id"))
-          .agg(min(when(col("event_type") === "signup", col("us"))).as("s_us"))
-          .filter(col("s_us").isNotNull)
-        val s2 = e.join(s1, "user_id")
-          .groupBy(col("user_id"), col("s_us"))
-          .agg(min(when(col("event_type") === "view" &&
-            col("us") > col("s_us") && col("us") <= col("s_us") + hourUs,
-            col("us"))).as("v_us"))
-          .filter(col("v_us").isNotNull)
+        val (e, views) = signupViews(spark, dir)
+        val s2 = views.filter(col("v_us").isNotNull)
         val lags = e.join(s2.select(col("user_id"), col("v_us")), "user_id")
           .groupBy(col("user_id"), col("v_us"))
           .agg(min(when(col("event_type") === "purchase" &&
-            col("us") > col("v_us") && col("us") <= col("v_us") + hourUs,
+            col("us") > col("v_us") && col("us") <= col("v_us") + HourUs,
             col("us"))).as("p_us"))
           .filter(col("p_us").isNotNull)
           .select(col("user_id"), (col("p_us") - col("v_us")).as("lag_us"))
@@ -728,22 +726,8 @@ object Events {
               col("lag_us"))).as("p75_lag_us"),
             max(col("lag_us")).as("max_lag_us"))
       },
-      oracle = Some("""
-        WITH e AS (
-          SELECT user_id, event_type,
-                 epoch_us(CAST(ts AS TIMESTAMP)) AS us
-          FROM events),
-        s1 AS (
-          SELECT user_id,
-                 MIN(CASE WHEN event_type = 'signup' THEN us END) AS s_us
-          FROM e GROUP BY user_id
-          HAVING MIN(CASE WHEN event_type = 'signup' THEN us END) IS NOT NULL),
-        s2 AS (
-          SELECT e.user_id, s_us,
-                 MIN(CASE WHEN event_type = 'view' AND us > s_us
-                      AND us <= s_us + 3600000000 THEN us END) AS v_us
-          FROM e JOIN s1 ON e.user_id = s1.user_id
-          GROUP BY e.user_id, s_us),
+      oracle = Some(s"""
+        $FunnelCtes,
         lags AS (
           SELECT e.user_id, MIN(CASE WHEN event_type = 'purchase'
                    AND us > v_us AND us <= v_us + 3600000000 THEN us END)
@@ -1267,12 +1251,8 @@ object Events {
               .as("mase_ppm"))
           .orderBy(col("event_type"))
       },
-      oracle = Some("""
-        WITH h AS (SELECT event_type,
-                          epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000
-                            AS hr,
-                          CAST(COUNT(*) AS BIGINT) AS n
-                   FROM events GROUP BY 1, 2),
+      oracle = Some(s"""
+        $HourlyCountsCte,
         mx AS (SELECT MAX(hr) AS mh FROM h),
         test AS (SELECT t.event_type, t.n, p.n AS fc
                  FROM h t JOIN h p ON p.event_type = t.event_type
@@ -1342,12 +1322,8 @@ object Events {
             col("m").as("n_pairs"), col("slope_ppm").as("theil_sen_ppm"))
           .orderBy(col("event_type"))
       },
-      oracle = Some("""
-        WITH h AS (SELECT event_type,
-                          epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000
-                            AS hr,
-                          CAST(COUNT(*) AS BIGINT) AS n
-                   FROM events GROUP BY 1, 2),
+      oracle = Some(s"""
+        $HourlyCountsCte,
         s AS (SELECT a.event_type, a.hr AS hi, b.hr AS hj,
                      ((b.n - a.n) * 1000000) // (b.hr - a.hr) AS slope_ppm
               FROM h a JOIN h b ON b.event_type = a.event_type
@@ -1520,30 +1496,9 @@ object Events {
             col("n_events"))
           .orderBy(col("user_id"), col("version"))
       },
-      // the from-scratch rebuild (q96's oracle, verbatim) — equality IS
-      // the incremental-merge law
-      oracle = Some("""
-        WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
-                   WHERE user_id < 20),
-        r AS (SELECT *,
-                     ROW_NUMBER() OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id)
-                   - ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                       ORDER BY ts, event_id) AS grp
-              FROM e),
-        runs AS (SELECT user_id, event_type, grp, MIN(ts) AS valid_from,
-                        MIN(event_id) AS run_id, COUNT(*) AS n_events
-                 FROM r GROUP BY 1, 2, 3)
-        SELECT user_id,
-               ROW_NUMBER() OVER (PARTITION BY user_id
-                 ORDER BY valid_from, run_id) AS version,
-               event_type,
-               strftime(valid_from, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
-               strftime(LEAD(valid_from, 1) OVER (PARTITION BY user_id
-                 ORDER BY valid_from, run_id), '%Y-%m-%d %H:%M:%S.%f')
-                 AS valid_to,
-               n_events
-        FROM runs ORDER BY user_id, version""")),
+      // the from-scratch rebuild (q96's oracle) — equality IS the
+      // incremental-merge law
+      oracle = Some(Scd2Oracle)),
 
     // ---- q305: CUPED variance-reduced experiment readout ----
     // The regression-adjustment every experimentation platform runs

@@ -93,7 +93,7 @@ object Gps {
                CAST(SUM(CASE WHEN fuel_level IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_ev_fixes,
                CAST(SUM(CASE WHEN collision_detected THEN 1 ELSE 0 END) AS BIGINT) AS n_collisions,
                CAST(MAX(CAST(processed_date AS DATE)) AS VARCHAR) AS processed_date
-        FROM read_parquet('$VerifyOutToken/_q70_input/*.parquet')
+        FROM ${VerifyInputs.staged("_q70_input")}
         GROUP BY direction ORDER BY direction"""),
       headline = true)
   )

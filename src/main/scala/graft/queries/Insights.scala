@@ -17,6 +17,40 @@ import Det._
   */
 object Insights {
 
+  /** The ×2-scaled midranks of `docs`' n_chars shared by q327 and q339:
+    * `ranked` (v, t, r2) over the distinct values and `glob` (n, tie_t). */
+  private def midRanks(docs: DataFrame): (DataFrame, DataFrame) = {
+    val vals = docs.groupBy(col("n_chars").as("v"))
+      .agg(count(lit(1)).as("t"))
+    val w = Window.orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val ranked = vals
+      .withColumn("cum", coalesce(sum(col("t")).over(w), lit(0L)))
+      .select(col("v"), col("t"),
+        (lit(2L) * col("cum") + col("t") + 1L).as("r2"))
+      .localCheckpoint(false)
+    val glob = ranked.agg(sum(col("t")).as("n"),
+      sum(expr("t * t * t - t")).as("tie_t"))
+    (ranked, glob)
+  }
+
+  /** DuckDB mirror of [[midRanks]] over `documents`: `d`, `vals`,
+    * `ranked` and `gg` (n, tie_t). */
+  private val MidRankCtes: String = """WITH d AS MATERIALIZED (
+          SELECT doc_id, source, n_chars FROM documents),
+        vals AS MATERIALIZED (
+          SELECT n_chars AS v, CAST(COUNT(*) AS BIGINT) AS t
+          FROM d GROUP BY 1),
+        ranked AS MATERIALIZED (
+          SELECT v, t,
+                 2 * COALESCE(SUM(t) OVER (ORDER BY v
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                 + t + 1 AS r2
+          FROM vals),
+        gg AS (SELECT CAST(SUM(t) AS BIGINT) AS n,
+                       CAST(SUM(t * t * t - t) AS BIGINT) AS tie_t
+                FROM ranked)"""
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- q134: trailing 7-day active users (DAU/WAU/stickiness) ----
@@ -1250,21 +1284,8 @@ object Insights {
       build = (spark, dir) =>
         mannWhitneyReport(Tables.documents(spark, dir)
           .select(col("source"), col("n_chars"))),
-      oracle = Some("""
-        WITH d AS MATERIALIZED (
-          SELECT doc_id, source, n_chars FROM documents),
-        vals AS MATERIALIZED (
-          SELECT n_chars AS v, CAST(COUNT(*) AS BIGINT) AS t
-          FROM d GROUP BY 1),
-        ranked AS MATERIALIZED (
-          SELECT v, t,
-                 2 * COALESCE(SUM(t) OVER (ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 + t + 1 AS r2
-          FROM vals),
-        gg AS (SELECT CAST(SUM(t) AS BIGINT) AS n,
-                       CAST(SUM(t * t * t - t) AS BIGINT) AS tie_t
-                FROM ranked),
+      oracle = Some(s"""
+        $MidRankCtes,
         per AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n1,
                        CAST(SUM(r.r2) AS BIGINT) AS r1_2
                 FROM d JOIN ranked r ON r.v = d.n_chars
@@ -1302,21 +1323,8 @@ object Insights {
       build = (spark, dir) =>
         kruskalWallisReport(Tables.documents(spark, dir)
           .select(col("source"), col("n_chars"))),
-      oracle = Some("""
-        WITH d AS MATERIALIZED (
-          SELECT doc_id, source, n_chars FROM documents),
-        vals AS MATERIALIZED (
-          SELECT n_chars AS v, CAST(COUNT(*) AS BIGINT) AS t
-          FROM d GROUP BY 1),
-        ranked AS MATERIALIZED (
-          SELECT v, t,
-                 2 * COALESCE(SUM(t) OVER (ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 + t + 1 AS r2
-          FROM vals),
-        gg AS (SELECT CAST(SUM(t) AS BIGINT) AS n,
-                      CAST(SUM(t * t * t - t) AS BIGINT) AS tie_t
-               FROM ranked),
+      oracle = Some(s"""
+        $MidRankCtes,
         per AS MATERIALIZED (
           SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_g,
                  CAST(SUM(r.r2) AS BIGINT) AS r2_g
@@ -1443,17 +1451,7 @@ object Insights {
     * Round11PropertySpec can pin U and z² on hand cases with known
     * closed forms (the q289 lesson). */
   private[queries] def mannWhitneyReport(docs: DataFrame): DataFrame = {
-    val vals = docs.groupBy(col("n_chars").as("v"))
-      .agg(count(lit(1)).as("t"))
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = vals
-      .withColumn("cum", coalesce(sum(col("t")).over(w), lit(0L)))
-      .select(col("v"), col("t"),
-        (lit(2L) * col("cum") + col("t") + 1L).as("r2"))
-      .localCheckpoint(false)
-    val glob = ranked.agg(sum(col("t")).as("n"),
-      sum(expr("t * t * t - t")).as("tie_t"))
+    val (ranked, glob) = midRanks(docs)
     val per = docs
       .join(broadcast(ranked.select(col("v").as("n_chars"),
         col("r2"))), Seq("n_chars"))
@@ -1497,17 +1495,7 @@ object Insights {
     * one source-keyed rollup, the rank window on the bounded
     * distinct-value table, 1-row global broadcast. */
   private[queries] def kruskalWallisReport(docs: DataFrame): DataFrame = {
-    val vals = docs.groupBy(col("n_chars").as("v"))
-      .agg(count(lit(1)).as("t"))
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = vals
-      .withColumn("cum", coalesce(sum(col("t")).over(w), lit(0L)))
-      .select(col("v"), col("t"),
-        (lit(2L) * col("cum") + col("t") + 1L).as("r2"))
-      .localCheckpoint(false)
-    val glob = ranked.agg(sum(col("t")).as("n"),
-      sum(expr("t * t * t - t")).as("tie_t"))
+    val (ranked, glob) = midRanks(docs)
     val per = docs
       .join(broadcast(ranked.select(col("v").as("n_chars"),
         col("r2"))), Seq("n_chars"))

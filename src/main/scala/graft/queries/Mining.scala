@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.core.Tables
 import graft.functions.VectorFunctions._
-import graft.operators.ProductQuantizer.sqDist
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.ProductQuantizer.{quant, sqDist}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus mining & selection operators — the layer between raw curation
@@ -20,15 +20,11 @@ import org.apache.spark.sql.functions._
   */
 object Mining {
 
-  /** Component quantization scale for fixed-point k-means. */
-  private val KmScale = 1000000L
-
-  /** floor-quantized integer copy of a double vector: floor(x*1e6).
-    * floor (not round) because IEEE floor is identical in every engine,
-    * while round-half ties differ between HALF_UP and HALF_EVEN
-    * implementations. */
-  private def quant(v: Column): Column =
-    transform(v, x => floor(x * KmScale).cast("long"))
+  /** (vec_id, v): the floor-quantized integer copy of each vector
+    * (`ProductQuantizer.quant`), checkpointed for the Lloyd rounds. */
+  private def quantized(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), quant(col("e")).as("v"))
+      .localCheckpoint(false)
 
   /** One Lloyd assignment pass: each vector to its min-sqDist centroid
     * (ties → lowest cid). Returns (vec_id, cid, dist).
@@ -60,6 +56,70 @@ object Mining {
       .agg(transform(array_sort(collect_list(struct(col("i"), col("comp")))),
         s => s.getField("comp")).as("cv"))
 
+  /** Fixed-point k-means fit of `e` (vec_id, v): init on the k lowest
+    * ids, then `iters` Lloyd rounds. Returns the last (cents, assigned). */
+  private def fit(e: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) = {
+    var cents = e.orderBy(col("vec_id")).limit(k)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    var assigned = assign(e, cents)
+    for (_ <- 2 to iters) {
+      cents = updateCentroids(e, assigned)
+      assigned = assign(e, cents)
+    }
+    (cents, assigned)
+  }
+
+  /** DuckDB mirror of [[quantized]]: the `e` (vec_id, v) CTE. */
+  private val SqlQuantized: String = """
+        WITH e AS (
+          SELECT vec_id,
+                 list_transform(CAST(embedding AS DOUBLE[]),
+                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS v
+          FROM embeddings)"""
+
+  /** DuckDB mirror of [[assign]]'s distances: `x` (the alias of `from`)
+    * against each centroid of `cents`, as (vec_id, cid, d). */
+  private def sqlDist(x: String, from: String, cents: String): String =
+    s"""SELECT $x.vec_id, c.cid,
+                 CAST(list_sum(list_transform(list_zip($x.v, c.cv),
+                   p -> (p[1] - p[2]) * (p[1] - p[2])))
+                   AS BIGINT) AS d
+          FROM $from CROSS JOIN $cents c"""
+
+  /** DuckDB mirror of [[assign]]'s argmin over the distances `d`
+    * (ties → lowest cid), keeping `cols`. */
+  private def sqlArgmin(cols: String, d: String): String =
+    s"""SELECT $cols FROM (
+                 SELECT $cols,
+                        ROW_NUMBER() OVER (PARTITION BY vec_id
+                          ORDER BY d, cid) AS rn
+                 FROM $d) WHERE rn = 1"""
+
+  /** DuckDB mirror of [[fit]] at k = 8, iters = 2 over the source CTE
+    * `src` (vec_id, v), aliased `x` in the distance joins: c0 (init),
+    * d1/a1, comp/c1 (the [[updateCentroids]] step), d2/a2 (with d).
+    * `c1`/`d2` open those two CTEs, so each oracle keeps its own
+    * materialization hints. */
+  private def sqlFit(src: String, x: String, c1: String, d2: String): String = {
+    val from = if (x == src) src else s"$src $x"
+    s"""c0 AS (SELECT vec_id AS cid, v AS cv FROM $src ORDER BY vec_id LIMIT 8),
+        d1 AS (
+          ${sqlDist(x, from, "c0")}),
+        a1 AS (${sqlArgmin("vec_id, cid", "d1")}),
+        comp AS (
+          SELECT a1.cid, t.i,
+                 CAST(floor(CAST(SUM(t.x) AS DOUBLE) / COUNT(*)) AS BIGINT)
+                   AS comp
+          FROM a1 JOIN $src USING (vec_id),
+               LATERAL (SELECT UNNEST($src.v) AS x,
+                               generate_subscripts($src.v, 1) AS i) t
+          GROUP BY a1.cid, t.i),
+        ${c1}SELECT cid, list(comp ORDER BY i) AS cv FROM comp GROUP BY cid),
+        $d2
+          ${sqlDist(x, from, "c1")}),
+        a2 AS (${sqlArgmin("vec_id, cid, d", "d2")})"""
+  }
+
   /** Fixed-point k-means over an embedding table: deterministic init
     * (the k lowest-id vectors), `iters` Lloyd rounds in scaled-integer
     * arithmetic (q106's determinism recipe — float centroids are
@@ -67,16 +127,7 @@ object Mining {
     * engine), then a per-cluster report: population, exact integer
     * inertia, id range. */
   def kmeansStats(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), quant(col("e")).as("v"))
-      .localCheckpoint(false)
-    val init = e.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    var cents = init
-    var assigned = assign(e, cents)
-    for (_ <- 2 to iters) {
-      cents = updateCentroids(e, assigned)
-      assigned = assign(e, cents)
-    }
+    val (_, assigned) = fit(quantized(emb), k, iters)
     assigned.groupBy(col("cid"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("dist")).as("inertia"),
@@ -103,18 +154,10 @@ object Mining {
     * pass over the new vectors — no refit, no old-vector rescan beyond
     * the same pass q124 already pays; the card is k rows. */
   def incrementalIvfStats(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val q = emb.select(col("vec_id"), quant(col("e")).as("v"))
-      .localCheckpoint(false)
+    val q = quantized(emb)
     val old = q.filter(col("vec_id") % 2 === 0)
     val neu = q.filter(col("vec_id") % 2 === 1)
-    val init = old.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    var cents = init
-    var assigned = assign(old, cents)
-    for (_ <- 2 to iters) {
-      cents = updateCentroids(old, assigned)
-      assigned = assign(old, cents)
-    }
+    val (cents, assigned) = fit(old, k, iters)
     val aOld = assigned.groupBy(col("cid"))
       .agg(count(lit(1)).as("n_old"), sum(col("dist")).as("in_old"))
     val aNew = assign(neu, cents).groupBy(col("cid"))
@@ -155,16 +198,8 @@ object Mining {
     * k distances and the (a, b) reduction happen map-side; the report
     * is k rows. */
   def silhouetteStats(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), quant(col("e")).as("v"))
-      .localCheckpoint(false)
-    val init = e.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    var cents = init
-    var assigned = assign(e, cents)
-    for (_ <- 2 to iters) {
-      cents = updateCentroids(e, assigned)
-      assigned = assign(e, cents)
-    }
+    val e = quantized(emb)
+    val (cents, assigned) = fit(e, k, iters)
     val allD = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cid"), sqDist(col("v"), col("cv")).as("d"))
     val own = assigned.select(col("vec_id"), col("cid").as("own"),
@@ -242,44 +277,8 @@ object Mining {
           Tables.embeddings(spark, dir)
             .select(col("vec_id"), vec64(col("embedding")).as("e")),
           k = 8, iters = 2),
-      oracle = Some("""
-        WITH e AS (
-          SELECT vec_id,
-                 list_transform(CAST(embedding AS DOUBLE[]),
-                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS v
-          FROM embeddings),
-        c0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-        d1 AS (
-          SELECT e.vec_id, c.cid,
-                 CAST(list_sum(list_transform(list_zip(e.v, c.cv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2])))
-                   AS BIGINT) AS d
-          FROM e CROSS JOIN c0 c),
-        a1 AS (SELECT vec_id, cid FROM (
-                 SELECT vec_id, cid,
-                        ROW_NUMBER() OVER (PARTITION BY vec_id
-                          ORDER BY d, cid) AS rn
-                 FROM d1) WHERE rn = 1),
-        comp AS (
-          SELECT a1.cid, t.i,
-                 CAST(floor(CAST(SUM(t.x) AS DOUBLE) / COUNT(*)) AS BIGINT)
-                   AS comp
-          FROM a1 JOIN e USING (vec_id),
-               LATERAL (SELECT UNNEST(e.v) AS x,
-                               generate_subscripts(e.v, 1) AS i) t
-          GROUP BY a1.cid, t.i),
-        c1 AS (SELECT cid, list(comp ORDER BY i) AS cv FROM comp GROUP BY cid),
-        d2 AS (
-          SELECT e.vec_id, c.cid,
-                 CAST(list_sum(list_transform(list_zip(e.v, c.cv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2])))
-                   AS BIGINT) AS d
-          FROM e CROSS JOIN c1 c),
-        a2 AS (SELECT vec_id, cid, d FROM (
-                 SELECT vec_id, cid, d,
-                        ROW_NUMBER() OVER (PARTITION BY vec_id
-                          ORDER BY d, cid) AS rn
-                 FROM d2) WHERE rn = 1)
+      oracle = Some(s"""$SqlQuantized,
+        ${sqlFit("e", "e", "c1 AS (", "d2 AS (")}
         SELECT cid, COUNT(*) AS n_vecs,
                CAST(SUM(d) AS BIGINT) AS inertia,
                MIN(vec_id) AS min_vec, MAX(vec_id) AS max_vec
@@ -300,44 +299,8 @@ object Mining {
           Tables.embeddings(spark, dir)
             .select(col("vec_id"), vec64(col("embedding")).as("e")),
           k = 8, iters = 2),
-      oracle = Some("""
-        WITH e AS (
-          SELECT vec_id,
-                 list_transform(CAST(embedding AS DOUBLE[]),
-                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS v
-          FROM embeddings),
-        c0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 8),
-        d1 AS (
-          SELECT e.vec_id, c.cid,
-                 CAST(list_sum(list_transform(list_zip(e.v, c.cv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2])))
-                   AS BIGINT) AS d
-          FROM e CROSS JOIN c0 c),
-        a1 AS (SELECT vec_id, cid FROM (
-                 SELECT vec_id, cid,
-                        ROW_NUMBER() OVER (PARTITION BY vec_id
-                          ORDER BY d, cid) AS rn
-                 FROM d1) WHERE rn = 1),
-        comp AS (
-          SELECT a1.cid, t.i,
-                 CAST(floor(CAST(SUM(t.x) AS DOUBLE) / COUNT(*)) AS BIGINT)
-                   AS comp
-          FROM a1 JOIN e USING (vec_id),
-               LATERAL (SELECT UNNEST(e.v) AS x,
-                               generate_subscripts(e.v, 1) AS i) t
-          GROUP BY a1.cid, t.i),
-        c1 AS (SELECT cid, list(comp ORDER BY i) AS cv FROM comp GROUP BY cid),
-        d2 AS MATERIALIZED (
-          SELECT e.vec_id, c.cid,
-                 CAST(list_sum(list_transform(list_zip(e.v, c.cv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2])))
-                   AS BIGINT) AS d
-          FROM e CROSS JOIN c1 c),
-        a2 AS (SELECT vec_id, cid, d FROM (
-                 SELECT vec_id, cid, d,
-                        ROW_NUMBER() OVER (PARTITION BY vec_id
-                          ORDER BY d, cid) AS rn
-                 FROM d2) WHERE rn = 1),
+      oracle = Some(s"""$SqlQuantized,
+        ${sqlFit("e", "e", "c1 AS (", "d2 AS MATERIALIZED (")},
         b AS (SELECT d2.vec_id, CAST(MIN(d2.d) AS BIGINT) AS b
               FROM d2 JOIN a2 ON a2.vec_id = d2.vec_id
                              AND d2.cid != a2.cid
@@ -366,59 +329,13 @@ object Mining {
           Tables.embeddings(spark, dir)
             .select(col("vec_id"), vec64(col("embedding")).as("e")),
           k = 8, iters = 2),
-      oracle = Some("""
-        WITH e AS (
-          SELECT vec_id,
-                 list_transform(CAST(embedding AS DOUBLE[]),
-                   x -> CAST(floor(x * 1000000) AS BIGINT)) AS v
-          FROM embeddings),
+      oracle = Some(s"""$SqlQuantized,
         old AS (SELECT * FROM e WHERE vec_id % 2 = 0),
         neu AS (SELECT * FROM e WHERE vec_id % 2 = 1),
-        c0 AS (SELECT vec_id AS cid, v AS cv FROM old
-               ORDER BY vec_id LIMIT 8),
-        d1 AS (
-          SELECT o.vec_id, c.cid,
-                 CAST(list_sum(list_transform(list_zip(o.v, c.cv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2])))
-                   AS BIGINT) AS d
-          FROM old o CROSS JOIN c0 c),
-        a1 AS (SELECT vec_id, cid FROM (
-                 SELECT vec_id, cid,
-                        ROW_NUMBER() OVER (PARTITION BY vec_id
-                          ORDER BY d, cid) AS rn
-                 FROM d1) WHERE rn = 1),
-        comp AS (
-          SELECT a1.cid, t.i,
-                 CAST(floor(CAST(SUM(t.x) AS DOUBLE) / COUNT(*)) AS BIGINT)
-                   AS comp
-          FROM a1 JOIN old USING (vec_id),
-               LATERAL (SELECT UNNEST(old.v) AS x,
-                               generate_subscripts(old.v, 1) AS i) t
-          GROUP BY a1.cid, t.i),
-        c1 AS MATERIALIZED (
-          SELECT cid, list(comp ORDER BY i) AS cv FROM comp GROUP BY cid),
-        d2 AS (
-          SELECT o.vec_id, c.cid,
-                 CAST(list_sum(list_transform(list_zip(o.v, c.cv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2])))
-                   AS BIGINT) AS d
-          FROM old o CROSS JOIN c1 c),
-        a2 AS (SELECT vec_id, cid, d FROM (
-                 SELECT vec_id, cid, d,
-                        ROW_NUMBER() OVER (PARTITION BY vec_id
-                          ORDER BY d, cid) AS rn
-                 FROM d2) WHERE rn = 1),
+        ${sqlFit("old", "o", "c1 AS MATERIALIZED (\n          ", "d2 AS (")},
         dn AS (
-          SELECT nu.vec_id, c.cid,
-                 CAST(list_sum(list_transform(list_zip(nu.v, c.cv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2])))
-                   AS BIGINT) AS d
-          FROM neu nu CROSS JOIN c1 c),
-        an AS (SELECT vec_id, cid, d FROM (
-                 SELECT vec_id, cid, d,
-                        ROW_NUMBER() OVER (PARTITION BY vec_id
-                          ORDER BY d, cid) AS rn
-                 FROM dn) WHERE rn = 1),
+          ${sqlDist("nu", "neu nu", "c1")}),
+        an AS (${sqlArgmin("vec_id, cid, d", "dn")}),
         go AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_old,
                       CAST(SUM(d) AS BIGINT) AS in_old
                FROM a2 GROUP BY 1),

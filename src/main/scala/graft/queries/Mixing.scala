@@ -24,6 +24,73 @@ object Mixing {
 
   import Det.toks
 
+  /** Per source: the two-sample KS statistic of its n_chars against the
+    * rest of the corpus, as (source, n_s, n_tot, dmax, n_rest, ks_ppm) —
+    * exact integers on the corpus-wide value grid (q286, q308). */
+  private def ksBySource(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val cell = Tables.documents(spark, dir)
+      .groupBy(col("source"),
+        col("n_chars").cast(LongType).as("x"))
+      .agg(count(lit(1)).as("cnt"))
+      .localCheckpoint(false)
+    val gl = cell.groupBy(col("x")).agg(sum(col("cnt")).as("g"))
+    val wg = Window.orderBy(col("x"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val gcum = gl.withColumn("gc", sum(col("g")).over(wg))
+      .select(col("x"), col("gc"))
+    val ns = cell.groupBy(col("source")).agg(sum(col("cnt")).as("n_s"))
+    val tot = gl.agg(sum(col("g")).as("n_tot"))
+    val grid = ns.crossJoin(broadcast(gcum.select(col("x"))))
+      .join(cell, Seq("source", "x"), "left")
+      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
+    val wsb = Window.partitionBy(col("source")).orderBy(col("x"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cum = grid.withColumn("sc", sum(col("cnt")).over(wsb))
+      .join(gcum, Seq("x"))
+      .crossJoin(broadcast(tot))
+      .withColumn("dnum", expr(
+        "abs(CAST(sc AS DECIMAL(38,0)) * (n_tot - n_s)" +
+          " - CAST(gc - sc AS DECIMAL(38,0)) * n_s)"))
+    cum.groupBy(col("source"))
+      .agg(max(col("n_s")).as("n_s"), max(col("n_tot")).as("n_tot"),
+        max(col("dnum")).as("dmax"))
+      .withColumn("n_rest", col("n_tot") - col("n_s"))
+      .withColumn("ks_ppm", expr(
+        "CAST(dmax * 1000000 div (CAST(n_s AS DECIMAL(38,0))" +
+          " * n_rest) AS BIGINT)"))
+  }
+
+  /** DuckDB mirror of [[ksBySource]] up to `dmax`: the `cell` … `dk` CTEs
+    * of q286's and q308's oracles. */
+  private val KsCtes: String = """WITH cell AS (SELECT source, CAST(n_chars AS BIGINT) AS x,
+                             CAST(COUNT(*) AS BIGINT) AS cnt
+                      FROM documents GROUP BY 1, 2),
+        gl AS (SELECT x, CAST(SUM(cnt) AS BIGINT) AS g
+               FROM cell GROUP BY 1),
+        gcum AS (SELECT x, CAST(SUM(g) OVER (ORDER BY x
+                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS gc
+                 FROM gl),
+        ns AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_s
+               FROM cell GROUP BY 1),
+        tot AS (SELECT CAST(SUM(g) AS BIGINT) AS n_tot FROM gl),
+        grid AS (SELECT ns.source, ns.n_s, gcum.x,
+                        COALESCE(cell.cnt, 0) AS cnt
+                 FROM ns CROSS JOIN gcum
+                 LEFT JOIN cell ON cell.source = ns.source
+                   AND cell.x = gcum.x),
+        cum AS (SELECT g2.source, g2.n_s, g2.x,
+                       CAST(SUM(g2.cnt) OVER (PARTITION BY g2.source
+                         ORDER BY g2.x ROWS UNBOUNDED PRECEDING)
+                         AS BIGINT) AS sc,
+                       gcum.gc, tot.n_tot
+                FROM grid g2 JOIN gcum ON gcum.x = g2.x
+                CROSS JOIN tot),
+        dk AS (SELECT source, MAX(n_s) AS n_s, MAX(n_tot) AS n_tot,
+                      MAX(ABS(CAST(sc AS HUGEINT) * (n_tot - n_s)
+                        - CAST(gc - sc AS HUGEINT) * n_s)) AS dmax
+               FROM cum GROUP BY 1)"""
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- q151: leave-one-out target encoding with smoothing ----
@@ -850,36 +917,7 @@ object Mixing {
     // DECIMAL(38,0)/HUGEINT; no corpus re-scan past the cell cut.
     "q286_ks_drift_test" -> QueryDef(
       build = (spark, dir) => {
-        val cell = Tables.documents(spark, dir)
-          .groupBy(col("source"),
-            col("n_chars").cast(LongType).as("x"))
-          .agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(false)
-        val gl = cell.groupBy(col("x")).agg(sum(col("cnt")).as("g"))
-        val wg = Window.orderBy(col("x"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val gcum = gl.withColumn("gc", sum(col("g")).over(wg))
-          .select(col("x"), col("gc"))
-        val ns = cell.groupBy(col("source")).agg(sum(col("cnt")).as("n_s"))
-        val tot = gl.agg(sum(col("g")).as("n_tot"))
-        val grid = ns.crossJoin(broadcast(gcum.select(col("x"))))
-          .join(cell, Seq("source", "x"), "left")
-          .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-        val wsb = Window.partitionBy(col("source")).orderBy(col("x"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cum = grid.withColumn("sc", sum(col("cnt")).over(wsb))
-          .join(gcum, Seq("x"))
-          .crossJoin(broadcast(tot))
-          .withColumn("dnum", expr(
-            "abs(CAST(sc AS DECIMAL(38,0)) * (n_tot - n_s)" +
-              " - CAST(gc - sc AS DECIMAL(38,0)) * n_s)"))
-        cum.groupBy(col("source"))
-          .agg(max(col("n_s")).as("n_s"), max(col("n_tot")).as("n_tot"),
-            max(col("dnum")).as("dmax"))
-          .withColumn("n_rest", col("n_tot") - col("n_s"))
-          .withColumn("ks_ppm", expr(
-            "CAST(dmax * 1000000 div (CAST(n_s AS DECIMAL(38,0))" +
-              " * n_rest) AS BIGINT)"))
+        ksBySource(spark, dir)
           .withColumn("reject_05", when(expr(
             "CAST(ks_ppm AS DECIMAL(38,0)) * ks_ppm * n_s * n_rest" +
               " >= CAST(1843700 AS DECIMAL(38,0)) * 1000000 * n_tot"),
@@ -890,34 +928,8 @@ object Mixing {
               .otherwise("consistent").as("verdict"))
           .orderBy(col("source"))
       },
-      oracle = Some("""
-        WITH cell AS (SELECT source, CAST(n_chars AS BIGINT) AS x,
-                             CAST(COUNT(*) AS BIGINT) AS cnt
-                      FROM documents GROUP BY 1, 2),
-        gl AS (SELECT x, CAST(SUM(cnt) AS BIGINT) AS g
-               FROM cell GROUP BY 1),
-        gcum AS (SELECT x, CAST(SUM(g) OVER (ORDER BY x
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS gc
-                 FROM gl),
-        ns AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_s
-               FROM cell GROUP BY 1),
-        tot AS (SELECT CAST(SUM(g) AS BIGINT) AS n_tot FROM gl),
-        grid AS (SELECT ns.source, ns.n_s, gcum.x,
-                        COALESCE(cell.cnt, 0) AS cnt
-                 FROM ns CROSS JOIN gcum
-                 LEFT JOIN cell ON cell.source = ns.source
-                   AND cell.x = gcum.x),
-        cum AS (SELECT g2.source, g2.n_s, g2.x,
-                       CAST(SUM(g2.cnt) OVER (PARTITION BY g2.source
-                         ORDER BY g2.x ROWS UNBOUNDED PRECEDING)
-                         AS BIGINT) AS sc,
-                       gcum.gc, tot.n_tot
-                FROM grid g2 JOIN gcum ON gcum.x = g2.x
-                CROSS JOIN tot),
-        dk AS (SELECT source, MAX(n_s) AS n_s, MAX(n_tot) AS n_tot,
-                      MAX(ABS(CAST(sc AS HUGEINT) * (n_tot - n_s)
-                        - CAST(gc - sc AS HUGEINT) * n_s)) AS dmax
-               FROM cum GROUP BY 1),
+      oracle = Some(s"""
+        $KsCtes,
         ks AS (SELECT source, n_s, n_tot - n_s AS n_rest,
                       CAST(dmax * 1000000
                         // (CAST(n_s AS HUGEINT) * (n_tot - n_s))
@@ -959,36 +971,7 @@ object Mixing {
     // battery; products DECIMAL(38,0)/HUGEINT throughout.
     "q308_bh_fdr_battery" -> QueryDef(
       build = (spark, dir) => {
-        val cell = Tables.documents(spark, dir)
-          .groupBy(col("source"),
-            col("n_chars").cast(LongType).as("x"))
-          .agg(count(lit(1)).as("cnt"))
-          .localCheckpoint(false)
-        val gl = cell.groupBy(col("x")).agg(sum(col("cnt")).as("g"))
-        val wg = Window.orderBy(col("x"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val gcum = gl.withColumn("gc", sum(col("g")).over(wg))
-          .select(col("x"), col("gc"))
-        val ns = cell.groupBy(col("source")).agg(sum(col("cnt")).as("n_s"))
-        val tot = gl.agg(sum(col("g")).as("n_tot"))
-        val grid = ns.crossJoin(broadcast(gcum.select(col("x"))))
-          .join(cell, Seq("source", "x"), "left")
-          .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-        val wsb = Window.partitionBy(col("source")).orderBy(col("x"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cum = grid.withColumn("sc", sum(col("cnt")).over(wsb))
-          .join(gcum, Seq("x"))
-          .crossJoin(broadcast(tot))
-          .withColumn("dnum", expr(
-            "abs(CAST(sc AS DECIMAL(38,0)) * (n_tot - n_s)" +
-              " - CAST(gc - sc AS DECIMAL(38,0)) * n_s)"))
-        val ks = cum.groupBy(col("source"))
-          .agg(max(col("n_s")).as("n_s"), max(col("n_tot")).as("n_tot"),
-            max(col("dnum")).as("dmax"))
-          .withColumn("n_rest", col("n_tot") - col("n_s"))
-          .withColumn("ks_ppm", expr(
-            "CAST(dmax * 1000000 div (CAST(n_s AS DECIMAL(38,0))" +
-              " * n_rest) AS BIGINT)"))
+        val ks = ksBySource(spark, dir)
           .withColumn("reject_naive", when(expr(
             "CAST(ks_ppm AS DECIMAL(38,0)) * ks_ppm * n_s * n_rest" +
               " >= CAST(1843700 AS DECIMAL(38,0)) * 1000000 * n_tot"),
@@ -1024,34 +1007,8 @@ object Mixing {
               .otherwise("consistent").as("verdict"))
           .orderBy(col("rank"))
       },
-      oracle = Some("""
-        WITH cell AS (SELECT source, CAST(n_chars AS BIGINT) AS x,
-                             CAST(COUNT(*) AS BIGINT) AS cnt
-                      FROM documents GROUP BY 1, 2),
-        gl AS (SELECT x, CAST(SUM(cnt) AS BIGINT) AS g
-               FROM cell GROUP BY 1),
-        gcum AS (SELECT x, CAST(SUM(g) OVER (ORDER BY x
-                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS gc
-                 FROM gl),
-        ns AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_s
-               FROM cell GROUP BY 1),
-        tot AS (SELECT CAST(SUM(g) AS BIGINT) AS n_tot FROM gl),
-        grid AS (SELECT ns.source, ns.n_s, gcum.x,
-                        COALESCE(cell.cnt, 0) AS cnt
-                 FROM ns CROSS JOIN gcum
-                 LEFT JOIN cell ON cell.source = ns.source
-                   AND cell.x = gcum.x),
-        cum AS (SELECT g2.source, g2.n_s, g2.x,
-                       CAST(SUM(g2.cnt) OVER (PARTITION BY g2.source
-                         ORDER BY g2.x ROWS UNBOUNDED PRECEDING)
-                         AS BIGINT) AS sc,
-                       gcum.gc, tot.n_tot
-                FROM grid g2 JOIN gcum ON gcum.x = g2.x
-                CROSS JOIN tot),
-        dk AS (SELECT source, MAX(n_s) AS n_s, MAX(n_tot) AS n_tot,
-                      MAX(ABS(CAST(sc AS HUGEINT) * (n_tot - n_s)
-                        - CAST(gc - sc AS HUGEINT) * n_s)) AS dmax
-               FROM cum GROUP BY 1),
+      oracle = Some(s"""
+        $KsCtes,
         ks AS (SELECT source, n_s, n_tot - n_s AS n_rest, n_tot,
                       CAST(dmax * 1000000
                         // (CAST(n_s AS HUGEINT) * (n_tot - n_s))

@@ -38,7 +38,7 @@ object Multi {
         Multimodal.featureProfile(spark, assetCount(dir)),
       oracle = Some(s"""
         WITH f AS (SELECT kind, n_bytes, l2sq
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q60_input/*.parquet'))
+                   FROM ${VerifyInputs.staged("_q60_input")})
         SELECT kind, COUNT(*) AS n_assets,
                CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
                ROUND(CAST(SUM(CAST(l2sq AS DECIMAL(28,9))) AS DOUBLE)
@@ -67,7 +67,7 @@ object Multi {
       oracle = Some(s"""
         WITH f AS (SELECT n_chunks, n_samples, zero_crossings, sum_sq,
                           max_abs
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q208_input/*.parquet'))
+                   FROM ${VerifyInputs.staged("_q208_input")})
         SELECT n_chunks, COUNT(*) AS n_assets,
                CAST(SUM(n_samples) AS BIGINT) AS total_samples,
                (CAST(SUM(zero_crossings) AS BIGINT) * 1000000)
@@ -134,7 +134,7 @@ object Multi {
                           CAST(MAX(w) AS BIGINT) AS w,
                           CAST(MAX(h) AS BIGINT) AS h,
                           list(frame_sum ORDER BY idx) AS frame_sums
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q228_input/*.parquet')
+                   FROM ${VerifyInputs.staged("_q228_input")}
                    GROUP BY asset_id),
         d AS (SELECT n_frames, w * h * n_frames AS px_before,
                      (n_frames + 2) // 3 AS frames_kept,
@@ -190,7 +190,7 @@ object Multi {
       },
       oracle = Some(s"""
         WITH f AS (SELECT src_w, src_h, out_bytes, n_px, px_sum
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q230_input/*.parquet'))
+                   FROM ${VerifyInputs.staged("_q230_input")})
         SELECT CAST(src_w AS BIGINT) AS src_w,
                CAST(src_h AS BIGINT) AS src_h,
                COUNT(*) AS n_assets,
@@ -222,7 +222,7 @@ object Multi {
           maxHamming = 6),
       oracle = Some(s"""
         WITH h AS (SELECT asset_id, dhash
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q234_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q234_input")}),
         b AS (SELECT asset_id, dhash, i AS band,
                      (dhash >> (i * 16)) & 65535 AS bv
               FROM h, LATERAL (SELECT unnest([0, 1, 2, 3]) AS i) t),
@@ -256,7 +256,7 @@ object Multi {
         Multimodal.vadProfile(spark, assetCount(dir)),
       oracle = Some(s"""
         WITH f AS (SELECT asset_id, frame_idx, energy
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q248_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q248_input")}),
         v AS (SELECT asset_id, frame_idx,
                      CASE WHEN energy < 160000000 THEN 1 ELSE 0 END AS silent
               FROM f),
@@ -308,7 +308,7 @@ object Multi {
                           CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
                           CAST(idx AS BIGINT) AS i,
                           CAST(diff AS BIGINT) AS dv
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q249_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q249_input")}),
         v AS (SELECT asset_id, MAX(n_frames) AS n_frames
               FROM d GROUP BY asset_id),
         b AS (SELECT asset_id, i,
@@ -368,7 +368,7 @@ object Multi {
         Multimodal.resampleProfile(spark, assetCount(dir)),
       oracle = Some(s"""
         WITH f AS (SELECT * FROM
-          read_parquet('${Gps.VerifyOutToken}/_q267_input/*.parquet'))
+          ${VerifyInputs.staged("_q267_input")})
         SELECT n_chunks, COUNT(*) AS n_assets,
                CAST(SUM(ns_in) AS BIGINT) AS in_samples,
                CAST(SUM(ns_out) AS BIGINT) AS out_samples,
@@ -415,7 +415,7 @@ object Multi {
       },
       oracle = Some(s"""
         WITH f AS (SELECT * FROM
-          read_parquet('${Gps.VerifyOutToken}/_q342_input/*.parquet'))
+          ${VerifyInputs.staged("_q342_input")})
         SELECT planted_bin, CAST(COUNT(*) AS BIGINT) AS n_assets,
                CAST(SUM(CASE WHEN detected_bin = planted_bin
                  THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
@@ -468,7 +468,7 @@ object Multi {
       },
       oracle = Some(s"""
         WITH f AS (SELECT asset_id, n_samples, sample_sum
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q350_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q350_input")}),
         e AS (SELECT CASE asset_id % 3 WHEN 0 THEN 'image'
                      WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
                      CASE WHEN asset_id % 17 <> 0 THEN 'ok'

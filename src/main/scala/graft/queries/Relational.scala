@@ -362,11 +362,7 @@ object Relational {
                CAST(SUM(n_chars) AS BIGINT) AS chars,
                CAST(SUM(length(tricky)) AS BIGINT) AS tricky_len,
                MIN(tricky) AS tricky_min, MAX(tricky) AS tricky_max
-        FROM read_csv('${Gps.VerifyOutToken}/_q226_input/*.csv', header = true,
-               quote = '"', escape = '"',
-               columns = {'doc_id': 'BIGINT', 'lang': 'VARCHAR',
-                          'source': 'VARCHAR', 'n_chars': 'BIGINT',
-                          'tricky': 'VARCHAR'})
+        FROM ${VerifyInputs.stagedCsv}
         GROUP BY lang ORDER BY lang"""))
   )
 

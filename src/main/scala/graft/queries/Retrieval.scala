@@ -20,6 +20,7 @@ object Retrieval {
   /** The fixed query — broadcastable at any SF (a real system would take
     * a query batch; the plan shape is identical). */
   private val QueryTerms = Seq("join", "vector", "window", "slow")
+  private val SqlTerms = QueryTerms.map(t => s"'$t'").mkString(", ")
   private val K1 = 1.2
   private val B = 0.75
 
@@ -33,6 +34,16 @@ object Retrieval {
     * with its 6-dp BM25 score — q94's scorer, shared with the q224
     * ranking-quality gate. Stats broadcast; the model never shuffles. */
   private def bm25Scored(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    bm25Contrib(spark, dir)
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_terms_hit"),
+        round(sum(col("contrib").cast(DecimalType(28, 9))).cast("double"),
+          6).as("score"))
+
+  /** (doc_id, contrib) per query-term hit: its 9-dp BM25
+    * contribution. */
+  private def bm25Contrib(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(trim(col("text")), " ")).as("term"))
@@ -53,11 +64,33 @@ object Retrieval {
             (col("dl").cast("double") /
               (col("total_tokens").cast("double") / col("n_docs"))))),
         9).as("contrib"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms_hit"),
-        round(sum(col("contrib").cast(DecimalType(28, 9))).cast("double"),
-          6).as("score"))
   }
+
+  /** DuckDB mirror of [[bm25Contrib]]: the `tok`, `dl`, `st`, `tf`,
+    * `dft` CTEs and `sc` (doc_id, contrib), shared by q94, q114, q224. */
+  private val Bm25Ctes: String = s"""WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term
+                     FROM documents),
+        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok
+               GROUP BY doc_id),
+        st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+                      CAST(SUM(dl) AS BIGINT) AS total_tokens FROM dl),
+        tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
+               WHERE term IN ($SqlTerms)
+               GROUP BY 1, 2),
+        dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dft FROM tf
+                GROUP BY term),
+        sc AS (SELECT f.doc_id,
+                      ROUND(LN(CAST(1.0 AS DOUBLE)
+                               + (st.n_docs - d.dft + CAST(0.5 AS DOUBLE))
+                               / (d.dft + CAST(0.5 AS DOUBLE)))
+                            * (f.tf * CAST(2.2 AS DOUBLE))
+                            / (f.tf + CAST($K1 AS DOUBLE)
+                               * (CAST(${1 - B} AS DOUBLE)
+                                  + CAST($B AS DOUBLE)
+                                  * (CAST(l.dl AS DOUBLE)
+                                     / (CAST(st.total_tokens AS DOUBLE)
+                                        / st.n_docs)))), 9) AS contrib
+               FROM tf f JOIN dft d USING (term) JOIN dl l USING (doc_id), st)"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -78,29 +111,7 @@ object Retrieval {
         .orderBy(col("score").desc, col("doc_id"))
         .limit(10),
       oracle = Some(s"""
-        WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term
-                     FROM documents),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok
-               GROUP BY doc_id),
-        st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                      CAST(SUM(dl) AS BIGINT) AS total_tokens FROM dl),
-        tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
-               WHERE term IN (${QueryTerms.map(t => s"'$t'").mkString(", ")})
-               GROUP BY 1, 2),
-        dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dft FROM tf
-                GROUP BY term),
-        sc AS (SELECT f.doc_id,
-                      ROUND(LN(CAST(1.0 AS DOUBLE)
-                               + (st.n_docs - d.dft + CAST(0.5 AS DOUBLE))
-                               / (d.dft + CAST(0.5 AS DOUBLE)))
-                            * (f.tf * CAST(2.2 AS DOUBLE))
-                            / (f.tf + CAST($K1 AS DOUBLE)
-                               * (CAST(${1 - B} AS DOUBLE)
-                                  + CAST($B AS DOUBLE)
-                                  * (CAST(l.dl AS DOUBLE)
-                                     / (CAST(st.total_tokens AS DOUBLE)
-                                        / st.n_docs)))), 9) AS contrib
-               FROM tf f JOIN dft d USING (term) JOIN dl l USING (doc_id), st)
+        $Bm25Ctes
         SELECT doc_id, COUNT(*) AS n_terms_hit,
                ROUND(CAST(SUM(CAST(contrib AS DECIMAL(28,9))) AS DOUBLE), 6)
                  AS score
@@ -132,25 +143,7 @@ object Retrieval {
         import graft.functions.VectorFunctions.{cosine, vec64}
         import org.apache.spark.sql.expressions.Window
         // lexical arm: q94's scoring, kept to top 50 by (score, doc_id)
-        val toks = Tables.documents(spark, dir)
-          .select(col("doc_id"), explode(split(trim(col("text")), " ")).as("term"))
-        val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-        val st = dl.agg(count(lit(1)).as("n_docs"),
-          sum(col("dl")).as("total_tokens"))
-        val tf = toks.filter(col("term").isin(QueryTerms: _*))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("dft"))
-        val lexTop = tf.join(broadcast(dft), Seq("term"))
-          .join(dl, Seq("doc_id"))
-          .crossJoin(broadcast(st))
-          .select(col("doc_id"), round(
-            log(lit(1.0) + (col("n_docs") - col("dft") + lit(0.5)) /
-              (col("dft") + lit(0.5))) *
-              (col("tf") * lit(2.2)) /
-              (col("tf") + lit(K1) * (lit(1 - B) + lit(B) *
-                (col("dl").cast("double") /
-                  (col("total_tokens").cast("double") / col("n_docs"))))),
-            9).as("contrib"))
+        val lexTop = bm25Contrib(spark, dir)
           .groupBy(col("doc_id"))
           .agg(round(sum(col("contrib").cast(DecimalType(28, 9))).cast("double"),
             6).as("lex_score"))
@@ -182,29 +175,7 @@ object Retrieval {
           .orderBy(col("rrf_score").desc, col("doc_id")).limit(20)
       },
       oracle = Some(s"""
-        WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term
-                     FROM documents),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok
-               GROUP BY doc_id),
-        st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                      CAST(SUM(dl) AS BIGINT) AS total_tokens FROM dl),
-        tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
-               WHERE term IN (${QueryTerms.map(t => s"'$t'").mkString(", ")})
-               GROUP BY 1, 2),
-        dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dft FROM tf
-                GROUP BY term),
-        sc AS (SELECT f.doc_id,
-                      ROUND(LN(CAST(1.0 AS DOUBLE)
-                               + (st.n_docs - d.dft + CAST(0.5 AS DOUBLE))
-                               / (d.dft + CAST(0.5 AS DOUBLE)))
-                            * (f.tf * CAST(2.2 AS DOUBLE))
-                            / (f.tf + CAST($K1 AS DOUBLE)
-                               * (CAST(${1 - B} AS DOUBLE)
-                                  + CAST($B AS DOUBLE)
-                                  * (CAST(l.dl AS DOUBLE)
-                                     / (CAST(st.total_tokens AS DOUBLE)
-                                        / st.n_docs)))), 9) AS contrib
-               FROM tf f JOIN dft d USING (term) JOIN dl l USING (doc_id), st),
+        $Bm25Ctes,
         lex_top AS (
           SELECT doc_id,
                  ROUND(CAST(SUM(CAST(contrib AS DECIMAL(28,9))) AS DOUBLE), 6)
@@ -408,37 +379,14 @@ object Retrieval {
           .orderBy(col("pos"))
       },
       oracle = Some(s"""
-        WITH tok AS (SELECT doc_id,
-                            unnest(string_split(trim(text), ' ')) AS term
-                     FROM documents),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok
-               GROUP BY doc_id),
-        st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                      CAST(SUM(dl) AS BIGINT) AS total_tokens FROM dl),
-        tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
-               WHERE term IN (${QueryTerms.map(t => s"'$t'").mkString(", ")})
-               GROUP BY 1, 2),
-        dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dft FROM tf
-                GROUP BY term),
-        sc AS (SELECT f.doc_id,
-                      ROUND(LN(CAST(1.0 AS DOUBLE)
-                               + (st.n_docs - d.dft + CAST(0.5 AS DOUBLE))
-                               / (d.dft + CAST(0.5 AS DOUBLE)))
-                            * (f.tf * CAST(2.2 AS DOUBLE))
-                            / (f.tf + CAST($K1 AS DOUBLE)
-                               * (CAST(${1 - B} AS DOUBLE)
-                                  + CAST($B AS DOUBLE)
-                                  * (CAST(l.dl AS DOUBLE)
-                                     / (CAST(st.total_tokens AS DOUBLE)
-                                        / st.n_docs)))), 9) AS contrib
-               FROM tf f JOIN dft d USING (term) JOIN dl l USING (doc_id), st),
+        $Bm25Ctes,
         scored AS (SELECT doc_id,
                           ROUND(CAST(SUM(CAST(contrib AS DECIMAL(28,9)))
                             AS DOUBLE), 6) AS score
                    FROM sc GROUP BY doc_id),
         rel AS (SELECT doc_id, LEAST(CAST(COUNT(*) AS BIGINT), 10) AS rel
                 FROM tok
-                WHERE term IN (${QueryTerms.map(t => s"'$t'").mkString(", ")})
+                WHERE term IN ($SqlTerms)
                 GROUP BY doc_id),
         sys10 AS (SELECT s.doc_id, s.score, r.rel
                   FROM scored s JOIN rel r USING (doc_id)

@@ -124,6 +124,11 @@ object StreamingGate {
       parts.head.schema
     }
 
+    /** [[stageFiles]] of `df` split into 8 files by `key` % 8, file f
+      * holding the rows with `key` % 8 = f. */
+    def stageSplit(df: DataFrame, key: String): StructType =
+      stageFiles((0 until 8).map(f => df.filter(col(key) % 8 === f)))
+
     /** [[stageFiles]] for single-string-column parts, one text line per
       * row: the JSON landing files the ingest pipeline reads. */
     def stageLines(parts: Seq[DataFrame]): Unit = stageAs("text", parts)
@@ -240,6 +245,17 @@ object StreamingGate {
     def eventsBatch: DataFrame = spark.read.schema(era.schema).parquet(fixture)
   }
 
+  /** An event's value in integer cents. */
+  private def cents: Column = round(col("value") * 100).cast(LongType)
+
+  /** Read back `table` through `read`, checkpointed, then drop it. */
+  private def readAndDrop(spark: SparkSession, table: String)(
+      read: DataFrame => DataFrame): DataFrame = {
+    val out = read(spark.table(table)).localCheckpoint(false)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    out
+  }
+
   /** Wait for every query to drain; stop any still running. */
   private def await(qs: StreamingQuery*): Unit =
     try qs.foreach(_.awaitTermination())
@@ -266,6 +282,13 @@ object StreamingGate {
 
   private def run[G <: Gate, T](g: G)(body: G => T): T =
     try body(g) finally g.close()
+
+  /** DuckDB mirror of [[EventsGate.joinSide]] for the join oracles: the
+    * `tpe` events as CTE `cte` (user_id, `tpe`_id, `t`). */
+  private def sqlSide(cte: String, tpe: String, t: String): String =
+    s"""$cte AS (SELECT user_id, event_id AS ${tpe}_id,
+                     CAST(ts AS TIMESTAMP) AS $t
+              FROM events WHERE event_type = '$tpe')"""
 
   /** `b`'s event on `a`'s user at most `mins` minutes after `a`'s: the
     * interval condition of the stream-stream join gates, over
@@ -494,7 +517,7 @@ object StreamingGate {
     g.events()
       .select(col("user_id"), g.era.eventTime.as("event_time"),
         unix_micros(g.era.eventTime).as("tus"),
-        round(col("value") * 100).cast(LongType).as("cents"))
+        cents.as("cents"))
 
   // ---- q318: streamed bottom-k distinct sketch --------------------
 
@@ -851,7 +874,7 @@ object StreamingGate {
       spark.read.parquet(outDir)
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("cents_total"))
+          sum(cents).as("cents_total"))
         .orderBy(col("label"))
         .localCheckpoint()
     }
@@ -876,7 +899,7 @@ object StreamingGate {
       def runOnce(upgraded: Boolean): Unit = {
         val base = g.events()
           .select(col("event_id"), col("event_type"),
-            round(col("value") * 100).cast(LongType).as("cents"))
+            cents.as("cents"))
         val shaped =
           if (upgraded) base.withColumn("band", col("cents") % 7)
           else base
@@ -1065,7 +1088,7 @@ object StreamingGate {
       g.memory(g.events()
         .select(col("user_id"), col("event_id"),
           g.era.tsMicros.as("ts_us"),
-          round(col("value") * 100).cast("long").as("cents"))
+          cents.as("cents"))
         .as[EventIn]
         .groupByKey(_.user_id)
         .transformWithState(new RunningTotalsProcessor,
@@ -1091,8 +1114,18 @@ object StreamingGate {
     deduped.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),
-        sum(round(col("value") * 100).cast("long")).as("cents_total"))
+        sum(cents).as("cents_total"))
       .orderBy(col("event_type"))
+
+  /** [[replayRollup]] of the single-copy events: q149's and q184's
+    * oracle (both drains collapse the replay to it). */
+  private val ReplayRollupOracle: String = """
+        SELECT event_type, COUNT(*) AS n,
+               CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct,
+               CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+                 AS cents_total
+        FROM events
+        GROUP BY event_type ORDER BY event_type"""
 
   /** Typed rows for the q176 streaming LSH candidate processor. */
   final case class BucketDoc(band: Int, h: Long, doc_id: Long)
@@ -1199,7 +1232,7 @@ object StreamingGate {
         .select(col("c_custkey"), col("c_mktsegment")))
       g.memory(g.events()
         .select(col("user_id"), col("event_type"),
-          round(col("value") * 100).cast(LongType).as("cents"))
+          cents.as("cents"))
         .join(dim, col("user_id") === col("c_custkey")))
     }.groupBy(col("c_mktsegment").as("mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_total"))
@@ -1309,9 +1342,8 @@ object StreamingGate {
     gate(spark, "q275") { g =>
       val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_type"), col("event_id"),
-          round(col("value") * 100).cast(LongType).as("cents"))
-      val schema = g.stageFiles(
-        (0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
+          cents.as("cents"))
+      val schema = g.stageSplit(ev, "event_id")
       g.memory(g.source(schema, maxFilesPerTrigger = 1)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -1340,11 +1372,10 @@ object StreamingGate {
       val ev = g.eventsBatch
         .filter(col("user_id") < 200)
         .select(col("user_id"), col("event_type"), col("event_id"),
-          round(col("value") * 100).cast(LongType).as("cents"),
+          cents.as("cents"),
           date_format(g.era.eventTime, "yyyy-MM-dd HH:mm:ss.SSSSSS")
             .as("ts_str"))
-      val schema = g.stageFiles(
-        (0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
+      val schema = g.stageSplit(ev, "event_id")
       g.drain(g.source(schema, maxFilesPerTrigger = 1))(
         _.foreachBatch { (batch: DataFrame, _: Long) =>
           val latest = Upsert.latestPerKey(batch, Seq("user_id"),
@@ -1355,13 +1386,10 @@ object StreamingGate {
             Seq("user_id"), Seq("ts_str", "event_id"))
         })
     }
-    val out = spark.table(table)
-      .select(col("user_id"), col("event_type"), col("event_id"),
+    readAndDrop(spark, table)(
+      _.select(col("user_id"), col("event_type"), col("event_id"),
         col("cents"), col("ts_str"))
-      .orderBy(col("user_id"))
-      .localCheckpoint(false)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    out
+        .orderBy(col("user_id")))
   }
 
   /** Run the streamed per-user session build to completion and return
@@ -1398,6 +1426,16 @@ object StreamingGate {
         FROM w CROSS JOIN m
         WHERE w.ws + INTERVAL 1 HOUR <= m.mx - INTERVAL 1 HOUR
         ORDER BY hour_start, event_type"""
+
+  /** The q275/q285 oracles' view of [[Gate.stageSplit]]: `e` (each event's
+    * file f = event_id % 8 and its cents) and `g` (per type and file, the
+    * row count `nf` and cents `cf`). */
+  private val SplitCentsCtes: String = """WITH e AS (SELECT event_type, event_id % 8 AS f,
+                          CAST(round(value * 100) AS BIGINT) AS cents
+                   FROM events),
+        g AS (SELECT event_type, f, CAST(COUNT(*) AS BIGINT) AS nf,
+                     CAST(SUM(cents) AS BIGINT) AS cf
+              FROM e GROUP BY 1, 2)"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -1526,13 +1564,7 @@ object StreamingGate {
     // streaming law: duplicate-delivery idempotence.
     "q149_streamed_replay_dedup" -> QueryDef(
       build = (spark, dir) => streamedReplayDedup(spark, dir),
-      oracle = Some("""
-        SELECT event_type, COUNT(*) AS n,
-               CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct,
-               CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                 AS cents_total
-        FROM events
-        GROUP BY event_type ORDER BY event_type"""))
+      oracle = Some(ReplayRollupOracle))
   ) :+ (
 
     // ---- q168: streamed stream-static broadcast enrichment ----
@@ -1579,28 +1611,7 @@ object StreamingGate {
       build = (spark, dir) => streamedNearDupPairs(spark,
         spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), col("text"))),
-      oracle = Some("""
-        WITH sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
-          FROM documents),
-        ex AS (
-          SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
-          FROM sh WHERE len(shingles) > 0),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS n_common
-          FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4)
-        SELECT doc_a, doc_b, n_common,
-               ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) AS jaccard
-        FROM pairs
-        WHERE ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) >= 0.4
-        ORDER BY doc_a, doc_b""")) ) :+ (
+      oracle = Some(Det.sqlJaccardPairs("0.4", ""))) ) :+ (
 
     // ---- q184: streamed dedup with BOUNDED state (within-watermark) ----
     // q149's duplicate-delivery idempotence law, re-proven on the API
@@ -1619,13 +1630,7 @@ object StreamingGate {
     // completeness under the delay-covers-span condition.
     "q184_streamed_watermark_dedup" -> QueryDef(
       build = (spark, dir) => streamedWatermarkDedup(spark, dir),
-      oracle = Some("""
-        SELECT event_type, COUNT(*) AS n,
-               CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct,
-               CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                 AS cents_total
-        FROM events
-        GROUP BY event_type ORDER BY event_type"""))) :+ (
+      oracle = Some(ReplayRollupOracle))) :+ (
 
     // ---- q187: streamed LEFT OUTER interval join, oracle-backed ----
     // Completes the streaming-join family (q140 inner, q168
@@ -1640,13 +1645,9 @@ object StreamingGate {
     // clock that covers the corpus.
     "q187_streamed_outer_join" -> QueryDef(
       build = (spark, dir) => streamedOuterJoin(spark, dir),
-      oracle = Some("""
-        WITH v AS (SELECT user_id, event_id AS view_id,
-                          CAST(ts AS TIMESTAMP) AS vt
-                   FROM events WHERE event_type = 'view'),
-        p AS (SELECT user_id, event_id AS purchase_id,
-                     CAST(ts AS TIMESTAMP) AS pt
-              FROM events WHERE event_type = 'purchase')
+      oracle = Some(s"""
+        WITH ${sqlSide("v", "view", "vt")},
+        ${sqlSide("p", "purchase", "pt")}
         SELECT v.user_id, v.view_id, p.purchase_id
         FROM v LEFT JOIN p
           ON p.user_id = v.user_id
@@ -1850,13 +1851,9 @@ object StreamingGate {
     "q201_streamed_full_outer_join" -> QueryDef(
       build = (spark, dir) =>
         streamedOuterJoin(spark, dir, "full_outer", "q201"),
-      oracle = Some("""
-        WITH v AS (SELECT user_id, event_id AS view_id,
-                          CAST(ts AS TIMESTAMP) AS vt
-                   FROM events WHERE event_type = 'view'),
-        p AS (SELECT user_id, event_id AS purchase_id,
-                     CAST(ts AS TIMESTAMP) AS pt
-              FROM events WHERE event_type = 'purchase')
+      oracle = Some(s"""
+        WITH ${sqlSide("v", "view", "vt")},
+        ${sqlSide("p", "purchase", "pt")}
         SELECT COALESCE(v.user_id, p.user_id) AS user_id,
                v.view_id, p.purchase_id
         FROM v FULL JOIN p
@@ -1876,16 +1873,10 @@ object StreamingGate {
     // interval join exactly.
     "q250_streamed_triple_join" -> QueryDef(
       build = (spark, dir) => streamedTripleJoin(spark, dir),
-      oracle = Some("""
-        WITH v AS (SELECT user_id, event_id AS view_id,
-                          CAST(ts AS TIMESTAMP) AS vt
-                   FROM events WHERE event_type = 'view'),
-        c AS (SELECT user_id, event_id AS click_id,
-                     CAST(ts AS TIMESTAMP) AS ct
-              FROM events WHERE event_type = 'click'),
-        p AS (SELECT user_id, event_id AS purchase_id,
-                     CAST(ts AS TIMESTAMP) AS pt
-              FROM events WHERE event_type = 'purchase')
+      oracle = Some(s"""
+        WITH ${sqlSide("v", "view", "vt")},
+        ${sqlSide("c", "click", "ct")},
+        ${sqlSide("p", "purchase", "pt")}
         SELECT v.user_id, v.view_id, c.click_id, p.purchase_id
         FROM v JOIN c
           ON c.user_id = v.user_id
@@ -1905,13 +1896,9 @@ object StreamingGate {
     // quadrupled pairs from dup×dup).
     "q256_streamed_dedup_join" -> QueryDef(
       build = (spark, dir) => streamedDedupJoin(spark, dir),
-      oracle = Some("""
-        WITH v AS (SELECT user_id, event_id AS view_id,
-                          CAST(ts AS TIMESTAMP) AS vt
-                   FROM events WHERE event_type = 'view'),
-        p AS (SELECT user_id, event_id AS purchase_id,
-                     CAST(ts AS TIMESTAMP) AS pt
-              FROM events WHERE event_type = 'purchase')
+      oracle = Some(s"""
+        WITH ${sqlSide("v", "view", "vt")},
+        ${sqlSide("p", "purchase", "pt")}
         SELECT v.user_id, v.view_id, p.purchase_id
         FROM v JOIN p
           ON p.user_id = v.user_id
@@ -1972,13 +1959,8 @@ object StreamingGate {
     // shuffles |types| deltas — the dashboard pattern at any scale.
     "q275_streamed_update_history" -> QueryDef(
       build = (spark, dir) => streamedUpdateHistory(spark, dir),
-      oracle = Some("""
-        WITH e AS (SELECT event_type, event_id % 8 AS f,
-                          CAST(round(value * 100) AS BIGINT) AS cents
-                   FROM events),
-        g AS (SELECT event_type, f, CAST(COUNT(*) AS BIGINT) AS nf,
-                     CAST(SUM(cents) AS BIGINT) AS cf
-              FROM e GROUP BY 1, 2),
+      oracle = Some(s"""
+        $SplitCentsCtes,
         p AS (SELECT event_type,
                      CAST(SUM(nf) OVER w AS BIGINT) AS n,
                      CAST(SUM(cf) OVER w AS BIGINT) AS cents_total
@@ -2038,13 +2020,8 @@ object StreamingGate {
     // is exactly the contract that makes that trade sound.
     "q285_streamed_complete_history" -> QueryDef(
       build = (spark, dir) => streamedCompleteHistory(spark, dir),
-      oracle = Some("""
-        WITH e AS (SELECT event_type, event_id % 8 AS f,
-                          CAST(round(value * 100) AS BIGINT) AS cents
-                   FROM events),
-        g AS (SELECT event_type, f, CAST(COUNT(*) AS BIGINT) AS nf,
-                     CAST(SUM(cents) AS BIGINT) AS cf
-              FROM e GROUP BY 1, 2),
+      oracle = Some(s"""
+        $SplitCentsCtes,
         c AS (SELECT event_type, f,
                      CAST(SUM(nf) OVER w AS BIGINT) AS n,
                      CAST(SUM(cf) OVER w AS BIGINT) AS cents_total
@@ -2505,9 +2482,8 @@ object StreamingGate {
       g.resetTable(table)
       val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_type"), col("event_id"),
-          round(col("value") * 100).cast(LongType).as("cents"))
-      val schema = g.stageFiles(
-        (0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
+          cents.as("cents"))
+      val schema = g.stageSplit(ev, "event_id")
       g.drain(g.source(schema, maxFilesPerTrigger = 1)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -2524,14 +2500,11 @@ object StreamingGate {
     val wrk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("batch_id"))
       .orderBy(col("cents_total").desc, col("event_type"))
-    val out = spark.table(table)
-      .withColumn("lb_rank", row_number().over(wrk).cast(LongType))
-      .select(col("batch_id"), col("lb_rank"), col("event_type"),
-        col("n"), col("cents_total"))
-      .orderBy(col("batch_id"), col("lb_rank"))
-      .localCheckpoint(false)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    out
+    readAndDrop(spark, table)(
+      _.withColumn("lb_rank", row_number().over(wrk).cast(LongType))
+        .select(col("batch_id"), col("lb_rank"), col("event_type"),
+          col("n"), col("cents_total"))
+        .orderBy(col("batch_id"), col("lb_rank")))
   }
 
   /** Run the streamed weighted-sampling gate to completion: the orders
@@ -2558,8 +2531,7 @@ object StreamingGate {
       val o = Tables.orders(spark, dir).select(
         col("o_orderkey").cast("long").as("id"),
         round(col("o_totalprice") * 100).cast("long").as("w"))
-      val schema = g.stageFiles(
-        (0 until 8).map(f => o.filter(col("id") % 8 === f)))
+      val schema = g.stageSplit(o, "id")
       g.drain(g.source(schema, maxFilesPerTrigger = 1)
         // the E–S key, in-row and stateless (the q264 arithmetic):
         // u = (md5-48bit + 1)/2^48, e = round(ln u, 9)/w — largest-k
@@ -2609,7 +2581,7 @@ object StreamingGate {
         (Long, Long, Long, Long)]()
       val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_id"),
-          round(col("value") * 100).cast(LongType).as("cents"))
+          cents.as("cents"))
       // static reference: the full-corpus cumulative distribution on
       // its own value grid (broadcast-sized: |distinct cents| rows)
       val wv = org.apache.spark.sql.expressions.Window.orderBy(col("cents"))
@@ -2621,8 +2593,7 @@ object StreamingGate {
         .select(col("cents"), col("rcum"))
         .localCheckpoint(false)
       val nRef = ev.count()
-      val schema = g.stageFiles(
-        (0 until 8).map(f => ev.filter(col("event_id") % 8 === f)))
+      val schema = g.stageSplit(ev, "event_id")
       g.drain(g.source(schema, maxFilesPerTrigger = 1))(
         _.foreachBatch { (batch: DataFrame, id: Long) =>
           val bc = batch.groupBy(col("cents")).agg(count(lit(1)).as("bc"))
@@ -2684,7 +2655,7 @@ object StreamingGate {
       a.resetTable(table)
       val ev = Tables.eventsRaw(spark, dir)
         .select(col("event_id"), col("event_type"),
-          round(col("value") * 100).cast(LongType).as("cents"))
+          cents.as("cents"))
       Seq(a, b).zipWithIndex.foreach { case (g, parity) =>
         g.stageFiles((0 until 4).map(f => ev.filter(
           col("event_id") % 2 === parity &&
@@ -2715,21 +2686,18 @@ object StreamingGate {
       await(writer(b, b.dir("ckpt_replay"), 100L))
       spark.catalog.refreshTable(table)
       val c2 = spark.table(table).count()
-      val out = spark.table(table)
-        .groupBy(col(IdempotentParquetSink.BatchCol).cast(LongType)
-          .as("batch_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("cents")).as("sum_cents"),
-          sum(col("event_id")).as("sum_eid"))
-        .select(col("batch_id"),
-          when(col("batch_id") >= 100L, lit("b")).otherwise(lit("a"))
-            .as("writer"),
-          col("n"), col("sum_cents"), col("sum_eid"),
-          lit(c2 - c1).as("replay_delta"))
-        .orderBy(col("batch_id"))
-        .localCheckpoint(false)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      out
+      readAndDrop(spark, table)(
+        _.groupBy(col(IdempotentParquetSink.BatchCol).cast(LongType)
+            .as("batch_id"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("cents")).as("sum_cents"),
+            sum(col("event_id")).as("sum_eid"))
+          .select(col("batch_id"),
+            when(col("batch_id") >= 100L, lit("b")).otherwise(lit("a"))
+              .as("writer"),
+            col("n"), col("sum_cents"), col("sum_eid"),
+            lit(c2 - c1).as("replay_delta"))
+          .orderBy(col("batch_id")))
     }}
   }
 }

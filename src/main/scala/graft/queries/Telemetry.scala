@@ -111,7 +111,7 @@ object Telemetry {
                  CAST(round(latitude * 1000000) AS BIGINT) AS lat_u,
                  CAST(round(longitude * 1000000) AS BIGINT) AS lon_u,
                  radians(latitude) AS rlat, radians(longitude) AS rlon
-          FROM read_parquet('${Gps.VerifyOutToken}/_q70_input/*.parquet')),
+          FROM ${VerifyInputs.staged("_q70_input")}),
         gb AS (SELECT *, lat_u // 100000 AS band FROM g),
         cand AS (
           SELECT a.ts ats, b.ts bts, a.vehicle_id av, b.vehicle_id bv,
@@ -190,7 +190,7 @@ object Telemetry {
           SELECT vehicle_id, "timestamp" AS ts,
                  epoch(CAST("timestamp" AS TIMESTAMP)) AS sec,
                  latitude, longitude, speed_kmh
-          FROM read_parquet('${Gps.VerifyOutToken}/_q70_input/*.parquet')),
+          FROM ${VerifyInputs.staged("_q70_input")}),
         f AS (
           SELECT *, CASE WHEN lag(sec) OVER w IS NULL
                            OR sec - lag(sec) OVER w > 60
@@ -326,15 +326,15 @@ object Telemetry {
                    AS slat,
                  CAST(round(longitude * 1000000) AS BIGINT) + 180000000
                    AS slon
-          FROM read_parquet('${Gps.VerifyOutToken}/_q70_input/*.parquet')
+          FROM ${VerifyInputs.staged("_q70_input")}
           UNION ALL
           SELECT (10 + 15 * (id % 5)) * 2000000 + 1000000 + $jitX,
                  (20 + 30 * (id % 5)) * 2000000 + 1000000 + $jitY
           FROM (SELECT rn - 1 AS id FROM (
                   SELECT ROW_NUMBER() OVER () AS rn FROM
-                    read_parquet('${Gps.VerifyOutToken}/_q70_input/*.parquet'))
+                    ${VerifyInputs.staged("_q70_input")})
                 WHERE rn <= (SELECT COUNT(*) // 50 FROM
-                  read_parquet('${Gps.VerifyOutToken}/_q70_input/*.parquet')))),
+                  ${VerifyInputs.staged("_q70_input")}))),
         cells AS MATERIALIZED (
           SELECT slat // 2000000 AS cx, slon // 2000000 AS cy,
                  CAST(COUNT(*) AS BIGINT) AS cnt

@@ -201,28 +201,7 @@ object Text {
         graft.operators.NgramJaccard.similarPairs(ex, 0.2)
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      oracle = Some("""
-        WITH sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
-          FROM documents),
-        ex AS (
-          SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
-          FROM sh WHERE len(shingles) > 0),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS n_common
-          FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4)
-        SELECT doc_a, doc_b, n_common,
-               ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) AS jaccard
-        FROM pairs
-        WHERE ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) >= 0.2
-        ORDER BY doc_a, doc_b"""),
+      oracle = Some(Det.sqlJaccardPairs("0.2", "")),
       headline = true),
 
     // ---- q352: the shingle-join census behind q44's one form (round 13) ----
@@ -266,14 +245,10 @@ object Text {
             when(col("mass_per_doc_milli") > xoMilli, "prefix")
               .otherwise("naive").as("decision"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH sh AS (
           SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
+                 ${Det.sqlShingles} AS shingles
           FROM documents),
         ex AS (
           SELECT doc_id, UNNEST(shingles) AS shingle
@@ -311,7 +286,7 @@ object Text {
         SELECT predicted, COUNT(*) AS n_docs,
                CAST(SUM(CASE WHEN lang = predicted THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_label_match
-        FROM read_parquet('${Gps.VerifyOutToken}/_q49_input/*.parquet')
+        FROM ${VerifyInputs.staged("_q49_input")}
         GROUP BY predicted ORDER BY predicted""")),
 
     // ---- q48: token counting, whitespace + BPE-ish regex ----
@@ -1034,7 +1009,7 @@ object Text {
               " AS BIGINT)").as("planted"))
           .orderBy(col("doc_small"), col("doc_big"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH aug AS MATERIALIZED (
           SELECT d.doc_id,
                  CASE WHEN d.doc_id % 25 = 0 AND n.text IS NOT NULL
@@ -1044,11 +1019,7 @@ object Text {
           LEFT JOIN documents n ON n.doc_id = d.doc_id + 1),
         sh AS MATERIALIZED (
           SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\s+')[i+2])) AS shingles
+                 ${Det.sqlShingles} AS shingles
           FROM aug),
         ex AS MATERIALIZED (
           SELECT doc_id, CAST(len(shingles) AS BIGINT) AS n_sh,

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.core.Tables
 import graft.operators.BpeTrainer
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Tokenizer training over `documents` — the step a training-data pipeline
@@ -28,22 +27,20 @@ object Tokenizer {
   private val BatchedMerges = 64
   private val BatchedRounds = 8 // static unroll; completion rounds no-op
 
-  /** Unrolled n-round BPE oracle (see object doc for the encoding). */
-  private def bpeOracle(n: Int): String = {
-    val head =
-      """
-        WITH w AS (SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS freq
-                   FROM (SELECT unnest(string_split(trim(text), ' ')) AS term
-                         FROM documents)
-                   WHERE length(term) >= 2 GROUP BY term),
-        v0 AS (SELECT '||' || array_to_string(string_split(word, ''), '||')
-                      || '||' AS s, freq FROM w)"""
+  /** The unrolled BPE merge rounds of [[BpeTrainer]] over the corpus
+    * words: `w` (word counts; `filter` goes before its GROUP BY), `v0`
+    * (each word as `||`-delimited characters), then for each round
+    * k ≤ n the pair counts `p$k`, the argmax merge `b$k` and the merged
+    * strings `v$k` (left out for round n unless `applyLast`). `carry`
+    * = "word, " keeps the word column through the `v` CTEs. */
+  private def bpeRounds(n: Int, filter: String, carry: String,
+      applyLast: Boolean): String = {
     val rounds = (1 to n).map { k =>
       val prev = k - 1
       val vNext =
-        if (k == n) "" // last round's merged strings are never re-counted
+        if (k == n && !applyLast) ""
         else s""",
-        v$k AS (SELECT replace(s, '|' || b$k.l || '||' || b$k.r || '|',
+        v$k AS (SELECT ${carry}replace(s, '|' || b$k.l || '||' || b$k.r || '|',
                                '|' || b$k.l || b$k.r || '|') AS s, freq
                 FROM v$prev, b$k)"""
       s""",
@@ -56,11 +53,24 @@ object Tokenizer {
                 GROUP BY 1, 2),
         b$k AS (SELECT l, r, cnt FROM p$k ORDER BY cnt DESC, l, r LIMIT 1)$vNext"""
     }.mkString
+    s"""
+        WITH w AS (SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS freq
+                   FROM (SELECT unnest(string_split(trim(text), ' ')) AS term
+                         FROM documents)
+                   ${filter}GROUP BY term),
+        v0 AS (SELECT $carry'||' || array_to_string(string_split(word, ''), '||')
+                      || '||' AS s, freq FROM w)$rounds"""
+  }
+
+  /** Unrolled n-round BPE oracle (see object doc for the encoding). */
+  private def bpeOracle(n: Int): String = {
+    // the last round's merged strings are never re-counted
+    val rounds = bpeRounds(n, "WHERE length(term) >= 2 ", "", applyLast = false)
     val sel = (1 to n).map { k =>
       s"""SELECT CAST($k AS BIGINT) AS rank, l AS left_sym, r AS right_sym,
                  l || r AS merged, CAST(cnt AS BIGINT) AS cnt FROM b$k"""
     }.mkString(" UNION ALL ")
-    s"$head$rounds\nSELECT * FROM ($sel) ORDER BY rank"
+    s"$rounds\nSELECT * FROM ($sel) ORDER BY rank"
   }
 
   val defs: Seq[(String, QueryDef)] = Seq(
@@ -112,7 +122,6 @@ object Tokenizer {
     // window).
     "q100_pretokenize_pack" -> QueryDef(
       build = (spark, dir) => {
-        val capacity = 2048L
         val docs = Tables.documents(spark, dir)
         val merges = BpeTrainer.train(docs, "text", Rounds)
         val d = BpeTrainer.encode(docs, "text", merges)
@@ -122,23 +131,7 @@ object Tokenizer {
               .cast("binary")).as("pick"))
           .withColumn("shard",
             (ascii(substring(col("pick"), 1, 1)) % 4).cast("long"))
-        val w = Window.partitionBy(col("shard"))
-          .orderBy(col("pick"), col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        d.withColumn("cum", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-          .withColumn("pack_id",
-            floor(col("cum").cast("double") / lit(capacity.toDouble)))
-          .groupBy(col("shard"), col("pack_id"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("total_tokens"),
-            min(col("doc_id")).as("min_doc"),
-            max(col("doc_id")).as("max_doc"))
-          .withColumn("fill_frac",
-            round(col("total_tokens").cast("double") / lit(capacity.toDouble), 6))
-          .select(col("shard"), col("pack_id"), col("n_docs"),
-            col("total_tokens"), col("fill_frac"), col("min_doc"),
-            col("max_doc"))
-          .orderBy(col("shard"), col("pack_id"))
+        Training.packStats(d)
       },
       oracle = Some(packOracle(Rounds))),
 
@@ -388,30 +381,8 @@ object Tokenizer {
   /** q205's oracle: the q100 word-carrying merge rounds → per-word
     * post-BPE token counts → per-source rollup over word occurrences. */
   private def fertilityOracle(n: Int): String = {
-    val head =
-      """
-        WITH w AS (SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS freq
-                   FROM (SELECT unnest(string_split(trim(text), ' ')) AS term
-                         FROM documents)
-                   GROUP BY term),
-        v0 AS (SELECT word, '||' || array_to_string(string_split(word, ''),
-                      '||') || '||' AS s, freq FROM w)"""
-    val rounds = (1 to n).map { k =>
-      val prev = k - 1
-      s""",
-        p$k AS (SELECT syms[i] AS l, syms[i+1] AS r, SUM(freq) AS cnt
-                FROM (SELECT list_filter(string_split(s, '||'),
-                                         x -> x <> '') AS syms, freq
-                      FROM v$prev),
-                     LATERAL (SELECT unnest(generate_series(1, len(syms)-1))
-                              AS i) t
-                GROUP BY 1, 2),
-        b$k AS (SELECT l, r, cnt FROM p$k ORDER BY cnt DESC, l, r LIMIT 1),
-        v$k AS (SELECT word, replace(s, '|' || b$k.l || '||' || b$k.r || '|',
-                               '|' || b$k.l || b$k.r || '|') AS s, freq
-                FROM v$prev, b$k)"""
-    }.mkString
-    s"""$head$rounds,
+    val rounds = bpeRounds(n, "", "word, ", applyLast = true)
+    s"""$rounds,
         wl AS (SELECT word, CAST(len(list_filter(string_split(s, '||'),
                       x -> x <> '')) AS BIGINT) AS n_word_toks,
                       CAST(length(word) AS BIGINT) AS n_word_chars
@@ -440,30 +411,8 @@ object Tokenizer {
     * then per-word post-BPE symbol counts → per-doc token rollup →
     * q87's packing windows. */
   private def packOracle(n: Int): String = {
-    val head =
-      """
-        WITH w AS (SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS freq
-                   FROM (SELECT unnest(string_split(trim(text), ' ')) AS term
-                         FROM documents)
-                   GROUP BY term),
-        v0 AS (SELECT word, '||' || array_to_string(string_split(word, ''),
-                      '||') || '||' AS s, freq FROM w)"""
-    val rounds = (1 to n).map { k =>
-      val prev = k - 1
-      s""",
-        p$k AS (SELECT syms[i] AS l, syms[i+1] AS r, SUM(freq) AS cnt
-                FROM (SELECT list_filter(string_split(s, '||'),
-                                         x -> x <> '') AS syms, freq
-                      FROM v$prev),
-                     LATERAL (SELECT unnest(generate_series(1, len(syms)-1))
-                              AS i) t
-                GROUP BY 1, 2),
-        b$k AS (SELECT l, r, cnt FROM p$k ORDER BY cnt DESC, l, r LIMIT 1),
-        v$k AS (SELECT word, replace(s, '|' || b$k.l || '||' || b$k.r || '|',
-                               '|' || b$k.l || b$k.r || '|') AS s, freq
-                FROM v$prev, b$k)"""
-    }.mkString
-    s"""$head$rounds,
+    val rounds = bpeRounds(n, "", "word, ", applyLast = true)
+    s"""$rounds,
         wl AS (SELECT word, CAST(len(list_filter(string_split(s, '||'),
                       x -> x <> '')) AS BIGINT) AS n_word_toks FROM v$n),
         tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term
@@ -477,47 +426,14 @@ object Tokenizer {
               FROM dtok dt JOIN documents doc ON doc.doc_id = dt.doc_id),
         sh AS (SELECT *, CAST(ascii(substring(pick, 1, 1)) % 4 AS BIGINT)
                            AS shard FROM d),
-        c AS (SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-                ORDER BY pick, doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-              FROM sh),
-        p AS (SELECT *, CAST(FLOOR(CAST(cum AS DOUBLE) / 2048) AS BIGINT)
-                          AS pack_id
-              FROM c)
-        SELECT shard, pack_id, COUNT(*) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-               ROUND(CAST(SUM(n_tokens) AS DOUBLE) / 2048, 6) AS fill_frac,
-               MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-        FROM p GROUP BY shard, pack_id ORDER BY shard, pack_id"""
+        ${Training.sqlPack("sh")}"""
   }
 
   /** q99's oracle: q95's unrolled rounds, then a token histogram over the
     * round-`n` symbol strings of ALL words (weighted by word frequency). */
   private def bpeEncodeOracle(n: Int): String = {
-    val head =
-      """
-        WITH w AS (SELECT term AS word, CAST(COUNT(*) AS BIGINT) AS freq
-                   FROM (SELECT unnest(string_split(trim(text), ' ')) AS term
-                         FROM documents)
-                   GROUP BY term),
-        v0 AS (SELECT '||' || array_to_string(string_split(word, ''), '||')
-                      || '||' AS s, freq FROM w)"""
-    val rounds = (1 to n).map { k =>
-      val prev = k - 1
-      s""",
-        p$k AS (SELECT syms[i] AS l, syms[i+1] AS r, SUM(freq) AS cnt
-                FROM (SELECT list_filter(string_split(s, '||'),
-                                         x -> x <> '') AS syms, freq
-                      FROM v$prev),
-                     LATERAL (SELECT unnest(generate_series(1, len(syms)-1))
-                              AS i) t
-                GROUP BY 1, 2),
-        b$k AS (SELECT l, r, cnt FROM p$k ORDER BY cnt DESC, l, r LIMIT 1),
-        v$k AS (SELECT replace(s, '|' || b$k.l || '||' || b$k.r || '|',
-                               '|' || b$k.l || b$k.r || '|') AS s, freq
-                FROM v$prev, b$k)"""
-    }.mkString
-    s"""$head$rounds
+    val rounds = bpeRounds(n, "", "", applyLast = true)
+    s"""$rounds
         SELECT token, CAST(SUM(freq) AS BIGINT) AS cnt
         FROM (SELECT unnest(list_filter(string_split(s, '||'),
                                         x -> x <> '')) AS token, freq

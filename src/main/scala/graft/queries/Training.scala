@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -24,6 +25,56 @@ object Training {
   /** Engine-portable pick key (see [[Curation]]): md5 is identical in
     * Spark and DuckDB, xxhash64 is not. */
   import Curation.{pickKey, SqlPickKey}
+
+  /** Greedy contiguous packing into 2048-token sequences, per shard: over
+    * (doc_id, n_tokens, pick, shard), each doc goes to pack
+    * floor(tokens before it in (pick, doc_id) order / 2048); returns the
+    * per-(shard, pack_id) report of q87 and q100. */
+  private[queries] def packStats(d: DataFrame): DataFrame = {
+    val capacity = 2048L
+    val w = Window.partitionBy(col("shard"))
+      .orderBy(col("pick"), col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    d.withColumn("cum", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+      .withColumn("pack_id",
+        floor(col("cum").cast("double") / lit(capacity.toDouble)))
+      .groupBy(col("shard"), col("pack_id"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("total_tokens"),
+        min(col("doc_id")).as("min_doc"),
+        max(col("doc_id")).as("max_doc"))
+      .withColumn("fill_frac",
+        round(col("total_tokens").cast("double") / lit(capacity.toDouble), 6))
+      .select(col("shard"), col("pack_id"), col("n_docs"),
+        col("total_tokens"), col("fill_frac"), col("min_doc"), col("max_doc"))
+      .orderBy(col("shard"), col("pack_id"))
+  }
+
+  /** DuckDB mirror of [[packStats]] over the CTE `src` (doc_id,
+    * n_tokens, pick, shard): the `c` and `p` CTEs and the report. */
+  private[queries] def sqlPack(src: String): String =
+    s"""c AS (SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
+                ORDER BY pick, doc_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+              FROM $src),
+        p AS (SELECT *, CAST(FLOOR(CAST(cum AS DOUBLE) / 2048) AS BIGINT)
+                          AS pack_id
+              FROM c)
+        SELECT shard, pack_id, COUNT(*) AS n_docs,
+               CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
+               ROUND(CAST(SUM(n_tokens) AS DOUBLE) / 2048, 6) AS fill_frac,
+               MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
+        FROM p GROUP BY shard, pack_id ORDER BY shard, pack_id"""
+
+  /** The bigram-LM scoring tail of q112 and q178: per document, the mean
+    * `model` NLL over its bigrams `bg`; the 20 least likely documents. */
+  private val NllTopTail: String = """s AS (SELECT bg.doc_id, COUNT(*) AS n_bigrams,
+                     CAST(SUM(CAST(m.nll AS DECIMAL(28,9))) AS DOUBLE) AS sum_nll
+              FROM bg JOIN model m ON m.gram = bg.gram
+              GROUP BY bg.doc_id)
+        SELECT doc_id, n_bigrams,
+               ROUND(sum_nll / n_bigrams, 6) AS mean_nll
+        FROM s ORDER BY mean_nll DESC, doc_id ASC LIMIT 20"""
 
   val defs: Seq[(String, QueryDef)] = Seq(
 
@@ -253,28 +304,12 @@ object Training {
     // asserts invariance under repartition).
     "q87_sequence_packing" -> QueryDef(
       build = (spark, dir) => {
-        val capacity = 2048L
         val d = Tables.documents(spark, dir)
           .select(col("doc_id"),
             size(split(trim(col("text")), " ")).cast("long").as("n_tokens"),
             pickKey.as("pick"))
           .withColumn("shard", (ascii(substring(col("pick"), 1, 1)) % 4).cast("long"))
-        val w = Window.partitionBy(col("shard"))
-          .orderBy(col("pick"), col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        d.withColumn("cum", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-          .withColumn("pack_id",
-            floor(col("cum").cast("double") / lit(capacity.toDouble)))
-          .groupBy(col("shard"), col("pack_id"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("total_tokens"),
-            min(col("doc_id")).as("min_doc"),
-            max(col("doc_id")).as("max_doc"))
-          .withColumn("fill_frac",
-            round(col("total_tokens").cast("double") / lit(capacity.toDouble), 6))
-          .select(col("shard"), col("pack_id"), col("n_docs"),
-            col("total_tokens"), col("fill_frac"), col("min_doc"), col("max_doc"))
-          .orderBy(col("shard"), col("pack_id"))
+        packStats(d)
       },
       oracle = Some(s"""
         WITH d AS (SELECT doc_id,
@@ -285,18 +320,7 @@ object Training {
         s AS (SELECT doc_id, n_tokens, pick,
                      CAST(ascii(substring(pick, 1, 1)) % 4 AS BIGINT) AS shard
               FROM d),
-        c AS (SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-                ORDER BY pick, doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-              FROM s),
-        p AS (SELECT *, CAST(FLOOR(CAST(cum AS DOUBLE) / 2048) AS BIGINT)
-                          AS pack_id
-              FROM c)
-        SELECT shard, pack_id, COUNT(*) AS n_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-               ROUND(CAST(SUM(n_tokens) AS DOUBLE) / 2048, 6) AS fill_frac,
-               MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-        FROM p GROUP BY shard, pack_id ORDER BY shard, pack_id""")),
+        ${sqlPack("s")}""")),
 
     // ---- q88: unigram LM quality scoring (CCNet-style) ----
     // Score every document by the mean negative log-likelihood of its
@@ -524,7 +548,7 @@ object Training {
           .orderBy(col("mean_nll").desc, col("doc_id").asc)
           .limit(20)
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
                    FROM documents),
         n AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 2),
@@ -539,13 +563,7 @@ object Training {
                          ROUND(-LN((bi.c2 + 1) / CAST(u.c1 + vocab.v AS DOUBLE)), 9)
                            AS nll
                   FROM bi JOIN u ON u.w1 = bi.w1, vocab),
-        s AS (SELECT bg.doc_id, COUNT(*) AS n_bigrams,
-                     CAST(SUM(CAST(m.nll AS DECIMAL(28,9))) AS DOUBLE) AS sum_nll
-              FROM bg JOIN model m ON m.gram = bg.gram
-              GROUP BY bg.doc_id)
-        SELECT doc_id, n_bigrams,
-               ROUND(sum_nll / n_bigrams, 6) AS mean_nll
-        FROM s ORDER BY mean_nll DESC, doc_id ASC LIMIT 20""")),
+        $NllTopTail""")),
 
     // ---- q178: interpolated Kneser–Ney bigram scoring ----
     // The production n-gram smoothing (what KenLM builds) to q112's
@@ -600,7 +618,7 @@ object Training {
           .orderBy(col("mean_nll").desc, col("doc_id").asc)
           .limit(20)
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
                    FROM documents),
         n AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 2),
@@ -619,13 +637,7 @@ object Training {
                            * (CAST(bk.n1b AS DOUBLE) / ty.tt)), 9) AS nll
                   FROM bi JOIN ctx ON ctx.w1 = bi.w1
                           JOIN bk ON bk.w2 = bi.w2, ty),
-        s AS (SELECT bg.doc_id, COUNT(*) AS n_bigrams,
-                     CAST(SUM(CAST(m.nll AS DECIMAL(28,9))) AS DOUBLE) AS sum_nll
-              FROM bg JOIN model m ON m.gram = bg.gram
-              GROUP BY bg.doc_id)
-        SELECT doc_id, n_bigrams,
-               ROUND(sum_nll / n_bigrams, 6) AS mean_nll
-        FROM s ORDER BY mean_nll DESC, doc_id ASC LIMIT 20""")),
+        $NllTopTail""")),
 
     // ---- q262: skip-gram pairs with frequency subsampling ----
     // The word2vec data-prep operator (Mikolov et al. '13): frequent

@@ -37,6 +37,30 @@ object Vectors {
       .select(col("qid"), col("vec_id"), lit(true).as("in_exact_topk"))
   }
 
+  /** Oracle tail of the candidate-then-rerank ANN gates (q51, q54): exact
+    * cosine over the `cand` (qid, vec_id) pairs, top-5 per query, and the
+    * [[exactTopK]] evidence column, over `e` (vec_id, emb). */
+  private val RerankTopKTail: String = """s AS (SELECT c.qid, c.vec_id,
+                     list_cosine_similarity(eq.emb, ec.emb) AS cos
+              FROM cand c
+              JOIN e eq ON eq.vec_id = c.qid
+              JOIN e ec ON ec.vec_id = c.vec_id),
+        r AS (SELECT qid, vec_id, cos,
+                     ROW_NUMBER() OVER (PARTITION BY qid
+                       ORDER BY cos DESC, vec_id) AS rn
+              FROM s),
+        ex AS (SELECT qid, vec_id FROM (
+                 SELECT q.vec_id AS qid, c.vec_id,
+                        ROW_NUMBER() OVER (PARTITION BY q.vec_id
+                          ORDER BY list_cosine_similarity(q.emb, c.emb) DESC,
+                                   c.vec_id) AS xrn
+                 FROM e q JOIN e c ON c.vec_id != q.vec_id
+                 WHERE q.vec_id < 10) WHERE xrn <= 5)
+        SELECT r.qid, r.rn, r.vec_id, ROUND(r.cos, 6) AS cosine,
+               (ex.vec_id IS NOT NULL) AS in_exact_topk
+        FROM r LEFT JOIN ex ON ex.qid = r.qid AND ex.vec_id = r.vec_id
+        WHERE r.rn <= 5 ORDER BY r.qid, r.rn"""
+
   /** q351's planted-copy offset and stride (shared with VerifyInputs). */
   private[queries] val PlantOff = 10000000L
   private[queries] val PlantEvery = 25L
@@ -131,6 +155,42 @@ object Vectors {
       .select(col("id_a"), col("id_b"), col("margin_ppm"))
   }
 
+  /** q50's exact top-5 neighbours by cosine; q58's bounded-heap aggregator
+    * equals it by law. */
+  private val ExactTopKOracle: String = """
+        WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
+                   FROM embeddings WHERE vec_id < 10),
+        c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+        s AS (SELECT qid, vec_id, list_cosine_similarity(qe, e) AS cos
+              FROM q JOIN c ON vec_id != qid),
+        r AS (SELECT qid, vec_id, cos,
+                     ROW_NUMBER() OVER (PARTITION BY qid
+                       ORDER BY cos DESC, vec_id) AS rn
+              FROM s)
+        SELECT qid, rn, vec_id, ROUND(cos, 6) AS cosine
+        FROM r WHERE rn <= 5 ORDER BY qid, rn"""
+
+  /** The staged q351 inputs: `eb` (the planted corpus as (vec_id, emb)) and
+    * `b` (its LSH bucket assignments). */
+  private val PlantedInputCtes: String = s"""WITH eb AS (SELECT vec_id, CAST(list(val ORDER BY j) AS DOUBLE[])
+                      AS emb
+                    FROM ${VerifyInputs.staged("_q351_emb")}
+                    GROUP BY vec_id),
+        b AS (SELECT bucket, vec_id
+              FROM ${VerifyInputs.staged("_q351_input")})"""
+
+  /** Corpus counts of the planted-pair cards: `cnts` (base and planted
+    * vectors in `eb`) and `bits`, the LSH width `autoLshBits`
+    * derives from the corpus size. */
+  private val PlantedCountCtes: String = """cnts AS (SELECT CAST(SUM(CASE WHEN vec_id < 10000000
+                   THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
+                        CAST(SUM(CASE WHEN vec_id >= 10000000
+                   THEN 1 ELSE 0 END) AS BIGINT) AS n_planted
+                 FROM eb),
+        bits AS (SELECT LEAST(24, GREATEST(4,
+                   CAST(CEIL(LOG2((SELECT COUNT(*) FROM eb) / 30.0))
+                     AS BIGINT))) AS lsh_bits)"""
+
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ---- q50: exact brute-force cosine top-k (broadcast query side) ----
@@ -147,18 +207,7 @@ object Vectors {
             round(col("cos"), 6).as("cosine"))
           .orderBy(col("qid"), col("rn"))
       },
-      oracle = Some("""
-        WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
-                   FROM embeddings WHERE vec_id < 10),
-        c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        s AS (SELECT qid, vec_id, list_cosine_similarity(qe, e) AS cos
-              FROM q JOIN c ON vec_id != qid),
-        r AS (SELECT qid, vec_id, cos,
-                     ROW_NUMBER() OVER (PARTITION BY qid
-                       ORDER BY cos DESC, vec_id) AS rn
-              FROM s)
-        SELECT qid, rn, vec_id, ROUND(cos, 6) AS cosine
-        FROM r WHERE rn <= 5 ORDER BY qid, rn"""),
+      oracle = Some(ExactTopKOracle),
       headline = true),
 
     // ---- q51: LSH-bucketed approximate NN (the 100 TB path) ----
@@ -197,31 +246,12 @@ object Vectors {
       },
       oracle = Some(s"""
         WITH b AS (SELECT bucket, vec_id
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q51_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q51_input")}),
         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         cand AS (SELECT DISTINCT qb.vec_id AS qid, cb.vec_id AS vec_id
                  FROM b qb JOIN b cb ON qb.bucket = cb.bucket
                  WHERE qb.vec_id < 10 AND cb.vec_id != qb.vec_id),
-        s AS (SELECT c.qid, c.vec_id,
-                     list_cosine_similarity(eq.emb, ec.emb) AS cos
-              FROM cand c
-              JOIN e eq ON eq.vec_id = c.qid
-              JOIN e ec ON ec.vec_id = c.vec_id),
-        r AS (SELECT qid, vec_id, cos,
-                     ROW_NUMBER() OVER (PARTITION BY qid
-                       ORDER BY cos DESC, vec_id) AS rn
-              FROM s),
-        ex AS (SELECT qid, vec_id FROM (
-                 SELECT q.vec_id AS qid, c.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                          ORDER BY list_cosine_similarity(q.emb, c.emb) DESC,
-                                   c.vec_id) AS xrn
-                 FROM e q JOIN e c ON c.vec_id != q.vec_id
-                 WHERE q.vec_id < 10) WHERE xrn <= 5)
-        SELECT r.qid, r.rn, r.vec_id, ROUND(r.cos, 6) AS cosine,
-               (ex.vec_id IS NOT NULL) AS in_exact_topk
-        FROM r LEFT JOIN ex ON ex.qid = r.qid AND ex.vec_id = r.vec_id
-        WHERE r.rn <= 5 ORDER BY r.qid, r.rn""")),
+        $RerankTopKTail""")),
 
     // ---- q54: IVF-style coarse-quantized ANN (alternate scale path) ----
     // Deterministic coarse index: the k lowest-id vectors serve as cell
@@ -268,14 +298,10 @@ object Vectors {
             round(col("cos"), 6).as("cosine"), col("in_exact_topk"))
           .orderBy(col("qid"), col("rn"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
                    FROM embeddings),
-        cents AS (SELECT vec_id AS cid, emb AS cemb
-                  FROM e ORDER BY vec_id LIMIT 16),
-        sims AS (SELECT e.vec_id, cid,
-                        list_cosine_similarity(e.emb, cemb) AS sim
-                 FROM e CROSS JOIN cents),
+        ${Dedup.CellSimsCtes},
         ranked AS (SELECT vec_id, cid,
                           ROW_NUMBER() OVER (PARTITION BY vec_id
                             ORDER BY sim DESC, cid) AS cr
@@ -286,26 +312,7 @@ object Vectors {
         cand AS (SELECT DISTINCT p.qid, a.vec_id
                  FROM assigned a JOIN probes p ON a.cid = p.cid
                  WHERE a.vec_id != p.qid),
-        s AS (SELECT c.qid, c.vec_id,
-                     list_cosine_similarity(eq.emb, ec.emb) AS cos
-              FROM cand c
-              JOIN e eq ON eq.vec_id = c.qid
-              JOIN e ec ON ec.vec_id = c.vec_id),
-        r AS (SELECT qid, vec_id, cos,
-                     ROW_NUMBER() OVER (PARTITION BY qid
-                       ORDER BY cos DESC, vec_id) AS rn
-              FROM s),
-        ex AS (SELECT qid, vec_id FROM (
-                 SELECT q.vec_id AS qid, c.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                          ORDER BY list_cosine_similarity(q.emb, c.emb) DESC,
-                                   c.vec_id) AS xrn
-                 FROM e q JOIN e c ON c.vec_id != q.vec_id
-                 WHERE q.vec_id < 10) WHERE xrn <= 5)
-        SELECT r.qid, r.rn, r.vec_id, ROUND(r.cos, 6) AS cosine,
-               (ex.vec_id IS NOT NULL) AS in_exact_topk
-        FROM r LEFT JOIN ex ON ex.qid = r.qid AND ex.vec_id = r.vec_id
-        WHERE r.rn <= 5 ORDER BY r.qid, r.rn""")),
+        $RerankTopKTail""")),
 
     // ---- q55: LSH-bucketed near-dup (the benched scale path) ----
     // Candidate generation by multi-table sign-LSH bucket equijoin, exact
@@ -365,7 +372,7 @@ object Vectors {
       // function itself left to spec coverage (VectorsSpec recall/subset).
       oracle = Some(s"""
         WITH b AS (SELECT bucket, vec_id
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q55_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q55_input")}),
         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         cand AS (SELECT DISTINCT a.vec_id AS id_a, bb.vec_id AS id_b
                  FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id)
@@ -440,18 +447,7 @@ object Vectors {
             round(col("cos"), 6).as("cosine"))
           .orderBy(col("qid"), col("rn"))
       },
-      oracle = Some("""
-        WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
-                   FROM embeddings WHERE vec_id < 10),
-        c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        s AS (SELECT qid, vec_id, list_cosine_similarity(qe, e) AS cos
-              FROM q JOIN c ON vec_id != qid),
-        r AS (SELECT qid, vec_id, cos,
-                     ROW_NUMBER() OVER (PARTITION BY qid
-                       ORDER BY cos DESC, vec_id) AS rn
-              FROM s)
-        SELECT qid, rn, vec_id, ROUND(cos, 6) AS cosine
-        FROM r WHERE rn <= 5 ORDER BY qid, rn""")),
+      oracle = Some(ExactTopKOracle)),
 
     // ---- q53: per-label vector statistics ----
     "q53_vector_stats" -> QueryDef(
@@ -756,7 +752,7 @@ object Vectors {
       },
       oracle = Some(s"""
         WITH b AS (SELECT bucket, vec_id
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q55_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q55_input")}),
         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
               FROM embeddings),
         cand AS (SELECT DISTINCT a.vec_id AS ia, bb.vec_id AS ib
@@ -859,7 +855,7 @@ object Vectors {
       },
       oracle = Some(s"""
         WITH b AS (SELECT bucket, vec_id
-                   FROM read_parquet('${Gps.VerifyOutToken}/_q55_input/*.parquet')),
+                   FROM ${VerifyInputs.staged("_q55_input")}),
         e AS (SELECT vec_id, list_transform(embedding, x ->
                 CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS q
               FROM embeddings),
@@ -1625,12 +1621,7 @@ object Vectors {
       // bits value (re-computed from the staged corpus count with the
       // same clamp(ceil(log2(n/30))) law) are all replayed in DuckDB.
       oracle = Some(s"""
-        WITH eb AS (SELECT vec_id, CAST(list(val ORDER BY j) AS DOUBLE[])
-                      AS emb
-                    FROM read_parquet('${Gps.VerifyOutToken}/_q351_emb/*.parquet')
-                    GROUP BY vec_id),
-        b AS (SELECT bucket, vec_id
-              FROM read_parquet('${Gps.VerifyOutToken}/_q351_input/*.parquet')),
+        $PlantedInputCtes,
         cand AS (SELECT DISTINCT a.vec_id AS id_a, bb.vec_id AS id_b
                  FROM b a JOIN b bb
                    ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id),
@@ -1639,14 +1630,7 @@ object Vectors {
                   JOIN eb ea ON ea.vec_id = c.id_a
                   JOIN eb e2 ON e2.vec_id = c.id_b
                   WHERE list_cosine_similarity(ea.emb, e2.emb) >= 0.80),
-        cnts AS (SELECT CAST(SUM(CASE WHEN vec_id < 10000000
-                   THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
-                        CAST(SUM(CASE WHEN vec_id >= 10000000
-                   THEN 1 ELSE 0 END) AS BIGINT) AS n_planted
-                 FROM eb),
-        bits AS (SELECT LEAST(24, GREATEST(4,
-                   CAST(CEIL(LOG2((SELECT COUNT(*) FROM eb) / 30.0))
-                     AS BIGINT))) AS lsh_bits),
+        $PlantedCountCtes,
         pc AS (SELECT CAST(COUNT(*) AS BIGINT) AS pairs_total,
                       CAST(COALESCE(SUM(CASE WHEN id_b = id_a + 10000000
                         THEN 1 ELSE 0 END), 0) AS BIGINT)
@@ -1878,12 +1862,7 @@ object Vectors {
       // the mutual-argmax mining rule, and the precision/recall card are
       // all replayed in DuckDB.
       oracle = Some(s"""
-        WITH eb AS (SELECT vec_id, CAST(list(val ORDER BY j) AS DOUBLE[])
-                      AS emb
-                    FROM read_parquet('${Gps.VerifyOutToken}/_q351_emb/*.parquet')
-                    GROUP BY vec_id),
-        b AS (SELECT bucket, vec_id
-              FROM read_parquet('${Gps.VerifyOutToken}/_q351_input/*.parquet')),
+        $PlantedInputCtes,
         cand AS (SELECT DISTINCT a.vec_id AS id_a, bb.vec_id AS id_b
                  FROM b a JOIN b bb ON a.bucket = bb.bucket
                  WHERE a.vec_id < 10000000 AND bb.vec_id >= 10000000),
@@ -1923,14 +1902,7 @@ object Vectors {
                          (id_b = id_a + 10000000) AS is_true
                   FROM mm
                   WHERE rx = 1 AND ry = 1 AND margin_ppm >= 1200000),
-        cnts AS (SELECT CAST(SUM(CASE WHEN vec_id < 10000000
-                   THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
-                        CAST(SUM(CASE WHEN vec_id >= 10000000
-                   THEN 1 ELSE 0 END) AS BIGINT) AS n_planted
-                 FROM eb),
-        bits AS (SELECT LEAST(24, GREATEST(4,
-                   CAST(CEIL(LOG2((SELECT COUNT(*) FROM eb) / 30.0))
-                     AS BIGINT))) AS lsh_bits),
+        $PlantedCountCtes,
         pc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates FROM pairs),
         mc AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_mined,
                       CAST(COALESCE(SUM(CASE WHEN is_true

@@ -22,6 +22,19 @@ import org.apache.spark.sql.functions._
   */
 object VerifyInputs {
 
+  /** DuckDB read of a staged table: the parquet [[writeAll]] leaves
+    * under `<outDir>/<name>`, addressed through [[Gps.VerifyOutToken]]. */
+  private[queries] def staged(name: String): String =
+    s"read_parquet('${Gps.VerifyOutToken}/$name/*.parquet')"
+
+  /** DuckDB read of q226's staged CSV copy, typed as [[writeAll]] wrote it. */
+  private[queries] def stagedCsv: String =
+    s"""read_csv('${Gps.VerifyOutToken}/_q226_input/*.csv', header = true,
+               quote = '"', escape = '"',
+               columns = {'doc_id': 'BIGINT', 'lang': 'VARCHAR',
+                          'source': 'VARCHAR', 'n_chars': 'BIGINT',
+                          'tricky': 'VARCHAR'})"""
+
   /** Driver-gate oracles for the staged `_q*_input` tables (VERDICT r14
     * #5: the staging dirs surfaced in CORRECTNESS_r14.json as 22
     * `no_oracle` rows). Each staged table gets a DuckDB query over its
@@ -36,8 +49,6 @@ object VerifyInputs {
     * measurements) ride through as identity — for those the check is
     * the order-invariant content hash itself. */
   def stagingOracles: Map[String, String] = {
-    val T = Gps.VerifyOutToken
-    def rp(name: String) = s"read_parquet('$T/$name/*.parquet')"
     Map(
       "_q208_input" -> s"""
         SELECT asset_id, n_chunks, GREATEST(n_samples, 0) AS n_samples,
@@ -45,7 +56,7 @@ object VerifyInputs {
                  AS zero_crossings,
                GREATEST(sum_sq, 0) AS sum_sq,
                LEAST(GREATEST(max_abs, 0), 32768) AS max_abs
-        FROM ${rp("_q208_input")}
+        FROM ${staged("_q208_input")}
         ORDER BY asset_id""",
       // the CSV copy is the source here: tricky re-derives from
       // lang/n_chars, so this cross-checks the RFC-4180 CSV against the
@@ -54,41 +65,37 @@ object VerifyInputs {
         SELECT doc_id, lang, source, n_chars,
                'v="' || lang || '", n=' || CAST(n_chars AS VARCHAR)
                  AS tricky
-        FROM read_csv('$T/_q226_input/*.csv', header = true,
-               quote = '"', escape = '"',
-               columns = {'doc_id': 'BIGINT', 'lang': 'VARCHAR',
-                          'source': 'VARCHAR', 'n_chars': 'BIGINT',
-                          'tricky': 'VARCHAR'})
+        FROM $stagedCsv
         ORDER BY doc_id""",
       "_q228_input" -> s"""
         SELECT asset_id, n_frames, w, h,
                LEAST(GREATEST(idx, 1), CAST(n_frames AS BIGINT)) AS idx,
                LEAST(GREATEST(frame_sum, 0),
                  CAST(255 AS BIGINT) * w * h) AS frame_sum
-        FROM ${rp("_q228_input")}
+        FROM ${staged("_q228_input")}
         ORDER BY asset_id, idx""",
       "_q230_input" -> s"""
         SELECT asset_id, src_w, src_h, out_bytes, n_px,
                LEAST(GREATEST(px_sum, 0), CAST(255 AS BIGINT) * n_px)
                  AS px_sum
-        FROM ${rp("_q230_input")}
+        FROM ${staged("_q230_input")}
         ORDER BY asset_id""",
-      "_q234_input" -> s"SELECT * FROM ${rp("_q234_input")} ORDER BY asset_id",
+      "_q234_input" -> s"SELECT * FROM ${staged("_q234_input")} ORDER BY asset_id",
       "_q248_input" -> s"""
         SELECT asset_id, frame_idx, GREATEST(energy, 0) AS energy,
                GREATEST(zc, 0) AS zc
-        FROM ${rp("_q248_input")}
+        FROM ${staged("_q248_input")}
         ORDER BY asset_id, frame_idx""",
       "_q249_input" -> s"""
         SELECT asset_id, n_frames, w, h,
                LEAST(GREATEST(idx, 1), n_frames - 1) AS idx,
                LEAST(GREATEST(diff, 0), 255 * w * h) AS diff
-        FROM ${rp("_q249_input")}
+        FROM ${staged("_q249_input")}
         ORDER BY asset_id, idx""",
       "_q252_input" -> s"""
         SELECT doc_id, GREATEST(n_sh, 1) AS n_sh,
                LEAST(GREATEST(h, 0), 63) AS h, v
-        FROM ${rp("_q252_input")}
+        FROM ${staged("_q252_input")}
         ORDER BY doc_id, h""",
       // 2:1 resample: the output rate re-derives from the input rate
       "_q267_input" -> s"""
@@ -97,27 +104,27 @@ object VerifyInputs {
                LEAST(GREATEST(ns_out, 0), ns_in) AS ns_out,
                GREATEST(sum_sq_out, 0) AS sum_sq_out,
                LEAST(GREATEST(max_abs_out, 0), 32768) AS max_abs_out
-        FROM ${rp("_q267_input")}
+        FROM ${staged("_q267_input")}
         ORDER BY asset_id""",
       "_q277_input" -> s"""
         SELECT doc_id, source, GREATEST(raw_len, 0) AS raw_len,
                GREATEST(defl_len, 1) AS defl_len
-        FROM ${rp("_q277_input")}
+        FROM ${staged("_q277_input")}
         ORDER BY doc_id""",
       "_q284_input" -> s"""
         SELECT doc_a, doc_b, n_a_tok, n_b_tok,
                LEAST(GREATEST(lcs_len, 0), LEAST(n_a_tok, n_b_tok))
                  AS lcs_len
-        FROM ${rp("_q284_input")}
+        FROM ${staged("_q284_input")}
         ORDER BY doc_a, doc_b""",
       "_q342_input" -> s"""
         SELECT asset_id, planted_bin, detected_bin,
                LEAST(GREATEST(leak_ppm, 0), 1000000) AS leak_ppm
-        FROM ${rp("_q342_input")}
+        FROM ${staged("_q342_input")}
         ORDER BY asset_id""",
       "_q350_input" -> s"""
         SELECT asset_id, GREATEST(n_samples, 0) AS n_samples, sample_sum
-        FROM ${rp("_q350_input")}
+        FROM ${staged("_q350_input")}
         ORDER BY asset_id""",
       // every base row (vec_id below the planted-copy offset) re-derives
       // its value from the raw embeddings table — a genuine cross-engine
@@ -127,26 +134,26 @@ object VerifyInputs {
                CASE WHEN s.vec_id < ${Vectors.PlantOff}
                  THEN CAST(e.embedding[s.j + 1] AS DOUBLE)
                  ELSE s.val END AS val
-        FROM ${rp("_q351_emb")} s
+        FROM ${staged("_q351_emb")} s
         LEFT JOIN embeddings e ON e.vec_id = s.vec_id
         ORDER BY s.vec_id, s.j""",
       "_q351_input" -> s"""
         SELECT vec_id, GREATEST(bucket, 0) AS bucket
-        FROM ${rp("_q351_input")}
+        FROM ${staged("_q351_input")}
         ORDER BY vec_id, bucket""",
-      "_q47_input" -> s"SELECT * FROM ${rp("_q47_input")} ORDER BY doc_id",
-      "_q49_input" -> s"SELECT * FROM ${rp("_q49_input")} ORDER BY doc_id",
+      "_q47_input" -> s"SELECT * FROM ${staged("_q47_input")} ORDER BY doc_id",
+      "_q49_input" -> s"SELECT * FROM ${staged("_q49_input")} ORDER BY doc_id",
       "_q51_input" -> s"""
         SELECT vec_id, GREATEST(bucket, 0) AS bucket
-        FROM ${rp("_q51_input")}
+        FROM ${staged("_q51_input")}
         ORDER BY vec_id, bucket""",
       "_q55_input" -> s"""
         SELECT vec_id, GREATEST(bucket, 0) AS bucket
-        FROM ${rp("_q55_input")}
+        FROM ${staged("_q55_input")}
         ORDER BY vec_id, bucket""",
       "_q57_input" -> s"""
         SELECT doc_id, lang, LEAST(GREATEST(bucket, 0), 999999) AS bucket
-        FROM ${rp("_q57_input")}
+        FROM ${staged("_q57_input")}
         ORDER BY doc_id""",
       "_q60_input" -> s"""
         SELECT asset_id,
@@ -154,7 +161,7 @@ object VerifyInputs {
                  END AS kind,
                CAST(GREATEST(n_bytes, 1) AS INTEGER) AS n_bytes,
                GREATEST(l2sq, CAST(0 AS DOUBLE)) AS l2sq
-        FROM ${rp("_q60_input")}
+        FROM ${staged("_q60_input")}
         ORDER BY asset_id""",
       // the enrichment law re-derived per row: processed_date is a pure
       // function of processed_time, and every generated field sits in
@@ -175,7 +182,7 @@ object VerifyInputs {
                sudden_braking, timestamp, vehicle_id, input_file,
                processed_time,
                strftime(processed_time, '%Y-%m-%d') AS processed_date
-        FROM ${rp("_q70_input")}
+        FROM ${staged("_q70_input")}
         ORDER BY vehicle_id, timestamp, latitude, longitude, speed_kmh,
                  battery_level""")
   }
