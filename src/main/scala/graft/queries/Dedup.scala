@@ -224,6 +224,19 @@ object Dedup {
       .orderBy(col("cid"))
   }
 
+  /** The document near-dup pairs (doc_a, doc_b, n_common, jaccard) of
+    * q46, q56, q284, q326 and the staged `_q284_input`: MinHash LSH over
+    * word-trigram shingles, 64 hashes in 32 bands, verified Jaccard ≥ 0.4. */
+  private[queries] def docNearDupPairs(docs: DataFrame): DataFrame =
+    MinHashLSH.nearDupPairs(docs, "doc_id", "text",
+      shingleN = 3, numHashes = 64, bands = 32, threshold = 0.4)
+
+  /** q284's per-pair LCS rows over [[docNearDupPairs]] (also staged as
+    * `_q284_input`). */
+  private[queries] def nearDupLcsRows(docs: DataFrame): DataFrame =
+    graft.operators.RougeL.lcsRows(
+      docNearDupPairs(docs).select(col("doc_a"), col("doc_b")), docs)
+
   /** q46's exact pair set at its 0.4 threshold; q191 equals it by law. */
   private val NearDupOracle: String = Det.sqlJaccardPairs("0.4", " MATERIALIZED")
 
@@ -271,10 +284,7 @@ object Dedup {
 
     // ---- q46: MinHash + banded LSH near-dup pairs (the 100 TB dedup) ----
     "q46_minhash_lsh" -> QueryDef(
-      build = (spark, dir) =>
-        MinHashLSH.nearDupPairs(
-          Tables.documents(spark, dir), "doc_id", "text",
-          shingleN = 3, numHashes = 64, bands = 32, threshold = 0.4),
+      build = (spark, dir) => docNearDupPairs(Tables.documents(spark, dir)),
       oracle = Some(NearDupOracle),
       headline = true),
 
@@ -310,12 +320,8 @@ object Dedup {
     // closure → min reachable id), so the driver's hash compare proves the
     // iterative dataflow converged to the true components.
     "q56_dedup_clusters" -> QueryDef(
-      build = (spark, dir) => {
-        val pairs = MinHashLSH.nearDupPairs(
-          Tables.documents(spark, dir), "doc_id", "text",
-          shingleN = 3, numHashes = 64, bands = 32, threshold = 0.4)
-        MinHashLSH.dupClusters(pairs)
-      },
+      build = (spark, dir) =>
+        MinHashLSH.dupClusters(docNearDupPairs(Tables.documents(spark, dir))),
       oracle = Some(s"""
         WITH RECURSIVE sh AS MATERIALIZED (
           SELECT doc_id,
@@ -1097,12 +1103,7 @@ object Dedup {
     // bounded per-pair cost — no stage sees all-pairs.
     "q284_rouge_l_screen" -> QueryDef(
       build = (spark, dir) => {
-        import graft.operators.RougeL
-        val docs = Tables.documents(spark, dir)
-        val pairs = MinHashLSH.nearDupPairs(
-          docs, "doc_id", "text",
-          shingleN = 3, numHashes = 64, bands = 32, threshold = 0.4)
-        RougeL.lcsRows(pairs.select(col("doc_a"), col("doc_b")), docs)
+        nearDupLcsRows(Tables.documents(spark, dir))
           .withColumn("rouge_p_ppm",
             expr("lcs_len * 1000000 div n_b_tok"))
           .withColumn("rouge_r_ppm",
@@ -1114,23 +1115,7 @@ object Dedup {
               .otherwise("distinct"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      oracle = Some(s"""
-        WITH sh AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, GREATEST(len(string_split_regex(trim(text), '\\s+')) - 1, 1)),
-                   i -> string_split_regex(trim(text), '\\s+')[i] || ' ' ||
-                        string_split_regex(trim(text), '\\s+')[i+1] || ' ' ||
-                        string_split_regex(trim(text), '\\s+')[i+2])) AS shingles
-          FROM documents),
-        ex AS MATERIALIZED (
-          SELECT doc_id, len(shingles) AS n_sh, UNNEST(shingles) AS shingle
-          FROM sh WHERE len(shingles) > 0),
-        pairs AS MATERIALIZED (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.n_sh AS n_a, b.n_sh AS n_b, COUNT(*) AS n_common
-          FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2, 3, 4),
+      oracle = Some(s"""${Det.sqlShinglePairs(" MATERIALIZED")},
         cand AS (
           SELECT doc_a, doc_b FROM pairs
           WHERE ROUND(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6)
@@ -1291,42 +1276,19 @@ object Dedup {
           .localCheckpoint(false)
         val ct = items.groupBy(col("ckey"), col("truth"))
           .agg(count(lit(1)).as("n_ct")).localCheckpoint(false)
-        val nc = ct.groupBy(col("ckey")).agg(sum(col("n_ct")).as("n_c"))
-        val nt = ct.groupBy(col("truth")).agg(sum(col("n_ct")).as("n_t"))
-        val card = ct.join(nc, Seq("ckey")).join(nt, Seq("truth"))
-          .agg(sum(col("n_ct")).as("n_items"),
-            sum(expr("CAST(n_ct AS DECIMAL(38,0)) * n_ct" +
-              " * 1000000000000 div n_c")).as("p12"),
-            sum(expr("CAST(n_ct AS DECIMAL(38,0)) * n_ct" +
-              " * 1000000000000 div n_t")).as("r12"))
-          .select(col("n_items"),
-            expr("CAST(p12 div (CAST(n_items AS DECIMAL(38,0))" +
-              " * 1000000) AS BIGINT)").as("b3_precision_ppm"),
-            expr("CAST(r12 div (CAST(n_items AS DECIMAL(38,0))" +
-              " * 1000000) AS BIGINT)").as("b3_recall_ppm"))
-        val mg = ct.groupBy(col("ckey"))
-          .agg(countDistinct(col("truth")).as("k"))
-          .agg(count(lit(1)).as("n_clusters"),
-            sum(when(col("k") > 1, 1L).otherwise(0L))
-              .as("n_merged_clusters"))
-        val sp = ct.groupBy(col("truth"))
-          .agg(countDistinct(col("ckey")).as("k"))
-          .agg(count(lit(1)).as("n_truth_groups"),
-            sum(when(col("k") > 1, 1L).otherwise(0L))
-              .as("n_split_truths"))
         val bo = items.filter(col("ckey") === md5(lit(boiler)))
           .agg(count(lit(1)).as("boiler_cluster_size"))
-        card.crossJoin(broadcast(mg)).crossJoin(broadcast(sp))
-          .crossJoin(broadcast(bo))
-          .select(col("n_items"), col("n_clusters"), col("n_truth_groups"),
+        // coalesce: the card's group counts are sums, q315 publishes them
+        // as non-null counts
+        b3Card(ct, "ckey", cutSides = false).crossJoin(broadcast(bo))
+          .select(col("n_items"),
+            coalesce(col("n_clusters"), lit(0L)).as("n_clusters"),
+            coalesce(col("n_truth_groups"), lit(0L)).as("n_truth_groups"),
             col("n_merged_clusters"), col("n_split_truths"),
             col("boiler_cluster_size"),
-            col("b3_precision_ppm"), col("b3_recall_ppm"),
-            expr("CAST(2 * b3_precision_ppm * b3_recall_ppm" +
-              " div GREATEST(b3_precision_ppm + b3_recall_ppm, 1)" +
-              " AS BIGINT)").as("b3_f1_ppm"))
+            col("b3_precision_ppm"), col("b3_recall_ppm"), col("b3_f1_ppm"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH t0 AS (SELECT doc_id, string_split(trim(text), ' ') AS toks0
                     FROM documents),
         t1 AS (SELECT doc_id,
@@ -1352,41 +1314,13 @@ object Dedup {
           FROM t1 WHERE doc_id % 5 = 0),
         ct AS (SELECT ckey, truth, CAST(COUNT(*) AS BIGINT) AS n_ct
                FROM items GROUP BY 1, 2),
-        nc AS (SELECT ckey, CAST(SUM(n_ct) AS BIGINT) AS n_c
-               FROM ct GROUP BY 1),
-        nt AS (SELECT truth, CAST(SUM(n_ct) AS BIGINT) AS n_t
-               FROM ct GROUP BY 1),
-        card AS (SELECT CAST(SUM(n_ct) AS BIGINT) AS n_items,
-                        SUM(CAST(n_ct AS HUGEINT) * n_ct
-                          * 1000000000000 // n_c) AS p12,
-                        SUM(CAST(n_ct AS HUGEINT) * n_ct
-                          * 1000000000000 // n_t) AS r12
-                 FROM ct JOIN nc USING (ckey) JOIN nt USING (truth)),
-        pr AS (SELECT n_items,
-                      CAST(p12 // (CAST(n_items AS HUGEINT) * 1000000)
-                        AS BIGINT) AS b3_precision_ppm,
-                      CAST(r12 // (CAST(n_items AS HUGEINT) * 1000000)
-                        AS BIGINT) AS b3_recall_ppm
-               FROM card),
-        mg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
-                      CAST(SUM(CASE WHEN k > 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_merged_clusters
-               FROM (SELECT ckey, COUNT(DISTINCT truth) AS k
-                     FROM ct GROUP BY 1)),
-        sp AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth_groups,
-                      CAST(SUM(CASE WHEN k > 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_split_truths
-               FROM (SELECT truth, COUNT(DISTINCT ckey) AS k
-                     FROM ct GROUP BY 1)),
+        ${sqlB3Card("ckey")},
         bo AS (SELECT CAST(COUNT(*) AS BIGINT) AS boiler_cluster_size
                FROM items WHERE ckey = md5(
                  'subscribe to our newsletter for the latest updates'))
         SELECT n_items, n_clusters, n_truth_groups, n_merged_clusters,
                n_split_truths, boiler_cluster_size,
-               b3_precision_ppm, b3_recall_ppm,
-               CAST(2 * b3_precision_ppm * b3_recall_ppm
-                 // GREATEST(b3_precision_ppm + b3_recall_ppm, 1)
-                 AS BIGINT) AS b3_f1_ppm
+               b3_precision_ppm, b3_recall_ppm, b3_f1_ppm
         FROM pr CROSS JOIN mg CROSS JOIN sp CROSS JOIN bo""")),
 
     // ---- q320: chrF² character-n-gram similarity screen ----
@@ -1536,9 +1470,7 @@ object Dedup {
       build = (spark, dir) => {
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), trim(col("text")).as("t"))
-        val lsh = MinHashLSH.nearDupPairs(
-          Tables.documents(spark, dir), "doc_id", "text",
-          shingleN = 3, numHashes = 64, bands = 32, threshold = 0.4)
+        val lsh = docNearDupPairs(Tables.documents(spark, dir))
           .select(col("doc_a"), col("doc_b"))
         // planted control pairs (adjacent unrelated docs): the verify
         // stage must CAP or REJECT these — both decision paths real
@@ -2696,55 +2628,98 @@ object Dedup {
     val ct = lbl.join(nodes, Seq("node"))
       .groupBy(col("lbl"), col("truth"))
       .agg(count(lit(1)).as("n_ct")).localCheckpoint(false)
-    // ct is UNIQUE on (lbl, truth), so the per-side distinct-partner
-    // counts are plain row counts — one groupBy per side serves both the
-    // B³ size join and the merge/split certificates (no countDistinct
-    // expand, no second scan).
-    val byLbl = ct.groupBy(col("lbl"))
-      .agg(sum(col("n_ct")).as("n_c"), count(lit(1)).as("k_l"))
-      .localCheckpoint(false)
-    val byTruth = ct.groupBy(col("truth"))
-      .agg(sum(col("n_ct")).as("n_t"), count(lit(1)).as("k_t"))
-      .localCheckpoint(false)
-    val nc = byLbl.select(col("lbl"), col("n_c"))
-    val nt = byTruth.select(col("truth"), col("n_t"))
-    val card = ct.join(nc, Seq("lbl")).join(nt, Seq("truth"))
-      .agg(sum(col("n_ct")).as("n_records"),
+    val tp = grid8.agg(max(col("n_true_total")).as("n_true_pairs"))
+    b3Card(ct, "lbl", cutSides = true).crossJoin(broadcast(np0)).crossJoin(broadcast(tp))
+      .select(col("n_items").as("n_records"), col("n_true_pairs"),
+        col("n_match_pairs"), col("n_clusters"),
+        col("n_merged_clusters"), col("n_split_truths"),
+        lit(lastChanged).as("n_changed_last_round"),
+        col("b3_precision_ppm"), col("b3_recall_ppm"), col("b3_f1_ppm"))
+  }
+
+  /** The B³ (Bagga–Baldwin) card of q315 and the ER capstone tail over a
+    * contingency table `ct` (`key`, truth, n_ct) unique on (key, truth),
+    * `key` naming the cluster column. One row: n_items; B³ precision,
+    * recall and F1 in ppm, exact through DECIMAL(38,0) floor-div sums
+    * Σ n_ct²·10¹²/n_c and Σ n_ct²·10¹²/n_t; n_clusters, n_truth_groups,
+    * n_merged_clusters (clusters holding more than one truth) and
+    * n_split_truths (truths spread over more than one cluster). Each
+    * side's distinct-partner count is its row count in `ct`, so one
+    * groupBy per side serves both the size join and the merge/split
+    * counts, and those counts come from ONE union+aggregate over the two
+    * (no countDistinct expand, no second scan). `cutSides` checkpoints
+    * the two per-side tables — the ER capstone's cut, which saves its
+    * multi-round plan a job; without it they stay keyed aggregations
+    * in the card's own plan, as q315's plan guard expects. */
+  private[queries] def b3Card(ct: DataFrame, key: String,
+      cutSides: Boolean): DataFrame = {
+    def side(k: String, n: String, kk: String): DataFrame = {
+      val s = ct.groupBy(col(k))
+        .agg(sum(col("n_ct")).as(n), count(lit(1)).as(kk))
+      if (cutSides) s.localCheckpoint(false) else s
+    }
+    val byKey = side(key, "n_c", "k_c")
+    val byTruth = side("truth", "n_t", "k_t")
+    val card = ct.join(byKey.select(col(key), col("n_c")), Seq(key))
+      .join(byTruth.select(col("truth"), col("n_t")), Seq("truth"))
+      .agg(sum(col("n_ct")).as("n_items"),
         sum(expr("CAST(n_ct AS DECIMAL(38,0)) * n_ct" +
           " * 1000000000000 div n_c")).as("p12"),
         sum(expr("CAST(n_ct AS DECIMAL(38,0)) * n_ct" +
           " * 1000000000000 div n_t")).as("r12"))
-      .select(col("n_records"),
-        expr("CAST(p12 div (CAST(n_records AS DECIMAL(38,0))" +
+      .select(col("n_items"),
+        expr("CAST(p12 div (CAST(n_items AS DECIMAL(38,0))" +
           " * 1000000) AS BIGINT)").as("b3_precision_ppm"),
-        expr("CAST(r12 div (CAST(n_records AS DECIMAL(38,0))" +
+        expr("CAST(r12 div (CAST(n_items AS DECIMAL(38,0))" +
           " * 1000000) AS BIGINT)").as("b3_recall_ppm"))
-    // Merge + split certificates in ONE union+aggregate over the two
-    // (already checkpointed) per-side count frames (round 16, guide
-    // §2.4): previously two separate aggregations, each its own
-    // exchange + broadcast build in the final assembly. Values are
-    // identical: n_clusters counts byLbl rows, the conditional sums
-    // reproduce the old per-side k>1 counts exactly.
-    val mgsp = byLbl.select(col("k_l").as("k"), lit(1L).as("is_l"))
-      .unionAll(byTruth.select(col("k_t").as("k"), lit(0L).as("is_l")))
-      .agg(sum(col("is_l")).as("n_clusters"),
-        sum(when(col("is_l") === 1L && col("k") > 1L, 1L).otherwise(0L))
+    val mgsp = byKey.select(col("k_c").as("k"), lit(1L).as("is_c"))
+      .unionAll(byTruth.select(col("k_t").as("k"), lit(0L).as("is_c")))
+      .agg(sum(col("is_c")).as("n_clusters"),
+        sum(lit(1L) - col("is_c")).as("n_truth_groups"),
+        sum(when(col("is_c") === 1L && col("k") > 1L, 1L).otherwise(0L))
           .as("n_merged_clusters"),
-        sum(when(col("is_l") === 0L && col("k") > 1L, 1L).otherwise(0L))
+        sum(when(col("is_c") === 0L && col("k") > 1L, 1L).otherwise(0L))
           .as("n_split_truths"))
-    val np = np0
-    val tp = grid8.agg(max(col("n_true_total")).as("n_true_pairs"))
-    card.crossJoin(broadcast(np)).crossJoin(broadcast(tp))
-      .crossJoin(broadcast(mgsp))
-      .select(col("n_records"), col("n_true_pairs"),
-        col("n_match_pairs"), col("n_clusters"),
-        col("n_merged_clusters"), col("n_split_truths"),
-        lit(lastChanged).as("n_changed_last_round"),
-        col("b3_precision_ppm"), col("b3_recall_ppm"),
-        expr("CAST(2 * b3_precision_ppm * b3_recall_ppm" +
-          " div GREATEST(b3_precision_ppm + b3_recall_ppm, 1)" +
-          " AS BIGINT)").as("b3_f1_ppm"))
+    card.crossJoin(broadcast(mgsp))
+      .select(col("*"), expr("CAST(2 * b3_precision_ppm * b3_recall_ppm" +
+        " div GREATEST(b3_precision_ppm + b3_recall_ppm, 1)" +
+        " AS BIGINT)").as("b3_f1_ppm"))
   }
+
+  /** DuckDB side of [[b3Card]] over a `ct` (`key`, truth, n_ct) CTE:
+    * `pr` (n_items and the B³ P/R/F1 ppm), `mg` (n_clusters,
+    * n_merged_clusters) and `sp` (n_truth_groups, n_split_truths), the
+    * merge/split counts by COUNT(DISTINCT) rather than row counts. */
+  private def sqlB3Card(key: String): String = s"""nc AS (SELECT $key, CAST(SUM(n_ct) AS BIGINT) AS n_c
+               FROM ct GROUP BY 1),
+        nt AS (SELECT truth, CAST(SUM(n_ct) AS BIGINT) AS n_t
+               FROM ct GROUP BY 1),
+        card AS (SELECT CAST(SUM(n_ct) AS BIGINT) AS n_items,
+                        SUM(CAST(n_ct AS HUGEINT) * n_ct
+                          * 1000000000000 // n_c) AS p12,
+                        SUM(CAST(n_ct AS HUGEINT) * n_ct
+                          * 1000000000000 // n_t) AS r12
+                 FROM ct JOIN nc USING ($key) JOIN nt USING (truth)),
+        pr AS (SELECT n_items, b3_precision_ppm, b3_recall_ppm,
+                      CAST(2 * b3_precision_ppm * b3_recall_ppm
+                        // GREATEST(b3_precision_ppm + b3_recall_ppm, 1)
+                        AS BIGINT) AS b3_f1_ppm
+               FROM (SELECT n_items,
+                       CAST(p12 // (CAST(n_items AS HUGEINT) * 1000000)
+                         AS BIGINT) AS b3_precision_ppm,
+                       CAST(r12 // (CAST(n_items AS HUGEINT) * 1000000)
+                         AS BIGINT) AS b3_recall_ppm
+                     FROM card)),
+        mg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
+                      CAST(SUM(CASE WHEN k > 1 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_merged_clusters
+               FROM (SELECT $key, COUNT(DISTINCT truth) AS k
+                     FROM ct GROUP BY 1)),
+        sp AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth_groups,
+                      CAST(SUM(CASE WHEN k > 1 THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_split_truths
+               FROM (SELECT truth, COUNT(DISTINCT $key) AS k
+                     FROM ct GROUP BY 1))"""
 
   /** Capped dynamic blocking over the linkage registries, SHARED by
     * q338 (the blocking certificate card) and q349 (the scale-safe ER
@@ -3409,31 +3384,7 @@ object Dedup {
         ct AS MATERIALIZED (
           SELECT lbl, truth, CAST(COUNT(*) AS BIGINT) AS n_ct
           FROM l6 GROUP BY 1, 2),
-        nc AS (SELECT lbl, CAST(SUM(n_ct) AS BIGINT) AS n_c
-               FROM ct GROUP BY 1),
-        nt AS (SELECT truth, CAST(SUM(n_ct) AS BIGINT) AS n_t
-               FROM ct GROUP BY 1),
-        card AS (SELECT CAST(SUM(n_ct) AS BIGINT) AS n_records,
-                        SUM(CAST(n_ct AS HUGEINT) * n_ct
-                          * 1000000000000 // n_c) AS p12,
-                        SUM(CAST(n_ct AS HUGEINT) * n_ct
-                          * 1000000000000 // n_t) AS r12
-                 FROM ct JOIN nc USING (lbl) JOIN nt USING (truth)),
-        pr AS (SELECT n_records,
-                      CAST(p12 // (CAST(n_records AS HUGEINT) * 1000000)
-                        AS BIGINT) AS b3_precision_ppm,
-                      CAST(r12 // (CAST(n_records AS HUGEINT) * 1000000)
-                        AS BIGINT) AS b3_recall_ppm
-               FROM card),
-        mg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
-                      CAST(SUM(CASE WHEN k > 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_merged_clusters
-               FROM (SELECT lbl, COUNT(DISTINCT truth) AS k
-                     FROM ct GROUP BY 1)),
-        sp AS (SELECT CAST(SUM(CASE WHEN k > 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_split_truths
-               FROM (SELECT truth, COUNT(DISTINCT lbl) AS k
-                     FROM ct GROUP BY 1)),
+        ${sqlB3Card("lbl")},
         tp AS (SELECT CAST(MAX(n_true_total) AS BIGINT) AS n_true_pairs
                FROM dec),
         chg AS (SELECT CAST(SUM(CASE WHEN a6.lbl <> a5.lbl
@@ -3445,13 +3396,10 @@ object Dedup {
   /** The ER capstone oracles' shared output columns (q349 appends its
     * blocking certificates after these). */
   private def erTailSelect: String =
-    """pr.n_records, tp.n_true_pairs, np.n_match_pairs,
+    """pr.n_items AS n_records, tp.n_true_pairs, np.n_match_pairs,
                mg.n_clusters, mg.n_merged_clusters, sp.n_split_truths,
                chg.n_changed_last_round,
-               pr.b3_precision_ppm, pr.b3_recall_ppm,
-               CAST(2 * pr.b3_precision_ppm * pr.b3_recall_ppm
-                 // GREATEST(pr.b3_precision_ppm + pr.b3_recall_ppm, 1)
-                 AS BIGINT) AS b3_f1_ppm"""
+               pr.b3_precision_ppm, pr.b3_recall_ppm, pr.b3_f1_ppm"""
 
   /** The shared WITH-chain of the linkage replay (registries → blocked
     * candidates → pattern census → u statistics → scored/decided

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -35,19 +36,60 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object Graph {
 
+  /** The co-purchase graph's incidence list (q105, q106, q143, q210,
+    * q332): the distinct (o, p) = (order, part) pairs of lineitem. */
+  private[queries] def coPurchaseLi(spark: SparkSession,
+      dir: String): DataFrame =
+    Tables.lineitem(spark, dir)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+
+  /** DuckDB side of [[coPurchaseLi]]: the `li` CTE, `mat` "" or
+    * " MATERIALIZED". */
+  private[queries] def sqlLi(mat: String): String =
+    s"li AS$mat (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem)"
+
+  /** The undirected edges of an incidence list `li` (o, p): (u, v) with
+    * u < v for every node pair sharing at least `minSupport` containers. */
+  private def incidencePairs(li: DataFrame,
+      minSupport: Int): DataFrame =
+    li.as("a")
+      .join(li.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      .groupBy(col("a.p").as("u"), col("b.p").as("v"))
+      .agg(count(lit(1)).as("support"))
+      .filter(col("support") >= minSupport)
+      .select(col("u"), col("v"))
+
+  /** DuckDB side of [[incidencePairs]] over [[coPurchaseLi]]: `li` and
+    * `pairs`. */
+  private def sqlPairs(minSupport: Int): String = s"""${sqlLi("")},
+        pairs AS (SELECT a.p AS u, b.p AS v
+                  FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
+                  GROUP BY a.p, b.p HAVING COUNT(*) >= $minSupport)"""
+
+  /** q106's and q210's graph: the support ≥ 2 co-purchase pairs as
+    * symmetrized `edges` (u, v) and their `deg` (node, d). */
+  private def frequentGraph(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val pairs = incidencePairs(coPurchaseLi(spark, dir), 2)
+    val edges = pairs.unionAll(pairs.select(col("v").as("u"), col("u").as("v")))
+    (edges, edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("d")))
+  }
+
+  /** DuckDB side of [[frequentGraph]]: [[sqlPairs]] at support 2 plus
+    * `edges` and `deg`. */
+  private def sqlFrequentGraph: String = s"""${sqlPairs(2)},
+        edges AS (SELECT u, v FROM pairs UNION ALL SELECT v AS u, u AS v FROM pairs),
+        deg AS (SELECT u AS node, COUNT(*) AS d FROM edges GROUP BY u)"""
+
   /** Per-node triangle participation over a hyperedge incidence list.
     *
     * @param li two columns `o` (hyperedge/container id) and `p` (node id):
     *           nodes sharing a container get an undirected edge.
     * @return one row per node in ≥1 triangle: (node, tri_count, d).
     */
-  def triangleParticipation(li: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    // distinct co-occurrence edges, canonical u < v
-    val pairs = li.as("a")
-      .join(li.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .select(col("a.p").as("u"), col("b.p").as("v"))
-      .distinct()
+  def triangleParticipation(li: DataFrame): DataFrame = {
+    val pairs = incidencePairs(li, 1)
     val deg = pairs.select(col("u").as("node"))
       .unionAll(pairs.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -83,21 +125,14 @@ object Graph {
     // parity; tri_count DESC, partkey ASC is a total order.
     "q105_triangle_count" -> QueryDef(
       build = (spark, dir) => {
-        val li = Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        triangleParticipation(li)
+        triangleParticipation(coPurchaseLi(spark, dir))
           .select(col("node").as("partkey"), col("tri_count"),
             col("d").as("degree"))
           .orderBy(col("tri_count").desc, col("partkey").asc)
           .limit(20)
       },
-      oracle = Some("""
-        WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        pairs AS (
-          SELECT a.p AS u, b.p AS v
-          FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
-          GROUP BY a.p, b.p),
+      oracle = Some(s"""
+        WITH ${sqlPairs(1)},
         deg AS (
           SELECT node, COUNT(*) AS d FROM (
             SELECT u AS node FROM pairs UNION ALL SELECT v AS node FROM pairs)
@@ -143,17 +178,7 @@ object Graph {
     "q106_pagerank_fixedpoint" -> QueryDef(
       build = (spark, dir) => {
         val SCALE = 1000000000000L
-        val li = Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val pairs = li.as("a")
-          .join(li.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("u"), col("b.p").as("v"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 2)
-          .select(col("u"), col("v"))
-        val edges = pairs.unionAll(pairs.select(col("v").as("u"), col("u").as("v")))
-        val deg = edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
+        val (edges, deg) = frequentGraph(spark, dir)
         val consts = deg.agg(count(lit(1)).as("n"))
           .select(col("n"),
             expr(s"$SCALE div n").as("r0rank"),
@@ -188,14 +213,8 @@ object Graph {
           JOIN r${k - 1} r ON r.node = e.u
           JOIN deg d ON d.node = e.u
           GROUP BY e.v)"""
-        """
-        WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        pairs AS (
-          SELECT a.p AS u, b.p AS v
-          FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
-          GROUP BY a.p, b.p HAVING COUNT(*) >= 2),
-        edges AS (SELECT u, v FROM pairs UNION ALL SELECT v AS u, u AS v FROM pairs),
-        deg AS (SELECT u AS node, COUNT(*) AS d FROM edges GROUP BY u),
+        s"""
+        WITH $sqlFrequentGraph,
         consts AS (
           SELECT COUNT(*) AS n,
                  CAST(1000000000000 // COUNT(*) AS BIGINT) AS r0rank,
@@ -226,16 +245,7 @@ object Graph {
     "q143_kcore_peeling" -> QueryDef(
       build = (spark, dir) => {
         val k = 100
-        val pairs = Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-          .alias("a").join(
-            Tables.lineitem(spark, dir)
-              .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-              .distinct().alias("b"),
-            col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .select(col("a.p").as("u"), col("b.p").as("v"))
-          .distinct()
+        val pairs = incidencePairs(coPurchaseLi(spark, dir), 1)
         // deliberately NO checkpoint: the six count actions share
         // lineage, and Spark's shuffle-output reuse already skips the
         // recomputation a checkpoint would buy (measured at sf0.1:
@@ -267,13 +277,9 @@ object Graph {
         e$r AS (SELECT u, v FROM e${r - 1}
                 WHERE u IN (SELECT n FROM s$r)
                   AND v IN (SELECT n FROM s$r))"""
-        """
-        WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                    FROM lineitem),
-        e0 AS (
-          SELECT a.p AS u, b.p AS v
-          FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
-          GROUP BY a.p, b.p),""" +
+        s"""
+        WITH ${sqlPairs(1)},
+        e0 AS (SELECT u, v FROM pairs),""" +
           (1 to 3).map(layer).mkString(",") + """
         SELECT CAST(1 AS BIGINT) AS peel_round,
                CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS n_nodes,
@@ -427,17 +433,7 @@ object Graph {
     // list); the moment reduction is one partial/final agg to one row.
     "q210_degree_assortativity" -> QueryDef(
       build = (spark, dir) => {
-        val li = Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct()
-        val pairs = li.as("a")
-          .join(li.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("u"), col("b.p").as("v"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 2)
-          .select(col("u"), col("v"))
-        val edges = pairs.unionAll(pairs.select(col("v").as("u"), col("u").as("v")))
-        val deg = edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
+        val (edges, deg) = frequentGraph(spark, dir)
         val dd = DecimalType(38, 0)
         val m = edges
           .join(deg.select(col("node").as("u"), col("d").as("x")), Seq("u"))
@@ -458,15 +454,8 @@ object Graph {
                   .cast(DoubleType)), 6)
             .as("assortativity"))
       },
-      oracle = Some("""
-        WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                    FROM lineitem),
-        pairs AS (SELECT a.p AS u, b.p AS v
-                  FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
-                  GROUP BY a.p, b.p HAVING COUNT(*) >= 2),
-        edges AS (SELECT u, v FROM pairs
-                  UNION ALL SELECT v AS u, u AS v FROM pairs),
-        deg AS (SELECT u AS node, COUNT(*) AS d FROM edges GROUP BY u),
+      oracle = Some(s"""
+        WITH $sqlFrequentGraph,
         m AS (SELECT COUNT(*) AS n,
                      SUM(CAST(dx.d AS HUGEINT)) AS sx,
                      SUM(CAST(dy.d AS HUGEINT)) AS sy,

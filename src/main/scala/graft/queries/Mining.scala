@@ -675,9 +675,7 @@ object Mining {
     // sort.
     "q332_association_rules" -> QueryDef(
       build = (spark, dir) => {
-        val li = Tables.lineitem(spark, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-          .distinct().localCheckpoint(false)
+        val li = Graph.coPurchaseLi(spark, dir).localCheckpoint(false)
         val nOrders = li.select(col("o")).distinct().count()
         val item = li.groupBy(col("p")).agg(count(lit(1)).as("supp"))
         val pairs = li.as("a")
@@ -700,9 +698,8 @@ object Mining {
             col("u"), col("v"))
           .limit(20)
       },
-      oracle = Some("""
-        WITH li AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+      oracle = Some(s"""
+        WITH ${Graph.sqlLi(" MATERIALIZED")},
         nn AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n FROM li),
         item AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS supp
                  FROM li GROUP BY 1),

@@ -32,6 +32,25 @@ object Multi {
       Multimodal.syntheticAssets(spark, n), everyNth = 24L,
       offset = 10000000L))
 
+  /** q230's per-image resize-audit rows: source geometry (src_w, src_h)
+    * and the 32×32 nearest-neighbor resize's re-encoded bytes, decoded
+    * pixel count and pixel sum. Shared by the gate and VerifyInputs. */
+  def resizeAuditRows(spark: org.apache.spark.sql.SparkSession,
+      n: Long): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    def imgs = Multimodal.syntheticAssets(spark, n)
+      .filter(_.meta.kind == "image")
+    val dims = imgs.map(a => (a.asset_id, a.meta.width, a.meta.height))
+      .toDF("asset_id", "src_w", "src_h")
+    val outr = Multimodal.resize(imgs, 32, 32).map { a =>
+      val g = Multimodal.ImageCodec.decode(a.payload).gray
+      var s = 0L; var i = 0
+      while (i < g.length) { s += (g(i) & 0xff); i += 1 }
+      (a.asset_id, a.payload.length, g.length, s)
+    }.toDF("asset_id", "out_bytes", "n_px", "px_sum")
+    dims.join(outr, Seq("asset_id"))
+  }
+
   val defs: Seq[(String, QueryDef)] = Seq(
     "q60_multimodal_profile" -> QueryDef(
       build = (spark, dir) =>
@@ -165,19 +184,8 @@ object Multi {
     // pass per asset; the rollup is |geometries| rows.
     "q230_resize_audit" -> QueryDef(
       build = (spark, dir) => {
-        import spark.implicits._
         import org.apache.spark.sql.functions._
-        def imgs = Multimodal.syntheticAssets(spark, assetCount(dir))
-          .filter(_.meta.kind == "image")
-        val dims = imgs.map(a => (a.asset_id, a.meta.width, a.meta.height))
-          .toDF("asset_id", "src_w", "src_h")
-        val outr = Multimodal.resize(imgs, 32, 32).map { a =>
-          val g = Multimodal.ImageCodec.decode(a.payload).gray
-          var s = 0L; var i = 0
-          while (i < g.length) { s += (g(i) & 0xff); i += 1 }
-          (a.asset_id, a.payload.length, g.length, s)
-        }.toDF("asset_id", "out_bytes", "n_px", "px_sum")
-        dims.join(outr, Seq("asset_id"))
+        resizeAuditRows(spark, assetCount(dir))
           .groupBy(col("src_w"), col("src_h"))
           .agg(count(lit(1)).as("n_assets"),
             sum(col("out_bytes")).as("out_bytes"),

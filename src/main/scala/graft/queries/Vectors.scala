@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.Tables
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -64,6 +64,42 @@ object Vectors {
   /** q351's planted-copy offset and stride (shared with VerifyInputs). */
   private[queries] val PlantOff = 10000000L
   private[queries] val PlantEvery = 25L
+
+  /** The LSH bucket front of q51, q55, q239, q266, q351 and q362, and of
+    * the `_q51_input`/`_q55_input`/`_q351_input` assignments Verify
+    * stages for their oracles: `corpus` (vec_id, embedding) as (vec_id,
+    * e, payload…, bucket), one row per sign-LSH table, where `e` is the
+    * float64 embedding and each `payload` column is computed over it. */
+  private[queries] def lshBucketRows(corpus: DataFrame, tables: Int,
+      bits: Int, payload: Column*): DataFrame = {
+    val vecs = corpus.select(col("vec_id"), vec64(col("embedding")).as("e"))
+      .select(col("*") +: payload: _*)
+    vecs.withColumn("buckets", lshBuckets(col("e"), tables, bits))
+      .select(vecs.columns.map(col) :+ explode(col("buckets")).as("bucket"): _*)
+  }
+
+  /** q51's ANN front: 8 tables of 4 bits. */
+  private[queries] def annBucketRows(corpus: DataFrame): DataFrame =
+    lshBucketRows(corpus, 8, 4)
+
+  /** The scale path's front (q55 and the queries over its candidates):
+    * 16 tables at the `autoLshBits` width of the corpus count (~30
+    * vectors per bucket), returned beside the rows. */
+  private[queries] def scaledBucketRows(corpus: DataFrame,
+      payload: Column*): (DataFrame, Int) = {
+    val bits = graft.functions.VectorKernels.autoLshBits(corpus.count())
+    (lshBucketRows(corpus, 16, bits, payload: _*), bits)
+  }
+
+  /** DuckDB side of [[lshBucketRows]] over a staged assignment table:
+    * `b` (bucket, vec_id) read from `input`, and `cand`, the DISTINCT
+    * (`ida`, `idb`) pairs sharing a bucket whose ids `a.vec_id` and
+    * `bb.vec_id` satisfy `pred`. */
+  private def sqlLshCand(input: String, ida: String, idb: String,
+      pred: String): String =
+    s"""b AS (SELECT bucket, vec_id FROM ${VerifyInputs.staged(input)}),
+        cand AS (SELECT DISTINCT a.vec_id AS $ida, bb.vec_id AS $idb
+                 FROM b a JOIN b bb ON a.bucket = bb.bucket AND $pred)"""
 
   /** q357's int8 scalar quantize → dequantize front over (vec_id, e):
     * per-dim corpus min/max census, 255-bin FLOOR codes, reconstruction
@@ -170,21 +206,20 @@ object Vectors {
         SELECT qid, rn, vec_id, ROUND(cos, 6) AS cosine
         FROM r WHERE rn <= 5 ORDER BY qid, rn"""
 
-  /** The staged q351 inputs: `eb` (the planted corpus as (vec_id, emb)) and
-    * `b` (its LSH bucket assignments). */
-  private val PlantedInputCtes: String = s"""WITH eb AS (SELECT vec_id, CAST(list(val ORDER BY j) AS DOUBLE[])
+  /** The staged q351 inputs: `eb` (the planted corpus as (vec_id, emb)),
+    * then `b` and `cand` ([[sqlLshCand]]) over its bucket assignments. */
+  private def plantedInputCtes(pred: String): String = s"""WITH eb AS (SELECT vec_id, CAST(list(val ORDER BY j) AS DOUBLE[])
                       AS emb
                     FROM ${VerifyInputs.staged("_q351_emb")}
                     GROUP BY vec_id),
-        b AS (SELECT bucket, vec_id
-              FROM ${VerifyInputs.staged("_q351_input")})"""
+        ${sqlLshCand("_q351_input", "id_a", "id_b", pred)}"""
 
   /** Corpus counts of the planted-pair cards: `cnts` (base and planted
     * vectors in `eb`) and `bits`, the LSH width `autoLshBits`
     * derives from the corpus size. */
-  private val PlantedCountCtes: String = """cnts AS (SELECT CAST(SUM(CASE WHEN vec_id < 10000000
+  private val PlantedCountCtes: String = s"""cnts AS (SELECT CAST(SUM(CASE WHEN vec_id < $PlantOff
                    THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
-                        CAST(SUM(CASE WHEN vec_id >= 10000000
+                        CAST(SUM(CASE WHEN vec_id >= $PlantOff
                    THEN 1 ELSE 0 END) AS BIGINT) AS n_planted
                  FROM eb),
         bits AS (SELECT LEAST(24, GREATEST(4,
@@ -222,10 +257,7 @@ object Vectors {
     // compare.py's self-check bounds measured recall@5.
     "q51_ann_lsh" -> QueryDef(
       build = (spark, dir) => {
-        val emb = Tables.embeddings(spark, dir)
-          .select(col("vec_id"), vec64(col("embedding")).as("e"))
-          .withColumn("buckets", lshBuckets(col("e"), 8, 4))
-        val cand = emb.select(col("vec_id"), col("e"), explode(col("buckets")).as("bucket"))
+        val cand = annBucketRows(Tables.embeddings(spark, dir))
         val q = cand.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("e").as("qe"), col("bucket"))
         val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
@@ -245,12 +277,9 @@ object Vectors {
           .orderBy(col("qid"), col("rn"))
       },
       oracle = Some(s"""
-        WITH b AS (SELECT bucket, vec_id
-                   FROM ${VerifyInputs.staged("_q51_input")}),
+        WITH ${sqlLshCand("_q51_input", "qid", "vec_id",
+          "a.vec_id < 10 AND bb.vec_id != a.vec_id")},
         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        cand AS (SELECT DISTINCT qb.vec_id AS qid, cb.vec_id AS vec_id
-                 FROM b qb JOIN b cb ON qb.bucket = cb.bucket
-                 WHERE qb.vec_id < 10 AND cb.vec_id != qb.vec_id),
         $RerankTopKTail""")),
 
     // ---- q54: IVF-style coarse-quantized ANN (alternate scale path) ----
@@ -339,14 +368,8 @@ object Vectors {
     // at real scale it comes from table statistics instead.
     "q55_neardup_scale" -> QueryDef(
       build = (spark, dir) => {
-        val bits = graft.functions.VectorKernels.autoLshBits(
-          Tables.embeddings(spark, dir).count())
-        val emb = Tables.embeddings(spark, dir)
-          .select(col("vec_id"), vec64(col("embedding")).as("e"))
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("buckets", lshBuckets(col("e"), 16, bits))
-        val cand = emb.select(col("vec_id"), col("e"), col("nrm"),
-          explode(col("buckets")).as("bucket"))
+        val (cand, _) = scaledBucketRows(Tables.embeddings(spark, dir),
+          norm(col("e")).as("nrm"))
         val a = cand.select(col("bucket"), col("vec_id").as("id_a"),
           col("e").as("ea"), col("nrm").as("na"))
         val b = cand.select(col("bucket"), col("vec_id").as("id_b"),
@@ -371,11 +394,8 @@ object Vectors {
       // the benched scale path is value-checked, with only the bucketing
       // function itself left to spec coverage (VectorsSpec recall/subset).
       oracle = Some(s"""
-        WITH b AS (SELECT bucket, vec_id
-                   FROM ${VerifyInputs.staged("_q55_input")}),
-        e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        cand AS (SELECT DISTINCT a.vec_id AS id_a, bb.vec_id AS id_b
-                 FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id)
+        WITH ${sqlLshCand("_q55_input", "id_a", "id_b", "a.vec_id < bb.vec_id")},
+        e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)
         SELECT c.id_a, c.id_b,
                ROUND(list_cosine_similarity(ea.emb, eb.emb), 6) AS cosine
         FROM cand c
@@ -720,14 +740,8 @@ object Vectors {
     "q239_mutual_knn" -> QueryDef(
       build = (spark, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val bits = graft.functions.VectorKernels.autoLshBits(
-          Tables.embeddings(spark, dir).count())
-        val emb = Tables.embeddings(spark, dir)
-          .select(col("vec_id"), vec64(col("embedding")).as("e"))
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("buckets", lshBuckets(col("e"), 16, bits))
-        val cand = emb.select(col("vec_id"), col("e"), col("nrm"),
-          explode(col("buckets")).as("bucket"))
+        val (cand, _) = scaledBucketRows(Tables.embeddings(spark, dir),
+          norm(col("e")).as("nrm"))
         val a = cand.select(col("bucket"), col("vec_id").as("ia"),
           col("e").as("ea"), col("nrm").as("na"))
         val b = cand.select(col("bucket"), col("vec_id").as("ib"),
@@ -751,13 +765,9 @@ object Vectors {
           .orderBy(col("id_a"), col("id_b"))
       },
       oracle = Some(s"""
-        WITH b AS (SELECT bucket, vec_id
-                   FROM ${VerifyInputs.staged("_q55_input")}),
+        WITH ${sqlLshCand("_q55_input", "ia", "ib", "a.vec_id <> bb.vec_id")},
         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
               FROM embeddings),
-        cand AS (SELECT DISTINCT a.vec_id AS ia, bb.vec_id AS ib
-                 FROM b a JOIN b bb ON a.bucket = bb.bucket
-                                   AND a.vec_id <> bb.vec_id),
         sc AS (SELECT c.ia, c.ib,
                       list_cosine_similarity(ea.emb, eb.emb) AS cos
                FROM cand c
@@ -798,15 +808,8 @@ object Vectors {
       build = (spark, dir) => {
         import org.apache.spark.sql.expressions.Window
         val k = 5
-        val bits = graft.functions.VectorKernels.autoLshBits(
-          Tables.embeddings(spark, dir).count())
-        val emb = Tables.embeddings(spark, dir)
-          .select(col("vec_id"), expr("transform(embedding, x -> " +
-            "cast(floor(cast(x as double) * 10000) as long))").as("q"),
-            vec64(col("embedding")).as("e"))
-          .withColumn("buckets", lshBuckets(col("e"), 16, bits))
-        val cand = emb.select(col("vec_id"), col("q"),
-          explode(col("buckets")).as("bucket"))
+        val (cand, _) = scaledBucketRows(Tables.embeddings(spark, dir),
+          expr("transform(e, x -> cast(floor(x * 10000) as long))").as("q"))
         val a = cand.select(col("bucket"), col("vec_id").as("ia"),
           col("q").as("qa"))
         val b = cand.select(col("bucket"), col("vec_id").as("ib"),
@@ -854,14 +857,10 @@ object Vectors {
           .orderBy(col("lof_ppm").desc, col("vec_id"))
       },
       oracle = Some(s"""
-        WITH b AS (SELECT bucket, vec_id
-                   FROM ${VerifyInputs.staged("_q55_input")}),
+        WITH ${sqlLshCand("_q55_input", "ia", "ib", "a.vec_id <> bb.vec_id")},
         e AS (SELECT vec_id, list_transform(embedding, x ->
                 CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS q
               FROM embeddings),
-        cand AS (SELECT DISTINCT a.vec_id AS ia, bb.vec_id AS ib
-                 FROM b a JOIN b bb ON a.bucket = bb.bucket
-                                   AND a.vec_id <> bb.vec_id),
         sc AS (SELECT c.ia, c.ib,
                       CAST(list_sum(list_transform(list_zip(ea.q, eb.q),
                         p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d2
@@ -1579,13 +1578,7 @@ object Vectors {
     "q351_neardup_production" -> QueryDef(
       build = (spark, dir) => {
         val corpus = plantedNearDupCorpus(spark, dir)
-        val bits = graft.functions.VectorKernels.autoLshBits(corpus.count())
-        val emb = corpus
-          .select(col("vec_id"), vec64(col("embedding")).as("e"))
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("buckets", lshBuckets(col("e"), 16, bits))
-        val cand = emb.select(col("vec_id"), col("e"), col("nrm"),
-          explode(col("buckets")).as("bucket"))
+        val (cand, bits) = scaledBucketRows(corpus, norm(col("e")).as("nrm"))
         val a = cand.select(col("bucket"), col("vec_id").as("id_a"),
           col("e").as("ea"), col("nrm").as("na"))
         val b = cand.select(col("bucket"), col("vec_id").as("id_b"),
@@ -1621,10 +1614,7 @@ object Vectors {
       // bits value (re-computed from the staged corpus count with the
       // same clamp(ceil(log2(n/30))) law) are all replayed in DuckDB.
       oracle = Some(s"""
-        $PlantedInputCtes,
-        cand AS (SELECT DISTINCT a.vec_id AS id_a, bb.vec_id AS id_b
-                 FROM b a JOIN b bb
-                   ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id),
+        ${plantedInputCtes("a.vec_id < bb.vec_id")},
         pairs AS (SELECT c.id_a, c.id_b
                   FROM cand c
                   JOIN eb ea ON ea.vec_id = c.id_a
@@ -1632,7 +1622,7 @@ object Vectors {
                   WHERE list_cosine_similarity(ea.emb, e2.emb) >= 0.80),
         $PlantedCountCtes,
         pc AS (SELECT CAST(COUNT(*) AS BIGINT) AS pairs_total,
-                      CAST(COALESCE(SUM(CASE WHEN id_b = id_a + 10000000
+                      CAST(COALESCE(SUM(CASE WHEN id_b = id_a + $PlantOff
                         THEN 1 ELSE 0 END), 0) AS BIGINT)
                         AS planted_recalled
                FROM pairs)
@@ -1809,13 +1799,7 @@ object Vectors {
       build = (spark, dir) => {
         val k = 4
         val corpus = plantedNearDupCorpus(spark, dir)
-        val bits = graft.functions.VectorKernels.autoLshBits(corpus.count())
-        val emb = corpus
-          .select(col("vec_id"), vec64(col("embedding")).as("e"))
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("buckets", lshBuckets(col("e"), 16, bits))
-        val cand = emb.select(col("vec_id"), col("e"), col("nrm"),
-          explode(col("buckets")).as("bucket"))
+        val (cand, bits) = scaledBucketRows(corpus, norm(col("e")).as("nrm"))
         val a = cand.filter(col("vec_id") < PlantOff)
           .select(col("bucket"), col("vec_id").as("id_a"),
             col("e").as("ea"), col("nrm").as("na"))
@@ -1862,10 +1846,7 @@ object Vectors {
       // the mutual-argmax mining rule, and the precision/recall card are
       // all replayed in DuckDB.
       oracle = Some(s"""
-        $PlantedInputCtes,
-        cand AS (SELECT DISTINCT a.vec_id AS id_a, bb.vec_id AS id_b
-                 FROM b a JOIN b bb ON a.bucket = bb.bucket
-                 WHERE a.vec_id < 10000000 AND bb.vec_id >= 10000000),
+        ${plantedInputCtes(s"a.vec_id < $PlantOff AND bb.vec_id >= $PlantOff")},
         pairs AS MATERIALIZED (
           SELECT id_a, id_b, c FROM (
             SELECT c.id_a, c.id_b,
@@ -1899,7 +1880,7 @@ object Vectors {
                         ORDER BY margin_ppm DESC, id_a) AS ry
                FROM sc),
         mined AS (SELECT id_a, id_b, margin_ppm,
-                         (id_b = id_a + 10000000) AS is_true
+                         (id_b = id_a + $PlantOff) AS is_true
                   FROM mm
                   WHERE rx = 1 AND ry = 1 AND margin_ppm >= 1200000),
         $PlantedCountCtes,

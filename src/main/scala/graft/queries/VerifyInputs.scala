@@ -2,8 +2,9 @@ package graft.queries
 
 import graft.core.Tables
 import graft.functions.TextFunctions.{charNgramLangId, tokens}
-import graft.operators.SimHash
-import org.apache.spark.sql.SparkSession
+import graft.functions.VectorFunctions.vec64
+import graft.operators.{Multimodal, SimHash}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Verify-time materializations for oracles over engine-specific values.
@@ -188,34 +189,29 @@ object VerifyInputs {
   }
 
   def writeAll(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+    // one parquet file per staged table, in `order`
+    def stage(df: DataFrame, name: String, order: String*): Unit =
+      df.orderBy(order.map(col): _*)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    val n = Multi.assetCount(sfDir)
     Gps.writeVerifyInput(spark, sfDir, outDir)
     // q47: the fingerprints; DuckDB re-derives every Hamming-≤3 nearest
     // neighbor by brute force against the block-join's answer.
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), SimHash.simhash64(tokens(col("text"))).as("simhash"))
-      .orderBy(col("doc_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q47_input")
+    stage(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), SimHash.simhash64(tokens(col("text"))).as("simhash")),
+      "_q47_input", "doc_id")
     // q49: the predictions; DuckDB re-aggregates the distribution and
     // label-match counts.
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), charNgramLangId(col("text")).as("predicted"))
-      .orderBy(col("doc_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q49_input")
+    stage(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("lang"), charNgramLangId(col("text")).as("predicted")),
+      "_q49_input", "doc_id")
     // q55: the (bucket, vec_id) assignments at the query's own auto-scaled
     // bit width; DuckDB re-runs candidate generation + exact cosine verify
     // over them (list_cosine_similarity ≡ the codegen'd dot/(na·nb) —
     // proven bit-identical by q52's oracle), so the benched LSH scale path
     // is value-checked end to end, not rows-only.
-    locally {
-      import graft.functions.VectorFunctions.{lshBuckets, vec64}
-      val bits = graft.functions.VectorKernels.autoLshBits(
-        Tables.embeddings(spark, sfDir).count())
-      Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"),
-          explode(lshBuckets(vec64(col("embedding")), 16, bits)).as("bucket"))
-        .orderBy(col("vec_id"), col("bucket"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q55_input")
-    }
+    stage(Vectors.scaledBucketRows(Tables.embeddings(spark, sfDir))._1
+      .select(col("vec_id"), col("bucket")), "_q55_input", "vec_id", "bucket")
     // q351: the production-threshold planted corpus, staged twice —
     // bucket assignments (q55 pattern) and the corpus embeddings
     // EXPLODED to driver-sortable scalars (vec_id, j, val; the _q228
@@ -224,91 +220,59 @@ object VerifyInputs {
     // candidate generation + exact cosine verify + the planted split,
     // and re-derives the bits value from the staged corpus count.
     locally {
-      import graft.functions.VectorFunctions.{lshBuckets, vec64}
       val corpus = Vectors.plantedNearDupCorpus(spark, sfDir)
         .localCheckpoint(false)
-      val bits = graft.functions.VectorKernels.autoLshBits(corpus.count())
-      corpus.select(col("vec_id"),
-          explode(lshBuckets(vec64(col("embedding")), 16, bits)).as("bucket"))
-        .orderBy(col("vec_id"), col("bucket"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q351_input")
-      corpus.select(col("vec_id"),
-          posexplode(vec64(col("embedding"))).as(Seq("j", "val")))
-        .orderBy(col("vec_id"), col("j"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q351_emb")
+      stage(Vectors.scaledBucketRows(corpus)._1
+        .select(col("vec_id"), col("bucket")), "_q351_input", "vec_id", "bucket")
+      stage(corpus.select(col("vec_id"),
+          posexplode(vec64(col("embedding"))).as(Seq("j", "val"))),
+        "_q351_emb", "vec_id", "j")
     }
     // q51: the 8-table/4-bit ANN bucket assignments; DuckDB re-runs
     // candidate generation, exact cosine re-rank, and the exact-top-5
     // evidence join (the latter from raw embeddings, fully independent).
-    locally {
-      import graft.functions.VectorFunctions.{lshBuckets, vec64}
-      Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"),
-          explode(lshBuckets(vec64(col("embedding")), 8, 4)).as("bucket"))
-        .orderBy(col("vec_id"), col("bucket"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q51_input")
-    }
+    stage(Vectors.annBucketRows(Tables.embeddings(spark, sfDir))
+      .select(col("vec_id"), col("bucket")), "_q51_input", "vec_id", "bucket")
     // q57: the per-doc xxhash64 sample buckets (seed 42, the query's own);
     // DuckDB recomputes threshold membership, per-stratum rates, bounds,
     // and the resample diff over identical values.
-    Tables.documents(spark, sfDir)
+    stage(Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"),
-        graft.operators.Sampling.bucket(Seq(col("doc_id")), 42L).as("bucket"))
-      .orderBy(col("doc_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q57_input")
+        graft.operators.Sampling.bucket(Seq(col("doc_id")), 42L).as("bucket")),
+      "_q57_input", "doc_id")
     // q60: the per-asset codec/histogram scalars; DuckDB re-aggregates the
     // per-kind profile (decimal-accumulated mean, engine-identical).
-    graft.operators.Multimodal.featureRows(spark, Multi.assetCount(sfDir))
-      .orderBy(col("asset_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q60_input")
+    stage(Multimodal.featureRows(spark, n), "_q60_input", "asset_id")
     // q277: the per-doc real-zlib deflate measurements; DuckDB
     // re-aggregates the per-source rollup and drop-band counts over
     // identical rows (deflate has no SQL equivalent).
-    graft.operators.CompressionStats.ratioRows(Tables.documents(spark, sfDir))
-      .orderBy(col("doc_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q277_input")
+    stage(graft.operators.CompressionStats.ratioRows(Tables.documents(spark, sfDir)),
+      "_q277_input", "doc_id")
     // q284: the per-pair LCS measurements over the LSH candidate set;
     // DuckDB re-derives the pair set independently (brute-force shingle
     // equijoin) and LEFT-joins these rows, so a missed pair shows as a
     // NULL mismatch and the DP kernel stays spec-pinned (RougeLSpec).
-    locally {
-      val docs = Tables.documents(spark, sfDir)
-      val pairs = graft.operators.MinHashLSH.nearDupPairs(
-        docs, "doc_id", "text",
-        shingleN = 3, numHashes = 64, bands = 32, threshold = 0.4)
-      graft.operators.RougeL
-        .lcsRows(pairs.select(col("doc_a"), col("doc_b")), docs)
-        .orderBy(col("doc_a"), col("doc_b"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q284_input")
-    }
+    stage(Dedup.nearDupLcsRows(Tables.documents(spark, sfDir)),
+      "_q284_input", "doc_a", "doc_b")
     // q208: the per-asset integer PCM stats (real WAV decode); DuckDB
     // re-aggregates the per-duration profile over identical rows.
-    graft.operators.Multimodal.audioStatRows(spark, Multi.assetCount(sfDir))
-      .orderBy(col("asset_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q208_input")
+    stage(Multimodal.audioStatRows(spark, n), "_q208_input", "asset_id")
     // q342: the per-asset Goertzel tone detections (real WAV round
     // trip); DuckDB re-aggregates the per-bin accuracy/leak card.
-    graft.operators.Multimodal.toneRows(spark, Multi.assetCount(sfDir))
-      .orderBy(col("asset_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q342_input")
+    stage(Multimodal.toneRows(spark, n), "_q342_input", "asset_id")
     // q350: the per-asset accounted-decode stats over the corrupted
     // corpus. Only (asset_id, n_samples, sample_sum) is staged — the
     // oracle derives kind AND the expected verdict from id arithmetic
     // independently, so the engine's actual verdicts are cross-checked
     // against the planting rule, not replayed.
-    graft.operators.Multimodal.screenedStats(
-      graft.operators.Multimodal.withPlantedCorruption(
-        graft.operators.Multimodal.syntheticAssets(
-          spark, Multi.assetCount(sfDir)), everyNth = 17L))
-      .toDF().select(col("asset_id"), col("n_samples"), col("sample_sum"))
-      .orderBy(col("asset_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q350_input")
+    stage(Multimodal.screenedStats(Multimodal.withPlantedCorruption(
+        Multimodal.syntheticAssets(spark, n), everyNth = 17L))
+      .toDF().select(col("asset_id"), col("n_samples"), col("sample_sum")),
+      "_q350_input", "asset_id")
     // q267: the per-asset 2:1 resample round-trip measurements (decode →
     // decimate → real re-encode → decode); DuckDB re-aggregates the
     // profile and the length/rate certificates over identical rows.
-    graft.operators.Multimodal.resampleRows(spark, Multi.assetCount(sfDir))
-      .orderBy(col("asset_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q267_input")
+    stage(Multimodal.resampleRows(spark, n), "_q267_input", "asset_id")
     // q228: the PRE-sampling per-frame pixel sums through the real GIF
     // decode; the oracle independently derives the kept-frame set
     // (stride 3) and its surviving pixel content from these, and must
@@ -322,8 +286,7 @@ object VerifyInputs {
     // frames, so no asset can vanish in the exploded form.
     locally {
       import spark.implicits._
-      import graft.operators.Multimodal
-      Multimodal.syntheticAssets(spark, Multi.assetCount(sfDir))
+      stage(Multimodal.syntheticAssets(spark, n)
         .filter(_.meta.kind == "video")
         .flatMap { a =>
           val d = Multimodal.VideoCodec.decode(a.payload)
@@ -334,50 +297,31 @@ object VerifyInputs {
             (a.asset_id, a.meta.nFrames, d.width, d.height, j + 1L, s)
           }
         }
-        .toDF("asset_id", "n_frames", "w", "h", "idx", "frame_sum")
-        .orderBy(col("asset_id"), col("idx"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q228_input")
+        .toDF("asset_id", "n_frames", "w", "h", "idx", "frame_sum"),
+        "_q228_input", "asset_id", "idx")
     }
     // q230: per-asset resize-audit rows (source geometry + measured
     // post-resize bytes/pixels); the oracle re-aggregates these but
     // DERIVES the pixel total arithmetically as its cross-check.
-    locally {
-      import spark.implicits._
-      import graft.operators.Multimodal
-      def imgs = Multimodal.syntheticAssets(spark, Multi.assetCount(sfDir))
-        .filter(_.meta.kind == "image")
-      val dims = imgs.map(a => (a.asset_id, a.meta.width, a.meta.height))
-        .toDF("asset_id", "src_w", "src_h")
-      val outr = Multimodal.resize(imgs, 32, 32).map { a =>
-        val g = Multimodal.ImageCodec.decode(a.payload).gray
-        var s = 0L; var i = 0
-        while (i < g.length) { s += (g(i) & 0xff); i += 1 }
-        (a.asset_id, a.payload.length, g.length, s)
-      }.toDF("asset_id", "out_bytes", "n_px", "px_sum")
-      dims.join(outr, Seq("asset_id"))
-        .orderBy(col("asset_id"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q230_input")
-    }
+    stage(Multi.resizeAuditRows(spark, n), "_q230_input", "asset_id")
     // q248: the per-frame integer energies over the planted-silence
     // audio corpus; DuckDB independently re-derives the silence
     // classification and the voiced-run segmentation (gaps-and-islands)
     // that the gate computes in-row during its decode pass.
-    graft.operators.Multimodal.audioFrameRows(spark, Multi.assetCount(sfDir))
-      .orderBy(col("asset_id"), col("frame_idx"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q248_input")
+    stage(Multimodal.audioFrameRows(spark, n),
+      "_q248_input", "asset_id", "frame_idx")
     // q249: the per-pair frame diffs over the planted-shot video corpus;
     // DuckDB independently re-derives the cut classification and the
     // shot segmentation (boundary prefix-sum) that the gate computes
     // in-row during its decode pass.
     // Exploded like _q228_input (pandas-sortable scalars only); idx is
     // the 1-based diff subscript the oracle's generate_subscripts used.
-    graft.operators.Multimodal.videoDiffRows(spark, Multi.assetCount(sfDir))
+    stage(Multimodal.videoDiffRows(spark, n)
       .select(col("asset_id"), col("n_frames"), col("w"), col("h"),
         posexplode(col("diffs")).as(Seq("idx0", "diff")))
       .select(col("asset_id"), col("n_frames"), col("w"), col("h"),
-        (col("idx0") + 1L).cast("long").as("idx"), col("diff"))
-      .orderBy(col("asset_id"), col("idx"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q249_input")
+        (col("idx0") + 1L).cast("long").as("idx"), col("diff")),
+      "_q249_input", "asset_id", "idx")
     // q252: the audit sample's minhash signatures; DuckDB recomputes
     // the exact shingle Jaccard from raw documents and the estimator
     // from these rows, independently.
@@ -385,19 +329,16 @@ object VerifyInputs {
     // the 0-based hash index, the oracle rebuilds sig with
     // list(v ORDER BY h). Signatures are always 64-long, so no doc can
     // vanish in the exploded form.
-    Dedup.minhashAuditSig(spark, sfDir)
+    stage(Dedup.minhashAuditSig(spark, sfDir)
       .select(col("doc_id"), col("n_sh"),
         posexplode(col("sig")).as(Seq("h", "v")))
       .select(col("doc_id"), col("n_sh"), col("h").cast("long").as("h"),
-        col("v"))
-      .orderBy(col("doc_id"), col("h"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q252_input")
+        col("v")),
+      "_q252_input", "doc_id", "h")
     // q234: the per-image perceptual hashes (real decode + dHash) over
     // the planted-copy corpus; DuckDB independently re-runs banding,
     // candidate generation, and the Hamming verify over them.
-    Multi.phashRows(spark, Multi.assetCount(sfDir))
-      .orderBy(col("asset_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_q234_input")
+    stage(Multi.phashRows(spark, n), "_q234_input", "asset_id")
     // q226: an RFC-4180-quoted CSV staging (escape = '"' makes Spark
     // write doubled quotes, DuckDB's native convention) of the same
     // rows the gate's Spark side round-trips through its own temp CSV.
@@ -414,15 +355,16 @@ object VerifyInputs {
       rows.coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/_q226_input")
       val tmp = java.nio.file.Files.createTempDirectory("graft-q226csv")
-      rows.coalesce(1).write.mode("overwrite")
-        .option("header", "true").option("escape", "\"")
-        .csv(tmp.toString)
-      val part = graft.core.DirIO.list(tmp)(_.filter(
-        _.getFileName.toString.endsWith(".csv")).findFirst.get)
-      java.nio.file.Files.move(part,
-        java.nio.file.Paths.get(s"$outDir/_q226_input/_data.csv"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      graft.core.DirIO.deleteRecursively(tmp)
+      try {
+        rows.coalesce(1).write.mode("overwrite")
+          .option("header", "true").option("escape", "\"")
+          .csv(tmp.toString)
+        val part = graft.core.DirIO.list(tmp)(_.filter(
+          _.getFileName.toString.endsWith(".csv")).findFirst.get)
+        java.nio.file.Files.move(part,
+          java.nio.file.Paths.get(s"$outDir/_q226_input/_data.csv"),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      } finally graft.core.DirIO.deleteRecursively(tmp)
     }
   }
 }
