@@ -43,8 +43,7 @@ object SparkSessionFactory {
       if (existing.isEmpty && DirIO.tmpfsUsable())
         Some(DirIO.scratchDir("spark-local")) else None
     scratch.foreach(deleteAtExit)
-    val b = SparkSession.builder()
-      .config(LocalFsConf)
+    val b = engine(SparkSession.builder())
       .appName(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -71,12 +70,32 @@ object SparkSessionFactory {
     s
   }
 
+  /** What every session this engine builds starts from — this factory's
+    * and the specs' shared session alike, so specs run on the entry
+    * points' filesystem and plan as they do: [[LocalFsConf]], the
+    * [[SmallSort]] query-stage rule and [[PlanConf]]. The rule goes in
+    * through the builder, not the `spark.sql.extensions` key, which the
+    * prod profile gives to Iceberg ([[icebergCatalogConf]]). */
+  def engine(b: SparkSession.Builder): SparkSession.Builder =
+    b.config(LocalFsConf).config(PlanConf)
+      .withExtensions(_.injectQueryStagePrepRule(_ => SmallSort))
+
+  /** Optimizer rules every session excludes. `InferFiltersFromGenerate`
+    * adds `size(a) > 0 AND isnotnull(a)` under each `explode(a)`, a filter
+    * `explode` makes redundant (it emits nothing for a null or empty
+    * array). Pushed through projections and `Tables.spread`'s round-robin
+    * exchange, it would evaluate the array's producer — q44's shingle
+    * kernel — once more, in the single scan task before the spread. */
+  val PlanConf: Map[String, String] = Map(
+    "spark.sql.optimizer.excludedRules" ->
+      org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate.ruleName)
+
   /** The `file://` scheme's Hadoop classes ([[NioLocalFileSystem]] for
     * `FileSystem`, [[NioLocalFs]] for `FileContext`): the stock local
     * filesystem minus its `chmod`/`readlink` subprocess per file create,
     * mkdir and rename. Every session this engine builds takes these keys
-    * — this factory, and the specs' shared session — so checkpoints,
-    * table commits and task files run on the same filesystem everywhere.
+    * ([[engine]]), so checkpoints, table commits and task files run on
+    * the same filesystem everywhere.
     * Other schemes (s3a, HDFS, the Iceberg catalog's) are untouched. */
   val LocalFsConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,

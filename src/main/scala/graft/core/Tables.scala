@@ -7,10 +7,12 @@ import org.apache.spark.sql.types._
 /** Loaders for the driver-provided analytical tables (TESTDATA.md /
   * FIXTURES.md §B): one parquet file per table under `$dir/`.
   *
-  * Parquet carries its own schema, so no inference pass happens here
-  * (unlike the reference's `spark.read.json` double-read,
-  * spark-data-pipeline/spark_job.py:109). Filters/projections composed on
-  * top of these scans push down to the parquet reader via Catalyst.
+  * Parquet carries its own schema, so no JSON-style inference pass over
+  * the data happens here (unlike the reference's `spark.read.json`
+  * double-read, spark-data-pipeline/spark_job.py:109). Spark still runs
+  * one footer-reading job per `spark.read.parquet`; [[parquet]] runs it
+  * once per file per session. Filters/projections composed on top of
+  * these scans push down to the parquet reader via Catalyst.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -19,7 +21,32 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  private final case class SchemaKey(path: String, len: Long, mtime: Long, nanosAsLong: String)
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.Map[SchemaKey, StructType]]())
+
+  /** `spark.read.parquet(path)` with the schema inferred the first time
+    * this session read this version of the file, so later reads run no
+    * schema-inference job. The key holds the file's length and mtime (a
+    * rewritten file is inferred again) and the session's
+    * [[NanosKey]] flag, which decides how a NANOS timestamp is typed.
+    * A path that does not exist reads as before and fails the same way. */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val st = fs.getFileStatus(p)
+      val key = SchemaKey(st.getPath.toString, st.getLen, st.getModificationTime,
+        spark.conf.get(NanosKey, "false"))
+      val perSession = schemas.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]())
+      spark.read.schema(perSession.computeIfAbsent(key, _ => spark.read.parquet(path).schema))
+        .parquet(path)
+    }
+  }
 
   /** events.ts has shipped as either parquet TIMESTAMP(NANOS) or
     * TIMESTAMP(MICROS) depending on the generator version. NANOS is
@@ -36,14 +63,15 @@ object Tables {
     * on the session only for the duration of this call and then restored —
     * leaving it set would silently change how every other nanos-timestamp
     * parquet in the session is read. Restoring after `spark.read.parquet`
-    * is safe for the later (lazy) execution: the schema is inferred inside
-    * this window, and the inferred long column reads without the flag. */
+    * is safe for the later (lazy) execution: the schema is inferred (or
+    * found in [[parquet]]'s cache under the flag) inside this window, and
+    * the long column reads without the flag. */
   val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** events.parquet as stored: ts is a raw long in the NANOS era. */
   def eventsRaw(spark: SparkSession, dir: String): DataFrame =
     SessionConf.withConf(spark, NanosKey -> "true")(
-      spark.read.parquet(s"$dir/events.parquet"))
+      parquet(spark, s"$dir/events.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -92,7 +120,11 @@ object Tables {
     * under-parallelized (a small parquet = one split, which serializes any
     * compute-heavy map stage on one core). No-op when the scan already has
     * enough splits — i.e., at real scale. Use ahead of expensive per-row
-    * kernels (shingling, signatures), not cheap scans. */
+    * kernels (shingling, signatures), not cheap scans. Catalyst pushes
+    * deterministic filters through the round-robin exchange, so a filter
+    * on the kernel's output would run the kernel below the spread, on one
+    * core; the one such filter it would infer on its own (under an
+    * `explode`) is excluded by `SparkSessionFactory.PlanConf`. */
   def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df

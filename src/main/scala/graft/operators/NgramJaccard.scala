@@ -45,11 +45,9 @@ object NgramJaccard {
     * n_sh (distinct-shingle count), shash (one row per distinct shingle
     * hash per doc); returns unordered pairs [doc_a, doc_b, n_common,
     * jaccard]. The tokenize→shingle→explode→hash map feeds both self-join
-    * sides (Catalyst's InferFiltersFromGenerate additionally re-evaluates
-    * the shingle kernel in a pushed-down size()>0 filter on each side), so
-    * without materialization the most expensive map in the corpus runs
-    * several times. Persisting runs it ONCE, in the join's first query
-    * stage. MEMORY_AND_DISK on the POST-map stream (8B hash + 8B doc + 4B
+    * sides, so without materialization the most expensive map in the
+    * corpus runs once per side. Persisting runs it ONCE, in the join's
+    * first query stage. MEMORY_AND_DISK on the POST-map stream (8B hash + 8B doc + 4B
     * count rows — far smaller than the text it derives from): the disk
     * arm degrades to one shuffle-write's worth of IO, never an OOM. */
   def similarPairs(ex: DataFrame, threshold: Double): DataFrame = synchronized {

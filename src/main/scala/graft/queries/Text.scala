@@ -173,8 +173,8 @@ object Text {
     // The join is NgramJaccard's naive co-shingle form, run directly: this
     // corpus sits 158× under the hot-shingle crossover where
     // PrefixFilterJoin would win (q352 gates that census), so the build
-    // measures nothing: its only Spark job is the documents scan's parquet
-    // schema read.
+    // measures nothing and runs no Spark job once the session has read
+    // the documents table (Tables caches its schema per session).
     "q44_ngram_jaccard" -> QueryDef(
       build = (spark, dir) => {
         // spread: shingling a single-split source would serialize on one
@@ -182,10 +182,12 @@ object Text {
         val d = Tables.spread(Tables.documents(spark, dir))
           .select(col("doc_id"), shingles(tokens(col("text")), 3).as("sh"))
         // No n_sh > 0 filter: explode already drops empty/null shingle
-        // arrays, and Catalyst would push the filter's size(shinglesexpr)
-        // predicate BELOW the spread exchange — re-running the shingle
-        // kernel once more per side on the un-spread input (the r6 plan
-        // showed it in Filter(2) on both join sides).
+        // arrays, and a size(shinglesexpr) predicate would be pushed BELOW
+        // the spread exchange, running the shingle kernel once more in the
+        // single un-spread scan task. Catalyst infers exactly that filter
+        // for every explode (InferFiltersFromGenerate), so the session
+        // factory excludes the rule (SparkSessionFactory.PlanConf) and
+        // PlanGuardSpec pins the kernel above the spread.
         val sized = d.select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
         // Join on the shingle's 64-bit hash, not the string: the hash
         // projection runs map-side before the join exchange, so the shuffle

@@ -16,13 +16,13 @@ object SparkSpec {
   // determinism. Specs that assert on failing jobs still see the failure
   // (a deterministic throw re-throws on the retry).
   // The warehouse outlives every suite (tables cross suites), so it goes
-  // when the test JVM exits. The local filesystem classes come from the
-  // factory's one constant, so specs run on the entry points' filesystem.
+  // when the test JVM exits. The filesystem classes, optimizer settings
+  // and query-stage rule come from the factory's `engine`, so specs run
+  // and plan like the entry points.
   lazy val spark: SparkSession = {
     val warehouse = Files.createTempDirectory("graft-warehouse")
     sys.addShutdownHook(graft.core.DirIO.deleteRecursively(warehouse))
-    SparkSession.builder()
-      .config(SparkSessionFactory.LocalFsConf)
+    SparkSessionFactory.engine(SparkSession.builder())
       .master("local[4, 2]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

@@ -64,11 +64,11 @@ class NgramJaccardSpec extends SparkSpec {
       meter.label(label)(f)
       meter.record(label).jobs.map(_.description)
     }
-    // reading a parquet file runs one schema-inference job; the build may
-    // start that and nothing else
-    val scan = jobsDuring(graft.core.Tables.documents(spark, sf))
+    // the first read of a table in a session infers its schema (one job);
+    // after it, the build starts no job at all
+    graft.core.Tables.documents(spark, sf)
     val build = jobsDuring(graft.SparkEntry.queries("q44_ngram_jaccard")(spark, sf))
-    assert(build == scan, s"q44's build ran jobs beyond the documents scan: $build")
+    assert(build.isEmpty, s"q44's build ran jobs: $build")
     val decision = graft.SparkEntry.queries("q352_router_decision")(spark, sf)
       .select("decision").collect().map(_.getString(0)).toSeq
     assert(decision == Seq("naive"))

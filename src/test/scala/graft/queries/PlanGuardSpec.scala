@@ -206,6 +206,34 @@ class PlanGuardSpec extends SparkSpec {
       "intersection count not partially aggregated before the exchange")
   }
 
+  test("q44: no operator below the spread exchange evaluates the shingle kernel") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // every node, through AQE wrappers and the persisted hash stream
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    def shingles(ps: Seq[SparkPlan]): Boolean = ps.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.CodegenExpressions.ShinglesExpr])))
+    val all = nodes(graft.SparkEntry.queries("q44_ngram_jaccard")(spark, sf)
+      .queryExecution.executedPlan)
+    val spreads = all.collect {
+      case e @ ShuffleExchangeExec(_: RoundRobinPartitioning, _, _, _) => e
+    }
+    assert(spreads.nonEmpty, "no spread exchange in q44's plan")
+    assert(shingles(all), "shingle kernel missing from q44's plan")
+    // an inferred size(sh) > 0 filter pushed through the spread would run
+    // the kernel here, in the one un-spread scan task
+    assert(!spreads.exists(e => shingles(nodes(e.child))),
+      "shingle kernel evaluated below the spread exchange")
+  }
+
   test("q46: MinHash-LSH plans keyed joins only — the O(N²) it exists to avoid") {
     val p = plan("q46_minhash_lsh")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -28,8 +28,7 @@ class IcebergSinkIT extends AnyFunSuite {
 
   private def withIcebergSession(f: (SparkSession, String) => Unit): Unit = {
     val wh = java.nio.file.Files.createTempDirectory("iceberg_it_wh")
-    val spark = SparkSession.builder()
-      .config(graft.core.SparkSessionFactory.LocalFsConf)
+    val spark = graft.core.SparkSessionFactory.engine(SparkSession.builder())
       .master("local[4]")
       .appName("graft-iceberg-it")
       .config("spark.sql.shuffle.partitions", "4")
